@@ -95,11 +95,7 @@ def q_er_blocking_keys(spark, sf):
         F.col("doc_id").cast("string").alias("url"),
         F.split(_doc_name(4), " ").alias("tokens"),
     )
-    # pre-UDF repartition: spread the metaphone UDF across the executor
-    # width (the documents table arrives as few parquet splits)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism).withColumn(
-        "name_keys", normalized_name_keys("tokens")
-    )
+    docs = docs.withColumn("name_keys", normalized_name_keys("tokens"))
     return exploded_metaphone_keys(docs, id_col="url").orderBy("url", "block_key")
 
 
@@ -116,9 +112,7 @@ def q_er_blocking_keys_soundex(spark, sf):
         F.col("doc_id").cast("string").alias("url"),
         F.split(_doc_name(4), " ").alias("tokens"),
     )
-    docs = docs.repartition(spark.sparkContext.defaultParallelism).withColumn(
-        "name_keys", normalized_name_keys("tokens")
-    )
+    docs = docs.withColumn("name_keys", normalized_name_keys("tokens"))
     keys = blocking_keys(docs, id_col="url", class_col=None, include_soundex=True)
     return keys.orderBy("url", "block_key")
 
@@ -132,14 +126,9 @@ def q_er_cluster_documents(spark, sf):
     # keys feeds both sides of star_edges (hub groupBy + member join) —
     # without it the metaphone UDF projection recomputes per consumer.
     # swap_cached releases the previous invocation's copies (no session leak).
-    # pre-UDF repartition (same pattern as scoring.py): the documents table
-    # arrives as few parquet splits, which would run the metaphone UDF on a
-    # fraction of the cores — spread it across the executor width first.
     docs = dedup.swap_cached(
         "er_cluster_documents:docs",
-        docs.repartition(spark.sparkContext.defaultParallelism).withColumn(
-            "name_keys", normalized_name_keys("tokens")
-        ),
+        docs.withColumn("name_keys", normalized_name_keys("tokens")),
     )
     keys = dedup.swap_cached(
         "er_cluster_documents:keys", exploded_metaphone_keys(docs, id_col="url")

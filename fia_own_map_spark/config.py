@@ -139,8 +139,6 @@ class EngineConfig:
         of at most this size plus one representative cross-edge per sub-block,
         so connectivity is preserved while pair count is bounded (SURVEY §4
         skew note — AQE alone cannot fix |B|^2 pair blowup).
-    max_pairs_per_key: hard cap of candidate pairs a single blocking key may
-        emit in all-pairs mode; overflow is counted in metrics, never silent.
     jw_threshold / jaccard_threshold / lev_ratio_threshold: match-edge
         acceptance in similarity mode (reference parity mode is exact key
         equality, Name_Matching_opt.py:78, i.e. every candidate pair is an
@@ -148,12 +146,10 @@ class EngineConfig:
     """
 
     max_block_size: int = 200
-    max_pairs_per_key: int = 20_000
     jw_threshold: float = 0.94
     jaccard_threshold: float = 0.80
     lev_ratio_threshold: float = 0.85
     cc_max_iterations: int = 50
-    shuffle_partitions: int | None = None
     score_mode: str = "exact"  # "exact" (reference parity) | "similarity"
     # second blocking-key family (north_rule: metaphone + soundex). Soundex
     # keys are per-token and deliberately generous; they only make sense with

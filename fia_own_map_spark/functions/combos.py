@@ -11,19 +11,21 @@ Reference semantics:
 
 Implementation is native Catalyst higher-order functions (transform / filter
 with index / array_sort / array_join) — no Python until the final metaphone
-pandas UDF, which runs *after* ``explode`` so it is a scalar string->string
-Arrow batch, and only over **distinct** fingerprints (dedup-before-UDF cuts
-the Python work by the key-repetition factor).
+``mapInPandas``, which runs *after* ``explode`` over string->string Arrow
+batches, and only over **distinct** fingerprints (dedup-before-UDF cuts the
+Python work by the key-repetition factor).
 """
 
 from __future__ import annotations
 
 import itertools
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fia_own_map_spark.functions.phonetic import dm_primary, double_metaphone
+from fia_own_map_spark.functions.phonetic import double_metaphone
+from fia_own_map_spark.session import per_core
 
 
 def token_combinations(tokens: Column | str) -> Column:
@@ -64,39 +66,33 @@ def exploded_metaphone_keys(
 ) -> DataFrame:
     """(id, block_key) edge list: explode fingerprints, metaphone-encode.
 
-    The metaphone pandas UDF is applied to the **distinct** fingerprint set and
-    broadcast-joined back — at web scale fingerprints repeat heavily (that is
+    The metaphone batch function is applied to the **distinct** fingerprint
+    set and joined back — at web scale fingerprints repeat heavily (that is
     the whole point of blocking), so this bounds Python work by the number of
     distinct names, not the number of rows.
     """
     exploded = df.select(
         F.col(id_col), F.explode(fingerprint_col).alias("_fp")
     ).filter(F.length("_fp") > 0)
+
+    def encode(batches):
+        for pdf in batches:
+            codes = pdf["_fp"].map(lambda fp: double_metaphone(fp)[0])
+            keep = codes != ""
+            yield pd.DataFrame({"_fp": pdf["_fp"][keep], key_col: codes[keep]})
+
     # dedup first (map-side partial aggregation shrinks the shuffle by the
-    # fingerprint-repetition factor — the point of dedup-before-UDF), then
-    # pin the UDF stage's width with a ROUND-ROBIN repartition. The pin must
-    # be round-robin: a hash repartition on _fp at the job shuffle width is
-    # provably redundant with the distinct's own exchange, so Catalyst
-    # COLLAPSES it (verified in plans/r08/er_blocking_keys_before.txt: the
-    # only exchange is ENSURE_REQUIREMENTS), and ENSURE_REQUIREMENTS
-    # exchanges are exactly what AQE's size-based coalescing folds to one
-    # partition — a few MB of distinct fingerprints would run the per-ROW-
-    # cost metaphone UDF single-threaded. REPARTITION_BY_NUM round-robin
-    # survives both the optimizer and AQE, and it moves only the already-
-    # deduped slim fingerprint table.
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    distinct_fp = (
-        exploded.select("_fp")
-        .distinct()
-        .repartition(width)
-        .withColumn(key_col, dm_primary("_fp"))
+    # fingerprint-repetition factor), pin the width per core, then encode in
+    # ONE mapInPandas that also drops empty codes. mapInPandas is the
+    # boundary: Catalyst would push an empty-code filter on a pandas UDF's
+    # output below the distinct and the repartition, and infer it across the
+    # _fp join, re-running the UDF over undeduplicated rows in extra stages.
+    # It pushes nothing through mapInPandas and infers no constraint across
+    # its output.
+    distinct_fp = per_core(exploded.select("_fp").distinct()).mapInPandas(
+        encode, f"_fp string, {key_col} string"
     )
-    return (
-        exploded.join(distinct_fp, "_fp")
-        .filter(F.length(key_col) > 0)
-        .select(id_col, key_col)
-        .distinct()
-    )
+    return exploded.join(distinct_fp, "_fp").select(id_col, key_col).distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -10,8 +10,9 @@ reference feeds whole concatenated names through it, and truncation would
 collapse blocking keys into mega-blocks.
 
 Spark surface:
-  * ``dm_primary(col)``  — Arrow-batched pandas UDF, string -> primary code
-  * ``dm_codes(col)``    — pandas UDF, string -> array<string> [primary, secondary]
+  * Double Metaphone has no Column function: blocking encodes the DISTINCT
+    fingerprints with ``double_metaphone`` inside one ``mapInPandas``
+    (``combos.exploded_metaphone_keys``).
   * Soundex is Spark's built-in ``F.soundex`` (north_rule asks for both
     key families); re-exported here as ``soundex_key``.
 
@@ -21,11 +22,8 @@ oracle used in tests, so Spark and oracle keys agree by construction.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 _VOWELS = frozenset("AEIOUY")
 
@@ -497,35 +495,9 @@ def double_metaphone(value: str) -> tuple[str, str]:  # noqa: C901
     return ("".join(pri), "".join(sec))
 
 
-def dm_primary_py(value: str | None) -> str | None:
-    if value is None:
-        return None
-    return double_metaphone(value)[0]
-
-
 # ---------------------------------------------------------------------------
-# Spark surface (Arrow-batched pandas UDFs — SURVEY.md §2.8 F12/F14)
+# Spark surface
 # ---------------------------------------------------------------------------
-@pandas_udf(StringType())
-def _dm_primary_udf(names: pd.Series) -> pd.Series:
-    return names.map(lambda v: None if v is None else double_metaphone(v)[0])
-
-
-@pandas_udf(ArrayType(StringType()))
-def _dm_codes_udf(names: pd.Series) -> pd.Series:
-    return names.map(lambda v: None if v is None else list(double_metaphone(v)))
-
-
-def dm_primary(col: Column | str) -> Column:
-    """Primary double-metaphone code of a string column (pandas UDF)."""
-    return _dm_primary_udf(F.col(col) if isinstance(col, str) else col)
-
-
-def dm_codes(col: Column | str) -> Column:
-    """[primary, secondary] double-metaphone codes (pandas UDF)."""
-    return _dm_codes_udf(F.col(col) if isinstance(col, str) else col)
-
-
 def soundex_key(col: Column | str) -> Column:
     """Soundex blocking key — Spark built-in, stays JVM-side."""
     return F.soundex(F.col(col) if isinstance(col, str) else col)

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from fia_own_map_spark.session import per_core
+
 # One cached intermediate per operator, swapped on re-invocation: persisting
 # inside a lazily-returned DataFrame means the callee can't unpersist before
 # the caller materializes, so instead each NEW call releases the PREVIOUS
@@ -389,12 +391,11 @@ def simhash_dup_pairs(
     # persist: the fingerprint table (one slim row per doc) feeds the
     # bucket-size agg AND both sides of the bucket self-join — without it
     # the simhash UDF would run three times over the corpus. The pre-UDF
-    # repartition spreads the UDF across the job-level shuffle width
-    # instead of the scan's few parquet splits.
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # repartition spreads the UDF one task per core instead of over the
+    # scan's few parquet splits.
     sh = swap_cached(
         "simhash_fingerprints",
-        df.repartition(width, id_col).select(
+        per_core(df).select(
             F.col(id_col), simhash(text_col).alias("sh")
         ),
     )

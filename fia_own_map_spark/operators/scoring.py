@@ -6,31 +6,44 @@ Meta_name key IS the match), so every candidate pair is an edge with score
 1.0 and the scale path skips pair materialization entirely (star edges).
 
 Similarity mode (`score_mode="similarity"`, the north-star extension): join
-candidate pairs back to the normalized name strings and compute
-  * Jaro-Winkler        — Arrow-batched pandas UDF
-  * Levenshtein ratio   — built-in (JVM)
-  * token-set Jaccard   — native array functions (JVM)
+candidate pairs back to the normalized name strings and compute Jaro-Winkler,
+Levenshtein ratio and token-set Jaccard, all three in the fused vectorized
+Python kernel (``similarity.similarity_scores_batch``), one Arrow round-trip.
 
 Scale design:
   * **Dedup-before-UDF**: mentions repeat heavily (that is why they block
     together), so scores are computed once per DISTINCT (name_a, name_b)
     pair and broadcast-joined back onto the id-pair table. Python work is
     bounded by distinct name pairs, not candidate pairs.
-  * The distinct name-pair table is explicitly repartitioned to the session
-    default parallelism before the UDF — AQE's partition coalescing targets
-    shuffle *bytes* and would otherwise under-parallelize a CPU-bound Python
-    stage (few MB of strings can cost minutes of CPU).
+  * The distinct name-pair table is round-robined to one partition per core
+    (``session.per_core``) before the kernel — AQE's partition coalescing
+    targets shuffle *bytes* and would otherwise under-parallelize a CPU-bound
+    Python stage (few MB of strings can cost minutes of CPU).
+  * The kernel runs in ``mapInPandas``: Catalyst would push the
+    ``match_edges`` threshold (a filter on UDF outputs) below the name-pair
+    dedup and run a pandas UDF over undeduplicated candidate pairs; it
+    pushes nothing through mapInPandas.
   * Single pass: no count() of the scored table; the candidate-pair count is
     taken from the cheap pre-UDF pair table.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fia_own_map_spark.config import EngineConfig
-from fia_own_map_spark.functions.similarity import similarity_scores
+from fia_own_map_spark.functions.similarity import similarity_scores_batch
+from fia_own_map_spark.session import per_core
+
+
+def _score_batches(batches):
+    for pdf in batches:
+        scores = similarity_scores_batch(
+            pdf["name_a"].to_numpy(dtype=object), pdf["name_b"].to_numpy(dtype=object)
+        )
+        yield pd.concat([pdf, scores], axis=1)
 
 
 def score_pairs(
@@ -43,7 +56,6 @@ def score_pairs(
 
     Returns (id_a, id_b, jw, lev_ratio, jaccard).
     """
-    spark = pairs.sparkSession
     names = records.select(F.col(id_col).alias("_id"), F.col(name_col).alias("_name"))
     with_names = (
         pairs.join(
@@ -55,13 +67,9 @@ def score_pairs(
 
     # score each distinct name pair exactly once (dedup-before-UDF), all three
     # measures in ONE fused Arrow round-trip (vectorized python kernel)
-    parallelism = spark.sparkContext.defaultParallelism
-    name_pairs = (
-        with_names.select("name_a", "name_b")
-        .distinct()
-        .repartition(parallelism)
-        .withColumn("_s", similarity_scores("name_a", "name_b"))
-        .select("name_a", "name_b", "_s.jw", "_s.lev_ratio", "_s.jaccard")
+    name_pairs = per_core(with_names.select("name_a", "name_b").distinct()).mapInPandas(
+        _score_batches,
+        "name_a string, name_b string, jw double, lev_ratio double, jaccard double",
     )
     # No broadcast hint: the distinct-name-pair table grows with candidate
     # diversity (unbounded at corpus scale) — let AQE pick broadcast vs

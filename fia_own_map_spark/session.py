@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -52,8 +52,8 @@ def build_session(
         # worker Arrow streams, output files) of every small shuffle — the
         # measured cause of the full-ER-job anti-scaling from 8 to 32 cores
         # at the 200k-page bench size. Partition count now follows input
-        # bytes (identical at every core count); compute-bound pre-UDF paths
-        # keep full parallelism via their explicit repartition (scoring.py).
+        # bytes (identical at every core count); compute-bound Python-UDF
+        # stages keep full parallelism via ``per_core`` below.
         # Spark's own docs recommend parallelismFirst=false in production.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
@@ -82,6 +82,20 @@ def build_session(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def per_core(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` into one partition per core: the width rule for
+    every Python-UDF stage. Apply it AFTER the stage's dedup, so the shuffle
+    moves only distinct rows and the UDF runs once per distinct input.
+
+    One task per core: Python-worker start-up is paid per task, so 32 tasks
+    on 4 cores spend more on start-up than on a few thousand rows of work.
+    Round-robin (REPARTITION_BY_NUM) because a hash repartition on the dedup
+    key is collapsed into the aggregate's own exchange, which AQE then
+    coalesces toward one partition.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def stop_session() -> None:
