@@ -8,8 +8,8 @@ queries()     — one entry per implemented operator family (SURVEY.md §2 +
 oracle_sql()  — DuckDB-equivalent SQL for every SQL-expressible query; ops
                 that are inherently non-SQL (xxhash64 MinHash, LSH/IVF-ANN)
                 are rows-only by design — each with a value-checked sibling
-                (md5 MinHash, brute-force ANN; the FNV simhash is
-                value-checked directly via a list_reduce FNV-1a in SQL). The metaphone-keyed flagship IS
+                (brute-force ANN; the xxhash64 MinHash and the FNV simhash
+                are value-checked directly via XXH64 / FNV-1a in SQL). The metaphone-keyed flagship IS
                 value-checked: fingerprints are recomputed natively in SQL
                 and only the fingerprint->code hop joins a vendored mapping
                 (tests/data/dm_keys_sf001.csv, every entry cross-checked
@@ -198,55 +198,8 @@ def q_er_score_pairs(spark, sf):
 # ---------------------------------------------------------------------------
 # dedup queries
 # ---------------------------------------------------------------------------
-def q_dedup_exact_groups(spark, sf):
-    return dedup.exact_dup_groups(_t(spark, sf, "documents"))
-
-
 def q_dedup_exact_keep(spark, sf):
     return dedup.exact_dedup(_t(spark, sf, "documents")).select("doc_id", "text")
-
-
-def q_dedup_minhash_pairs(spark, sf):
-    """md5 hash family — DuckDB-reproducible sibling of the production
-    xxhash64 path. Dropped from the 50-query driver contract in r6 (the
-    xxhash64 variant is value-checked end-to-end since r5, so this row was
-    redundant there); still value-checked every pytest run against
-    MINHASH_MD5_ORACLE_SQL (tests/test_ops.py::test_minhash_md5_oracle)."""
-    return dedup.minhash_lsh_pairs(
-        _t(spark, sf, "documents"), n_hashes=8, n_bands=4, shingle_k=1,
-        jaccard_threshold=0.9, hash_family="md5",
-    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-# md5-family MinHash oracle (ex-contract row; see q_dedup_minhash_pairs)
-MINHASH_MD5_ORACLE_SQL = """
-    WITH t AS (
-      SELECT doc_id,
-             list_distinct(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS sh
-      FROM documents),
-    s AS (
-      SELECT doc_id, sh,
-             [list_min(list_transform(sh, g -> md5(g || '#' || i::varchar))) FOR i IN range(0, 8)] AS sig
-      FROM t),
-    banded AS (
-      SELECT doc_id, sh, band FROM (
-        SELECT doc_id, sh,
-               'b' || b::varchar || ':' || md5(array_to_string(sig[b*2+1:b*2+2], ',')) AS band
-        FROM s, unnest(range(0, 4)) AS u(b))
-      QUALIFY count(*) OVER (PARTITION BY band) <= 1000),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sh AS sh_a, b.sh AS sh_b
-      FROM banded a JOIN banded b USING (band)
-      WHERE a.doc_id < b.doc_id)
-    SELECT id_a, id_b,
-           round(CASE WHEN len(list_distinct(list_concat(sh_a, sh_b))) = 0 THEN 1.0
-                 ELSE len(list_intersect(sh_a, sh_b))::double
-                      / len(list_distinct(list_concat(sh_a, sh_b))) END, 6) AS jaccard
-    FROM cand
-    WHERE (CASE WHEN len(list_distinct(list_concat(sh_a, sh_b))) = 0 THEN 1.0
-           ELSE len(list_intersect(sh_a, sh_b))::double
-                / len(list_distinct(list_concat(sh_a, sh_b))) END) >= 0.9
-"""
 
 
 def q_dedup_minhash_fast(spark, sf):
@@ -257,7 +210,7 @@ def q_dedup_minhash_fast(spark, sf):
     mirror AND Spark in tests/test_xxh64_oracle.py)."""
     return dedup.minhash_lsh_pairs(
         _t(spark, sf, "documents"), n_hashes=8, n_bands=4, shingle_k=1,
-        jaccard_threshold=0.9, hash_family="xxhash64",
+        jaccard_threshold=0.9,
     ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -576,18 +529,12 @@ def q_ann_cosine_topk(spark, sf):
 
 
 def q_ann_ivf_topk(spark, sf):
-    """IVF ANN with the deterministic sampled quantizer (id-ordered corpus
-    vectors as centroids) — fully value-checked: assignment (argmin L2,
-    ties by cell), nprobe cell ranking, exact cosine re-rank, and global
-    top-k are all reproduced in DuckDB SQL (`_ivf_seeded_oracle_sql`).
-
-    The KMeans-trained quantizer (`ann.ivf_index`, pyspark.ml seeded) is
-    the documented PRODUCTION fit — same probe/re-rank code path
-    (`_probe_cells`/`_global_topk`), swapping only the centroid source; it
-    stays exercised by bench.py's recall/fraction rows and the ann tests.
-    The contract query pins the SQL-expressible quantizer so the driver
-    hash-verifies the whole path (r5 verdict item #4: the KMeans fit was
-    the one non-SQL-expressible step keeping this row rows-only).
+    """IVF ANN with the untrained quantizer: `ivf_lloyd_cosine_topk` at
+    n_iters=0, whose centroids are the id-ordered seed vectors. Value-
+    checked against `_ivf_seeded_oracle_sql` (float-L2 assignment and
+    probing, exact cosine re-rank, global top-k), which the integer-L2
+    probe reproduces row for row on the sf0.001, sf0.01 and sf0.1
+    embeddings.
 
     (32, 6) sits on the measured recall-per-fraction frontier at sf0.1
     (bench.py reports recall@10 + corpus fraction each round)."""
@@ -595,7 +542,9 @@ def q_ann_ivf_topk(spark, sf):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    return ann.ivf_seeded_cosine_topk(emb, queries, k=10, n_cells=32, nprobe=6)
+    return ann.ivf_lloyd_cosine_topk(
+        emb, queries, k=10, n_cells=32, nprobe=6, n_iters=0
+    )
 
 
 def q_ann_ivf_lloyd_topk(spark, sf):
@@ -605,8 +554,8 @@ def q_ann_ivf_lloyd_topk(spark, sf):
     not just assignment/probe/re-rank — is order-independent bigint
     arithmetic, bit-reproducible across partitionings and unrolled
     iteration-by-iteration in the DuckDB oracle (`_ivf_lloyd_oracle_sql`).
-    Float KMeans (`ann.ivf_index`) remains the pyspark.ml production fit;
-    this is the trained quantizer you can actually value-check."""
+    This is the engine's one IVF quantizer; `ann_ivf_topk` runs it
+    untrained (n_iters=0)."""
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
@@ -1025,14 +974,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_cluster_fingerprint": q_er_cluster_fingerprint,
         "er_score_pairs": q_er_score_pairs,
         # dedup family
-        # dedup_exact_groups left the 50-query contract in r7: subsumed by
-        # dedup_exact_keep (same md5 group/min-id machinery) AND by the
-        # corpus_clean_tags chain whose first stage re-checks it; still
-        # value-checked in pytest (test_retired_contract.py)
         "dedup_exact_keep": q_dedup_exact_keep,
-        # dedup_minhash_pairs (md5 family) left the 50-query contract in r6:
-        # redundant next to the value-checked xxhash64 row; still oracle-
-        # checked in pytest (test_minhash_md5_oracle)
         "dedup_minhash_fast": q_dedup_minhash_fast,      # XXH64-in-SQL oracle (r5)
         "dedup_simhash_pairs": q_dedup_simhash_pairs,    # FNV-in-SQL oracle (r5)
         # dedup_ngram_jaccard left the contract in r7 (its 1-row pair
@@ -1170,15 +1112,17 @@ def _lsh_oracle_sql(n_planes: int, n_tables: int, dim: int = 64, k: int = 10) ->
 def _ivf_seeded_oracle_sql(
     n_cells: int = 32, nprobe: int = 6, dim: int = 64, k: int = 10
 ) -> str:
-    """DuckDB oracle for `ann_ivf_topk` (ann.ivf_seeded_cosine_topk — the
-    deterministic-quantizer IVF; KMeans `ivf_index` is the production fit).
+    """DuckDB oracle for `ann_ivf_topk` (ann.ivf_lloyd_cosine_topk at
+    n_iters=0 — the untrained, id-ordered-seed quantizer).
 
     Centroids are the n_cells id-smallest corpus vectors, recomputed from
     the same parquet rather than inlined (both engines read identical
     bytes). Parity traps mirrored from _lsh_oracle_sql: every fold is
     Spark's SEQUENTIAL left fold (list_reduce with 0.0 prepended), and the
-    L2 ranking uses UNROUNDED doubles with (distance, cell) tie order —
-    exactly `_probe_cells`' array_sort on struct(d, cell)."""
+    L2 ranking uses UNROUNDED doubles with (distance, cell) tie order; the
+    engine ranks by integer L2 on floor(x * 2^20), which gives the same
+    top-k on the sf0.001, sf0.01 and sf0.1 embeddings
+    (test_retired_contract.py checks sf0.001 every run)."""
     l2 = lambda cv, v: (  # noqa: E731 — (a - b)^2 sequential fold
         f"list_reduce(list_prepend(0.0, list_transform(range(1, {dim + 1}), "
         f"i -> ({cv}[i] - {v}[i]::DOUBLE) * ({cv}[i] - {v}[i]::DOUBLE))), (a, b) -> a + b)"
@@ -1732,8 +1676,6 @@ def oracle_sql() -> dict[str, str]:
                                                               string_split(b.name,' ')))) END, 6) AS jaccard
             FROM named a JOIN named b ON b.doc_id = a.doc_id + 1
         """,
-        # (dedup_exact_groups oracle moved to retired_oracle_sql(),
-        # pytest-checked — r7 contract slot freed for span_dedup_stats)
         "dedup_exact_keep": """
             SELECT doc_id, text FROM (
               SELECT doc_id, text,
@@ -1741,9 +1683,6 @@ def oracle_sql() -> dict[str, str]:
                          AS canon
               FROM documents) WHERE doc_id = canon
         """,
-        # (dedup_minhash_pairs md5-family oracle moved to the module-level
-        # MINHASH_MD5_ORACLE_SQL, pytest-checked — r6 contract slot freed
-        # for the trained-quantizer IVF row)
         "span_dedup_stats": _span_stats_sql(),
         "corpus_clean_tags": _corpus_tags_sql(),
         "bpe_token_counts": _bpe_oracle_sql(n_merges=50),
@@ -1908,9 +1847,7 @@ def oracle_sql() -> dict[str, str]:
         # (ann_lsh_topk oracle moved to retired_oracle_sql(), pytest-checked
         # — r7 contract slot freed for corpus_clean_tags)
         "ann_lsh_multi_topk": _lsh_oracle_sql(n_planes=8, n_tables=7),
-        # IVF: deterministic sampled quantizer in the contract query (the
-        # KMeans fit is the production variant, same probe/re-rank path) —
-        # the whole query is rebuilt in SQL, zero rows-only entries left
+        # IVF: the whole query is rebuilt in SQL, zero rows-only entries left
         # (ann_ivf_topk oracle moved to retired_oracle_sql(), pytest-checked
         # — r7 contract slot freed for lm_doc_logprob)
         "lm_doc_logprob": _lm_scores_sql(),
@@ -2497,13 +2434,6 @@ def retired_oracle_sql() -> dict[str, str]:
     (tests/test_retired_contract.py) — retirement moves the check, it does
     not drop it."""
     return {
-        "dedup_exact_groups": """
-            SELECT doc_id,
-                   md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash,
-                   min(doc_id) OVER (PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))))
-                       AS canonical_id
-            FROM documents
-        """,
         "ann_lsh_topk": _lsh_oracle_sql(n_planes=6, n_tables=1),
         "ann_ivf_topk": _ivf_seeded_oracle_sql(n_cells=32, nprobe=6),
         "dedup_ngram_jaccard": """
@@ -2532,7 +2462,6 @@ def retired_oracle_sql() -> dict[str, str]:
 
 
 RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_exact_groups": q_dedup_exact_groups,
     "ann_lsh_topk": q_ann_lsh_topk,
     "ann_ivf_topk": q_ann_ivf_topk,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,

@@ -354,9 +354,6 @@ def ann_recall(qs, spark, sf_dir: str) -> dict:
     scale — makes the quality/speed dial visible evidence next to the
     throughput numbers (judge r2 item #9). Tiny result sets: toPandas is a
     driver-side set comparison, not a compute path."""
-    from fia_own_map_spark.operators import ann as _ann
-    from pyspark.sql import functions as F
-
     truth = qs["ann_cosine_topk"](spark, sf_dir).toPandas()
 
     def _recall(approx) -> float:
@@ -368,23 +365,13 @@ def ann_recall(qs, spark, sf_dir: str) -> dict:
         return round(sum(recalls) / len(recalls), 3)
 
     out: dict[str, float] = {}
-    # contract paths (r6: ann_ivf_topk = deterministic seeded quantizer,
-    # ann_ivf_lloyd_topk = integer-exact trained quantizer)
+    # contract paths (ann_ivf_topk = the integer-Lloyd quantizer untrained,
+    # n_iters=0; ann_ivf_lloyd_topk = the same quantizer after 2 iterations)
     for name in (
         "ann_ivf_topk", "ann_ivf_lloyd_topk", "ann_lsh_topk", "ann_lsh_multi_topk"
     ):
         out[name] = _recall(qs[name](spark, sf_dir).toPandas())
         log(f"  [A] recall@10 {name}: {out[name]}")
-    # the KMeans-trained quantizer (production IVF fit, same probe/re-rank
-    # path) — measured directly so swapping the contract query to the
-    # SQL-checkable quantizer didn't drop the trained path's evidence
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    km = _ann.ivf_cosine_topk(emb, queries, k=10, n_cells=32, nprobe=6).toPandas()
-    out["ann_ivf_kmeans"] = _recall(km)
-    log(f"  [A] recall@10 ann_ivf_kmeans: {out['ann_ivf_kmeans']}")
     out.update(lsh_candidate_fractions(spark, sf_dir))
     return out
 
@@ -411,55 +398,36 @@ def lsh_candidate_fractions(spark, sf_dir: str) -> dict:
         out[name] = round(n_cand / (n_corpus * n_queries), 4)
         log(f"  [A] candidate fraction {name}: {out[name]}")
     # IVF: same budget accounting — candidates = corpus rows in probed cells
-    # (32 cells / nprobe 6 = the ann_ivf_topk contract config, chosen on the
-    # r5 frontier sweep: equal recall to LSH-multi at a smaller fraction).
-    # Both quantizers measured: KMeans (production fit) and the seeded
-    # deterministic one (the r6 contract query).
-    from fia_own_map_spark.operators.ann import _probe_cells, ivf_index, seeded_centroids
-
-    indexed, centroids = ivf_index(emb, n_cells=32)
-    qsel = queries.select("query_id", F.col("embedding").alias("_qvec"))
-    for tag, idx, cents in (
-        ("ivf_frac", indexed, centroids),
-        (
-            "ivf_seeded_frac",
-            None,  # assignment via _probe_cells nprobe=1 below
-            seeded_centroids(emb, n_cells=32),
-        ),
-    ):
-        if idx is None:
-            idx = _probe_cells(emb.select("vec_id", "embedding"), cents, 1, "embedding")
-        q = _probe_cells(qsel, cents, 6, "_qvec")
-        n_cand = idx.join(F.broadcast(q), "_cell").count()
-        out[tag] = round(n_cand / (n_corpus * n_queries), 4)
-        log(f"  [A] candidate fraction {tag}: {out[tag]}")
-    # trained integer-Lloyd quantizer (integer-L2 assignment/probe, matching
-    # the ann_ivf_lloyd_topk contract config)
+    # (32 cells / nprobe 6, chosen on the r5 frontier sweep: equal recall to
+    # LSH-multi at a smaller fraction). Integer-L2 assignment/probe as in
+    # ivf_lloyd_cosine_topk; n_iters=0 is the ann_ivf_topk quantizer, 2 the
+    # ann_ivf_lloyd_topk one.
     from pyspark.sql import Window as _W
 
     from fia_own_map_spark.operators.ann import _int_l2, _int_qvec, lloyd_centroids
 
-    cent = lloyd_centroids(emb, n_cells=32, n_iters=2)
-    asn = (
-        emb.select("vec_id", _int_qvec("embedding").alias("_q"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("_d", _int_l2(F.col("_q"), F.col("_c")))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("_d", "_cell")).alias("_m"))
-        .select(F.col("_m._cell").alias("_cell"))
-    )
     wq = _W.partitionBy("query_id").orderBy("_d", "_cell")
-    qp = (
-        queries.select("query_id", _int_qvec("embedding").alias("_qq"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("_d", _int_l2(F.col("_qq"), F.col("_c")))
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= 6)
-        .select("query_id", "_cell")
-    )
-    n_cand = asn.join(F.broadcast(qp), "_cell").count()
-    out["ivf_lloyd_frac"] = round(n_cand / (n_corpus * n_queries), 4)
-    log(f"  [A] candidate fraction ivf_lloyd_frac: {out['ivf_lloyd_frac']}")
+    for n_iters, tag in ((0, "ivf_seeded_frac"), (2, "ivf_lloyd_frac")):
+        cent = lloyd_centroids(emb, n_cells=32, n_iters=n_iters)
+        asn = (
+            emb.select("vec_id", _int_qvec("embedding").alias("_q"))
+            .crossJoin(F.broadcast(cent))
+            .withColumn("_d", _int_l2(F.col("_q"), F.col("_c")))
+            .groupBy("vec_id")
+            .agg(F.min(F.struct("_d", "_cell")).alias("_m"))
+            .select(F.col("_m._cell").alias("_cell"))
+        )
+        qp = (
+            queries.select("query_id", _int_qvec("embedding").alias("_qq"))
+            .crossJoin(F.broadcast(cent))
+            .withColumn("_d", _int_l2(F.col("_qq"), F.col("_c")))
+            .withColumn("_rn", F.row_number().over(wq))
+            .filter(F.col("_rn") <= 6)
+            .select("query_id", "_cell")
+        )
+        n_cand = asn.join(F.broadcast(qp), "_cell").count()
+        out[tag] = round(n_cand / (n_corpus * n_queries), 4)
+        log(f"  [A] candidate fraction {tag}: {out[tag]}")
     return out
 
 
@@ -1282,9 +1250,8 @@ corpus before the groupBy+join rewrite; the full 8x corpus now runs in
 
 | path | recall@10 | corpus fraction scored (measured) |
 |---|---|---|
-| IVF seeded quantizer (32 cells, nprobe=6 — the `ann_ivf_topk` contract query, SQL-value-checked) | {ann_recall.get('ann_ivf_topk')} | {ann_recall.get('ivf_seeded_frac')} |
+| IVF seeded quantizer (32 cells, nprobe=6 — integer-Lloyd at 0 iters, the retired `ann_ivf_topk` query, SQL-value-checked in pytest) | {ann_recall.get('ann_ivf_topk')} | {ann_recall.get('ivf_seeded_frac')} |
 | IVF integer-Lloyd TRAINED quantizer (32 cells, nprobe=6, 2 iters — `ann_ivf_lloyd_topk`, the trained fit itself SQL-value-checked) | {ann_recall.get('ann_ivf_lloyd_topk')} | {ann_recall.get('ivf_lloyd_frac')} |
-| IVF KMeans quantizer (32 cells, nprobe=6 — pyspark.ml production fit, same probe/re-rank path) | {ann_recall.get('ann_ivf_kmeans')} | {ann_recall.get('ivf_frac')} |
 | LSH single table (6 planes, flip-1) | {ann_recall.get('ann_lsh_topk')} | {ann_recall.get('lsh_frac')} |
 | LSH OR-amplified (7 tables x 8 planes, flip-1) | {ann_recall.get('ann_lsh_multi_topk')} | {ann_recall.get('lsh_multi_frac')} |
 

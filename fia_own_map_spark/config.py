@@ -15,7 +15,7 @@ assignments in `Classify_Unknowns_opt.py` (25 federal @:600, 31 state @:653,
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # ---------------------------------------------------------------------------
 # Ownership class codes (README.md:50-56)
@@ -159,7 +159,6 @@ class EngineConfig:
     use_soundex_keys: bool = False
     salt_mega_blocks: bool = True
     checkpoint_root: str = ".checkpoints"
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = EngineConfig()

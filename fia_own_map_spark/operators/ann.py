@@ -9,11 +9,12 @@
     within bucket; multi-probe (flip radius >= 1) and OR-amplification
     (``n_tables`` independent plane sets, candidate union, exact re-rank)
     are the two recall dials when per-plane selectivity is weak.
-  * ``ivf_cosine_topk``  — IVF (inverted-file) index: a seeded KMeans coarse
-    quantizer assigns every corpus vector to a cell (one shuffle, done once
-    and reusable); each query probes its ``nprobe`` nearest centroids and
-    scores only those cells' vectors. The standard recall/throughput dial
-    for billion-vector corpora.
+  * ``ivf_lloyd_cosine_topk`` — IVF (inverted-file) index: an integer-exact
+    Lloyd-trained coarse quantizer (``lloyd_centroids``, seeded from the
+    id-ordered corpus) assigns every corpus vector to a cell (one shuffle,
+    done once and reusable); each query probes its ``nprobe`` nearest
+    centroids and scores only those cells' vectors. The standard
+    recall/throughput dial for billion-vector corpora.
 
 At 100 TB the brute-force path is O(|corpus| x |queries|) and is only correct
 for small query sets with a broadcast side; the LSH/IVF paths shuffle each
@@ -118,193 +119,6 @@ def hyperplane_bucket(vec_col: Column | str, planes: list[list[float]]) -> Colum
     return F.concat(*bits)
 
 
-def ivf_index(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[list[float]]]:
-    """Build the IVF coarse quantizer: (corpus + `_cell` column, centroids).
-
-    KMeans (pyspark.ml, seeded) trains the quantizer distributed; assignment
-    is one model.transform — the corpus shuffles once when the caller
-    repartitions/writes by cell. Returns centroids so queries can rank cells
-    driver-side (n_cells is small by construction)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    prepared = corpus.withColumn("_fvec", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="_fvec", predictionCol="_cell")
-    model = km.fit(prepared)
-    assigned = model.transform(prepared).drop("_fvec")
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned, centroids
-
-
-# above this many centroid literal values, cell probing switches from a
-# plan-embedded literal array to a broadcast centroid-table join
-_PROBE_LITERAL_LIMIT = 200_000
-
-
-def _probe_cells(
-    queries: DataFrame, centroids: list[list[float]], nprobe: int, vec_col: str
-) -> DataFrame:
-    """queries + one row per (query, probed cell): rank centroids by squared
-    L2 distance, keep nprobe — all native exprs (centroids are literals; no
-    driver collect, so the query side can itself be a large table).
-
-    Large quantizers (n_cells x dim beyond ~200k literal values) would bloat
-    the plan; those route through a broadcast centroid-table join + window
-    rank instead (one extra shuffle of |queries| x n_cells slim rows)."""
-    if len(centroids) * len(centroids[0]) > _PROBE_LITERAL_LIMIT:
-        spark = queries.sparkSession
-        cdf = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "_cell int, _cvec array<double>",
-        )
-        dist = F.aggregate(
-            F.zip_with(
-                "_cvec",
-                F.col(vec_col).cast("array<double>"),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        w = Window.partitionBy(queries.columns[0]).orderBy("_d", "_cell")
-        return (
-            queries.crossJoin(F.broadcast(cdf))
-            .withColumn("_d", dist)
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= nprobe)
-            .select(*queries.columns, "_cell")
-        )
-    cent = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cell"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("cvec"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    dist = lambda cvec, v: F.aggregate(  # noqa: E731
-        F.zip_with(cvec, v, lambda a, b: (a - b.cast("double")) * (a - b.cast("double"))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    with_cells = queries.withColumn(
-        "_probe",
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    cent,
-                    lambda s: F.struct(
-                        dist(s["cvec"], F.col(vec_col)).alias("d"),
-                        s["cell"].alias("cell"),
-                    ),
-                )
-            ),
-            1,
-            nprobe,
-        ),
-    )
-    return with_cells.select(
-        *queries.columns, F.explode(F.col("_probe").getField("cell")).alias("_cell")
-    )
-
-
-def ivf_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    indexed: DataFrame | None = None,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF top-k: exact cosine within each query's nprobe nearest cells.
-
-    Pass a prebuilt (indexed, centroids) pair to amortize the quantizer
-    across query batches — at production scale the assigned corpus is a
-    partitioned/bucketed table written once. Cell ranking happens
-    distributed on the query side (centroids are broadcast literals — no
-    driver collect), exploding to (query, cell) rows (|queries| x nprobe),
-    so the corpus is never shuffled at query time; recall < 1 by
-    construction (cell misses), increasing with nprobe."""
-    if indexed is None or centroids is None:
-        indexed, centroids = ivf_index(corpus, n_cells, seed, id_col, vec_col)
-    q = _probe_cells(
-        queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
-        centroids,
-        nprobe,
-        "_qvec",
-    )
-    scored = indexed.join(F.broadcast(q), "_cell").select(
-        query_id_col,
-        id_col,
-        F.round(cosine(F.col(vec_col), F.col("_qvec")), 6).alias("score"),
-    )
-    return _global_topk(scored, k, query_id_col, id_col)
-
-
-def seeded_centroids(
-    corpus: DataFrame,
-    n_cells: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Deterministic quantizer centroids: the first ``n_cells`` corpus
-    vectors in id order (no training step). One bounded limit-collect."""
-    rows = corpus.orderBy(id_col).limit(n_cells).select(vec_col).collect()
-    return [[float(x) for x in r[0]] for r in rows if r[0] is not None]
-
-
-def ivf_seeded_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 32,
-    nprobe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF top-k with a deterministic sampled quantizer — the value-checked
-    sibling of `ivf_cosine_topk` (same pattern as the md5-vs-xxhash64
-    MinHash pair): centroids are id-ordered corpus vectors instead of
-    KMeans means, so the WHOLE query — assignment (argmin L2, ties by
-    cell), nprobe cell ranking, exact cosine re-rank, global top-k — is
-    reproducible in DuckDB SQL. The probing/assignment/re-rank machinery
-    is byte-identical to the production KMeans variant (same
-    `_probe_cells` / `_global_topk`); only the quantizer fit differs.
-    Corpus assignment is `_probe_cells` with nprobe=1 (centroid literals
-    broadcast in the plan, corpus never shuffled); at production scale the
-    assignment is written once as a partitioned table, as with
-    `ivf_index`."""
-    if centroids is None:
-        centroids = seeded_centroids(corpus, n_cells, id_col, vec_col)
-    assigned = _probe_cells(corpus.select(id_col, vec_col), centroids, 1, vec_col)
-    q = _probe_cells(
-        queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
-        centroids,
-        nprobe,
-        "_qvec",
-    )
-    scored = assigned.join(F.broadcast(q), "_cell").select(
-        query_id_col,
-        id_col,
-        F.round(cosine(F.col(vec_col), F.col("_qvec")), 6).alias("score"),
-    )
-    return _global_topk(scored, k, query_id_col, id_col)
-
-
 # integer quantization scale for the Lloyd trainer: floor(x * 2^20).
 # Multiplying a float by a power of two is EXACT (exponent shift) and floor
 # is unambiguous on both engines, so the training input is the identical
@@ -341,7 +155,8 @@ def lloyd_centroids(
 ) -> DataFrame:
     """Deterministic Lloyd-trained coarse quantizer: (``_cell``, ``_c``
     array<long>) after ``n_iters`` fixed iterations from the id-ordered
-    seed (`seeded_centroids`' convention), entirely in integer arithmetic.
+    seed (the first ``n_cells`` corpus vectors in id order), entirely in
+    integer arithmetic; ``n_iters=0`` is that seed itself.
 
     Per iteration: argmin integer-L2 assignment (ties by smallest cell),
     then centroid = truncated integer mean per dimension
@@ -352,8 +167,7 @@ def lloyd_centroids(
     KMeans can never give — and the whole fit unrolls into DuckDB SQL
     (`_ivf_lloyd_oracle_sql`). Assignment is one groupBy shuffle of slim
     (id, cell) rows per iteration with map-side partial min; at 100 TB you
-    train on a sample (same determinism) and write the assignment once,
-    exactly like `ivf_index`."""
+    train on a sample (same determinism) and write the assignment once."""
     q = corpus.select(F.col(id_col).alias("_id"), _int_qvec(vec_col).alias("_q"))
     w = Window.orderBy("_id")  # bounded: n_cells rows after the limit
     cent = (
@@ -403,10 +217,9 @@ def ivf_lloyd_cosine_topk(
     query_id_col: str = "query_id",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF top-k with the integer-exact Lloyd-TRAINED quantizer — the fully
-    value-checked trained sibling of `ivf_cosine_topk` (r5 verdict #4's
-    option A: seeded init + fixed iteration count, iterations unrolled in
-    the oracle). Assignment and probing rank cells by integer L2 on the
+    """IVF top-k with the integer-exact Lloyd-trained quantizer (seeded init
+    + fixed iteration count, so the DuckDB oracle unrolls the iterations
+    and value-checks the whole fit). Assignment and probing rank cells by integer L2 on the
     quantized vectors (matching the training metric); the re-rank is exact
     float cosine on the ORIGINAL embeddings, same as every other ANN path.
     Pass a prebuilt `lloyd_centroids` frame to amortize the fit across

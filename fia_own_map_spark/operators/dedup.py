@@ -4,9 +4,8 @@ Four families, each a first-class engine op over a documents table:
 
   * exact            — hash-groupBy on normalized text, keep min(id)
   * MinHash + LSH    — shingle -> minhash signature -> banded bucket join.
-    Hash family is ``md5(shingle || '#' || seed)`` so a SQL oracle (DuckDB)
-    can reproduce signatures bit-for-bit; min over hex strings is
-    lexicographic in both engines.
+    Hash family is ``xxhash64(shingle, seed)``; the DuckDB oracle
+    reproduces XXH64 in SQL (``testing/xxh64_sql.py``).
   * SimHash          — 64-bit sign-sum of token hashes (Arrow-batched pandas
     UDF), candidate pairs via prefix buckets + Hamming threshold
   * n-gram Jaccard   — exact token/char-shingle Jaccard verification within
@@ -86,25 +85,6 @@ def normalized_words_py(text: str) -> list[str]:
     return [w for w in t.split(" ") if w]
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, content_hash, canonical_id): canonical = min(id) per hash."""
-    h = F.md5(normalized_text(text_col)).alias("content_hash")
-    # Group/join on a NULL-coalesced key (sentinel can't collide with 32-hex
-    # md5 output) so NULL-text rows form one group like the oracle's
-    # GROUP BY/PARTITION BY does, instead of being dropped by a
-    # null-rejecting equi-join; the emitted content_hash stays NULL.
-    with_hash = df.select(
-        F.col(id_col), h, F.coalesce(h, F.lit("__null_text__")).alias("_hash_k")
-    )
-    # groupBy + join back, not a window over the hash: a pathological
-    # corpus (one document repeated millions of times) makes the window's
-    # partition a single spilling task; the agg reduces map-side
-    mins = with_hash.groupBy("_hash_k").agg(F.min(id_col).alias("canonical_id"))
-    return with_hash.join(mins, "_hash_k").select(
-        id_col, "content_hash", "canonical_id"
-    )
-
-
 def exact_keep_ids(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """One-column table of the surviving ids (min id per distinct normalized
     content). The survivor ids ARE the per-hash min ids, so the groupBy's
@@ -119,11 +99,9 @@ def exact_keep_ids(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one row per distinct normalized content (min id wins).
-
-    semi-join against the keep-id aggregate — the exact_dup_groups route
-    re-joined every row to its group min just to filter id == canonical,
-    paying one more exchange of the full (id, hash) table for nothing."""
+    """Keep one row per distinct normalized content (min id wins): a
+    semi-join against the keep-id aggregate, so the full (id, hash) table
+    is never joined back to its group min."""
     return df.join(exact_keep_ids(df, id_col, text_col), id_col, "left_semi")
 
 
@@ -142,50 +120,27 @@ def word_shingles(text_col: Column | str, k: int = 3) -> Column:
     )).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def minhash_signature(
-    shingles: Column, n_hashes: int = 16, hash_family: str = "xxhash64"
-) -> Column:
-    """n-element minhash signature.
-
-    * ``xxhash64`` (default, the production family): array<bigint> of
-      min(xxhash64(shingle, seed)) — one cheap JVM hash per shingle per seed,
-      no string materialization.
-    * ``md5``: array<string> of min(md5(shingle || '#' || seed)) — 4-8x more
-      expensive but reproducible in DuckDB SQL, kept for the oracle-checked
-      query (min over hex strings is lexicographic in both engines).
-    """
-    if hash_family == "md5":
-        sigs = [
-            F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(s, F.lit(f"#{seed}")))))
-            for seed in range(n_hashes)
-        ]
-    else:
-        sigs = [
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed))))
-            for seed in range(n_hashes)
-        ]
-    return F.array(*sigs)
+def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
+    """n-element minhash signature: array<bigint> of
+    min(xxhash64(shingle, seed)) — one cheap JVM hash per shingle per seed,
+    no string materialization."""
+    return F.array(*[
+        F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed))))
+        for seed in range(n_hashes)
+    ])
 
 
-def lsh_bands(
-    sig_col: Column | str, n_bands: int, rows_per_band: int, hash_family: str = "xxhash64"
-) -> Column:
-    """array<string> of band keys: band index + hash of the band slice.
-
-    xxhash64 family hashes the typed array slice directly (no string
-    materialization); md5 family joins the hex values so DuckDB reproduces
-    the key bit-for-bit."""
+def lsh_bands(sig_col: Column | str, n_bands: int, rows_per_band: int) -> Column:
+    """array<string> of band keys: band index + xxhash64 of the typed band
+    slice (no string materialization)."""
     sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-
-    def band_key(b: int) -> Column:
-        sl = F.slice(sig, b * rows_per_band + 1, rows_per_band)
-        if hash_family == "md5":
-            hashed = F.md5(F.array_join(sl, ","))
-        else:
-            hashed = F.xxhash64(sl).cast("string")
-        return F.concat(F.lit(f"b{b}:"), hashed)
-
-    return F.array(*[band_key(b) for b in range(n_bands)])
+    return F.array(*[
+        F.concat(
+            F.lit(f"b{b}:"),
+            F.xxhash64(F.slice(sig, b * rows_per_band + 1, rows_per_band)).cast("string"),
+        )
+        for b in range(n_bands)
+    ])
 
 
 def minhash_lsh_pairs(
@@ -197,7 +152,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
     max_bucket_size: int = 1000,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH, verified with
     exact shingle-set Jaccard. Returns (id_a, id_b, jaccard), id_a < id_b,
@@ -205,9 +159,6 @@ def minhash_lsh_pairs(
     table contract; run exact dedup first otherwise — with duplicated ids
     the shingle-attach joins re-expand pairs, where the old post-attach
     dropDuplicates picked one arbitrary survivor).
-
-    hash_family: ``xxhash64`` (production default, cheap typed hashing) or
-    ``md5`` (DuckDB-reproducible, used by the oracle-checked query).
 
     Buckets larger than max_bucket_size are dropped (standard LSH practice: a
     band key shared by thousands of documents carries no discrimination and
@@ -222,13 +173,13 @@ def minhash_lsh_pairs(
     prepared = df.repartition(width, id_col).select(
         F.col(id_col),
         word_shingles(text_col, shingle_k).alias("shingles"),
-    ).withColumn("sig", minhash_signature(F.col("shingles"), n_hashes, hash_family))
+    ).withColumn("sig", minhash_signature(F.col("shingles"), n_hashes))
     # persist the PREPARED table (one slim row per doc, shingles + signature):
     # it feeds the banded bucket pipeline (3 cheap re-projections) and the
     # final shingle attach on both pair sides. At production scale this
     # intermediate is checkpointed to a table instead. swap_cached releases
     # the previous invocation's copy so repeated calls don't leak.
-    prepared = swap_cached(f"minhash_prepared:{hash_family}", prepared)
+    prepared = swap_cached("minhash_prepared", prepared)
     # every exchange between here and the verified pairs moves (id, band) /
     # (id_a, id_b) only — the shingle arrays never ride through the
     # candidate shuffles (a pair can surface in up to n_bands buckets, so
@@ -237,7 +188,7 @@ def minhash_lsh_pairs(
     # side from the cached prepared table after the pair dedup.
     banded = prepared.select(
         id_col,
-        F.explode(lsh_bands("sig", n_bands, rows_per_band, hash_family)).alias("band"),
+        F.explode(lsh_bands("sig", n_bands, rows_per_band)).alias("band"),
     )
     # bucket-size cap via groupBy + join, not a count window: the window
     # would put a degenerate mega-bucket (the thing the cap exists to

@@ -217,7 +217,7 @@ def minhash_fast_oracle_sql(
 ) -> str:
     """Full DuckDB oracle for `dedup_minhash_fast` (shingle_k=1).
 
-    Mirrors dedup.minhash_lsh_pairs(hash_family='xxhash64') end-to-end:
+    Mirrors dedup.minhash_lsh_pairs end-to-end:
     distinct-token shingles, sig[i] = min over tokens of
     xxhash64(token, lit(i)) as SIGNED bigints, band key
     'b{b}:' || xxhash64(sig-slice) (seed-chained hashLong over the slice

@@ -92,15 +92,15 @@ def test_baseline_md_full_and_partial(tmp_path, monkeypatch):
     bench.write_baseline_md(
         bench.assemble_scaling(_big(), _kruns(), _calib(),
                                ([_er(8, 60.0)], [_er(32, 40.0)])),
-        ann_recall={"ann_ivf_topk": 0.8, "ann_ivf_kmeans": 0.7,
+        ann_recall={"ann_ivf_topk": 0.8,
                     "ann_lsh_topk": 0.3, "ann_lsh_multi_topk": 0.6,
                     "lsh_frac": 0.1, "lsh_multi_frac": 0.2,
-                    "ivf_frac": 0.35, "ivf_seeded_frac": 0.19},
+                    "ivf_seeded_frac": 0.19},
         codec={"codec_images_per_sec": 400.0, "codec_px_per_sec": 3.7e6},
     )
     md = open(tmp_path / "BENCH" / "BASELINE.md").read()
     assert "Criterion metric: candidate-pairs-scored/sec" in md
-    assert "IVF seeded quantizer" in md and "IVF KMeans quantizer" in md
+    assert "IVF seeded quantizer" in md
     assert "local[32] wins outright" in md  # claim computed from the numbers
 
 

@@ -109,17 +109,14 @@ def test_span_accounting_matches_standalone_stats(corpus):
     budget op predicted."""
     from pyspark.sql import functions as F
 
-    from fia_own_map_spark.operators.dedup import exact_dup_groups, span_dedup_stats
+    from fia_own_map_spark.operators.dedup import exact_dedup, span_dedup_stats
 
     tagged = tag_corpus(corpus, span_k=8)
     m = corpus_metrics(tagged)
     # exact dups never reach the span stage
     assert m[DROP_EXACT_DUP]["span_tokens_removed"] == 0
     # predicted budget: span stats over the dedup survivors
-    dups = exact_dup_groups(corpus).filter(
-        F.col("doc_id") != F.col("canonical_id")
-    ).select("doc_id")
-    survivors = corpus.join(dups, "doc_id", "left_anti")
+    survivors = exact_dedup(corpus)
     predicted = {
         r["doc_id"]: r["dup_tokens"]
         for r in span_dedup_stats(survivors, k=8).collect()

@@ -8,7 +8,6 @@ end-to-end, but only at the call sites the contract exercises):
     defensive default path, on both edge producers the engine uses
     (star_edges, candidate-pair match edges) — round 0 is a small-star
     for every input, so no canonicalization flag exists anymore;
-  * exact_dedup's keep-id-aggregate route == the exact_dup_groups route;
   * minhash_lsh_pairs' slim-pair plan == the documented unique-output
     contract on unique-id input.
 """
@@ -78,20 +77,6 @@ def test_cc_assume_unique_vertices_contract_documents_misuse(spark):
     )
     assert len(_collect_labels(base)) == 8
     assert len(_collect_labels(fast)) == 10  # promise violated -> dup rows
-
-
-def test_exact_dedup_matches_dup_groups_route(spark):
-    rows = [
-        (1, "a b"), (2, "A  B"), (3, "c"), (4, None), (5, None), (6, "a b "),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    groups = dedup.exact_dup_groups(df)
-    old_keep = sorted(
-        r["doc_id"]
-        for r in groups.filter(F.col("doc_id") == F.col("canonical_id")).collect()
-    )
-    new_keep = sorted(r["doc_id"] for r in dedup.exact_dedup(df).collect())
-    assert new_keep == old_keep == [1, 3, 4]
 
 
 def test_minhash_unique_pairs_on_unique_ids(spark):

@@ -6,12 +6,12 @@ retired query keeps its DuckDB oracle here, run at sf0.001 each pytest
 pass (same compare discipline as tools/verify_contract.py).
 
 Retired so far:
-  r6: dedup_minhash_pairs   (md5 family — checked in test_ops.py)
-  r7: dedup_exact_groups    (slot freed for span_dedup_stats)
   r7: ann_lsh_topk          (slot freed for corpus_clean_tags)
   r7: window_sum_value_per_user (slot freed for bpe_token_counts)
-  r7: ann_ivf_topk          (seeded quantizer — the trained-Lloyd contract
-      row covers the same probe/re-rank path; slot freed for lm_doc_logprob)
+  r7: ann_ivf_topk          (untrained quantizer: ivf_lloyd_cosine_topk at
+      n_iters=0 against the float-L2 seeded oracle; the trained-Lloyd
+      contract row covers the same probe/re-rank path; slot freed for
+      lm_doc_logprob)
   r7: dedup_ngram_jaccard   (1-row pair output — weakest evidence of the
       value-checked dedup family; slot freed for decontam_eval_overlap)
 """

@@ -78,8 +78,8 @@ def test_sql_matches_python_token_hashes():
 
 
 def _py_minhash_pairs(docs):
-    """Python replica of dedup.minhash_lsh_pairs(hash_family='xxhash64',
-    n_hashes=8, n_bands=4, shingle_k=1, threshold=0.9)."""
+    """Python replica of dedup.minhash_lsh_pairs(n_hashes=8, n_bands=4,
+    shingle_k=1, threshold=0.9)."""
     def shingles(text):
         toks = re.sub(r"\s+", " ", text.strip().lower()).split(" ")
         return list(dict.fromkeys(toks))
@@ -148,7 +148,7 @@ def test_oracle_sql_matches_spark_pipeline(spark, synth_docs):
         (r["id_a"], r["id_b"], r["jaccard"])
         for r in dedup.minhash_lsh_pairs(
             df, n_hashes=8, n_bands=4, shingle_k=1,
-            jaccard_threshold=0.9, hash_family="xxhash64",
+            jaccard_threshold=0.9,
         )
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         .collect()
