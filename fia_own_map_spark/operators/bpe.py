@@ -41,6 +41,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from fia_own_map_spark.operators.dedup import normalized_text, normalized_words_py
+from fia_own_map_spark.session import release_checkpoints
 
 END = "</w>"  # end-of-word marker symbol (standard BPE)
 
@@ -130,17 +131,6 @@ def _has_adjacent(symbols: Column, a: str, b: str) -> Column:
     )
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint's cached blocks once its successor is
-    materialized (localCheckpoint never unpersists on its own — at a 32k-
-    merge production vocabulary the leaked iterations would exhaust the
-    block store). Best-effort: on any API drift the blocks just age out."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def train_bpe(
     df: DataFrame,
     text_col: str = "text",
@@ -223,11 +213,11 @@ def train_bpe(
                 has_pair, _merge_in_symbols(F.col("symbols"), a, b)
             ).otherwise(F.col("symbols")),
         ).localCheckpoint()
-        _release_checkpoint(pc)
-        _release_checkpoint(tbl)
+        release_checkpoints(pc)
+        release_checkpoints(tbl)
         pc, tbl = new_pc, new_tbl
-    _release_checkpoint(pc)
-    _release_checkpoint(tbl)
+    release_checkpoints(pc)
+    release_checkpoints(tbl)
     return merges
 
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fia_own_map_spark.session import release_checkpoints
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edge set, canonical (min, max) orientation, no self-loops."""
@@ -129,7 +131,7 @@ def connected_components(
             break
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         nsig = _signature(nxt)
-        cur.unpersist()
+        release_checkpoints(cur)
         cur = nxt
         if nsig == sig:
             break

@@ -37,6 +37,7 @@ from fia_own_map_spark.operators.classify import classify_own_type, with_initial
 from fia_own_map_spark.operators.extract import parse_mentions, with_extracted_text
 from fia_own_map_spark.operators.refine import cluster_size, refine_clusters_by_address
 from fia_own_map_spark.operators.scoring import match_edges, score_pairs
+from fia_own_map_spark.session import release_checkpoints
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
 
 
@@ -84,179 +85,199 @@ def run_pipeline(
         section_walls[name] = round(now - _mark, 3)
         _mark = now
 
-    # ---- stage 0: extract + parse + classify -------------------------------
-    t0 = time.time()
-    if store.exists("records"):
-        records = store.read(spark, "records")
-        metrics["stages"]["records"] = store.read_metrics("records")
-    else:
-        records = stage0_records(pages, use_html=use_html)
-        m = store.write(
-            "records",
-            records.select(
-                "url", "warc_ts", "lang", "owner1", "owner2", "simple_owners",
-                "tokens", "name_keys", "comb_addr", "initial_class", "own_type",
-                "rule_matched",
-            ),
-        )
-        records = store.read(spark, "records")
-        metrics["stages"]["records"] = m
-    _section("s0_records")
+    # Every table this run persists, and the CC labels (they read the last
+    # round's localCheckpoint). Released in the finally: a stage that raises
+    # must not leave them pinned in a long-lived session.
+    pinned: list[DataFrame] = []
+    labels: DataFrame | None = None
 
-    # matchable = classified rows; unknowns become singletons
-    # (`Name_Matching_opt.py:230-232`). Matching runs inside class buckets,
-    # with family (45, ic!=3) and juniors (45, ic==3) as separate buckets
-    # (`Name_Matching_opt.py:167-171`).
-    matchable = records.filter(F.col("own_type") != CLASS_UNKNOWN).withColumn(
-        "match_bucket",
-        F.when(
-            (F.col("own_type") == 45) & (F.col("initial_class") == 3),
-            F.concat(F.col("own_type").cast("string"), F.lit("J")),
-        ).otherwise(F.col("own_type").cast("string")),
-    )
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(df.persist())
+        return df
 
-    # ---- node table: distinct (bucket, name) --------------------------------
-    # Mentions repeat heavily (that is what makes blocking work), so the
-    # entire block/score/cluster graph runs over DISTINCT name nodes and
-    # record ids re-attach at the end. At web scale this shrinks every
-    # shuffle by the mention-repetition factor; the emitted partition is
-    # provably identical (records with equal (bucket, name) share all keys
-    # and therefore always co-cluster). Records whose name normalizes to ''
-    # have no keys and stay singletons (excluded from the node graph).
-    named = matchable.filter(F.length("simple_owners") > 0).withColumn(
-        "node_id", F.concat_ws("|", "match_bucket", "simple_owners")
-    )
-    # persist: nodes feeds blocking (stage 1), the scoring name join
-    # (stage 2) and the CC vertex set (stage 3) — without the cache each
-    # consumer re-reads the records checkpoint and re-runs the distinct
-    # shuffle. Unpersisted before return.
-    nodes = named.select(
-        "node_id", "match_bucket", "simple_owners", "tokens", "name_keys"
-    ).distinct().persist()
-
-    # ---- stage 1: blocking keys + explicit skew handling -------------------
-    if store.exists("block_keys"):
-        keys = store.read(spark, "block_keys")
-        metrics["stages"]["block_keys"] = store.read_metrics("block_keys")
-    else:
-        # persist: the raw key table is consumed by the mega-block stats
-        # collect, the salting join AND the checkpoint write — without the
-        # cache the whole metaphone-UDF key derivation runs three times
-        # (the mega.collect() job was also invisible to the stage wall).
-        raw_keys = blocking_keys(
-            nodes, id_col="node_id", class_col="match_bucket",
-            include_soundex=cfg.use_soundex_keys,
-        ).persist()
-        if cfg.salt_mega_blocks:
-            salted, mega = salt_mega_blocks(raw_keys, "node_id", cfg)
-            mega_rows = mega.collect()
-            extra = {
-                "mega_blocks": len(mega_rows),
-                "largest_block": max((r["block_size"] for r in mega_rows), default=0),
-                # candidate pairs unscored in similarity mode due to salting
-                # (never silent — SURVEY §7.4.4); zero impact in exact mode
-                "est_dropped_pairs": int(
-                    sum(max(r["est_dropped_pairs"], 0) for r in mega_rows)
+    try:
+        # ---- stage 0: extract + parse + classify -------------------------------
+        t0 = time.time()
+        if store.exists("records"):
+            records = store.read(spark, "records")
+            metrics["stages"]["records"] = store.read_metrics("records")
+        else:
+            records = stage0_records(pages, use_html=use_html)
+            m = store.write(
+                "records",
+                records.select(
+                    "url", "warc_ts", "lang", "owner1", "owner2", "simple_owners",
+                    "tokens", "name_keys", "comb_addr", "initial_class", "own_type",
+                    "rule_matched",
                 ),
-            }
-        else:
-            salted, extra = raw_keys, {"mega_blocks": 0}
-        m = store.write("block_keys", salted, extra_metrics=extra)
-        raw_keys.unpersist()
-        keys = store.read(spark, "block_keys")
-        metrics["stages"]["block_keys"] = m
-    _section("s1_block")
-
-    # ---- stage 2: candidate pairs + scoring -> match edges (node-level) ----
-    if store.exists("edges"):
-        edges = store.read(spark, "edges")
-        metrics["stages"]["edges"] = store.read_metrics("edges")
-    else:
-        if cfg.score_mode == "exact":
-            edges_df = star_edges(keys, "node_id")
-            extra = {"pairs_scored": None, "note": "exact-key parity mode: star edges"}
-        else:
-            pairs = candidate_pairs(keys, "node_id", cfg).persist()
-            n_pairs = pairs.count()  # pre-UDF: metric without re-running scoring
-            scored = score_pairs(
-                pairs, nodes, id_col="node_id", name_col="simple_owners"
             )
-            edges_df = match_edges(scored, cfg)
-            # implied record-level pair volume (diagnostic: the node graph
-            # stands in for this many record pairs)
-            extra = {"pairs_scored": n_pairs}
-        m = store.write("edges", edges_df, extra_metrics=extra)
-        if cfg.score_mode != "exact":
-            pairs.unpersist()
-        edges = store.read(spark, "edges")
-        metrics["stages"]["edges"] = m
-    _section("s2_score")
+            records = store.read(spark, "records")
+            metrics["stages"]["records"] = m
+        _section("s0_records")
 
-    # ---- stage 3: connected components + refinement ------------------------
-    if store.exists("clusters"):
-        clusters = store.read(spark, "clusters")
-        metrics["stages"]["clusters"] = store.read_metrics("clusters")
-    else:
-        labels = connected_components(
-            edges, vertices=nodes.select(F.col("node_id").alias("id")),
-            id_col="id", component_col="node_cluster",
-            max_iterations=cfg.cc_max_iterations,
-            assume_unique_vertices=True,  # nodes carry one row per node_id
+        # matchable = classified rows; unknowns become singletons
+        # (`Name_Matching_opt.py:230-232`). Matching runs inside class buckets,
+        # with family (45, ic!=3) and juniors (45, ic==3) as separate buckets
+        # (`Name_Matching_opt.py:167-171`).
+        matchable = records.filter(F.col("own_type") != CLASS_UNKNOWN).withColumn(
+            "match_bucket",
+            F.when(
+                (F.col("own_type") == 45) & (F.col("initial_class") == 3),
+                F.concat(F.col("own_type").cast("string"), F.lit("J")),
+            ).otherwise(F.col("own_type").cast("string")),
         )
-        with_nodes = named.join(
-            labels.withColumnRenamed("id", "node_id"), "node_id", "left"
-        ).withColumn("node_cluster", F.coalesce(F.col("node_cluster"), F.col("node_id")))
-        # stable record-level label: min(url) per node cluster. groupBy +
-        # join back, NOT a window over node_cluster: the giant head
-        # component (31k+ nodes / 100k+ records at the 800k-page corpus)
-        # would be one spilling window task; the agg reduces map-side and
-        # the join is AQE-skew-splittable (same rationale as refine.py).
-        cluster_mins = with_nodes.groupBy("node_cluster").agg(
-            F.min("url").alias("cluster_id")
-        )
-        clustered = with_nodes.join(cluster_mins, "node_cluster")
-        # records with empty names: singletons
-        empties = matchable.filter(F.length("simple_owners") == 0).withColumn(
-            "cluster_id", F.col("url")
-        )
-        clustered = clustered.select(*empties.columns).unionByName(empties)
-        # address refinement for family/juniors (W4)
-        clustered = refine_clusters_by_address(clustered)
-        # unknowns: singleton clusters (`Name_Matching_opt.py:230-232`,
-        # uuid4 replaced by the deterministic own-url label)
-        unknowns = records.filter(F.col("own_type") == CLASS_UNKNOWN).withColumn(
-            "cluster_id", F.col("url")
-        )
-        final = clustered.select(
-            "url", "cluster_id", "own_type", "simple_owners", "comb_addr"
-        ).unionByName(
-            unknowns.select("url", "cluster_id", "own_type", "simple_owners", "comb_addr")
-        )
-        final = cluster_size(final)
-        m = store.write("clusters", final)
-        clusters = store.read(spark, "clusters")
-        metrics["stages"]["clusters"] = m
-    _section("s3_cluster")
 
-    metrics["wall_s"] = round(time.time() - t0, 3)
-    # A7 grouped distinct-count QA metric (`Name_Matching_opt.py:32` nunique
-    # logging analogue): clusters per ownership class, one small agg over
-    # the final checkpoint. countDistinct is exact here; at 100 TB swap for
-    # approx_count_distinct.
-    metrics["clusters_per_class"] = {
-        int(r["own_type"]): int(r["n_clusters"])
-        for r in clusters.groupBy("own_type")
-        .agg(F.countDistinct("cluster_id").alias("n_clusters"))
-        .collect()
-    }
-    # row-count preservation guard (`Classify_Unknowns_opt.py:674-690`
-    # analogue). Counts come from the committed snapshots' own lineage
-    # metrics (parquet footer stats) — no extra scan jobs.
-    n_in = metrics["stages"]["records"]["rows_out"]
-    n_out = metrics["stages"]["clusters"]["rows_out"]
-    metrics["rows_in"], metrics["rows_out"] = n_in, n_out
-    nodes.unpersist()
-    _section("s4_qa")
-    if n_in != n_out:
-        raise RuntimeError(f"row-count invariant violated: in={n_in} out={n_out}")
-    return clusters, metrics
+        # ---- node table: distinct (bucket, name) --------------------------------
+        # Mentions repeat heavily (that is what makes blocking work), so the
+        # entire block/score/cluster graph runs over DISTINCT name nodes and
+        # record ids re-attach at the end. At web scale this shrinks every
+        # shuffle by the mention-repetition factor; the emitted partition is
+        # provably identical (records with equal (bucket, name) share all keys
+        # and therefore always co-cluster). Records whose name normalizes to ''
+        # have no keys and stay singletons (excluded from the node graph).
+        named = matchable.filter(F.length("simple_owners") > 0).withColumn(
+            "node_id", F.concat_ws("|", "match_bucket", "simple_owners")
+        )
+        # persist: nodes feeds blocking (stage 1), the scoring name join
+        # (stage 2) and the CC vertex set (stage 3) — without the cache each
+        # consumer re-reads the records checkpoint and re-runs the distinct
+        # shuffle.
+        nodes = pin(named.select(
+            "node_id", "match_bucket", "simple_owners", "tokens", "name_keys"
+        ).distinct())
+
+        # ---- stage 1: blocking keys + explicit skew handling -------------------
+        if store.exists("block_keys"):
+            keys = store.read(spark, "block_keys")
+            metrics["stages"]["block_keys"] = store.read_metrics("block_keys")
+        else:
+            # persist: the raw key table is consumed by the mega-block stats
+            # collect, the salting join AND the checkpoint write — without the
+            # cache the whole metaphone-UDF key derivation runs three times
+            # (the mega.collect() job was also invisible to the stage wall).
+            raw_keys = pin(blocking_keys(
+                nodes, id_col="node_id", class_col="match_bucket",
+                include_soundex=cfg.use_soundex_keys,
+            ))
+            if cfg.salt_mega_blocks:
+                salted, mega = salt_mega_blocks(raw_keys, "node_id", cfg)
+                mega_rows = mega.collect()
+                extra = {
+                    "mega_blocks": len(mega_rows),
+                    "largest_block": max((r["block_size"] for r in mega_rows), default=0),
+                    # candidate pairs unscored in similarity mode due to salting
+                    # (never silent — SURVEY §7.4.4); zero impact in exact mode
+                    "est_dropped_pairs": int(
+                        sum(max(r["est_dropped_pairs"], 0) for r in mega_rows)
+                    ),
+                }
+            else:
+                salted, extra = raw_keys, {"mega_blocks": 0}
+            m = store.write("block_keys", salted, extra_metrics=extra)
+            raw_keys.unpersist()
+            keys = store.read(spark, "block_keys")
+            metrics["stages"]["block_keys"] = m
+        _section("s1_block")
+
+        # ---- stage 2: candidate pairs + scoring -> match edges (node-level) ----
+        if store.exists("edges"):
+            edges = store.read(spark, "edges")
+            metrics["stages"]["edges"] = store.read_metrics("edges")
+        else:
+            if cfg.score_mode == "exact":
+                edges_df = star_edges(keys, "node_id")
+                extra = {"pairs_scored": None, "note": "exact-key parity mode: star edges"}
+            else:
+                pairs = pin(candidate_pairs(keys, "node_id", cfg))
+                n_pairs = pairs.count()  # pre-UDF: metric without re-running scoring
+                scored = score_pairs(
+                    pairs, nodes, id_col="node_id", name_col="simple_owners"
+                )
+                edges_df = match_edges(scored, cfg)
+                # implied record-level pair volume (diagnostic: the node graph
+                # stands in for this many record pairs)
+                extra = {"pairs_scored": n_pairs}
+            m = store.write("edges", edges_df, extra_metrics=extra)
+            if cfg.score_mode != "exact":
+                pairs.unpersist()
+            edges = store.read(spark, "edges")
+            metrics["stages"]["edges"] = m
+        _section("s2_score")
+
+        # ---- stage 3: connected components + refinement ------------------------
+        if store.exists("clusters"):
+            clusters = store.read(spark, "clusters")
+            metrics["stages"]["clusters"] = store.read_metrics("clusters")
+        else:
+            labels = connected_components(
+                edges, vertices=nodes.select(F.col("node_id").alias("id")),
+                id_col="id", component_col="node_cluster",
+                max_iterations=cfg.cc_max_iterations,
+                assume_unique_vertices=True,  # nodes carry one row per node_id
+            )
+            with_nodes = named.join(
+                labels.withColumnRenamed("id", "node_id"), "node_id", "left"
+            ).withColumn("node_cluster", F.coalesce(F.col("node_cluster"), F.col("node_id")))
+            # stable record-level label: min(url) per node cluster. groupBy +
+            # join back, NOT a window over node_cluster: the giant head
+            # component (31k+ nodes / 100k+ records at the 800k-page corpus)
+            # would be one spilling window task; the agg reduces map-side and
+            # the join is AQE-skew-splittable (same rationale as refine.py).
+            cluster_mins = with_nodes.groupBy("node_cluster").agg(
+                F.min("url").alias("cluster_id")
+            )
+            clustered = with_nodes.join(cluster_mins, "node_cluster")
+            # records with empty names: singletons
+            empties = matchable.filter(F.length("simple_owners") == 0).withColumn(
+                "cluster_id", F.col("url")
+            )
+            # persist the record table before each nested groupBy + join
+            # back, which reads its input 2-3 times: uncached, the min(url)
+            # join-back (2 reads) under the address refinement (3) under
+            # cluster_size (2) puts 12 copies of the labels x records
+            # subtree into the write plan.
+            clustered = pin(clustered.select(*empties.columns).unionByName(empties))
+            # address refinement for family/juniors (W4)
+            clustered = pin(refine_clusters_by_address(clustered))
+            # unknowns: singleton clusters (`Name_Matching_opt.py:230-232`,
+            # uuid4 replaced by the deterministic own-url label)
+            unknowns = records.filter(F.col("own_type") == CLASS_UNKNOWN).withColumn(
+                "cluster_id", F.col("url")
+            )
+            final = clustered.select(
+                "url", "cluster_id", "own_type", "simple_owners", "comb_addr"
+            ).unionByName(
+                unknowns.select("url", "cluster_id", "own_type", "simple_owners", "comb_addr")
+            )
+            final = cluster_size(final)
+            m = store.write("clusters", final)
+            clusters = store.read(spark, "clusters")
+            metrics["stages"]["clusters"] = m
+        _section("s3_cluster")
+
+        metrics["wall_s"] = round(time.time() - t0, 3)
+        # A7 grouped distinct-count QA metric (`Name_Matching_opt.py:32` nunique
+        # logging analogue): clusters per ownership class, one small agg over
+        # the final checkpoint. countDistinct is exact here; at 100 TB swap for
+        # approx_count_distinct.
+        metrics["clusters_per_class"] = {
+            int(r["own_type"]): int(r["n_clusters"])
+            for r in clusters.groupBy("own_type")
+            .agg(F.countDistinct("cluster_id").alias("n_clusters"))
+            .collect()
+        }
+        # row-count preservation guard (`Classify_Unknowns_opt.py:674-690`
+        # analogue). Counts come from the committed snapshots' own lineage
+        # metrics (parquet footer stats) — no extra scan jobs.
+        n_in = metrics["stages"]["records"]["rows_out"]
+        n_out = metrics["stages"]["clusters"]["rows_out"]
+        metrics["rows_in"], metrics["rows_out"] = n_in, n_out
+        _section("s4_qa")
+        if n_in != n_out:
+            raise RuntimeError(f"row-count invariant violated: in={n_in} out={n_out}")
+        return clusters, metrics
+    finally:
+        for df in pinned:
+            df.unpersist()
+        if labels is not None:
+            release_checkpoints(labels)

@@ -2,13 +2,15 @@
 
 Defaults target the sandbox (single JVM, ``local[N]``) but every knob is the
 one you would set on a real 1000-executor cluster: AQE on (skew-join + coalesce
-partitions), Arrow on for pandas UDFs, shuffle partitions sized to cores.
+partitions), shuffle and cached-table widths sized by data bytes, Arrow on for
+pandas UDFs, and Python-UDF stages sized to cores (``per_core``).
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -57,6 +59,17 @@ def build_session(
         # Spark's own docs recommend parallelismFirst=false in production.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+        # Run AQE inside cached plans too. Spark's default (false) builds
+        # every persisted plan with AQE switched off, so a cached table
+        # keeps the full shuffle width: a 100-row cached distinct holds 32
+        # partitions, and every scan of it (nodes, raw_keys, pairs, the
+        # stage-3 record tables, minhash_prepared) is 32 tasks, as is a
+        # localCheckpoint of a plan that reads it. With true, a cached
+        # table is coalesced by the same bytes rule as any shuffle. Spark's
+        # documented cost: a query reading the cache may need an extra
+        # shuffle, since the cache no longer promises the planned
+        # partitioning.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for pandas UDFs / toPandas — the only Python hot path allowed.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -96,6 +109,28 @@ def per_core(df: DataFrame) -> DataFrame:
     coalesces toward one partition.
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def release_checkpoints(df: DataFrame) -> None:
+    """Free the blocks of every localCheckpoint that ``df`` reads.
+
+    ``DataFrame.unpersist`` does not: a checkpoint is a plan leaf over a
+    persisted RDD, not a cache entry, so its blocks stay pinned until the
+    JVM happens to collect the RDD. Call it once nothing reads ``df`` again.
+    Best-effort: on any API drift the blocks just age out."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        # one RDD can sit under several leaves (a self-union): free it once
+        rdds = {
+            leaf.rdd().id(): leaf.rdd()
+            for leaf in leaves
+            if leaf.getClass().getSimpleName() == "LogicalRDD"
+        }
+        for rdd in rdds.values():
+            rdd.unpersist(False)
+    except (AttributeError, Py4JError):
+        pass
 
 
 def stop_session() -> None:

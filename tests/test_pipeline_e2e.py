@@ -6,7 +6,11 @@
     `Name_Matching_opt.py:194`; the rebuild must NOT be)
   * salt invariance (mega-block salting must not change the partition)
   * resume idempotence from checkpoints
+  * stage 3's job count, and release of its caches when a stage raises
 """
+
+import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -101,3 +105,64 @@ def test_resume_idempotence(spark, e2e):
     assert pred2.sort_values("url").reset_index(drop=True).equals(
         pred.sort_values("url").reset_index(drop=True)
     )
+
+
+def _copy_upstream_stages(store, root):
+    """A store holding ``store``'s records, block_keys and edges, so a run
+    recomputes only stage 3."""
+    shutil.copytree(store.root, os.path.join(root, "e2e"))
+    rerun = CheckpointStore(root, "e2e")
+    rerun.invalidate("clusters")
+    return rerun
+
+
+def test_stage3_write_reads_cached_record_tables(spark, e2e, tmp_path):
+    """Stage 3 nests three groupBy + join-backs (min(url) 2 reads, address
+    refinement 3, cluster_size 2). Without the two cached record tables the
+    write plan carries 2 x 3 x 2 = 12 copies of the CC-labels x records
+    subtree: 61 jobs on this fixture, against 23 with the caches."""
+    _, sdf, store, *_ = e2e
+    rerun = _copy_upstream_stages(store, str(tmp_path))
+    sc = spark.sparkContext
+    group = f"stage3-write-{tmp_path.name}"
+    write = rerun.write
+
+    def grouped_write(stage, df, **kwargs):
+        if stage != "clusters":
+            return write(stage, df, **kwargs)
+        sc.setJobGroup(group, group)
+        try:
+            return write(stage, df, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    rerun.write = grouped_write
+    run_pipeline(spark, sdf, EngineConfig(), checkpoints=rerun)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 30, n_jobs
+    pred, pred2 = e2e[-1], rerun.read(spark, "clusters").select("url", "cluster_id").toPandas()
+    assert pred2.sort_values("url").reset_index(drop=True).equals(
+        pred.sort_values("url").reset_index(drop=True)
+    )
+
+
+def test_failed_stage_releases_cached_tables(spark, e2e, tmp_path):
+    """A stage that raises must leave nothing pinned in the session: the
+    run's persisted tables and the CC labels' checkpoint are released."""
+    _, sdf, store, *_ = e2e
+    rerun = _copy_upstream_stages(store, str(tmp_path))
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    write = rerun.write
+
+    def failing_write(stage, df, **kwargs):
+        if stage != "clusters":
+            return write(stage, df, **kwargs)
+        df.write.format("noop").mode("overwrite").save()  # builds the caches
+        raise RuntimeError("injected stage-3 failure")
+
+    rerun.write = failing_write
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, sdf, EngineConfig(), checkpoints=rerun)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+    assert not rerun.exists("clusters")
