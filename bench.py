@@ -1,38 +1,33 @@
-"""Benchmark harness (driver-run per round; also the scaling-efficiency
-evidence required by the north rule).
+"""Benchmark of the engine on the host it runs on.
 
-Run order (r5 verdict items #1/#2 — one total wall budget, thermal-correct
-ordering, incremental emission):
+    python bench.py
 
-1. BIG E2E PAIR first, on a cold host: the full ER job at 1.6M pages,
-   local[8] vs local[32], >=2 interleaved reps per level with a throttle
-   probe before each leg (r4/r5 both measured this pair inverted when it
-   ran after ~40 min of sustained kernel load).
-2. Phase A — headline queries at $SPARK_GRAFT_SF_DIR (default
-   /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], cold + warm passes;
-   codec and the ANN recall sweep run here when the budget allows.
-3. Kernel scaling protocol — the identical fused scoring kernel at two
-   N -> 4N core pairs (2->8 criterion below the host's saturation knee;
-   8->32 saturation at 4x replication), plus the host's own measured CPU
-   ceilings (calibrations run ADJACENT, same thermal state).
-4. 200k-page ER context pair + extra kernel rounds, budget permitting.
+Run from the repository root. The only setting is ``SPARK_GRAFT_SF_DIR``, the
+directory of the headline tables (sf0.1 by default). Three blocks run in this
+order:
 
-One TOTAL wall budget ($SPARK_GRAFT_BENCH_BUDGET_TOTAL, default 2950s)
-covers everything; load sheds in a fixed priority order (kernel extra
-rounds -> 200k context pair -> ANN sweep -> codec) and every shed is
-logged into the emitted JSON (never silent). The summary JSON line is
-printed INCREMENTALLY — after the big pair, after phase A, after the
-first kernel round, and at the end (each line a superset of the last;
-the final line is the complete artifact) — and mirrored to
-bench_out.json, so a wall-clock kill can never zero out the round again
-(r5 shipped rc=124/parsed:null). A SIGTERM/SIGINT handler re-prints the
-latest summary on the way down. BENCH/BASELINE.md is regenerated ONLY
-from this same run's numbers, with the run's provenance (elapsed, budget,
-sheds) embedded.
+1. The headline suite on ``local[<cpus>]``, ``<cpus>`` being the CPUs this
+   process may run on: one cold pass, then WARM_REPS warm passes over the
+   same queries, then the codec row and the ANN recall/candidate-fraction
+   sweep. Every query, the session warm-up, the codec block and the ANN
+   block run in a perfbench tracer span, so every Spark job of the session
+   carries its span's label in the session's event log. The log is reduced
+   into the ``ledger`` key: per query, the warm wall median and range, and
+   the per-rep jobs, tasks, executor run and CPU time and Python-worker init
+   and run time.
+2. The scoring-kernel N -> 4N pair, with 4N the largest multiple of 4 CPUs
+   available. ROUNDS rounds each run the two legs back to back, alternating
+   which leg goes first; each leg is a subprocess pinned with ``taskset`` to
+   its CPUs. ``scaling.efficiency`` is the median over rounds of
+   ``(pps_4N / pps_N) / 4``. ``kernel_cpu_calibration`` runs the same kernel
+   without Spark, in N and 4N processes: the host's own ceiling for that
+   ratio. Below 4 CPUs the pair cannot run and ``scaling`` says why.
+3. BENCH/BASELINE.md, regenerated from this run's numbers only.
 
-Prints JSON lines of the form (driver takes the last one):
-  {"metric": ..., "value": <headline e2e sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "scaling": {...}, "phase_completed": ...}
+The summary JSON line is printed after each block (each a superset of the
+last; the last line is the complete result) and mirrored to bench_out.json,
+and a SIGTERM/SIGINT prints the latest one on the way down. Every input the
+run builds lives in a per-run temporary directory, removed at exit.
 """
 
 from __future__ import annotations
@@ -40,81 +35,56 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# driver memory must be fixed before the FIRST SparkSession — the JVM
-# (py4j gateway) survives session.stop(), so later settings are ignored.
-# Identical heap at every parallelism level (scaling protocol).
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-
 REPO = os.path.dirname(os.path.abspath(__file__))
-CACHE = os.path.join(REPO, ".bench_cache")
+sys.path.insert(0, REPO)
 
-# ordered cheap-to-heavy: the small JVM-only relational queries double as
-# the tail of the steady-state ramp (JIT, shuffle paths), so the expensive
-# ER/dedup queries measure work, not residual session warm-up. The suite
-# TOTAL is unaffected by ordering; per-query numbers are steady-state.
-HEADLINE = [
-    "tpch_q1_pricing",
-    "join_customer_nation_revenue",
-    "window_orders_per_customer",
-    "priority_dedupe_orders",
-    "dedup_exact_keep",
-    "text_lang_id",
-    "text_quality",
-    "ann_cosine_topk",
-    "er_score_pairs",
-    "dedup_simhash_pairs",
-    "dedup_minhash_fast",
-    "er_cluster_documents",
-]
+from perfbench import eventlog, tracing  # noqa: E402
+from perfbench.run import host_fingerprint, start_spark, stop_spark  # noqa: E402
+from perfbench.workloads import HEADLINE  # noqa: E402
 
-BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "60000"))
-# ER context runs use a larger corpus: at 60k pages the full job is pure
-# orchestration constants (scheduling + checkpoint IO) and shows no scaling
-ER_PAGES = int(os.environ.get("SPARK_GRAFT_ER_PAGES", "200000"))
-# the e2e scaling pair runs 8x that (r3 verdict item #1): at 200k the job is
-# ~50% fixed cost (CC round latency + checkpoint writes) and 8-vs-32 is
-# parity; at 1.6M the compute stages dominate and local[32] wins outright —
-# the 200k numbers are retained as the fixed-cost exhibit
-ER_PAGES_BIG = int(os.environ.get("SPARK_GRAFT_ER_PAGES_BIG", "1600000"))
+WARM_REPS = 3
+ROUNDS = 3
+# the kernel's input: the naive within-block pair table of a seed-42 corpus
+# (no name dedup), crossed with KERNEL_REPLICATE copies so that the 4N leg
+# runs long enough for per-pass fixed costs to stay inside the noise
+KERNEL_PAGES = 60_000
+KERNEL_REPLICATE = 4
+# fewer Arrow batch boundaries, less per-batch Python overhead in the kernel
+KERNEL_ARROW_BATCH = "40000"
+EFFICIENCY_TARGET = 0.8
+ER_CLUSTER_TARGET_S = 6.0
+LEDGER_FIELDS = (
+    "jobs", "tasks", "executor_run_s", "executor_cpu_s", "python_init_s", "python_run_s",
+)
 
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-# ---------------------------------------------------------------------------
-# Total-wall-budget ledger + incremental emission (r5 verdict #1)
-# ---------------------------------------------------------------------------
-TOTAL_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_TOTAL", "2950"))
 T_START = time.time()  # reset at main() entry
 
 # the latest COMPLETE summary (every emitted line is valid on its own);
 # also the payload the SIGTERM handler prints on the way down
 RESULT: dict = {}
-SHED: list[str] = []  # every budget-shed decision, embedded in the JSON
 
 
 def elapsed() -> float:
     return time.time() - T_START
 
 
-def remaining() -> float:
-    return TOTAL_BUDGET - elapsed()
-
-
 def emit(phase: str) -> None:
-    """Print the current full summary as one JSON line (driver parses the
-    last line; each emission supersedes the previous) and mirror it to
-    bench_out.json so even a SIGKILL leaves an artifact on disk."""
+    """Print the current full summary as one JSON line (each emission
+    supersedes the previous) and mirror it to bench_out.json so even a
+    SIGKILL leaves an artifact on disk."""
     RESULT["phase_completed"] = phase
     RESULT["elapsed_s"] = round(elapsed(), 1)
-    RESULT["budget_s"] = TOTAL_BUDGET
-    RESULT["shed"] = list(SHED)
     line = json.dumps(RESULT)
     print(line, flush=True)
     try:
@@ -124,198 +94,127 @@ def emit(phase: str) -> None:
         pass
 
 
-def _install_signal_net() -> None:
+def _install_signal_net(run_dir: str) -> None:
     import signal
 
     main_pid = os.getpid()
 
     def _dump(signum, frame):  # noqa: ARG001
         # re-entry guard: a killpg often delivers TERM more than once, and
-        # forked multiprocessing children inherit this handler — only the
-        # main process emits, exactly once
+        # a forked child would inherit this handler — only the main process
+        # emits, exactly once
         signal.signal(signal.SIGTERM, signal.SIG_DFL)
         signal.signal(signal.SIGINT, signal.SIG_DFL)
-        if RESULT and os.getpid() == main_pid:
-            SHED.append(f"killed by signal {signum} at {round(elapsed(), 1)}s")
+        if os.getpid() != main_pid:
+            os._exit(1)
+        if RESULT:
+            RESULT["killed_by_signal"] = signum
             emit(RESULT.get("phase_completed", "partial") + "+signal")
+        shutil.rmtree(run_dir, ignore_errors=True)
         # os._exit, not sys.exit: SystemExit raised from a handler while the
         # main thread is blocked in subprocess machinery gets swallowed (the
-        # first smoke of this handler kept benching after "exiting"); emit()
-        # already flushed, so the hard exit loses nothing
+        # run would go on benching after "exiting"); emit() already flushed,
+        # so the hard exit loses nothing
         os._exit(1)
 
     for sig in (signal.SIGTERM, signal.SIGINT):
         signal.signal(sig, _dump)
 
 
-def shed(item: str, why: str) -> None:
-    SHED.append(item)
-    log(f"  [budget] shed {item} ({why}; elapsed {round(elapsed())}s "
-        f"of {round(TOTAL_BUDGET)}s)")
-
-
-# ---------------------------------------------------------------------------
-# Host-throttle probe (r5 verdict #2): the sandbox host throttles in
-# multi-minute windows (codec 115 img/s vs 395-429 in the same week; the
-# driver's big pair ran 1.4-4.5x slower than the committed run). A 0.5s
-# single-core probe before each big-pair leg detects a throttled window;
-# we wait it out (bounded) rather than timing the flagship leg inside it.
-# ---------------------------------------------------------------------------
-# Absolute single-core floor from known-good calibration history (r6 run's
-# probes spanned 13.7-20.5 Mops; healthy windows sit 16-21). Seeding the
-# ledger means a run that STARTS inside a throttled window still waits —
-# with 0.0 the first probe always reads as 100% of "best" and the big pair
-# (the measurement the probe exists to protect) would be timed throttled.
-_PROBE_FLOOR = 18e6
-_PROBE_BEST = _PROBE_FLOOR
-
-
-def throttle_probe() -> float:
-    """Single-core ops/sec of the pure-python burn loop (~0.5s)."""
-    n = 6_000_000
-    t0 = time.time()
-    _burn(n)
-    return n / (time.time() - t0)
-
-
-# Multi-core probe (r7): the 2nd official-style r7 run measured BOTH 1.6M
-# 32-legs 1.6-1.9x slow while every pre-leg single-core probe read a
-# healthy 17-19 Mops — a quota/cgroup-shaped window that caps aggregate
-# throughput without touching one core. A ~1.5s all-core burn catches it.
-# Healthy calibration on this host: mp@8 = 0.80 of ideal, mp@32 = 0.71;
-# the 0.45/proc floor sits safely below healthy and above a halved quota.
-# Seeded with measured-healthy absolutes (same fix as the 18 Mops
-# single-core floor): without a seed, a run that STARTS inside a quota
-# window records the throttled reading as its "best" and every later
-# health reads ~1.0 — and the relative 0.45/proc scaling floor only trips
-# the 0.55 gate for windows >2.9x deep, missing the observed 1.6-1.9x
-# ones. Healthy calibration on this host: mp@8 ~108 Mops, mp@32 ~382.
-_PROBE_BEST_MP: dict[int, float] = {8: 100e6, 32: 350e6}
-_MP_FLOOR_PER_PROC = 0.45
-_LAST_MP_FRAC = 1.0  # health (probe/reference) of the most recent mp probe
-
-
-def throttle_probe_mp(procs: int) -> float:
-    """Aggregate ops/sec of `procs` concurrent burn loops (pool warmed
-    first so fork/import cost stays out of the timed window)."""
-    import multiprocessing as mp
-
-    n = 3_000_000
-    with mp.Pool(procs) as pool:
-        pool.map(_burn, [200_000] * procs)
-        t0 = time.time()
-        pool.map(_burn, [n] * procs)
-        return procs * n / (time.time() - t0)
-
-
-def _mp_health(procs: int) -> float:
-    """mp probe as a fraction of the best reference seen (measured best or
-    the scaling floor off the current single-core ledger)."""
-    m = throttle_probe_mp(procs)
-    _PROBE_BEST_MP[procs] = max(_PROBE_BEST_MP.get(procs, 0.0), m)
-    ref = max(_PROBE_BEST_MP[procs], _MP_FLOOR_PER_PROC * procs * _PROBE_BEST)
-    return m / ref if ref else 1.0
-
-
-def wait_out_throttle(
-    tag: str,
-    max_wait_s: float = 100.0,
-    min_remaining_s: float = 900.0,
-    procs: int | None = None,
-) -> float:
-    """Probe; if the host is measurably throttled vs the best window seen
-    this run, sleep-and-reprobe (bounded by max_wait_s AND the ledger).
-    With `procs`, an aggregate multi-core probe must ALSO be healthy —
-    single-core probes are blind to quota-shaped windows. Returns the final
-    single-core probe value (recorded in the big-pair history); the final
-    mp health lands in _LAST_MP_FRAC for the caller's retry decision."""
-    global _PROBE_BEST, _LAST_MP_FRAC
-    p = throttle_probe()
-    _PROBE_BEST = max(_PROBE_BEST, p)
-    _LAST_MP_FRAC = _mp_health(procs) if procs and procs > 1 else 1.0
-    waited = 0.0
-    while (
-        (p < 0.55 * _PROBE_BEST or _LAST_MP_FRAC < 0.55)
-        and waited < max_wait_s
-        and remaining() > min_remaining_s
-    ):
-        log(f"  [throttle] {tag}: probe {round(p / 1e6, 2)} Mops vs best "
-            f"{round(_PROBE_BEST / 1e6, 2)}, mp-health "
-            f"{round(_LAST_MP_FRAC, 2)} — waiting 20s for the window to pass")
-        time.sleep(20)
-        waited += 20
-        p = throttle_probe()
-        _PROBE_BEST = max(_PROBE_BEST, p)
-        _LAST_MP_FRAC = _mp_health(procs) if procs and procs > 1 else 1.0
-    return p
-
-
-def _materialize(df) -> int:
+def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
-def phase_a(
-    sf_dir: str, cpus: int, do_recall: bool = True, do_codec: bool = True
-) -> tuple[dict, dict, float, dict, dict]:
-    """Headline suite (cold + warm passes) plus — budget permitting — the
-    codec throughput row and the ANN recall/fraction sweep. Shed order per
-    the r5 verdict: the recall sweep sheds before codec, both shed before
-    any mandatory block. Returns (times, times_warm, total, recall, codec);
-    recall/codec are {} when shed."""
-    import __spark_entry__ as entrymod
-    from fia_own_map_spark.session import build_session
-
-    spark = build_session("bench-headline", master=f"local[{cpus}]")
-    # retired contract queries stay benchable (the ANN recall sweep
-    # measures ann_ivf_topk / ann_lsh_topk, which left the 50-slot
-    # contract in r7 but remain engine paths)
-    qs = {**entrymod.RETIRED_QUERIES, **entrymod.queries()}
-    # steady-state warm-up (same policy as the kernel runs): spawn python
-    # UDF workers + JIT the scan path once so the first timed query doesn't
-    # absorb session startup
+def _warm_up(spark, cores: int) -> None:
+    """Start the Python UDF workers and JIT the scan path once, so the first
+    timed operation does not absorb session start-up."""
     from fia_own_map_spark.functions.similarity import similarity_scores
     from pyspark.sql import functions as F
 
-    warm = spark.range(cpus * 4).withColumn("s", F.concat(F.lit("W"), F.col("id")))
-    warm.repartition(cpus).withColumn("j", similarity_scores("s", "s")["jw"]).agg(
+    warm = spark.range(cores * 4).withColumn("s", F.concat(F.lit("W"), F.col("id")))
+    warm.repartition(cores).withColumn("j", similarity_scores("s", "s")["jw"]).agg(
         F.sum("j")
     ).collect()
-    _materialize(qs["text_token_counts"](spark, sf_dir))
-    # two passes: the cold pass is the round-comparable headline total (same
-    # protocol as r1-r4); the warm pass re-times each query with every JIT /
-    # shuffle-path / python-worker ramp already paid, so per-query numbers
-    # are comparable across rounds regardless of suite order (r4 verdict
-    # item #6 — reordering the suite moved session-ramp cost between
-    # queries' cold walls)
-    times: dict[str, float] = {}
-    times_warm: dict[str, float] = {}
-    t_all = time.time()
-    for pass_times in (times, times_warm):
-        for name in HEADLINE:
-            t0 = time.time()
-            _materialize(qs[name](spark, sf_dir))
-            pass_times[name] = round(time.time() - t0, 3)
-        tag = "cold" if pass_times is times else "warm"
-        log("  [A] " + " ".join(f"{n}={pass_times[n]}" for n in HEADLINE) + f" ({tag})")
-        if pass_times is times:
-            total = round(time.time() - t_all, 3)
-    codec = codec_bench(spark, cpus) if do_codec else {}
-    if not do_codec:
-        shed("codec", "budget")
-    recall = ann_recall(qs, spark, sf_dir) if do_recall else {}
-    if not do_recall:
-        shed("ann_recall_sweep", "budget")
-    spark.stop()
-    return times, times_warm, total, recall, codec
 
 
-def codec_bench(spark, cpus: int) -> dict:
+def phase_a(sf_dir: str, run_dir: str) -> dict:
+    """Headline suite (one cold pass, WARM_REPS warm passes), codec row and
+    ANN sweep in one traced session. Returns the host fingerprint, the
+    ledger, the cold pass's wall, the ANN recall dict and the codec dict."""
+    import __spark_entry__ as entrymod
+
+    spark = start_spark(run_dir, trace=True)
+    try:
+        tracer = tracing.Tracer(spark.sparkContext)
+        host = host_fingerprint(spark, None)
+        del host["seed"]
+        cpus = spark.sparkContext.defaultParallelism
+        # retired contract queries stay benchable: the ANN sweep measures
+        # ann_ivf_topk / ann_lsh_topk, which are engine paths
+        qs = {**entrymod.RETIRED_QUERIES, **entrymod.queries()}
+        with tracer.span("warmup"):
+            _warm_up(spark, cpus)
+            _materialize(qs["text_token_counts"](spark, sf_dir))
+        # the cold pass is the suite as a fresh session sees it; the warm
+        # passes re-time each query with every JIT, shuffle-path and
+        # Python-worker ramp already paid, so per-query numbers do not
+        # depend on the suite order
+        for pass_name, reps in (("cold", 1), ("warm", WARM_REPS)):
+            for _ in range(reps):
+                with tracer.span(pass_name):
+                    for name in HEADLINE:
+                        with tracer.span(name):
+                            _materialize(qs[name](spark, sf_dir))
+        with tracer.span("codec"):
+            codec = codec_bench(spark, cpus, tracer)
+        with tracer.span("ann_recall"):
+            recall = ann_recall(qs, spark, sf_dir)
+    finally:
+        stop_spark(spark)
+    # the event log is complete once the session has stopped
+    groups = eventlog.reduce_log(os.path.join(run_dir, "eventlog"))
+    return {
+        "host": host,
+        "ledger": build_ledger(tracer, groups),
+        "cold_total": round(tracer.by_name("cold")[0].wall_s, 3),
+        "recall": recall,
+        "codec": codec,
+    }
+
+
+def build_ledger(tracer: tracing.Tracer, groups: dict) -> dict:
+    """Per headline query: the cold wall, the warm walls' median and range,
+    and the event-log figures of its warm spans as per-rep means. Plus the
+    session's job count and the share of its jobs that carry a span label."""
+    queries = {}
+    for name in HEADLINE:
+        cold = [s.wall_s for s in tracer.spans if s.path == f"cold/{name}"]
+        warm = [s.wall_s for s in tracer.spans if s.path == f"warm/{name}"]
+        totals = groups.get(f"warm/{name}", {})
+        row = {
+            "cold_s": round(cold[0], 3),
+            "wall_s": round(statistics.median(warm), 3),
+            "wall_s_min": round(min(warm), 3),
+            "wall_s_max": round(max(warm), 3),
+            "reps": len(warm),
+        }
+        row.update({k: round(totals.get(k, 0) / len(warm), 3) for k in LEDGER_FIELDS})
+        queries[name] = row
+    jobs = sum(g["jobs"] for g in groups.values())
+    unlabelled = groups.get(None, {}).get("jobs", 0)
+    return {
+        "queries": queries,
+        "jobs": jobs,
+        "job_coverage": round((jobs - unlabelled) / jobs, 4) if jobs else 0.0,
+    }
+
+
+def codec_bench(spark, cpus: int, tracer: tracing.Tracer) -> dict:
     """Image-decode throughput through the real Spark surface (mapInPandas
     decode_and_featurize): deterministic 96x96 RGB PNG corpus, half
     filter-0 (None) and half filter-4 (Paeth) scanlines, so the wavefront
-    unfilter path is on the clock (r3 verdict item #6). Reports the warm
-    repeat — the corpus is tiny, so rep 1 would be all scheduling."""
+    unfilter path is on the clock. Reports the warm repeat — the corpus is
+    tiny, so rep 1 would be all scheduling."""
     import numpy as np
     import pandas as pd
 
@@ -337,13 +236,13 @@ def codec_bench(spark, cpus: int) -> dict:
     df = spark.createDataFrame(pd.DataFrame(blobs, columns=["media_id", "blob"])).repartition(
         cpus
     )
-    out = {}
-    for rep in range(2):
-        t0 = time.time()
-        _materialize(multimodal.decode_and_featurize(df, codec="auto"))
-        dt = time.time() - t0
-    out["codec_images_per_sec"] = round(n_images / dt, 1)
-    out["codec_px_per_sec"] = round(n_images * side * side / dt, 0)
+    for _ in range(2):
+        with tracer.span("decode") as rep:
+            _materialize(multimodal.decode_and_featurize(df, codec="auto"))
+    out = {
+        "codec_images_per_sec": round(n_images / rep.wall_s, 1),
+        "codec_px_per_sec": round(n_images * side * side / rep.wall_s, 0),
+    }
     log(f"  [A] codec decode: {out['codec_images_per_sec']} images/s "
         f"({n_images} x {side}x{side} PNG, half Paeth)")
     return out
@@ -351,9 +250,9 @@ def codec_bench(spark, cpus: int) -> dict:
 
 def ann_recall(qs, spark, sf_dir: str) -> dict:
     """recall@k of the approximate ANN paths vs brute-force cosine, at bench
-    scale — makes the quality/speed dial visible evidence next to the
-    throughput numbers (judge r2 item #9). Tiny result sets: toPandas is a
-    driver-side set comparison, not a compute path."""
+    scale — the quality side of the quality/speed dial, next to the
+    throughput numbers. Tiny result sets: toPandas feeds a local set
+    comparison, not a compute path."""
     truth = qs["ann_cosine_topk"](spark, sf_dir).toPandas()
 
     def _recall(approx) -> float:
@@ -431,195 +330,93 @@ def lsh_candidate_fractions(spark, sf_dir: str) -> dict:
     return out
 
 
-def _bench_corpus_path(n_pages: int = BENCH_PAGES) -> str:
-    path = os.path.join(CACHE, f"web_pages_{n_pages}")
-    marker = os.path.join(path, "_DONE")
-    if not os.path.exists(marker):
-        from fia_own_map_spark.sources.webpages import generate_web_pages
-
-        log(f"  [B] generating {n_pages} bench pages (cached)...")
-        pages, _ = generate_web_pages(n_pages=n_pages, seed=42)
-        # Spark rejects TIMESTAMP(NANOS); write microsecond precision
-        pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
-        os.makedirs(path, exist_ok=True)
-        # small row groups: parquet cannot split INSIDE a row group, so a
-        # default pandas write (one giant group) serializes the scan+extract
-        # stage no matter what maxPartitionBytes says — this stands in for a
-        # production table of many files
-        pages.to_parquet(
-            os.path.join(path, "pages.parquet"), index=False, row_group_size=2000
-        )
-        open(marker, "w").close()
-    return os.path.join(path, "pages.parquet")
-
-
-def run_er_job(cores: int, corpus: str) -> dict:
-    """One full similarity-mode ER run at local[cores]; per-stage walls."""
+def build_pair_table(cores: int, run_dir: str) -> dict:
+    """Generate the KERNEL_PAGES corpus and materialize its candidate
+    ID-PAIR table (no name dedup — the naive within-block pair volume)
+    joined to names, under ``run_dir``. Returns the table's path."""
     from fia_own_map_spark.config import EngineConfig
-    from fia_own_map_spark.plans.pipeline import run_pipeline
-    from fia_own_map_spark.session import build_session
-    from fia_own_map_spark.sources.checkpoint import CheckpointStore
-
-    ckpt_root = os.path.join(CACHE, f"er_run_{cores}")
-    shutil.rmtree(ckpt_root, ignore_errors=True)
-    spark = build_session(
-        f"bench-er-{cores}",
-        master=f"local[{cores}]",
-        extra_conf={
-            # the corpus is one pandas-written file; small splits give the
-            # map-side (extract/classify/normalize — shuffle-free) full
-            # parallelism, standing in for a many-file production table
-            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-            # identical heap at both parallelism levels (scaling protocol);
-            # sized so 32 concurrent parquet writers don't GC-thrash
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        },
+    from fia_own_map_spark.operators.blocking import (
+        blocking_keys,
+        candidate_pairs,
+        salt_mega_blocks,
     )
-    # warm up JIT + pre-spawn python UDF workers so per-stage walls measure
-    # steady-state throughput, not startup
-    from pyspark.sql import functions as F
-    from fia_own_map_spark.functions.similarity import similarity_scores
-
-    warm = spark.range(cores * 4).withColumn("s", F.concat(F.lit("W"), F.col("id")))
-    warm = warm.repartition(cores).withColumn("j", similarity_scores("s", "s")["jw"])
-    warm.agg(F.sum("j")).collect()
-    pages = spark.read.parquet(corpus)
-    # warm the FULL stage-0 UDF chain (extract + normalize + phonetic —
-    # 3-4 chained ArrowEvalPython nodes): each chained UDF needs its own
-    # python worker per concurrent task, so the first stage-0 pass at 32
-    # cores forks ~100 workers that each pay pickle-import cost — measured
-    # ~2x the steady-state wall (tools/stage0_probe.py). One tiny pass
-    # pre-spawns them; identical policy at every parallelism level.
     from fia_own_map_spark.plans.pipeline import stage0_records
-    _materialize(stage0_records(pages.limit(cores * 64).repartition(cores)))
-    cfg = EngineConfig(score_mode="similarity")
-    store = CheckpointStore(ckpt_root, "bench")
-    t0 = time.time()
-    clusters, metrics = run_pipeline(spark, pages, cfg, checkpoints=store)
-    e2e = time.time() - t0
-    n_clusters = clusters.select("cluster_id").distinct().count()
+    from fia_own_map_spark.session import build_session
+    from fia_own_map_spark.sources.webpages import generate_web_pages
+    from pyspark.sql import functions as F
+
+    pages, _ = generate_web_pages(n_pages=KERNEL_PAGES, seed=42)
+    # Spark rejects TIMESTAMP(NANOS); write microsecond precision
+    pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
+    corpus = os.path.join(run_dir, f"web_pages_{KERNEL_PAGES}.parquet")
+    # small row groups: parquet cannot split INSIDE a row group, so one
+    # giant group would serialize the scan+extract stage no matter what
+    # maxPartitionBytes says — this stands in for a table of many files
+    pages.to_parquet(corpus, index=False, row_group_size=2000)
+    del pages
+
+    spark = build_session(
+        "bench-pairs", master=f"local[{cores}]",
+        extra_conf={"spark.sql.files.maxPartitionBytes": str(8 << 20)},
+    )
+    records = stage0_records(spark.read.parquet(corpus)).filter(
+        F.col("own_type") != -99
+    ).withColumn(
+        "match_bucket", F.col("own_type").cast("string")
+    ).select("url", "match_bucket", "simple_owners", "name_keys").persist()
+    keys, _ = salt_mega_blocks(
+        blocking_keys(records, id_col="url", class_col="match_bucket"),
+        "url", EngineConfig(),
+    )
+    pairs = candidate_pairs(keys, "url", EngineConfig())
+    names = records.select(F.col("url").alias("_id"), F.col("simple_owners").alias("_n"))
+    path = os.path.join(run_dir, "score_pairs")
+    (
+        pairs.join(names.select(F.col("_id").alias("id_a"), F.col("_n").alias("name_a")), "id_a")
+        .join(names.select(F.col("_id").alias("id_b"), F.col("_n").alias("name_b")), "id_b")
+        .select("name_a", "name_b")
+        .write.mode("overwrite").parquet(path)
+    )
     spark.stop()
-
-    stages = metrics["stages"]
-    score_wall = stages["edges"]["wall_s"]
-    pairs = stages["edges"]["pairs_scored"] or 0
-    out = {
-        "cores": cores,
-        "e2e_s": round(e2e, 2),
-        "stage_records_s": stages["records"]["wall_s"],
-        "stage_block_s": stages["block_keys"]["wall_s"],
-        "stage_score_s": score_wall,
-        "stage_cluster_s": stages["clusters"]["wall_s"],
-        "pairs_scored": pairs,
-        "pairs_per_sec": round(pairs / score_wall, 1) if score_wall else None,
-        "rows": metrics["rows_out"],
-        "n_clusters": n_clusters,
-        "mega_blocks": stages["block_keys"].get("mega_blocks"),
-    }
-    log(f"  [B] local[{cores}]: e2e={out['e2e_s']}s score={score_wall}s "
-        f"pairs={pairs} ({out['pairs_per_sec']}/s)")
-    return out
-
-
-def _pairs_parquet_path(corpus: str) -> str:
-    """Materialize the candidate ID-PAIR table (no name dedup — the naive
-    within-block pair volume) joined to names, once, for the scoring-kernel
-    measurement."""
-    path = os.path.join(CACHE, f"score_pairs_{BENCH_PAGES}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        from fia_own_map_spark.config import EngineConfig
-        from fia_own_map_spark.operators.blocking import (
-            blocking_keys,
-            candidate_pairs,
-            prepare_records,
-            salt_mega_blocks,
-        )
-        from fia_own_map_spark.plans.pipeline import stage0_records
-        from fia_own_map_spark.session import build_session
-        from pyspark.sql import functions as F
-
-        log("  [B] materializing scoring-kernel pair table (cached)...")
-        spark = build_session("bench-pairs", master="local[32]",
-                              extra_conf={"spark.sql.files.maxPartitionBytes": str(8 << 20)})
-        pages = spark.read.parquet(corpus)
-        records = stage0_records(pages).filter(F.col("own_type") != -99).withColumn(
-            "match_bucket", F.col("own_type").cast("string")
-        ).select("url", "match_bucket", "simple_owners", "name_keys").persist()
-        keys, _ = salt_mega_blocks(
-            blocking_keys(records, id_col="url", class_col="match_bucket"),
-            "url", EngineConfig(),
-        )
-        pairs = candidate_pairs(keys, "url", EngineConfig())
-        names = records.select(F.col("url").alias("_id"), F.col("simple_owners").alias("_n"))
-        out = (
-            pairs.join(names.select(F.col("_id").alias("id_a"), F.col("_n").alias("name_a")), "id_a")
-            .join(names.select(F.col("_id").alias("id_b"), F.col("_n").alias("name_b")), "id_b")
-            .select("name_a", "name_b")
-        )
-        out.write.mode("overwrite").parquet(path)
-        spark.stop()
-    return path
+    return {"path": path}
 
 
 def scoring_kernel_run(cores: int, pairs_path: str) -> dict:
-    """Compute-bound stage-2 scoring kernel: JW (Arrow UDF) + levenshtein
-    ratio + token-set jaccard + threshold over the materialized pair table.
-    This is the criterion metric (candidate-pairs-scored/sec) isolated from
-    checkpoint IO and job-scheduling constants."""
+    """Compute-bound stage-2 scoring kernel: JW + levenshtein ratio +
+    token-set jaccard + threshold (one fused Arrow UDF) over the pair table,
+    cached first, so one timed pass is pure compute: candidate pairs scored
+    per second, isolated from checkpoint IO and job-scheduling constants."""
     from fia_own_map_spark.config import EngineConfig
     from fia_own_map_spark.functions.similarity import similarity_scores
     from fia_own_map_spark.session import build_session
     from pyspark.sql import functions as F
 
     cfg = EngineConfig()
-    # 40k-row Arrow batches: measured 8->32 scaling improves monotonically
-    # from the 10k default (fewer batch boundaries -> less per-batch python
-    # overhead, the non-scaling term); see tools/kernel_sweep.py history.
     spark = build_session(
         f"bench-kernel-{cores}",
         master=f"local[{cores}]",
-        extra_conf={
-            "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-                "SPARK_GRAFT_KERNEL_ARROW", "40000"
-            )
-        },
+        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": KERNEL_ARROW_BATCH},
     )
-    warm = spark.range(cores * 4).withColumn("s", F.concat(F.lit("W"), F.col("id")))
-    warm = warm.repartition(cores).withColumn("j", similarity_scores("s", "s")["jw"])
-    warm.agg(F.sum("j")).collect()
-
-    replicate = int(os.environ.get("SPARK_GRAFT_KERNEL_REPLICATE", "4"))
+    _warm_up(spark, cores)
     pairs = (
         spark.read.parquet(pairs_path)
-        .crossJoin(spark.range(replicate).select(F.col("id").alias("_rep")))
+        .crossJoin(spark.range(KERNEL_REPLICATE).select(F.col("id").alias("_rep")))
         .repartition(cores * 3)
         .persist()
     )
-    n = pairs.count()  # also materializes the cache so the timed pass is pure compute
-    wall, matches = None, 0
-    # best-of-N timed passes over the warm cache; more passes at high core
-    # counts where they are cheap — the noisy host needs several windows to
-    # catch an uncontended one (the low-core leg is long enough to amortize
-    # scheduling noise in a single pass)
-    if replicate >= 16:  # long passes amortize noise on their own
-        n_passes = 1 if cores <= 8 else 2
-    else:
-        n_passes = 1 if cores <= 2 else (2 if cores <= 8 else 3)
-    for _ in range(n_passes):
-        t0 = time.time()
-        scored = pairs.withColumn("_s", similarity_scores("name_a", "name_b")).select(
-            F.col("_s.jw").alias("jw"),
-            F.col("_s.lev_ratio").alias("lev_ratio"),
-            F.col("_s.jaccard").alias("jaccard"),
-        )
-        matches = scored.filter(
-            (F.col("jw") >= cfg.jw_threshold)
-            | (F.col("lev_ratio") >= cfg.lev_ratio_threshold)
-            | (F.col("jaccard") >= cfg.jaccard_threshold)
-        ).count()
-        dt = time.time() - t0
-        wall = dt if wall is None else min(wall, dt)
+    n = pairs.count()
+    t0 = time.perf_counter()
+    scored = pairs.withColumn("_s", similarity_scores("name_a", "name_b")).select(
+        F.col("_s.jw").alias("jw"),
+        F.col("_s.lev_ratio").alias("lev_ratio"),
+        F.col("_s.jaccard").alias("jaccard"),
+    )
+    matches = scored.filter(
+        (F.col("jw") >= cfg.jw_threshold)
+        | (F.col("lev_ratio") >= cfg.lev_ratio_threshold)
+        | (F.col("jaccard") >= cfg.jaccard_threshold)
+    ).count()
+    wall = time.perf_counter() - t0
     spark.stop()
     out = {
         "cores": cores,
@@ -630,34 +427,6 @@ def scoring_kernel_run(cores: int, pairs_path: str) -> dict:
     }
     log(f"  [B] kernel local[{cores}]: {n} pairs in {out['wall_s']}s "
         f"({out['pairs_per_sec']}/s)")
-    return out
-
-
-def _burn(n: int) -> int:
-    x = 0
-    for i in range(n):
-        x += i * i
-    return x
-
-
-def cpu_calibration(levels: tuple[int, ...] = (2, 8, 32)) -> dict:
-    """Measure the sandbox host's own parallel-CPU ceiling: aggregate
-    throughput of a pure-python arithmetic loop at each process count.
-    Firecracker guests share host cores; the measured N->4N ratios (not the
-    theoretical 4.0) are the fair denominators for scaling efficiency."""
-    import multiprocessing as mp
-
-    def measure(procs: int, n: int = 4_000_000) -> float:
-        with mp.Pool(procs) as pool:
-            t0 = time.time()
-            pool.map(_burn, [n] * procs * 3)
-            return (n * procs * 3) / (time.time() - t0)
-
-    best = {c: max(measure(c) for _ in range(2)) for c in levels}
-    out = {f"mops_{c}": round(v / 1e6, 1) for c, v in best.items()}
-    for lo, hi in zip(levels, levels[1:]):
-        out[f"ratio_{lo}_{hi}"] = round(best[hi] / best[lo], 2)
-        out[f"ceiling_efficiency_{lo}_{hi}"] = round(best[hi] / best[lo] / (hi / lo), 3)
     return out
 
 
@@ -676,746 +445,292 @@ def _kernel_burn(args: tuple) -> float:
 
 
 def kernel_cpu_calibration(
-    pairs_path: str, levels: tuple[int, ...] = (8, 32), n_pairs: int = 40_000,
-    reps: int = 4,
+    pairs_path: str, lo: int, hi: int, n_pairs: int = 40_000, reps: int = 4,
 ) -> dict:
     """The host's scaling ceiling for THE EXACT kernel compute, Spark-free:
     P independent python processes each run similarity_scores_batch over the
-    same name chunk. If Spark's measured N->4N efficiency matches this
-    multiprocessing ceiling, the engine's orchestration adds no scaling
-    overhead — the residual gap is the shared host's (memory bandwidth +
-    noisy neighbors), not the job's. This is a stronger, workload-matched
-    ceiling than the pure-python arithmetic loop (which understates memory
-    contention)."""
+    same name chunk, best of 2 at P = lo and P = hi. If Spark's measured
+    efficiency matches this ceiling, the engine's orchestration adds no
+    scaling overhead — the residual gap is the host's (memory bandwidth,
+    shared cores), not the job's."""
     import multiprocessing as mp
 
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(pairs_path, columns=["name_a", "name_b"])
-    names_a = tbl["name_a"].to_pylist()[:n_pairs]
-    names_b = tbl["name_b"].to_pylist()[:n_pairs]
-    work = (names_a, names_b, reps)
-    out: dict[str, float] = {}
+    work = (tbl["name_a"].to_pylist()[:n_pairs], tbl["name_b"].to_pylist()[:n_pairs], reps)
+    warm = (work[0][:100], work[1][:100], 1)
     best: dict[int, float] = {}
-    for procs in levels:
-        pps_best = 0.0
+    for procs in (lo, hi):
+        best[procs] = 0.0
         for _ in range(2):
-            with mp.Pool(procs) as pool:
+            # spawn, not fork: this process still holds pyarrow's threads,
+            # and a forked worker can inherit one of their locks held
+            with mp.get_context("spawn").Pool(procs) as pool:
+                # every worker imports the kernel before the timed map
+                pool.map(_kernel_burn, [warm] * procs)
                 t0 = time.time()
                 pool.map(_kernel_burn, [work] * procs)
                 wall = time.time() - t0
-            pps_best = max(pps_best, procs * reps * len(names_a) / wall)
-        best[procs] = pps_best
-        out[f"kernel_mp_pps_{procs}"] = round(pps_best, 1)
-    for lo, hi in zip(levels, levels[1:]):
-        out[f"kernel_mp_ceiling_{lo}_{hi}"] = round(
-            best[hi] / best[lo] / (hi / lo), 3
-        )
-    return out
+            best[procs] = max(best[procs], procs * reps * len(work[0]) / wall)
+    return {
+        "pps_lo": round(best[lo], 1),
+        "pps_hi": round(best[hi], 1),
+        "efficiency": round(best[hi] / best[lo] / (hi / lo), 3),
+    }
 
 
-def _best_of(runs: list[dict]) -> dict:
-    """Per-metric best across repeats — the sandbox host has noisy
-    neighbors, so a single run under-measures; best-of-N is the standard
-    protocol for throughput on shared hardware."""
-    best = dict(runs[0])
-    for r in runs[1:]:
-        for k in ("e2e_s", "stage_records_s", "stage_block_s", "stage_score_s",
-                  "stage_cluster_s"):
-            best[k] = min(best[k], r[k])
-        if r.get("pairs_per_sec") and (
-            not best.get("pairs_per_sec") or r["pairs_per_sec"] > best["pairs_per_sec"]
-        ):
-            best["pairs_per_sec"] = r["pairs_per_sec"]
-    return best
-
-
-def _pinned_run(kind: str, cores: int, path: str, env: dict | None = None) -> dict:
-    """Run one measurement in a subprocess pinned to exactly `cores` CPUs.
+def _pinned_run(kind: str, cores: int, path: str) -> dict:
+    """Run one worker (``kind`` is "pairs" or "kernel") in a subprocess
+    pinned to exactly `cores` CPUs.
 
     Pinning is essential for a faithful N-core simulation: pandas-UDF python
-    workers are separate processes, so an unpinned local[8] JVM quietly uses
-    up to 16 cores (8 task threads + 8 python workers) and inflates the
-    small-cluster baseline. A real 8-core executor node cannot do that.
+    workers are separate processes, so an unpinned local[N] JVM quietly uses
+    up to 2N cores (N task threads + N python workers) and inflates the
+    small-level baseline. A real N-core executor node cannot do that.
     Subprocesses also give each measurement a fresh JVM with identical heap.
     """
-    import subprocess
-
+    cpu_list = ",".join(str(c) for c in sorted(os.sched_getaffinity(0))[:cores])
     cmd = [
-        "taskset", "-c", f"0-{cores - 1}",
+        "taskset", "-c", cpu_list,
         sys.executable, os.path.abspath(__file__),
         "--worker", kind, "--cores", str(cores), "--path", path,
     ]
     t0 = time.time()
-    run_env = dict(os.environ)
-    if env:
-        run_env.update(env)
-    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, check=False,
-                         env=run_env)
+    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, check=False)
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
-            r = json.loads(line)
-            log(f"  [B] {kind}@{cores}: {round(time.time() - t0, 1)}s total, "
-                + (f"pps={r.get('pairs_per_sec')}" if kind == "kernel" else f"e2e={r.get('e2e_s')}s"))
-            return r
-    raise RuntimeError(f"pinned run failed: {out.stderr[-2000:]}")
+            log(f"  [B] {kind}@{cores}: {round(time.time() - t0, 1)}s total")
+            return json.loads(line)
+    raise RuntimeError(f"pinned {kind} run failed: {out.stderr[-2000:]}")
 
 
-KERNEL_LEVELS = (2, 8, 32)  # criterion pair: 2 -> 8 (N -> 4N); 8 -> 32 saturation pair
-
-# replication factor per (pair, level): the 8->32 pair runs a larger
-# workload (same input within the pair!) so the per-pass fixed costs — task
-# scheduling, Arrow stream setup, result collection — amortize into the
-# measurement noise instead of capping the ratio. Sweeps (tools/
-# kernel_sweep.py) measured 8->32 raw efficiency 0.61 at rep2 -> 0.75+ at
-# rep16; the 2->8 criterion pair keeps the moderate workload (the 2-core leg
-# is already minutes long at rep16).
-KERNEL_REP = {"criterion": int(os.environ.get("SPARK_GRAFT_KERNEL_REPLICATE", "4")),
-              "saturation": int(os.environ.get("SPARK_GRAFT_KERNEL_REPLICATE_HI", "16"))}
-
-
-# per-block wall-cost estimates (seconds, unthrottled host) used by the
-# shedding gates; actual measured costs replace the kernel estimate after
-# round 1. RESERVE keeps room for calibrations + final emission.
-KERNEL_ROUND_EST = 900.0  # criterion (~300s) + saturation (~600s) mandatory rounds
-CALIB_EST = 80.0
-CONTEXT_LEG_EST = 95.0
-RECALL_EST = 280.0
-CODEC_EST = 60.0
-RESERVE = 90.0
-
-
-def _settle() -> None:
-    """Writeback hygiene: each ER leg writes GBs of checkpoints that the
-    kernel flushes asynchronously after the subprocess exits; sync()
-    between legs so no leg's timed stages compete with the previous leg's
-    page flush."""
-    import subprocess
-
-    subprocess.run(["sync"], check=False)
-    time.sleep(2)
-
-
-def run_big_pair() -> dict:
-    """The big e2e pair (1.6M pages, local[8] vs local[32]) — the headline
-    e2e scaling proof. Runs FIRST in the whole bench, on a cold host:
-    both r4 and r5 measured this pair 1.5-7x inflated when ~40 min of
-    sustained all-core load preceded it (host thermal/cgroup throttle),
-    and standalone reproductions never showed the inflation. >=2
-    interleaved reps per level (rep 2 sheds only if rep 1 ate >55% of the
-    TOTAL budget); a throttle probe runs before each leg and waits out
-    detected slow windows (bounded)."""
-    corpus_big = _bench_corpus_path(ER_PAGES_BIG)
-    lo_big, hi_big = [], []
-    probes_lo, probes_hi = [], []
-    mp_lo, mp_hi = [], []
-
-    def leg(level: int, runs: list, probes_l: list, mp_l: list, tag: str) -> None:
-        _settle()
-        probes_l.append(round(wait_out_throttle(tag, procs=level) / 1e6, 2))
-        # the REAL wait_out_throttle records its final mp health in
-        # _LAST_MP_FRAC; a monkeypatched probe (tests) leaves it at 1.0
-        mp_l.append(round(_LAST_MP_FRAC, 3))
-        runs.append(_pinned_run("er", level, corpus_big))
-
-    for rep in range(2):
-        if rep > 0 and elapsed() > 0.55 * TOTAL_BUDGET:
-            shed("big_pair_rep2", "rep 1 consumed >55% of the total budget")
-            break
-        leg(8, lo_big, probes_lo, mp_lo, "big-er@8")
-        leg(32, hi_big, probes_hi, mp_hi, "big-er@32")
-
-    # Probe-gated rep retry (r6 verdict #4): best-of-2 green rode 1.6x rep
-    # variance (a leg timed inside a throttle window the 0.55 wait gate let
-    # through). A leg whose pre-leg single-core probe sat >1.5x below the
-    # run's best probe — or whose MULTI-CORE health sat below 1/1.5 (quota
-    # windows leave single-core probes healthy) — was measured throttled:
-    # re-run the worst such leg once, budget permitting, so the green is
-    # structural rather than lucky.
-    retries: list[str] = []
-    all_probes = probes_lo + probes_hi
-    if all_probes:
-        best_probe = max(all_probes)
-        cands = []
-        for level, runs, probes_l, mp_l in (
-            (8, lo_big, probes_lo, mp_lo), (32, hi_big, probes_hi, mp_hi)
-        ):
-            health = [
-                min(probes_l[j] / best_probe, mp_l[j])
-                for j in range(len(probes_l))
-            ]
-            i = min(range(len(health)), key=lambda j: health[j])
-            if health[i] * 1.5 < 1.0:
-                cands.append((health[i], level, runs, probes_l, mp_l))
-        # one retry max: a second (~170s) could starve the saturation
-        # top-up round the same verdict asks for
-        for h, level, runs, probes_l, mp_l in sorted(cands)[:1]:
-            leg_est = max(r["e2e_s"] for r in runs) + 60.0
-            if elapsed() + leg_est > 0.55 * TOTAL_BUDGET:
-                shed(f"big_pair_probe_retry@{level}", "budget")
-                continue
-            log(f"  [probe-retry] big-er@{level}: worst leg health "
-                f"{round(h, 2)} (probe {min(probes_l)} vs best {best_probe} "
-                f"Mops, mp {min(mp_l)}) — extra rep")
-            leg(level, runs, probes_l, mp_l, f"big-er@{level}-retry")
-            retries.append(f"@{level}")
-    lob, hib = _best_of(lo_big), _best_of(hi_big)
-    return {
-        "er_pages_big": ER_PAGES_BIG,
-        "local8_big": lob,
-        "local32_big": hib,
-        "big_repeats": len(lo_big),
-        "big_history": {
-            "e2e_8": [r["e2e_s"] for r in lo_big],
-            "e2e_32": [r["e2e_s"] for r in hi_big],
-            "records_8": [r["stage_records_s"] for r in lo_big],
-            "records_32": [r["stage_records_s"] for r in hi_big],
-            "throttle_probe_mops": probes_lo + probes_hi,
-            "mp_probe_health": mp_lo + mp_hi,
-            "probe_retries": retries,
-        },
-        "scaling_efficiency_e2e_big": round((lob["e2e_s"] / hib["e2e_s"]) / 4.0, 3),
-    }
-
-
-def run_context_pair() -> tuple[list, list] | None:
-    """200k-page ER pair (the fixed-cost exhibit). Sheds AFTER kernel
-    extra rounds but BEFORE the ANN sweep in the priority order; at this
-    point in the run the gate is simply the remaining ledger."""
-    if remaining() < 2 * CONTEXT_LEG_EST + RESERVE:
-        shed("context_pair_200k", "budget")
-        return None
-    er_corpus = _bench_corpus_path(ER_PAGES)
-    reps = 2 if remaining() > 4 * CONTEXT_LEG_EST + RESERVE else 1
-    if reps == 1:
-        shed("context_pair_rep2", "budget")
-    lo_runs, hi_runs = [], []
-    for _ in range(reps):
-        _settle()
-        lo_runs.append(_pinned_run("er", 8, er_corpus))
-        _settle()
-        hi_runs.append(_pinned_run("er", 32, er_corpus))
-    return lo_runs, hi_runs
-
-
-def _new_kruns() -> dict[tuple[str, int], list]:
-    return {
-        ("criterion", 2): [], ("criterion", 8): [],
-        ("saturation", 8): [], ("saturation", 32): [],
-    }
-
-
-def _pair_round(kruns: dict, pairs_path: str, pair: str, cores: tuple) -> float:
-    """One round of ONE kernel pair — its two legs back-to-back (adjacent
-    legs is what makes the ratio fair), each behind a throttle probe (the
-    first official r6 run spent its only round inside a throttle window:
-    kernel@2 194k pps vs the usual ~280k). Returns the round's wall.
-
-    The pairs run as separate rounds (r6) because a fused 4-leg round cost
-    up to ~1130s throttled — one bad round then shed every retry; the
-    criterion pair alone is ~260s clean, so best-of-N actually gets its N."""
-    t0 = time.time()
-    env = {"SPARK_GRAFT_KERNEL_REPLICATE": str(KERNEL_REP[pair])}
-    for c in cores:
-        wait_out_throttle(
-            f"kernel-{pair}@{c}", max_wait_s=60, min_remaining_s=300, procs=c
-        )
-        kruns[(pair, c)].append(_pinned_run("kernel", c, pairs_path, env=env))
-    return time.time() - t0
-
-
-def criterion_round(kruns: dict, pairs_path: str) -> float:
-    return _pair_round(kruns, pairs_path, "criterion", (2, 8))
-
-
-def saturation_round(kruns: dict, pairs_path: str) -> float:
-    return _pair_round(kruns, pairs_path, "saturation", (8, 32))
+def kernel_levels(nproc: int) -> tuple[int, int] | None:
+    """(N, 4N) for the scoring-kernel pair on ``nproc`` CPUs, with 4N the
+    largest multiple of 4 that fits; None below 4 CPUs."""
+    lo = nproc // 4
+    return (lo, 4 * lo) if lo >= 1 else None
 
 
 def assemble_scaling(
-    big: dict,
-    kruns: dict | None = None,
-    calib: dict | None = None,
-    context: tuple[list, list] | None = None,
+    lo: int, hi: int, rounds: list[tuple[dict, dict]], ceiling: dict | None = None
 ) -> dict:
-    """Build the full scaling dict from whatever blocks have run so far —
-    every emission is assembled from MEASURED numbers only (r5 verdict #6:
-    the report can never claim something the shipped run didn't measure).
-    Missing blocks stay absent (the markdown + JSON note the shed)."""
-    out = {"n_pages": BENCH_PAGES, "er_pages": ER_PAGES}
-    out.update(big)
-    if context:
-        lo, hi = _best_of(context[0]), _best_of(context[1])
-        out["local8"] = lo
-        out["local32"] = hi
-        out["context_repeats"] = len(context[0])
-        out["scaling_efficiency_e2e"] = round((lo["e2e_s"] / hi["e2e_s"]) / 4.0, 3)
-    if kruns and kruns[("criterion", 2)]:
-        kbest = {
-            k: max(rs, key=lambda r: r["pairs_per_sec"])
-            for k, rs in kruns.items() if rs
-        }
-        eff_2_8 = round(
-            kbest[("criterion", 8)]["pairs_per_sec"]
-            / kbest[("criterion", 2)]["pairs_per_sec"] / 4.0, 3
-        )
-        out.update({
-            "repeats": len(kruns[("criterion", 2)]),
-            "kernel_best": {
-                2: kbest[("criterion", 2)],
-                8: kbest[("criterion", 8)],
-            },
-            "kernel_history": {
-                f"{pair}_{c}": [r["pairs_per_sec"] for r in rs]
-                for (pair, c), rs in kruns.items()
-            },
-            "scaling_efficiency_criterion_2_8": eff_2_8,
+    """The scaling block from the kernel rounds measured so far; each round
+    is its (N leg, 4N leg) pair of scoring_kernel_run results."""
+    rows = []
+    for r_lo, r_hi in rounds:
+        rows.append({
+            "pps_lo": r_lo["pairs_per_sec"],
+            "pps_hi": r_hi["pairs_per_sec"],
+            "wall_s_lo": r_lo["wall_s"],
+            "wall_s_hi": r_hi["wall_s"],
+            "efficiency": round(r_hi["pairs_per_sec"] / r_lo["pairs_per_sec"] / (hi / lo), 3),
         })
-        if calib:
-            out["cpu_calibration"] = calib
-        # saturation pair may have been shed in a pathological run — the
-        # criterion block above (the graded metric) survives on its own
-        if kruns[("saturation", 8)] and kruns[("saturation", 32)]:
-            eff_8_32 = round(
-                kbest[("saturation", 32)]["pairs_per_sec"]
-                / kbest[("saturation", 8)]["pairs_per_sec"] / 4.0, 3
-            )
-            out["kernel_best"][32] = kbest[("saturation", 32)]
-            out["kernel_best_saturation_8"] = kbest[("saturation", 8)]
-            out["scaling_efficiency_8_32"] = eff_8_32
-            if calib and calib.get("ceiling_efficiency_8_32"):
-                out["scaling_efficiency_8_32_vs_host_ceiling"] = round(
-                    eff_8_32 / calib["ceiling_efficiency_8_32"], 3
-                )
-            if calib and calib.get("kernel_mp_ceiling_8_32"):
-                out["scaling_efficiency_8_32_vs_kernel_mp_ceiling"] = round(
-                    eff_8_32 / calib["kernel_mp_ceiling_8_32"], 3
-                )
-    return out
-
-
-def _export_scaling(scaling: dict) -> dict:
-    """The compact scaling block of the emitted JSON line — only measured
-    keys, so a partial emission never fabricates a number."""
-    kb = scaling.get("kernel_best") or {}
+    effs = [r["efficiency"] for r in rows]
     out = {
-        "e2e_s_local8_big": scaling["local8_big"]["e2e_s"],
-        "e2e_s_local32_big": scaling["local32_big"]["e2e_s"],
-        "e2e_big_history": scaling["big_history"],
-        "efficiency_e2e_big": scaling["scaling_efficiency_e2e_big"],
-        "er_pages_big": scaling["er_pages_big"],
-        "big_repeats": scaling["big_repeats"],
-        "n_pages": scaling["n_pages"],
+        "lo": lo,
+        "hi": hi,
+        "pairs": rounds[0][0]["pairs"],
+        "rounds": rows,
+        "efficiency": round(statistics.median(effs), 3),
+        "efficiency_min": min(effs),
+        "efficiency_max": max(effs),
     }
-    if kb:
-        out.update({
-            "pairs_per_sec_local2": kb[2]["pairs_per_sec"],
-            "pairs_per_sec_local8": kb[8]["pairs_per_sec"],
-            "efficiency": scaling["scaling_efficiency_criterion_2_8"],
-        })
-        if 32 in kb:
-            out.update({
-                "pairs_per_sec_local32": kb[32]["pairs_per_sec"],
-                "efficiency_8_32": scaling["scaling_efficiency_8_32"],
-                "efficiency_8_32_vs_host_ceiling": scaling.get(
-                    "scaling_efficiency_8_32_vs_host_ceiling"
-                ),
-                "efficiency_8_32_vs_kernel_mp_ceiling": scaling.get(
-                    "scaling_efficiency_8_32_vs_kernel_mp_ceiling"
-                ),
-            })
-    if "local8" in scaling:
-        out["e2e_s_local8"] = scaling["local8"]["e2e_s"]
-        out["e2e_s_local32"] = scaling["local32"]["e2e_s"]
+    if ceiling:
+        out["kernel_mp_ceiling"] = ceiling
+        out["efficiency_vs_kernel_mp_ceiling"] = round(
+            out["efficiency"] / ceiling["efficiency"], 3
+        )
     return out
 
 
-def _big_pair_claim(scaling: dict) -> str:
-    """The 8x-pair headline sentence, COMPUTED from the measured numbers —
-    never a template assertion (r4 verdict item #2: the r4 report shipped
-    prose claiming e2e_32 < e2e_8 above a table showing the opposite).
-    Every claim below restates a value from the table it follows."""
-    lob, hib = scaling["local8_big"], scaling["local32_big"]
-    speedup = round(lob["e2e_s"] / hib["e2e_s"], 2)
-    eff = scaling["scaling_efficiency_e2e_big"]
-    lines = [
-        f"End-to-end efficiency: `{eff}` vs the 4x core ratio "
-        f"(measured speedup {speedup}x: {lob['e2e_s']}s at 8 cores vs "
-        f"{hib['e2e_s']}s at 32; the 200k table above is the fixed-cost "
-        f"exhibit: same job, overhead-dominated)."
-    ]
-    if hib["e2e_s"] < lob["e2e_s"]:
-        lines.append(
-            f"local[32] wins outright at this size (e2e_32 = {hib['e2e_s']}s "
-            f"< e2e_8 = {lob['e2e_s']}s), as the r3/r4 verdicts required."
-        )
-    else:
-        lines.append(
-            f"**REGRESSION: local[32] ({hib['e2e_s']}s) does NOT beat "
-            f"local[8] ({lob['e2e_s']}s) in this run** — the e2e scaling "
-            f"proof did not land; treat the pair as red until re-measured."
-        )
-    s_lo, s_hi = lob["stage_records_s"], hib["stage_records_s"]
-    if s_hi <= s_lo:
-        lines.append(
-            f"Stage 0 (extract+classify) scales: {s_lo}s at 8 cores -> "
-            f"{s_hi}s at 32 (the r4 anti-scaling is gone)."
-        )
-    else:
-        lines.append(
-            f"**Stage 0 (extract+classify) still anti-scales in this run: "
-            f"{s_lo}s at 8 cores -> {s_hi}s at 32.**"
-        )
-    return "\n".join(lines)
+def _ledger_md(result: dict) -> str:
+    ledger = result["ledger"]
+    head = (
+        "| query | cold (s) | warm median (s) | warm range (s) | jobs | tasks "
+        "| executor run (s) | executor CPU (s) | Python init (s) | Python run (s) |\n"
+        "|---|---|---|---|---|---|---|---|---|---|\n"
+    )
+    rows = "".join(
+        f"| `{name}` | {q['cold_s']} | **{q['wall_s']}** | {q['wall_s_min']}-{q['wall_s_max']} "
+        f"| {q['jobs']} | {q['tasks']} | {q['executor_run_s']} | {q['executor_cpu_s']} "
+        f"| {q['python_init_s']} | {q['python_run_s']} |\n"
+        for name, q in ledger["queries"].items()
+    )
+    er = ledger["queries"]["er_cluster_documents"]["wall_s"]
+    verdict = "meets" if er <= ER_CLUSTER_TARGET_S else "does NOT meet"
+    return f"""
+## Headline suite (sf{result['sf']}, local[{result['host']['nproc']}])
+
+Warm suite total **{result['value']}s** (sum of the per-query warm medians);
+the cold pass took {result['value_cold_total']}s. One cold pass, then
+{WARM_REPS} warm passes of the whole suite. Each query ran in a perfbench
+tracer span; the walls are the spans', and the columns after them are the
+event log's figures for the query's warm spans, as per-rep means (Python
+times are worker-seconds, summed over tasks). {ledger['job_coverage']:.0%} of
+the session's {ledger['jobs']} Spark jobs carry a span label.
+
+{head}{rows}
+`er_cluster_documents` warm median: {er}s, which {verdict} the
+ROADMAP target of <= {ER_CLUSTER_TARGET_S:g}s.
+"""
 
 
-def write_baseline_md(
-    scaling: dict, ann_recall: dict | None = None, codec: dict | None = None
-) -> None:
-    """Regenerate BENCH/BASELINE.md from THIS run's measured numbers only
-    (r5 verdict #6): every table and claim below interpolates the run
-    being emitted, the provenance block records elapsed/budget/sheds, and
-    sections whose block was shed are replaced by an explicit shed note —
-    the committed report can never again diverge from the official JSON."""
+def _scaling_md(scaling: dict) -> str:
+    if "skipped" in scaling:
+        return f"\n## Scoring-kernel scaling: not measured\n\n{scaling['skipped']}\n"
+    lo, hi = scaling["lo"], scaling["hi"]
+    eff = scaling["efficiency"]
+    verdict = (
+        f"meets the {EFFICIENCY_TARGET} target" if eff >= EFFICIENCY_TARGET
+        else f"is **below the {EFFICIENCY_TARGET} target**"
+    )
+    rows = "".join(
+        f"| {i + 1} | {r['pps_lo']} | {r['pps_hi']} | {r['wall_s_lo']} | {r['wall_s_hi']} "
+        f"| {r['efficiency']} |\n"
+        for i, r in enumerate(scaling["rounds"])
+    )
+    md = f"""
+## Scoring-kernel scaling: local[{lo}] -> local[{hi}]
+
+The stage-2 scoring operator (one fused Arrow UDF: numpy-batched
+Jaro-Winkler + Levenshtein ratio + token-set Jaccard + thresholds) over
+{scaling['pairs']} cached candidate pairs: the naive within-block pair table
+of a {KERNEL_PAGES}-page seed-42 corpus, replicated {KERNEL_REPLICATE}x. Each
+leg is one timed pass in a fresh subprocess pinned with `taskset` to exactly
+its CPUs (unpinned, local[N]'s Python workers would run on more than N).
+The two legs of a round run back to back, alternating which goes first.
+
+| round | pairs/s local[{lo}] | pairs/s local[{hi}] | wall local[{lo}] (s) | wall local[{hi}] (s) | efficiency |
+|---|---|---|---|---|---|
+{rows}
+**Efficiency = median over rounds of (pps_{hi} / pps_{lo}) / {hi // lo} =
+`{eff}`** (range {scaling['efficiency_min']}-{scaling['efficiency_max']}),
+which {verdict}.
+"""
+    ceiling = scaling.get("kernel_mp_ceiling")
+    if ceiling:
+        md += f"""
+Spark-free ceiling, same run: the same kernel as {lo} and {hi} independent
+Python processes (no Spark) scales `{ceiling['efficiency']}` of ideal
+({ceiling['pps_lo']} -> {ceiling['pps_hi']} pairs/s). Spark's efficiency is
+`{scaling['efficiency_vs_kernel_mp_ceiling']}` of that ceiling; at or above
+1.0 the engine's orchestration adds no scaling cost over the bare compute.
+"""
+    return md
+
+
+def write_baseline_md(result: dict) -> None:
+    """Regenerate BENCH/BASELINE.md from one emitted summary: every table
+    and claim below interpolates that run's numbers."""
     import datetime
 
-    lob, hib = scaling["local8_big"], scaling["local32_big"]
-    kb = scaling.get("kernel_best")
-    calib = scaling.get("cpu_calibration", {})
+    host = result["host"]
     stamp = datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    shed_line = ("; ".join(SHED) if SHED else "none")
-    md = f"""# BENCH — measured results (sandbox scaling protocol)
+    md = f"""# BENCH — measured results
 
-**Run provenance**: generated {stamp} by the SAME bench.py invocation whose
-JSON line ships (wall {round(elapsed(), 1)}s of a {round(TOTAL_BUDGET)}s
-total budget; load shed: {shed_line}). Every number and claim in this file
-is interpolated from that run — nothing is carried over from earlier runs.
-
-Per BASELINE.md: no real multi-node cluster is available; the N -> 4N
-executor criterion is evidenced at two core-count pairs over the SAME input
-(seed-42 corpus, {scaling['n_pages']} pages; identical JVM heap and the
-same job-level constant shuffle width at every level). Best of
-{scaling.get('repeats')} criterion rounds (each pair's two legs run
-back-to-back behind a throttle probe; the sandbox host has noisy neighbors
-and throttles in multi-minute windows — single runs showed up to 3x
-run-to-run drift). Each
-measurement runs in a subprocess pinned with `taskset` to exactly N CPUs
-(unpinned local[N] would quietly use up to 2N cores — JVM task threads plus
-pandas-UDF python workers — inflating the small baseline). The big e2e pair
-runs FIRST, on a cold host, with BOTH a single-core throttle probe and an
-all-core aggregate probe before each leg (single-core probes this run:
-{scaling['big_history'].get('throttle_probe_mops')} Mops; per-leg
-multi-core health vs the best window:
-{scaling['big_history'].get('mp_probe_health')}; a leg whose health sat
-below 1/1.5 would get one probe-gated extra rep — retries this run:
-{scaling['big_history'].get('probe_retries')}) — r4/r5 showed the pair
-1.5-7x inflated when it ran after sustained kernel load, and an r7 run
-measured quota-shaped windows that cap 32-core throughput while
-single-core probes stay healthy.
+Generated {stamp} by one `python bench.py` run; every number below comes
+from that run. Host: {host['nproc']} CPUs, {host['mem_gib']} GiB memory,
+Spark {host['spark']}, Python {host['python']}, Java {host['java']}. Total
+wall: {result['elapsed_s']}s.
 """
-    if kb and 32 not in kb:
-        k2, k8 = kb[2], kb[8]
-        md += f"""
-## Criterion metric: candidate-pairs-scored/sec (criterion pair only)
-
-The saturation (8->32) rounds were shed on budget this run; the graded
-criterion pair (N=2 -> 4N=8, both below the host's saturation knee) did
-run: local[2] {k2['pairs_per_sec']} pairs/s, local[8]
-{k8['pairs_per_sec']} pairs/s — **efficiency = (pps_8/pps_2)/4 =
-`{scaling['scaling_efficiency_criterion_2_8']}`** (target >= 0.8), best of
-{scaling.get('repeats')} rounds
-(history: criterion local[2] {scaling['kernel_history']['criterion_2']} ·
-criterion local[8] {scaling['kernel_history']['criterion_8']}).
-"""
-    if kb and 32 in kb:
-        k2, k8, k32 = kb[2], kb[8], kb[32]
-        k8s = scaling["kernel_best_saturation_8"]
-        md += f"""
-## Criterion metric: candidate-pairs-scored/sec (scoring kernel)
-
-The stage-2 scoring operator — ONE fused Arrow UDF computing numpy-batched
-Jaro-Winkler + Levenshtein + token-set Jaccard + thresholds — over the
-materialized within-block candidate pair table (the naive id-level pair
-volume before the engine's distinct-name dedup), isolated from checkpoint
-IO. Two N->4N pairs, each comparing identical inputs at both of its levels;
-the 8->32 pair runs a {KERNEL_REP['saturation'] // KERNEL_REP['criterion']}x
-larger replication of the same table ({k32['pairs']} pairs vs
-{k2['pairs']}) so per-pass fixed costs (task scheduling, Arrow stream
-setup) amortize — scaling efficiency is a throughput ratio, so workload
-size cancels within a pair:
-
-| | local[2] | local[8] | local[8] (large) | local[32] (large) |
-|---|---|---|---|---|
-| wall (s) | {k2['wall_s']} | {k8['wall_s']} | {k8s['wall_s']} | {k32['wall_s']} |
-| **pairs-scored/sec** | **{k2['pairs_per_sec']}** | **{k8['pairs_per_sec']}** | **{k8s['pairs_per_sec']}** | **{k32['pairs_per_sec']}** |
-
-**Criterion pair N=2 -> 4N=8 (both levels below the host's saturation
-knee): efficiency = (pps_8/pps_2)/4 = `{scaling['scaling_efficiency_criterion_2_8']}`**
-(target >= 0.8).
-
-Saturation pair 8 -> 32 (large workload): efficiency
-`{scaling['scaling_efficiency_8_32']}` raw. The host ITSELF only scales
-`{calib.get('ratio_8_32')}x` (not 4x) from 8 to 32 processes on a
-pure-python arithmetic loop measured in this same bench run (Firecracker
-guest on shared host cores) — kernel efficiency relative to that measured
-ceiling: **`{scaling['scaling_efficiency_8_32_vs_host_ceiling']}`**.
-Workload-matched Spark-free reference (same run): THE EXACT numpy scoring
-kernel run as P independent python processes with NO Spark
-(multiprocessing.Pool over the same name pairs) scales
-`{calib.get('kernel_mp_ceiling_8_32')}`/1.0 from 8 to 32; Spark's measured
-efficiency relative to that apples-to-apples reference:
-**`{scaling['scaling_efficiency_8_32_vs_kernel_mp_ceiling']}`**. At or
-above 1.0 means the engine's orchestration (scheduling, Arrow transport)
-adds NO scaling cost over running the same compute bare on this host — any
-remaining gap to 4x is the shared host's memory-bandwidth/throttle
-behavior, not the job's. (Spark can legitimately exceed the naive pool:
-dynamic task scheduling load-balances around throttled cores, which a
-static equal-split pool cannot.)
-Host ceiling 2->8: `{calib.get('ratio_2_8')}x`/4. The scoring stage is
-shuffle-free and embarrassingly parallel: each Arrow batch is scored
-independently with no cross-partition traffic, so on a real cluster where 4N
-executors mean 4x physical cores + 4x memory bandwidth, it scales with the
-hardware, not against a shared-host ceiling.
-
-All kernel repeats (pairs/sec; best-of is reported above because the host
-throttles in multi-minute windows):
-criterion local[2] {scaling['kernel_history']['criterion_2']} ·
-criterion local[8] {scaling['kernel_history']['criterion_8']} ·
-saturation local[8] {scaling['kernel_history']['saturation_8']} ·
-saturation local[32] {scaling['kernel_history']['saturation_32']}
-"""
-    if not kb:
-        md += ("\n## Criterion metric: NOT MEASURED in this run (kernel "
-               "round shed on budget) — do not cite earlier rounds' numbers "
-               "as this run's.\n")
-    if "local8" in scaling:
-        lo, hi = scaling["local8"], scaling["local32"]
-        md += f"""
-## Full similarity-mode ER job (context; {scaling.get('er_pages', scaling['n_pages'])} pages, best of {scaling.get('context_repeats')})
-
-Stage walls include parquet checkpoint writes + per-partition lineage metrics
-(the resumability requirement). At this corpus size the full job is dominated
-by fixed costs (job scheduling, stage barriers, checkpoint IO, CC round
-trips), which do not grow with data — they amortize at production scale; the
-kernel above is the compute that scales with pair volume.
-
-| metric | local[8] | local[32] |
-|---|---|---|
-| end-to-end wall (s) | {lo['e2e_s']} | {hi['e2e_s']} |
-| stage: records (extract+classify) (s) | {lo['stage_records_s']} | {hi['stage_records_s']} |
-| stage: blocking keys (s) | {lo['stage_block_s']} | {hi['stage_block_s']} |
-| stage: score (node-level, deduped) (s) | {lo['stage_score_s']} | {hi['stage_score_s']} |
-| stage: cluster (CC) (s) | {lo['stage_cluster_s']} | {hi['stage_cluster_s']} |
-| node candidate pairs scored | {lo['pairs_scored']} | {hi['pairs_scored']} |
-| mega-blocks salted | {lo['mega_blocks']} | {hi['mega_blocks']} |
-| clusters emitted | {lo['n_clusters']} | {hi['n_clusters']} |
-
-End-to-end efficiency: `{scaling['scaling_efficiency_e2e']}` (overhead-bound
-at this scale, see note above).
-"""
-    else:
-        md += ("\n## Full similarity-mode ER job (200k context pair): SHED "
-               "(budget) — the 8x pair below is the e2e scaling proof\n")
-    md += f"""
-## Full ER job at 8x corpus ({scaling.get('er_pages_big')} pages) — the e2e scaling proof
-
-The same job on an 8x corpus, where the compute stages (extract/classify,
-pair scoring) dominate the fixed orchestration floor — this is the pair the
-r3 verdict asked for: local[32] must win outright, not amortize to parity.
-Best of {scaling.get('big_repeats')} interleaved reps per level (all reps:
-e2e_8 {scaling.get('big_history', {}).get('e2e_8')} ·
-e2e_32 {scaling.get('big_history', {}).get('e2e_32')} ·
-records_8 {scaling.get('big_history', {}).get('records_8')} ·
-records_32 {scaling.get('big_history', {}).get('records_32')}).
-
-| metric | local[8] | local[32] |
-|---|---|---|
-| end-to-end wall (s) | {lob['e2e_s']} | {hib['e2e_s']} |
-| stage: records (extract+classify) (s) | {lob['stage_records_s']} | {hib['stage_records_s']} |
-| stage: blocking keys (s) | {lob['stage_block_s']} | {hib['stage_block_s']} |
-| stage: score (node-level, deduped) (s) | {lob['stage_score_s']} | {hib['stage_score_s']} |
-| stage: cluster (CC) (s) | {lob['stage_cluster_s']} | {hib['stage_cluster_s']} |
-| node candidate pairs scored | {lob['pairs_scored']} | {hib['pairs_scored']} |
-
-{_big_pair_claim(scaling)}
-This pair exists because of the r4 skew work: record-level windows keyed by
-cluster id used to put the transitive closure's giant head component (31k
-nodes at an 800k-page probe) into ONE spilling task — 888s e2e at HALF this
-corpus before the groupBy+join rewrite; the full 8x corpus now runs in
-{lob['e2e_s']}s at 8 cores.
-"""
-    if ann_recall:
+    md += _ledger_md(result)
+    md += _scaling_md(result["scaling"])
+    recall = result.get("ann_recall_at_10")
+    if recall:
         md += f"""
 ## ANN quality at bench scale (recall@10 vs brute-force cosine)
 
-| path | recall@10 | corpus fraction scored (measured) |
+| path | recall@10 | corpus fraction scored |
 |---|---|---|
-| IVF seeded quantizer (32 cells, nprobe=6 — integer-Lloyd at 0 iters, the retired `ann_ivf_topk` query, SQL-value-checked in pytest) | {ann_recall.get('ann_ivf_topk')} | {ann_recall.get('ivf_seeded_frac')} |
-| IVF integer-Lloyd TRAINED quantizer (32 cells, nprobe=6, 2 iters — `ann_ivf_lloyd_topk`, the trained fit itself SQL-value-checked) | {ann_recall.get('ann_ivf_lloyd_topk')} | {ann_recall.get('ivf_lloyd_frac')} |
-| LSH single table (6 planes, flip-1) | {ann_recall.get('ann_lsh_topk')} | {ann_recall.get('lsh_frac')} |
-| LSH OR-amplified (7 tables x 8 planes, flip-1) | {ann_recall.get('ann_lsh_multi_topk')} | {ann_recall.get('lsh_multi_frac')} |
+| IVF integer-Lloyd quantizer, untrained (32 cells, nprobe=6; `ann_ivf_topk`) | {recall.get('ann_ivf_topk')} | {recall.get('ivf_seeded_frac')} |
+| IVF integer-Lloyd quantizer, 2 iterations (32 cells, nprobe=6; `ann_ivf_lloyd_topk`) | {recall.get('ann_ivf_lloyd_topk')} | {recall.get('ivf_lloyd_frac')} |
+| LSH single table (6 planes, flip-1; `ann_lsh_topk`) | {recall.get('ann_lsh_topk')} | {recall.get('lsh_frac')} |
+| LSH OR-amplified (7 tables x 8 planes, flip-1; `ann_lsh_multi_topk`) | {recall.get('ann_lsh_multi_topk')} | {recall.get('lsh_multi_frac')} |
 
-Brute force is the exactness baseline (oracle-green `ann_cosine_topk`); the
-approximate paths trade recall for never shuffling the corpus at query
-time. Context: the synthetic embeddings' true top-10 neighbors sit at mean
-cosine ~0.35 (per-hyperplane sign-agreement p~0.61, barely above the 0.5
-background), so sign-LSH selectivity is intrinsically weak on this table —
-single-table recall matches the P(<=1 bit flip) theory for p=0.61 exactly.
-The OR-amplified configuration (r3 verdict item: L independent seeded plane
-sets, candidate union, exact re-rank) buys back what one table cannot see:
-per-table hit probability 1-(1-p_t)^L with p_t = p^8 + 8p^7(1-p) ~ 0.11
-predicts ~0.57 at 7 tables; the measured number sits above that because
-table overlap dedup keeps the probe budget under the naive L x budget. IVF
-exploits the actual cluster structure; on production embedding tables
-(neighbor cosine typically > 0.7) every path sits far higher at the same
-probe budgets.
+Brute force (`ann_cosine_topk`) is the exactness baseline; the approximate
+paths trade recall for never shuffling the corpus at query time. The
+synthetic embeddings' true top-10 neighbours sit at mean cosine ~0.35, so
+sign-LSH selectivity is intrinsically weak on this table.
 """
+    codec = result.get("codec")
     if codec:
         md += f"""
-## Pure-numpy codec decode throughput (Spark mapInPandas surface)
+## Codec decode throughput (Spark mapInPandas surface)
 
 {codec.get('codec_images_per_sec')} images/s ({codec.get('codec_px_per_sec')}
 px/s) on a 192 x 96x96 RGB PNG corpus, alternating filter-0 and filter-4
-(Paeth) scanlines, through `decode_and_featurize` (warm repeat). The
-Average/Paeth unfilter runs as an anti-diagonal wavefront (rows+pixels
-numpy steps, bit-exact vs the per-byte spec loop — `multimodal.py
-_wavefront_unfilter`); remaining decode cost is zlib inflate + feature
-reduction. A production deployment swaps libjpeg-turbo/ffmpeg into the
-same dispatch (documented in `multimodal.py`); the Spark-side shape
-(Arrow batches, per-executor decode, schema) is what this row evidences.
+(Paeth) scanlines, through `decode_and_featurize` (warm repeat).
 """
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)
 
 
+def run_scaling(run_dir: str, nproc: int) -> dict:
+    """The kernel pair's ROUNDS rounds, emitting after each; the returned
+    block says why when the pair cannot run on ``nproc`` CPUs."""
+    levels = kernel_levels(nproc)
+    if levels is None:
+        return {"skipped": f"{nproc} CPU(s): the N -> 4N kernel pair needs at least 4"}
+    lo, hi = levels
+    pairs_path = _pinned_run("pairs", hi, run_dir)["path"]
+    rounds = []
+    for i in range(ROUNDS):
+        order = (lo, hi) if i % 2 == 0 else (hi, lo)
+        legs = {c: _pinned_run("kernel", c, pairs_path) for c in order}
+        rounds.append((legs[lo], legs[hi]))
+        RESULT["scaling"] = assemble_scaling(lo, hi, rounds)
+        emit(f"kernel_round{i + 1}")
+    return assemble_scaling(lo, hi, rounds, kernel_cpu_calibration(pairs_path, lo, hi))
+
+
 def main() -> None:
     global T_START
     T_START = time.time()
-    _install_signal_net()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.makedirs(CACHE, exist_ok=True)
-    do_scaling = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
-
-    RESULT.update({
-        "metric": "headline_suite_e2e",
-        "value": None,
-        "unit": "sec",
-        "queries": {},
-        "sf": sf_dir.rstrip("/").split("sf")[-1],
-    })
-
-    big = None
-    if do_scaling:
-        # 0. the big e2e pair FIRST, cold host (r5 verdict #2)
-        big = run_big_pair()
-        RESULT["scaling"] = _export_scaling(assemble_scaling(big))
-        emit("big_pair")
-
-    # 1. phase A — headline suite; codec/ANN sweep gated on the ledger
-    # after reserving the mandatory kernel round + calibration (shed
-    # order: ANN sweep before codec, both before any mandatory block)
-    mandatory_left = (KERNEL_ROUND_EST + CALIB_EST + RESERVE) if do_scaling else RESERVE
-    rem_for_extras = remaining() - mandatory_left - 170.0  # headline est
-    do_codec = rem_for_extras > CODEC_EST
-    do_recall = rem_for_extras - (CODEC_EST if do_codec else 0) > RECALL_EST
-    queries, queries_warm, total, recall, codec = phase_a(
-        sf_dir, cpus, do_recall=do_recall, do_codec=do_codec
-    )
-    # value = the WARM-pass suite total: the cold pass now runs right
-    # after ~10 min of big-pair load (the pair moved first for thermal
-    # correctness), so its wall is ordering-dependent; the warm pass is
-    # the steady-state, ordering-independent number that stays comparable
-    # across rounds (r4 cold 28.576s was measured with phase A first —
-    # the warm total matches it). The cold suite wall ships alongside.
-    RESULT.update({
-        "value": round(sum(queries_warm.values()), 3),
-        "value_cold_total": total,
-        "queries": queries,
-        "queries_warm": queries_warm,
-        "ann_recall_at_10": recall,
-        "codec": codec,
-    })
-    emit("phase_a")
-
-    if not do_scaling:
-        return
-
-    # 2. kernel scaling protocol: one criterion round + one saturation
-    # round mandatory (the criterion 2->8 pair IS the north-rule metric),
-    # calibrations adjacent (same thermal state)
-    corpus = _bench_corpus_path()
-    pairs_path = _pairs_parquet_path(corpus)
-    kruns = _new_kruns()
-    crit_cost = criterion_round(kruns, pairs_path)
-    # the saturation round is a supporting exhibit, not the graded metric:
-    # in a pathological run (big pair deeply throttled) it yields to the
-    # hard ceiling rather than pushing the whole suite past the driver's
-    # kill window
-    sat_cost = 600.0
-    if remaining() > 450:
-        sat_cost = saturation_round(kruns, pairs_path)
-    else:
-        shed("saturation_round_mandatory", "budget")
-    calib = cpu_calibration(KERNEL_LEVELS)
-    calib.update(kernel_cpu_calibration(pairs_path))
-    RESULT["scaling"] = _export_scaling(assemble_scaling(big, kruns, calib))
-    emit("kernel_round1")
-
-    # 3. 200k context pair (sheds after kernel extras in priority, but
-    # runs before them so the extras absorb whatever budget is left)
-    context = run_context_pair()
-
-    # 4. kernel top-up rounds (these shed FIRST, by running last).
-    # r6 rebalance (r6 verdict #2): that run shipped a SINGLE-REP 0.719
-    # saturation number — criterion, already green at round 1, absorbed
-    # the top-up budget first and saturation round 2 shed. Now: once
-    # criterion is green it caps at 2 rounds and the recovered ~300s/round
-    # goes to saturation (the multi-rep evidence the verdict asked for);
-    # criterion only chases extra rounds ahead of saturation while it is
-    # itself under the 0.8 bar (it IS the graded metric), and its gate
-    # reserves one saturation round so the chase can never starve it.
-    def _crit_eff() -> float:
-        best = {
-            c: max(r["pairs_per_sec"] for r in kruns[("criterion", c)])
-            for c in (2, 8)
-        }
-        return best[8] / best[2] / 4.0
-
-    while remaining() > crit_cost + sat_cost + RESERVE:
-        n = len(kruns[("criterion", 2)])
-        if n >= 5 or (n >= 2 and _crit_eff() >= 0.8):
-            break
-        crit_cost = min(crit_cost, criterion_round(kruns, pairs_path))
-    while len(kruns[("saturation", 8)]) < 3 and remaining() > sat_cost + RESERVE:
-        sat_cost = min(sat_cost, saturation_round(kruns, pairs_path))
-    # leftover budget flows back to criterion (best-of only improves)
-    while len(kruns[("criterion", 2)]) < 5 and remaining() > crit_cost + RESERVE:
-        crit_cost = min(crit_cost, criterion_round(kruns, pairs_path))
-    if len(kruns[("criterion", 2)]) < 3:
-        shed(f"criterion_rounds_beyond_{len(kruns[('criterion', 2)])}", "budget")
-    if len(kruns[("saturation", 8)]) < 3:
-        shed(f"saturation_rounds_beyond_{len(kruns[('saturation', 8)])}", "budget")
-
-    scaling = assemble_scaling(big, kruns, calib, context)
-    write_baseline_md(scaling, recall, codec)
-    RESULT["scaling"] = _export_scaling(scaling)
-    emit("final")
+    run_dir = tempfile.mkdtemp(prefix="bench-")
+    _install_signal_net(run_dir)
+    try:
+        RESULT.update({
+            "metric": "headline_suite_e2e",
+            "value": None,
+            "unit": "sec",
+            "queries": {},
+            "sf": sf_dir.rstrip("/").split("sf")[-1],
+        })
+        a = phase_a(sf_dir, run_dir)
+        per_query = a["ledger"]["queries"]
+        RESULT.update({
+            "host": a["host"],
+            # value = the warm suite total: the steady-state number that
+            # stays comparable across runs; the cold pass wall ships alongside
+            "value": round(sum(q["wall_s"] for q in per_query.values()), 3),
+            "value_cold_total": a["cold_total"],
+            "queries": {n: q["cold_s"] for n, q in per_query.items()},
+            "queries_warm": {n: q["wall_s"] for n, q in per_query.items()},
+            "ledger": a["ledger"],
+            "ann_recall_at_10": a["recall"],
+            "codec": a["codec"],
+        })
+        emit("phase_a")
+        RESULT["scaling"] = run_scaling(run_dir, len(os.sched_getaffinity(0)))
+        emit("final")
+        write_baseline_md(RESULT)
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def _worker_main() -> None:
     import argparse
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--worker", choices=["er", "kernel"])
-    ap.add_argument("--cores", type=int)
-    ap.add_argument("--path")
+    ap.add_argument("--worker", choices=["pairs", "kernel"], required=True)
+    ap.add_argument("--cores", type=int, required=True)
+    ap.add_argument("--path", required=True)
     args = ap.parse_args()
-    if args.worker == "er":
-        print(json.dumps(run_er_job(args.cores, args.path)))
-    else:
-        print(json.dumps(scoring_kernel_run(args.cores, args.path)))
+    run = build_pair_table if args.worker == "pairs" else scoring_kernel_run
+    print(json.dumps(run(args.cores, args.path)))
 
 
 if __name__ == "__main__":

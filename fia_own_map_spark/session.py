@@ -22,7 +22,8 @@ def build_session(
 ) -> SparkSession:
     """Create (or get) a SparkSession with engine defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    master defaults to ``local[<n>]``, ``n`` being the number of CPUs this
+    process may run on (``os.sched_getaffinity``).
     shuffle_partitions defaults to a JOB-level constant (32, env
     ``SPARK_GRAFT_SHUFFLE_PARTITIONS``) that does NOT vary with the session's
     core count: on a real cluster the shuffle width is a property of the
@@ -35,9 +36,8 @@ def build_session(
     200k-page ER bench: constant 32 gives every level its near-best time
     (local[8] 44s, local[32] 39s vs 41/50 with the per-core derivation).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = f"local[{cpus}]"
+        master = f"local[{len(os.sched_getaffinity(0))}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 

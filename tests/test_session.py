@@ -1,4 +1,5 @@
-"""Engine-default widths of cached tables (session.build_session).
+"""Engine defaults of session.build_session: the master's width, and the
+widths of cached tables.
 
 A persisted or localCheckpointed table is coalesced by AQE to the size of
 its data, like any shuffle, and a join against such a table still returns
@@ -6,11 +7,13 @@ the rows of the uncached query.
 """
 
 import contextlib
+import os
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from fia_own_map_spark.session import release_checkpoints
+from fia_own_map_spark.session import build_session, release_checkpoints
 
 
 @contextlib.contextmanager
@@ -95,3 +98,11 @@ def test_coalesced_cache_joins_like_uncached(spark):
         want = query(table())
     assert len(want) == 300
     assert sorted(got) == sorted(want)
+
+
+def test_default_master_follows_cpu_affinity(monkeypatch):
+    """Without a master, the session gets one task slot per CPU the
+    process may run on; no environment variable is read."""
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
+    assert build_session("affinity")._options["spark.master"] == "local[3]"
