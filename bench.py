@@ -368,7 +368,7 @@ def build_pair_table(cores: int, run_dir: str) -> dict:
         blocking_keys(records, id_col="url", class_col="match_bucket"),
         "url", EngineConfig(),
     )
-    pairs = candidate_pairs(keys, "url", EngineConfig())
+    pairs = candidate_pairs(keys, "url")
     names = records.select(F.col("url").alias("_id"), F.col("simple_owners").alias("_n"))
     path = os.path.join(run_dir, "score_pairs")
     (

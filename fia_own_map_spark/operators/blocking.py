@@ -148,11 +148,7 @@ def star_edges(keys: DataFrame, id_col: str = "url") -> DataFrame:
     )
 
 
-def candidate_pairs(
-    keys: DataFrame,
-    id_col: str = "url",
-    cfg: EngineConfig = EngineConfig(),
-) -> DataFrame:
+def candidate_pairs(keys: DataFrame, id_col: str = "url") -> DataFrame:
     """All within-block pairs (id_a < id_b), deduped across keys.
 
     Mega-blocks must be salted first (`salt_mega_blocks`) or this is |B|²;

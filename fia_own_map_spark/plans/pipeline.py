@@ -12,8 +12,12 @@ Run modes (EngineConfig.score_mode):
   * "similarity" — north-star extension: all within-block candidate pairs
                    scored with JW / Levenshtein / Jaccard, thresholded.
 
-Each stage is checkpointed with per-partition lineage metrics and is
-skip-if-committed on rerun (resume semantics, north_rule).
+Each stage is checkpointed with per-partition lineage metrics. A rerun
+reuses a stage's snapshot only while its fingerprint matches: the config
+fields the stage reads plus the snapshot id of the stage it reads (for
+``records``: the input's identity and ``use_html``). Any other change
+recomputes that stage and everything downstream (resume semantics,
+north_rule).
 """
 
 from __future__ import annotations
@@ -61,6 +65,14 @@ def stage0_records(pages: DataFrame, use_html: bool = True) -> DataFrame:
     return prepare_records(df, id_col="url", owner1="owner1", owner2="owner2")
 
 
+def _input_identity(pages: DataFrame):
+    """What a rerun compares to decide the input is unchanged: a file
+    source's sorted file list, else (an in-memory table) the plan's semantic
+    hash, which covers the rows. A file scan's semantic hash differs between
+    processes, so it cannot identify a file source."""
+    return sorted(pages.inputFiles()) or pages.semanticHash()
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -95,24 +107,48 @@ def run_pipeline(
         pinned.append(df.persist())
         return df
 
+    sc = spark.sparkContext
+
+    def stage(name: str, fingerprint: dict, build) -> DataFrame:
+        """Reuse the stage's snapshot while its fingerprint matches, else
+        build and commit it; its Spark jobs carry the stage name as their
+        description."""
+        previous = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(name)
+        n_pinned = len(pinned)
+        try:
+            df, metrics["stages"][name] = store.stage(spark, name, fingerprint, build)
+        finally:
+            sc.setLocalProperty("spark.job.description", previous)
+        # the tables the build cached are spent once its snapshot is committed
+        for cached in pinned[n_pinned:]:
+            cached.unpersist()
+        del pinned[n_pinned:]
+        return df
+
+    def upstream(name: str, *fields: str) -> dict:
+        """A stage's fingerprint: the config fields it reads and the
+        snapshot id of the stage it reads."""
+        return {
+            **{f: getattr(cfg, f) for f in fields},
+            name: metrics["stages"][name]["snapshot_id"],
+        }
+
     try:
         # ---- stage 0: extract + parse + classify -------------------------------
         t0 = time.time()
-        if store.exists("records"):
-            records = store.read(spark, "records")
-            metrics["stages"]["records"] = store.read_metrics("records")
-        else:
-            records = stage0_records(pages, use_html=use_html)
-            m = store.write(
-                "records",
-                records.select(
+        records = stage(
+            "records",
+            {"input": _input_identity(pages), "use_html": use_html},
+            lambda: (
+                stage0_records(pages, use_html=use_html).select(
                     "url", "warc_ts", "lang", "owner1", "owner2", "simple_owners",
                     "tokens", "name_keys", "comb_addr", "initial_class", "own_type",
                     "rule_matched",
                 ),
-            )
-            records = store.read(spark, "records")
-            metrics["stages"]["records"] = m
+                None,
+            ),
+        )
         _section("s0_records")
 
         # matchable = classified rows; unknowns become singletons
@@ -147,10 +183,7 @@ def run_pipeline(
         ).distinct())
 
         # ---- stage 1: blocking keys + explicit skew handling -------------------
-        if store.exists("block_keys"):
-            keys = store.read(spark, "block_keys")
-            metrics["stages"]["block_keys"] = store.read_metrics("block_keys")
-        else:
+        def build_keys():
             # persist: the raw key table is consumed by the mega-block stats
             # collect, the salting join AND the checkpoint write — without the
             # cache the whole metaphone-UDF key derivation runs three times
@@ -159,56 +192,53 @@ def run_pipeline(
                 nodes, id_col="node_id", class_col="match_bucket",
                 include_soundex=cfg.use_soundex_keys,
             ))
-            if cfg.salt_mega_blocks:
-                salted, mega = salt_mega_blocks(raw_keys, "node_id", cfg)
-                mega_rows = mega.collect()
-                extra = {
-                    "mega_blocks": len(mega_rows),
-                    "largest_block": max((r["block_size"] for r in mega_rows), default=0),
-                    # candidate pairs unscored in similarity mode due to salting
-                    # (never silent — SURVEY §7.4.4); zero impact in exact mode
-                    "est_dropped_pairs": int(
-                        sum(max(r["est_dropped_pairs"], 0) for r in mega_rows)
-                    ),
-                }
-            else:
-                salted, extra = raw_keys, {"mega_blocks": 0}
-            m = store.write("block_keys", salted, extra_metrics=extra)
-            raw_keys.unpersist()
-            keys = store.read(spark, "block_keys")
-            metrics["stages"]["block_keys"] = m
+            if not cfg.salt_mega_blocks:
+                return raw_keys, {"mega_blocks": 0}
+            salted, mega = salt_mega_blocks(raw_keys, "node_id", cfg)
+            mega_rows = mega.collect()
+            return salted, {
+                "mega_blocks": len(mega_rows),
+                "largest_block": max((r["block_size"] for r in mega_rows), default=0),
+                # candidate pairs unscored in similarity mode due to salting
+                # (never silent — SURVEY §7.4.4); zero impact in exact mode
+                "est_dropped_pairs": int(
+                    sum(max(r["est_dropped_pairs"], 0) for r in mega_rows)
+                ),
+            }
+
+        keys = stage(
+            "block_keys",
+            upstream("records", "use_soundex_keys", "salt_mega_blocks", "max_block_size"),
+            build_keys,
+        )
         _section("s1_block")
 
         # ---- stage 2: candidate pairs + scoring -> match edges (node-level) ----
-        if store.exists("edges"):
-            edges = store.read(spark, "edges")
-            metrics["stages"]["edges"] = store.read_metrics("edges")
-        else:
+        def build_edges():
             if cfg.score_mode == "exact":
-                edges_df = star_edges(keys, "node_id")
-                extra = {"pairs_scored": None, "note": "exact-key parity mode: star edges"}
-            else:
-                pairs = pin(candidate_pairs(keys, "node_id", cfg))
-                n_pairs = pairs.count()  # pre-UDF: metric without re-running scoring
-                scored = score_pairs(
-                    pairs, nodes, id_col="node_id", name_col="simple_owners"
-                )
-                edges_df = match_edges(scored, cfg)
-                # implied record-level pair volume (diagnostic: the node graph
-                # stands in for this many record pairs)
-                extra = {"pairs_scored": n_pairs}
-            m = store.write("edges", edges_df, extra_metrics=extra)
-            if cfg.score_mode != "exact":
-                pairs.unpersist()
-            edges = store.read(spark, "edges")
-            metrics["stages"]["edges"] = m
+                return star_edges(keys, "node_id"), {
+                    "pairs_scored": None, "note": "exact-key parity mode: star edges"
+                }
+            pairs = pin(candidate_pairs(keys, "node_id"))
+            n_pairs = pairs.count()  # pre-UDF: metric without re-running scoring
+            scored = score_pairs(pairs, nodes, id_col="node_id", name_col="simple_owners")
+            # implied record-level pair volume (diagnostic: the node graph
+            # stands in for this many record pairs)
+            return match_edges(scored, cfg), {"pairs_scored": n_pairs}
+
+        edges = stage(
+            "edges",
+            upstream(
+                "block_keys", "score_mode", "jw_threshold", "jaccard_threshold",
+                "lev_ratio_threshold",
+            ),
+            build_edges,
+        )
         _section("s2_score")
 
         # ---- stage 3: connected components + refinement ------------------------
-        if store.exists("clusters"):
-            clusters = store.read(spark, "clusters")
-            metrics["stages"]["clusters"] = store.read_metrics("clusters")
-        else:
+        def build_clusters():
+            nonlocal labels
             labels = connected_components(
                 edges, vertices=nodes.select(F.col("node_id").alias("id")),
                 id_col="id", component_col="node_cluster",
@@ -249,10 +279,9 @@ def run_pipeline(
             ).unionByName(
                 unknowns.select("url", "cluster_id", "own_type", "simple_owners", "comb_addr")
             )
-            final = cluster_size(final)
-            m = store.write("clusters", final)
-            clusters = store.read(spark, "clusters")
-            metrics["stages"]["clusters"] = m
+            return cluster_size(final), None
+
+        clusters = stage("clusters", upstream("edges", "cc_max_iterations"), build_clusters)
         _section("s3_cluster")
 
         metrics["wall_s"] = round(time.time() - t0, 3)

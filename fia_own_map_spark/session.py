@@ -17,18 +17,18 @@ from pyspark.sql import DataFrame, SparkSession
 def build_session(
     app_name: str = "fia_own_map_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or get) a SparkSession with engine defaults.
 
     master defaults to ``local[<n>]``, ``n`` being the number of CPUs this
     process may run on (``os.sched_getaffinity``).
-    shuffle_partitions defaults to a JOB-level constant (32, env
-    ``SPARK_GRAFT_SHUFFLE_PARTITIONS``) that does NOT vary with the session's
-    core count: on a real cluster the shuffle width is a property of the
-    data/job, not of how many executors happen to be attached, and AQE
-    (parallelismFirst=false below) coalesces down to data size from there.
+    shuffle_partitions defaults to a JOB-level constant, 32, that does NOT
+    vary with the session's core count: on a real cluster the shuffle width
+    is a property of the data/job, not of how many executors happen to be
+    attached, and AQE (parallelismFirst=false below) coalesces down to data
+    size from there.
     Deriving it from cores — the previous behavior — gave different task
     counts (and checkpoint file counts) at every parallelism level, which
     both skewed the N vs 4N scaling comparison and made small cached tables
@@ -38,8 +38,6 @@ def build_session(
     """
     if master is None:
         master = f"local[{len(os.sched_getaffinity(0))}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -79,10 +77,7 @@ def build_session(
         # concurrent task — at production html sizes (~100 KB) that is ~1 GiB
         # per task in flight. 64 MiB bounds the per-task working set of every
         # pandas-UDF stage independently of blob size (r4 verdict item #1).
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAX_BYTES", str(64 * 1024 * 1024)),
-        )
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Broadcast threshold: dimension tables (keyword maps, block stats)
         # should broadcast; 64MB is a deliberate bump from the 10MB default.

@@ -13,151 +13,66 @@ Re-clustering only the affected subgraph keeps each micro-batch O(batch +
 touched blocks), not O(corpus): union the new (id, key) rows with existing
 rows *sharing those keys*, run CC on that slice, and merge labels back
 (min-id labels are stable under this merge because components only grow).
+
+The state lives in the same `CheckpointStore` as the batch pipeline's
+stage checkpoints, as append commits to keyed (latest-wins) tables: each
+batch writes only its delta, and the store compacts and expires old dirs.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fia_own_map_spark.config import EngineConfig
 from fia_own_map_spark.operators import sketch
 from fia_own_map_spark.operators.blocking import blocking_keys, star_edges
 from fia_own_map_spark.operators.cc import connected_components
 from fia_own_map_spark.operators.refine import refine_clusters_by_address
 from fia_own_map_spark.plans.pipeline import stage0_records
+from fia_own_map_spark.sources.checkpoint import CheckpointStore
 
-_LABEL_SCHEMA = (
-    "url string, cluster_id string, own_type int, comb_addr string"
-)
-
-
-class DeltaStateStore:
-    """Append-plus-compact versioned parquet state (Iceberg-snapshot
-    stand-in for the local/test environment).
-
-    Each micro-batch appends ONLY its delta to a fixed-depth path
-    ``root/name/d{version}`` — per-batch write volume is proportional to the
-    batch, not the corpus. A manifest file (``_MANIFEST.json``, rewritten
-    atomically via rename) is the commit pointer listing live version dirs.
-    Reads merge the live dirs; for keyed state the newest version wins per
-    key. Every ``compact_every`` appends the merged state is rewritten as a
-    single ``c{version}`` dir and superseded dirs are garbage-collected, so
-    neither the directory count, the path depth, nor disk usage grows
-    unboundedly. On a production cluster this object is replaced by an
-    Iceberg table (MERGE INTO + snapshot expiry) with identical semantics.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        name: str,
-        schema: str,
-        key_cols: list[str] | None = None,
-        compact_every: int = 8,
-    ):
-        self.spark = spark
-        self.dir = os.path.join(root, name)
-        self.schema = schema
-        self.key_cols = key_cols  # None -> append-only set semantics (distinct)
-        self.compact_every = compact_every
-        os.makedirs(self.dir, exist_ok=True)
-
-    # -- manifest -----------------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.dir, "_MANIFEST.json")
-
-    def _live(self) -> list[str]:
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)["live"]
-        except FileNotFoundError:
-            return []
-
-    def _commit(self, live: list[str]) -> None:
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"live": live}, f)
-        os.replace(tmp, self._manifest_path)  # atomic pointer flip
-
-    # -- read / append ------------------------------------------------------
-    def read(self) -> DataFrame:
-        live = self._live()
-        if not live:
-            return self.spark.createDataFrame([], self.schema)
-        df = self.spark.read.parquet(*[os.path.join(self.dir, d) for d in live])
-        if self.key_cols is None:
-            return df.drop("_v").distinct()
-        w = Window.partitionBy(*self.key_cols).orderBy(F.desc("_v"))
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_v")
-        )
-
-    def append(self, delta: DataFrame, version: int) -> None:
-        d = f"d{version}"
-        delta.withColumn("_v", F.lit(version)).write.mode("overwrite").parquet(
-            os.path.join(self.dir, d)
-        )
-        live = self._live()
-        if d not in live:  # foreachBatch replay after restart overwrites in place
-            live = live + [d]
-        if len(live) >= self.compact_every:
-            self._commit(live)  # make the delta visible to read()
-            merged = self.read().withColumn("_v", F.lit(version))
-            c = f"c{version}"
-            merged.write.mode("overwrite").parquet(os.path.join(self.dir, c))
-            superseded, live = live, [c]
-            self._commit(live)
-            for old in superseded:  # GC after the pointer flip
-                shutil.rmtree(os.path.join(self.dir, old), ignore_errors=True)
-        else:
-            self._commit(live)
+# state table -> (schema of its read before the first batch, latest-wins key)
+_TABLES = {
+    "keys": ("url string, block_key string", ["url", "block_key"]),
+    "labels": ("url string, cluster_id string, own_type int, comb_addr string", ["url"]),
+    # Merged HLL register state: distinct owner names per own_type,
+    # maintained by bucket-wise max across batches (sketch.hll_merge is
+    # idempotent/commutative/associative, so the merged state equals the
+    # whole-corpus sketch exactly — test_streaming.py asserts register
+    # bit-equality). The state is bounded at groups x 2**p rows BY
+    # CONSTRUCTION, so corpus-level distinct stats never re-read raw pages —
+    # the sketch answer to "COUNT(DISTINCT name) over 100 TB of history" in
+    # an O(batch)-per-batch pipeline.
+    "hll_names": ("own_type int, bucket bigint, maxrank int", ["own_type", "bucket"]),
+}
 
 
 class IncrementalER:
-    """Maintains (keys, labels) state across micro-batches.
+    """Maintains (keys, labels, name-sketch) state across micro-batches.
 
-    State lives in two versioned parquet stores (append + compaction; see
-    DeltaStateStore). Used from `foreachBatch` or called directly for tests.
+    The state is three keyed tables of one CheckpointStore under
+    ``state_dir``: each batch appends only its delta, reads keep the newest
+    row per key, and the store compacts every few appends. An append's
+    fingerprint is its batch id, so a `foreachBatch` replay after a restart
+    skips the appends that already committed. Used from `foreachBatch` or
+    called directly for tests.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        cfg: EngineConfig | None = None,
-        hll_p: int = 10,
-    ):
+    def __init__(self, spark: SparkSession, state_dir: str, hll_p: int = 10):
         self.spark = spark
-        self.state_dir = state_dir
-        self.cfg = cfg or EngineConfig()
         self.hll_p = hll_p
-        self._keys = DeltaStateStore(
-            spark, state_dir, "keys", "url string, block_key string", key_cols=None
-        )
-        self._labels = DeltaStateStore(
-            spark, state_dir, "labels", _LABEL_SCHEMA, key_cols=["url"]
-        )
-        # Merged HLL register state: distinct owner names per own_type,
-        # maintained by bucket-wise max across batches (sketch.hll_merge is
-        # idempotent/commutative/associative, so the merged state equals the
-        # whole-corpus sketch exactly — test_streaming.py asserts register
-        # bit-equality). The state is bounded at groups x 2**p rows BY
-        # CONSTRUCTION, so corpus-level distinct stats never re-read raw
-        # pages — the sketch answer to "COUNT(DISTINCT name) over 100 TB of
-        # history" in an O(batch)-per-batch pipeline.
-        self._name_hll = DeltaStateStore(
-            spark, state_dir, "hll_names",
-            "own_type int, bucket bigint, maxrank int",
-            key_cols=["own_type", "bucket"],
+        self.store = CheckpointStore(state_dir, "ingest")
+
+    def state(self, table: str) -> DataFrame:
+        """The latest-wins rows of a state table."""
+        if not self.store.exists(table):
+            return self.spark.createDataFrame([], _TABLES[table][0])
+        return self.store.read(self.spark, table)
+
+    def _append(self, table: str, delta: DataFrame, batch_id: int) -> None:
+        self.store.write(
+            table, delta, fingerprint={"batch": batch_id}, append=True,
+            key=_TABLES[table][1],
         )
 
     def process_batch(self, pages: DataFrame, batch_id: int = 0) -> DataFrame:
@@ -173,8 +88,8 @@ class IncrementalER:
             records.filter(F.col("own_type") != -99), id_col="url",
             class_col="match_bucket",
         )
-        old_keys = self._keys.read()
-        old_labels = self._labels.read()
+        old_keys = self.state("keys")
+        old_labels = self.state("labels")
 
         # Affected slice must be closed under the OLD partition: a batch key
         # can merge two old clusters, and every member of a merged cluster
@@ -228,12 +143,14 @@ class IncrementalER:
         )
         # state deltas only — per-batch write volume is O(batch + affected
         # slice), never O(corpus); untouched labels persist in older
-        # versions (latest-wins read) until compaction folds them forward
+        # versions (latest-wins read) until compaction folds them forward.
+        # Labels first: their delta reads the old keys, whose dirs a keys
+        # compaction would delete.
         label_delta = relabeled.select(*old_labels.columns).unionByName(
             singletons.select(*old_labels.columns)
         )
-        self._keys.append(new_keys.distinct(), batch_id)
-        self._labels.append(label_delta, batch_id)
+        self._append("labels", label_delta, batch_id)
+        self._append("keys", new_keys.distinct(), batch_id)
         # sketch rollup: merge this batch's registers into the state and
         # append ONLY the registers the batch actually changed (anti-join
         # merged vs previous on the full row) — latest-wins read per
@@ -244,24 +161,23 @@ class IncrementalER:
             records.filter(F.col("own_type") != -99),
             ["own_type"], "simple_owners", p=self.hll_p,
         )
-        old_regs = self._name_hll.read()
+        old_regs = self.state("hll_names")
         merged_regs = sketch.hll_merge(old_regs, batch_regs)
-        self._name_hll.append(
-            merged_regs.join(
-                old_regs, ["own_type", "bucket", "maxrank"], "left_anti"
-            ),
+        self._append(
+            "hll_names",
+            merged_regs.join(old_regs, ["own_type", "bucket", "maxrank"], "left_anti"),
             batch_id,
         )
         # output view: family/juniors clusters split by address (the batch
         # pipeline applies the same refinement after CC)
-        return refine_clusters_by_address(self._labels.read())
+        return refine_clusters_by_address(self.state("labels"))
 
     def distinct_names_estimate(self) -> DataFrame:
         """Approximate COUNT(DISTINCT simple_owners) per own_type from the
         merged register state — answered from the sketch alone (bounded
         rows), never by re-scanning ingested pages."""
         return sketch.hll_estimate(
-            self._name_hll.read(), ["own_type"], self.hll_p, "est_distinct_names"
+            self.state("hll_names"), ["own_type"], self.hll_p, "est_distinct_names"
         )
 
     def attach_stream(self, pages_stream: DataFrame, checkpoint: str):

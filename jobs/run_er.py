@@ -9,8 +9,10 @@
 Runs against whatever master spark-submit provides (YARN/K8s/standalone);
 --local N is a convenience for smoke runs without a cluster. Per-stage
 lineage + match-count metrics are printed as one JSON line and also live in
-each stage's snapshot manifest under --checkpoints (resume = rerun the same
-command; committed stages are skipped)."""
+each stage's snapshot manifest under --checkpoints. Resume = rerun the same
+command: a committed stage is reused while its fingerprint (input files,
+the config fields it reads, its upstream snapshot) matches, so a rerun with
+another --mode recomputes edges and clusters."""
 
 from __future__ import annotations
 

@@ -1,5 +1,7 @@
 """CheckpointStore resume semantics + summary-stage operators."""
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -9,7 +11,7 @@ from fia_own_map_spark.plans.summary import (
     summarize_clusters,
     to_final_schema,
 )
-from fia_own_map_spark.sources.checkpoint import CheckpointStore
+from fia_own_map_spark.sources.checkpoint import COMPACT_EVERY, CheckpointStore
 
 
 def test_checkpoint_skip_if_committed(spark, tmp_path):
@@ -96,3 +98,63 @@ def test_snapshot_history_timetravel_rollback(spark, tmp_path):
     assert [s["snapshot_id"] for s in store.history("s")] == [
         store.read_metrics("s")["snapshot_id"]
     ]
+
+
+def test_fingerprint_decides_reuse(spark, tmp_path):
+    """A write is skipped only while the current snapshot's fingerprint
+    matches; another fingerprint commits the next snapshot id and keeps
+    the old one in history."""
+    store = CheckpointStore(str(tmp_path), "job")
+    df1 = spark.createDataFrame([(1,)], "id long")
+    df2 = spark.createDataFrame([(2,), (3,)], "id long")
+    assert store.write("s", df1, fingerprint={"mode": "a"})["snapshot_id"] == 0
+    assert store.write("s", df2, fingerprint={"mode": "a"})["rows_out"] == 1
+    m = store.write("s", df2, fingerprint={"mode": "b"})
+    assert m["snapshot_id"] == 1 and m["rows_out"] == 2
+    assert [s["fingerprint"] for s in store.history("s")] == [{"mode": "a"}, {"mode": "b"}]
+    assert store.read(spark, "s", snapshot_id=0).count() == 1
+
+
+def test_append_snapshots_share_dirs_through_expiry(spark, tmp_path):
+    """An append snapshot lists its parent's dirs plus its own, so expiring
+    the older snapshots must keep every dir the current one reads."""
+    store = CheckpointStore(str(tmp_path), "job")
+    for i in range(3):
+        store.write(
+            "t", spark.createDataFrame([(i,)], "id long"), fingerprint=i, append=True
+        )
+    assert store.read_metrics("t")["dirs"] == ["snap-0", "snap-1", "snap-2"]
+    assert store.expire_snapshots("t", keep=1) == [0, 1]
+    assert sorted(r["id"] for r in store.read(spark, "t").collect()) == [0, 1, 2]
+
+
+def test_keyed_append_compaction(spark, tmp_path):
+    """Keyed appends: latest-wins read; the COMPACT_EVERY-th append folds
+    the table into one dir and GCs the rest; a replayed batch is skipped;
+    appends continue after compaction."""
+    store = CheckpointStore(str(tmp_path), "job")
+
+    def append(rows, batch):
+        df = spark.createDataFrame(rows, "url string, cluster_id string")
+        store.write("labels", df, fingerprint={"batch": batch}, append=True, key=["url"])
+
+    def labels():
+        return {r["url"]: r["cluster_id"] for r in store.read(spark, "labels").collect()}
+
+    append([("a", "c1"), ("b", "c1")], 0)
+    append([("b", "c2"), ("c", "c2")], 1)
+    assert labels() == {"a": "c1", "b": "c2", "c": "c2"}  # latest wins for b
+    for batch in range(2, COMPACT_EVERY):
+        append([("a", f"c{batch}")], batch)
+    # the COMPACT_EVERY-th append triggered compaction: one live dir, old
+    # dirs GC'd
+    live = store.read_metrics("labels")["dirs"]
+    assert len(live) == 1
+    assert os.listdir(os.path.join(store.root, "labels")) == live
+    assert labels() == {"a": f"c{COMPACT_EVERY - 1}", "b": "c2", "c": "c2"}
+    # a replay of the last batch appends nothing
+    append([("e", "c9")], COMPACT_EVERY - 1)
+    assert "e" not in labels()
+    # appends continue after compaction
+    append([("d", "c4")], COMPACT_EVERY)
+    assert labels() == {"a": f"c{COMPACT_EVERY - 1}", "b": "c2", "c": "c2", "d": "c4"}

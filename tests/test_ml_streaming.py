@@ -98,33 +98,6 @@ def test_cascade_classify(spark):
     assert out[4]["tier"] == "medium" and not out[4]["verified"] and out[4]["pred"] == "es"
 
 
-def test_delta_state_store_compaction(spark, tmp_path):
-    """Append-only deltas + latest-wins read + compaction GC (fixed-depth
-    paths; superseded versions deleted)."""
-    import os
-
-    from fia_own_map_spark.streaming.ingest import DeltaStateStore
-
-    store = DeltaStateStore(
-        spark, str(tmp_path), "labels", "url string, cluster_id string",
-        key_cols=["url"], compact_every=3,
-    )
-    store.append(spark.createDataFrame([("a", "c1"), ("b", "c1")], store.schema), 0)
-    store.append(spark.createDataFrame([("b", "c2"), ("c", "c2")], store.schema), 1)
-    got = {r["url"]: r["cluster_id"] for r in store.read().collect()}
-    assert got == {"a": "c1", "b": "c2", "c": "c2"}  # latest wins for b
-    # third append triggers compaction: one live dir, old dirs GC'd
-    store.append(spark.createDataFrame([("a", "c3")], store.schema), 2)
-    assert store._live() == ["c2"]
-    dirs = {d for d in os.listdir(store.dir) if not d.startswith("_")}
-    assert dirs == {"c2"}
-    got = {r["url"]: r["cluster_id"] for r in store.read().collect()}
-    assert got == {"a": "c3", "b": "c2", "c": "c2"}
-    # appends continue after compaction
-    store.append(spark.createDataFrame([("d", "c4")], store.schema), 3)
-    assert {r["url"] for r in store.read().collect()} == {"a", "b", "c", "d"}
-
-
 def test_numpy_lang_classifier_real_trained_tier():
     """The r6 medium tier is a REAL learned model (hashed char-n-gram
     softmax regression, pure numpy): training is deterministic (zero-init,

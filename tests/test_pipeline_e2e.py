@@ -5,12 +5,16 @@
   * permutation invariance (the reference is order-dependent at
     `Name_Matching_opt.py:194`; the rebuild must NOT be)
   * salt invariance (mega-block salting must not change the partition)
-  * resume idempotence from checkpoints
+  * resume idempotence from checkpoints, and no stale reuse: a config or
+    process change and a crash at any stage boundary all resume correctly
   * stage 3's job count, and release of its caches when a stage raises
+  * every stage's jobs carry the stage name as their description
 """
 
 import os
 import shutil
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -166,3 +170,142 @@ def test_failed_stage_releases_cached_tables(spark, e2e, tmp_path):
         run_pipeline(spark, sdf, EngineConfig(), checkpoints=rerun)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
     assert not rerun.exists("clusters")
+
+
+STAGES = ["records", "block_keys", "edges", "clusters"]
+
+
+def _snapshot_ids(store):
+    return {s: store.read_metrics(s)["snapshot_id"] for s in STAGES}
+
+
+def test_config_change_recomputes_downstream_stages(spark, e2e, tmp_path):
+    """An exact run, then a similarity run on the same store: the second
+    returns a fresh similarity run's clusters, reusing only the stages the
+    score mode does not reach, and keeping both generations in history."""
+    _, sdf, store, *_ = e2e
+    shutil.copytree(store.root, os.path.join(str(tmp_path), "e2e"))
+    rerun = CheckpointStore(str(tmp_path), "e2e")
+    before = _snapshot_ids(rerun)
+    cfg = EngineConfig(score_mode="similarity")
+    clusters, metrics = run_pipeline(spark, sdf, cfg, checkpoints=rerun)
+    fresh, _ = run_pipeline(
+        spark, sdf, cfg, checkpoints=CheckpointStore(str(tmp_path), "fresh")
+    )
+    got = clusters.select("url", "cluster_id").toPandas()
+    want = fresh.select("url", "cluster_id").toPandas()
+    assert _partition_signature(got) == _partition_signature(want)
+    assert metrics["stages"]["edges"]["pairs_scored"] > 0
+    after = _snapshot_ids(rerun)
+    assert {s: after[s] == before[s] for s in STAGES} == {
+        "records": True, "block_keys": True, "edges": False, "clusters": False,
+    }
+    for s in ("edges", "clusters"):
+        assert [h["snapshot_id"] for h in rerun.history(s)] == [before[s], after[s]]
+
+
+def test_crash_at_each_stage_boundary_resumes_identically(spark, e2e, tmp_path):
+    """Kill the run after each stage's parquet write, before its manifest
+    flip, in turn: every resume ignores the orphan dir, and the final
+    clusters equal an uninterrupted run's. A crashed recompute of a
+    committed stage leaves an orphan next to it, which expiry collects."""
+    _, sdf, _, *_, pred = e2e
+    store = CheckpointStore(str(tmp_path), "crash")
+    commit = store._commit
+
+    def run(cfg, crash_at=None):
+        def crashing_commit(stage, manifest):
+            if stage == crash_at:
+                raise RuntimeError(f"injected crash after the {stage} write")
+            commit(stage, manifest)
+
+        store._commit = crashing_commit
+        if crash_at is None:
+            return run_pipeline(spark, sdf, cfg, checkpoints=store)[0]
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(spark, sdf, cfg, checkpoints=store)
+
+    def assert_pred(clusters):
+        got = clusters.select("url", "cluster_id").toPandas()
+        assert got.sort_values("url").reset_index(drop=True).equals(
+            pred.sort_values("url").reset_index(drop=True)
+        )
+
+    for stage in STAGES:
+        run(EngineConfig(), crash_at=stage)
+        assert os.listdir(os.path.join(store.root, stage)) == ["snap-0"]
+        assert not store.exists(stage)
+    assert_pred(run(EngineConfig()))
+    assert _snapshot_ids(store) == dict.fromkeys(STAGES, 0)
+
+    run(EngineConfig(score_mode="similarity"), crash_at="edges")
+    assert sorted(os.listdir(os.path.join(store.root, "edges"))) == ["snap-0", "snap-1"]
+    assert_pred(run(EngineConfig()))
+    assert _snapshot_ids(store) == dict.fromkeys(STAGES, 0)
+    assert store.expire_snapshots("edges", keep=1) == []
+    assert os.listdir(os.path.join(store.root, "edges")) == ["snap-0"]
+
+
+def test_stage_jobs_carry_stage_description(spark, e2e, tmp_path):
+    """run_pipeline labels each stage's jobs with the stage name and puts
+    the caller's description back afterwards."""
+    _, sdf, store, *_ = e2e
+    shutil.copytree(store.root, os.path.join(str(tmp_path), "e2e"))
+    rerun = CheckpointStore(str(tmp_path), "e2e")
+    sc = spark.sparkContext
+    seen = []
+    write = rerun.write
+
+    def recording_write(stage, df, **kwargs):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return write(stage, df, **kwargs)
+
+    rerun.write = recording_write
+    sc.setJobDescription("caller")
+    try:
+        run_pipeline(spark, sdf, EngineConfig(), checkpoints=rerun)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == STAGES
+
+
+def test_cross_process_resume_follows_the_config(tmp_path):
+    """jobs/run_er.py in fresh processes on one parquet input and one
+    checkpoint root: exact, then similarity, then similarity again. The
+    similarity run must not return the exact run's stages, and the repeat
+    reuses all four snapshots (the input is identified by its files, which
+    a new process sees the same way)."""
+    from fia_own_map_spark.sources.webpages import generate_web_pages
+
+    pages, _ = generate_web_pages(n_pages=400, seed=5)
+    pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
+    src = tmp_path / "pages.parquet"
+    pages.to_parquet(src, index=False)
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(mode, out):
+        r = subprocess.run(
+            [
+                sys.executable, os.path.join(repo, "jobs", "run_er.py"),
+                "--input", str(src), "--output", str(tmp_path / out),
+                "--checkpoints", ckpt, "--mode", mode, "--local", "2",
+            ],
+            capture_output=True, text=True, cwd=str(tmp_path),
+            env=dict(os.environ, PYTHONPATH=os.path.abspath(repo)),
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        return _partition_signature(pd.read_parquet(tmp_path / out))
+
+    store = CheckpointStore(ckpt, "er_job")
+    exact = run("exact", "out_exact")
+    exact_ids = _snapshot_ids(store)
+    similarity = run("similarity", "out_sim")
+    sim_ids = _snapshot_ids(store)
+    assert similarity != exact
+    assert sim_ids["records"] == exact_ids["records"]
+    assert sim_ids["clusters"] != exact_ids["clusters"]
+    assert run("similarity", "out_sim2") == similarity
+    assert _snapshot_ids(store) == sim_ids
+    assert len(store.history("clusters")) == 2

@@ -40,10 +40,9 @@ def test_file_stream_ingest_matches_batch(spark, tmp_path):
     q.awaitTermination(300)
     assert not q.isActive or time.sleep(1) is None
 
-    labels_inc = inc._labels.read()
     from fia_own_map_spark.operators.refine import refine_clusters_by_address
 
-    labels_inc = refine_clusters_by_address(labels_inc).toPandas()
+    labels_inc = refine_clusters_by_address(inc.state("labels")).toPandas()
 
     store = CheckpointStore(str(tmp_path / "batch"), "full")
     clusters, _ = run_pipeline(
@@ -72,7 +71,7 @@ def test_ingest_merged_hll_equals_whole_corpus(spark, tmp_path):
 
     merged = {
         (r["own_type"], r["bucket"]): r["maxrank"]
-        for r in inc._name_hll.read().collect()
+        for r in inc.state("hll_names").collect()
     }
     records = stage0_records(spark.createDataFrame(pages), use_html=True)
     whole_regs = sketch.hll_registers(
@@ -107,18 +106,16 @@ def test_ingest_hll_delta_append_is_batch_proportional(spark, tmp_path):
     inc.process_batch(spark.createDataFrame(pages), 0)
     regs_after_0 = {
         (r["own_type"], r["bucket"]): r["maxrank"]
-        for r in inc._name_hll.read().collect()
+        for r in inc.state("hll_names").collect()
     }
     assert len(regs_after_0) > 0
     # same pages again: every register already at its max -> empty delta
     inc.process_batch(spark.createDataFrame(pages), 1)
-    import os
-
-    d1 = os.path.join(str(tmp_path / "state"), "hll_names", "d1")
-    d1_rows = spark.read.parquet(d1).count()
-    assert d1_rows == 0
+    append_1 = inc.store.read_metrics("hll_names")
+    assert append_1["fingerprint"] == {"batch": 1}
+    assert append_1["rows_out"] == 0
     regs_after_1 = {
         (r["own_type"], r["bucket"]): r["maxrank"]
-        for r in inc._name_hll.read().collect()
+        for r in inc.state("hll_names").collect()
     }
     assert regs_after_1 == regs_after_0
