@@ -136,8 +136,7 @@ def q_er_cluster_documents(spark, sf):
     edges = star_edges(keys, "url")
     labels = connected_components(
         edges, vertices=docs.select(F.col("url").alias("id")), id_col="id",
-        component_col="cluster_id",
-        assume_unique_vertices=True,  # docs has one row per url
+        component_col="cluster_id",  # docs has one row per url
     )
     out = labels.withColumnRenamed("id", "url")
     return cluster_size(out, "cluster_id").orderBy("url")
@@ -171,8 +170,7 @@ def q_er_cluster_fingerprint(spark, sf):
     edges = star_edges(keys, "url")
     labels = connected_components(
         edges, vertices=docs.select(F.col("url").alias("id")), id_col="id",
-        component_col="cluster_id",
-        assume_unique_vertices=True,  # docs has one row per url
+        component_col="cluster_id",  # docs has one row per url
     )
     out = labels.withColumnRenamed("id", "url")
     return cluster_size(out, "cluster_id").orderBy("url")

@@ -149,7 +149,6 @@ class EngineConfig:
     jw_threshold: float = 0.94
     jaccard_threshold: float = 0.80
     lev_ratio_threshold: float = 0.85
-    cc_max_iterations: int = 50
     score_mode: str = "exact"  # "exact" (reference parity) | "similarity"
     # second blocking-key family (north_rule: metaphone + soundex). Soundex
     # keys are per-token and deliberately generous; they only make sense with
@@ -157,7 +156,6 @@ class EngineConfig:
     # keeps them off — the F1 criterion is "under the same blocking keys" as
     # the reference, which uses metaphone only (Name_Matching_opt.py:67-69).
     use_soundex_keys: bool = False
-    salt_mega_blocks: bool = True
     checkpoint_root: str = ".checkpoints"
 
 

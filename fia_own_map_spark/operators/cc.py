@@ -101,16 +101,13 @@ def connected_components(
     id_col: str = "id",
     component_col: str = "component",
     max_iterations: int = 50,
-    assume_unique_vertices: bool = False,
 ) -> DataFrame:
     """Return (id, component) with component = min(id) of the component.
 
-    edges: (src, dst). vertices (optional): one column `id_col`; vertices
-    with no edges come back as singletons (component = own id).
-
-    assume_unique_vertices: the caller guarantees the vertex table has one
-    row per id (a primary-key projection) — skips the defensive distinct,
-    one exchange of the full vertex set.
+    edges: (src, dst). vertices (optional): one column `id_col` holding ONE
+    row per id (a key projection); vertices with no edges come back as
+    singletons (component = own id). The vertex table is not deduplicated
+    here: a duplicated id comes back as duplicated label rows.
     """
     # Round 0 IS a small-star pass, replacing the old _canonical step:
     # _small_star's own orient + self-loop filter + distinct subsume
@@ -163,11 +160,8 @@ def connected_components(
         F.min(component_col).alias(component_col)
     )
     if vertices is not None:
-        vsel = vertices.select(F.col(id_col))
-        if not assume_unique_vertices:
-            vsel = vsel.distinct()
         labels = (
-            vsel.join(labels, id_col, "left")
+            vertices.select(F.col(id_col)).join(labels, id_col, "left")
             .withColumn(component_col, F.coalesce(F.col(component_col), F.col(id_col)))
         )
     return labels

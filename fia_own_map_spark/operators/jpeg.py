@@ -44,11 +44,6 @@ _IDCT_B = np.array([
 ])
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    """8x8 frequency block -> spatial (float)."""
-    return _IDCT_B.T @ block @ _IDCT_B
-
-
 class _HuffTable:
     """Canonical JPEG Huffman table with a flat (code-length, code) lookup."""
 

@@ -155,13 +155,6 @@ def lm_doc_scores(
     )
 
 
-def lm_perplexity(col: Column | str = "logprob_per_token") -> Column:
-    """Perplexity view of a per-token log-prob column (float — for human
-    thresholds/reporting; the exact integers are the engine currency)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.exp(-c)
-
-
 def lm_filter(
     df: DataFrame,
     lm: TrigramLM,

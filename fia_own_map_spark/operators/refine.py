@@ -1,20 +1,21 @@
-"""Cluster refinement + window-function operators (SURVEY.md §2.5).
+"""Cluster refinement operators (SURVEY.md §2.5).
 
   * address refinement (W4, `Name_Matching_opt.py:115-129,225-227`): within a
     family/juniors cluster, if more than one distinct mailing address exists,
     split the cluster by address. The reference assigns fresh uuid4s per
     address; here the split id is the deterministic min(id) within
-    (cluster, address) — pure window expressions, no UDF.
-  * priority dedupe (W2, `Preprocessing_opt.py:231-237`) and first-wins
-    dedupe with an explicit deterministic order (W3, `Classify_Unknowns_opt.py:669`
-    — pandas keep='first' is arrival-order, which is undefined in a
-    distributed engine, so the order column is mandatory here).
-  * stratified sample per group (W5, `Full_State_Sample_Generation.py:91-96`).
+    (cluster, address) — groupBy aggregations joined back, no UDF.
+  * cluster size (W1/A5): per-cluster row count.
+
+The other window idioms of SURVEY.md §2.5 — priority dedupe (W2), first-wins
+dedupe under an explicit order (W3) and the stratified sample (W5) — are
+written inline as the windows of the contract queries that use them
+(`__spark_entry__.q_priority_dedupe_orders`, `q_stratified_sample_orders`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fia_own_map_spark.config import CLASS_FAMILY
@@ -55,42 +56,6 @@ def refine_clusters_by_address(
     return out.withColumn(
         cluster_col, F.when(needs_split, F.col("_split_id")).otherwise(F.col(cluster_col))
     ).select(*cols)
-
-
-def dedupe_first(df: DataFrame, key_cols: list[str], order_cols: list[Column | str]) -> DataFrame:
-    """W3: keep exactly one row per key under an explicit deterministic order."""
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
-def dedupe_priority(
-    df: DataFrame, key_cols: list[str], rank_col: Column, tiebreak: list[Column | str]
-) -> DataFrame:
-    """W2: best row per key by an explicit priority rank (lower wins)."""
-    w = Window.partitionBy(*key_cols).orderBy(rank_col, *tiebreak)
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
-def stratified_sample(
-    df: DataFrame, group_col: str, n_per_group: int, order_col: Column | str | None = None
-) -> DataFrame:
-    """W5: top-n per group under a deterministic pseudo-random order.
-
-    The reference samples with a fixed seed (`Full_State_Sample_Generation.py:94`);
-    the distributed equivalent orders by a hash of the row key so the sample
-    is stable across partitionings and reruns.
-    """
-    order = order_col if order_col is not None else F.xxhash64(*df.columns)
-    w = Window.partitionBy(group_col).orderBy(order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_per_group)
-        .drop("_rn")
-    )
 
 
 def cluster_size(df: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:

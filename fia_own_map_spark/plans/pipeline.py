@@ -18,16 +18,21 @@ fields the stage reads plus the snapshot id of the stage it reads (for
 ``records``: the input's identity and ``use_html``). Any other change
 recomputes that stage and everything downstream (resume semantics,
 north_rule).
+
+The node table (``node_table``) and stage 3's record labelling
+(``label_records``) are module functions because streaming
+ingest (`streaming/ingest.py`) builds the same graph on each batch's slice.
 """
 
 from __future__ import annotations
 
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fia_own_map_spark.config import CLASS_UNKNOWN, EngineConfig
+from fia_own_map_spark.config import CLASS_FAMILY, CLASS_UNKNOWN, EngineConfig
 from fia_own_map_spark.functions.normalize import combine_addr
 from fia_own_map_spark.operators.blocking import (
     blocking_keys,
@@ -66,11 +71,117 @@ def stage0_records(pages: DataFrame, use_html: bool = True) -> DataFrame:
 
 
 def _input_identity(pages: DataFrame):
-    """What a rerun compares to decide the input is unchanged: a file
-    source's sorted file list, else (an in-memory table) the plan's semantic
-    hash, which covers the rows. A file scan's semantic hash differs between
-    processes, so it cannot identify a file source."""
-    return sorted(pages.inputFiles()) or pages.semanticHash()
+    """What a rerun compares to decide the input is unchanged: for a file
+    source, each file's name, length and modification time, read through
+    Hadoop's ``FileSystem`` so that any file system Spark reads answers
+    (one ``listStatus`` per input directory, not one status call per file);
+    for an in-memory table, the plan's semantic hash, which covers the rows.
+    A file scan's semantic hash differs between processes, so it cannot
+    identify a file source. Not covered: a frame filtered differently over
+    the same unchanged files has the same identity."""
+    files = sorted(pages.inputFiles())
+    if not files:
+        return pages.semanticHash()
+    spark = pages.sparkSession
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    by_dir: dict[str, list] = {}
+    for name in files:
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(name))
+        by_dir.setdefault(path.getParent().toString(), []).append((name, path))
+    identity = []
+    for members in by_dir.values():
+        parent = members[0][1].getParent()
+        listed = {s.getPath().getName(): s for s in parent.getFileSystem(conf).listStatus(parent)}
+        for name, path in members:
+            status = listed[path.getName()]
+            identity.append([name, status.getLen(), status.getModificationTime()])
+    return identity
+
+
+def _matchable(records: DataFrame) -> DataFrame:
+    """Classified records with their class bucket; unknowns become
+    singletons (`Name_Matching_opt.py:230-232`). Matching runs inside class
+    buckets, with family (45, ic!=3) and juniors (45, ic==3) as separate
+    buckets (`Name_Matching_opt.py:167-171`)."""
+    return records.filter(F.col("own_type") != CLASS_UNKNOWN).withColumn(
+        "match_bucket",
+        F.when(
+            (F.col("own_type") == CLASS_FAMILY) & (F.col("initial_class") == 3),
+            F.concat(F.col("own_type").cast("string"), F.lit("J")),
+        ).otherwise(F.col("own_type").cast("string")),
+    )
+
+
+def _named_records(records: DataFrame) -> DataFrame:
+    """The classified records with a non-empty name, each with the
+    ``node_id`` of its (bucket, name) node: the ER graph's vertices.
+
+    Mentions repeat heavily (that is what makes blocking work), so the
+    entire block/score/cluster graph runs over DISTINCT name nodes and
+    record ids re-attach at the end. At web scale this shrinks every
+    shuffle by the mention-repetition factor; the emitted partition is
+    provably identical (records with equal (bucket, name) share all keys
+    and therefore always co-cluster). Records whose name normalizes to ''
+    have no keys and stay singletons (excluded from the node graph)."""
+    return _matchable(records).filter(F.length("simple_owners") > 0).withColumn(
+        "node_id", F.concat_ws("|", "match_bucket", "simple_owners")
+    )
+
+
+def node_table(records: DataFrame) -> DataFrame:
+    """The distinct nodes of ``_named_records``, with what blocking and
+    scoring read: one row per ``node_id``."""
+    return _named_records(records).select(
+        "node_id", "match_bucket", "simple_owners", "tokens", "name_keys"
+    ).distinct()
+
+
+def label_records(
+    records: DataFrame,
+    node_clusters: DataFrame,
+    pin: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Stage 3 after CC: record-level clusters from node-level ones.
+
+    node_clusters: (node_id, node_cluster); a node it lacks is its own
+    cluster. ``pin`` persists a table and hands it back; the caller
+    releases what it pinned. Returns url, cluster_id, own_type,
+    simple_owners, comb_addr, cluster_size.
+    """
+    with_nodes = _named_records(records).join(node_clusters, "node_id", "left").withColumn(
+        "node_cluster", F.coalesce(F.col("node_cluster"), F.col("node_id"))
+    )
+    # stable record-level label: min(url) per node cluster. groupBy +
+    # join back, NOT a window over node_cluster: the giant head
+    # component (31k+ nodes / 100k+ records at the 800k-page corpus)
+    # would be one spilling window task; the agg reduces map-side and
+    # the join is AQE-skew-splittable (same rationale as refine.py).
+    cluster_mins = with_nodes.groupBy("node_cluster").agg(F.min("url").alias("cluster_id"))
+    clustered = with_nodes.join(cluster_mins, "node_cluster")
+    # records with empty names: singletons
+    empties = _matchable(records).filter(F.length("simple_owners") == 0).withColumn(
+        "cluster_id", F.col("url")
+    )
+    # persist the record table before each nested groupBy + join
+    # back, which reads its input 2-3 times: uncached, the min(url)
+    # join-back (2 reads) under the address refinement (3) under
+    # cluster_size (2) puts 12 copies of the labels x records
+    # subtree into the write plan.
+    clustered = pin(clustered.select(*empties.columns).unionByName(empties))
+    # address refinement for family/juniors (W4)
+    clustered = pin(refine_clusters_by_address(clustered))
+    # unknowns: singleton clusters (`Name_Matching_opt.py:230-232`,
+    # uuid4 replaced by the deterministic own-url label)
+    unknowns = records.filter(F.col("own_type") == CLASS_UNKNOWN).withColumn(
+        "cluster_id", F.col("url")
+    )
+    final = clustered.select(
+        "url", "cluster_id", "own_type", "simple_owners", "comb_addr"
+    ).unionByName(
+        unknowns.select("url", "cluster_id", "own_type", "simple_owners", "comb_addr")
+    )
+    return cluster_size(final)
 
 
 def run_pipeline(
@@ -151,36 +262,12 @@ def run_pipeline(
         )
         _section("s0_records")
 
-        # matchable = classified rows; unknowns become singletons
-        # (`Name_Matching_opt.py:230-232`). Matching runs inside class buckets,
-        # with family (45, ic!=3) and juniors (45, ic==3) as separate buckets
-        # (`Name_Matching_opt.py:167-171`).
-        matchable = records.filter(F.col("own_type") != CLASS_UNKNOWN).withColumn(
-            "match_bucket",
-            F.when(
-                (F.col("own_type") == 45) & (F.col("initial_class") == 3),
-                F.concat(F.col("own_type").cast("string"), F.lit("J")),
-            ).otherwise(F.col("own_type").cast("string")),
-        )
-
         # ---- node table: distinct (bucket, name) --------------------------------
-        # Mentions repeat heavily (that is what makes blocking work), so the
-        # entire block/score/cluster graph runs over DISTINCT name nodes and
-        # record ids re-attach at the end. At web scale this shrinks every
-        # shuffle by the mention-repetition factor; the emitted partition is
-        # provably identical (records with equal (bucket, name) share all keys
-        # and therefore always co-cluster). Records whose name normalizes to ''
-        # have no keys and stay singletons (excluded from the node graph).
-        named = matchable.filter(F.length("simple_owners") > 0).withColumn(
-            "node_id", F.concat_ws("|", "match_bucket", "simple_owners")
-        )
         # persist: nodes feeds blocking (stage 1), the scoring name join
         # (stage 2) and the CC vertex set (stage 3) — without the cache each
         # consumer re-reads the records checkpoint and re-runs the distinct
         # shuffle.
-        nodes = pin(named.select(
-            "node_id", "match_bucket", "simple_owners", "tokens", "name_keys"
-        ).distinct())
+        nodes = pin(node_table(records))
 
         # ---- stage 1: blocking keys + explicit skew handling -------------------
         def build_keys():
@@ -192,8 +279,6 @@ def run_pipeline(
                 nodes, id_col="node_id", class_col="match_bucket",
                 include_soundex=cfg.use_soundex_keys,
             ))
-            if not cfg.salt_mega_blocks:
-                return raw_keys, {"mega_blocks": 0}
             salted, mega = salt_mega_blocks(raw_keys, "node_id", cfg)
             mega_rows = mega.collect()
             return salted, {
@@ -208,7 +293,7 @@ def run_pipeline(
 
         keys = stage(
             "block_keys",
-            upstream("records", "use_soundex_keys", "salt_mega_blocks", "max_block_size"),
+            upstream("records", "use_soundex_keys", "max_block_size"),
             build_keys,
         )
         _section("s1_block")
@@ -242,46 +327,10 @@ def run_pipeline(
             labels = connected_components(
                 edges, vertices=nodes.select(F.col("node_id").alias("id")),
                 id_col="id", component_col="node_cluster",
-                max_iterations=cfg.cc_max_iterations,
-                assume_unique_vertices=True,  # nodes carry one row per node_id
             )
-            with_nodes = named.join(
-                labels.withColumnRenamed("id", "node_id"), "node_id", "left"
-            ).withColumn("node_cluster", F.coalesce(F.col("node_cluster"), F.col("node_id")))
-            # stable record-level label: min(url) per node cluster. groupBy +
-            # join back, NOT a window over node_cluster: the giant head
-            # component (31k+ nodes / 100k+ records at the 800k-page corpus)
-            # would be one spilling window task; the agg reduces map-side and
-            # the join is AQE-skew-splittable (same rationale as refine.py).
-            cluster_mins = with_nodes.groupBy("node_cluster").agg(
-                F.min("url").alias("cluster_id")
-            )
-            clustered = with_nodes.join(cluster_mins, "node_cluster")
-            # records with empty names: singletons
-            empties = matchable.filter(F.length("simple_owners") == 0).withColumn(
-                "cluster_id", F.col("url")
-            )
-            # persist the record table before each nested groupBy + join
-            # back, which reads its input 2-3 times: uncached, the min(url)
-            # join-back (2 reads) under the address refinement (3) under
-            # cluster_size (2) puts 12 copies of the labels x records
-            # subtree into the write plan.
-            clustered = pin(clustered.select(*empties.columns).unionByName(empties))
-            # address refinement for family/juniors (W4)
-            clustered = pin(refine_clusters_by_address(clustered))
-            # unknowns: singleton clusters (`Name_Matching_opt.py:230-232`,
-            # uuid4 replaced by the deterministic own-url label)
-            unknowns = records.filter(F.col("own_type") == CLASS_UNKNOWN).withColumn(
-                "cluster_id", F.col("url")
-            )
-            final = clustered.select(
-                "url", "cluster_id", "own_type", "simple_owners", "comb_addr"
-            ).unionByName(
-                unknowns.select("url", "cluster_id", "own_type", "simple_owners", "comb_addr")
-            )
-            return cluster_size(final), None
+            return label_records(records, labels.withColumnRenamed("id", "node_id"), pin), None
 
-        clusters = stage("clusters", upstream("edges", "cc_max_iterations"), build_clusters)
+        clusters = stage("clusters", upstream("edges"), build_clusters)
         _section("s3_cluster")
 
         metrics["wall_s"] = round(time.time() - t0, 3)

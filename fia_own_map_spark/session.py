@@ -127,8 +127,3 @@ def release_checkpoints(df: DataFrame) -> None:
     except (AttributeError, Py4JError):
         pass
 
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -2,21 +2,34 @@
 
 The reference has no streaming (SURVEY.md §2.10); its incremental idiom is
 append-then-reaggregate (`Full_State_Sample_Generation.py:118-127`). The
-engine's streaming surface mirrors that as a `foreachBatch` job:
+engine's streaming surface mirrors that as a `foreachBatch` job that keeps
+the batch pipeline's ER graph up to date instead of rebuilding it:
 
   new pages (file source / rate source)
-    -> stage0 extract + classify (same operators as batch)
-    -> incremental blocking keys appended to the key store
-    -> affected components re-clustered (only blocks touched by the batch)
+    -> stage 0 extract + classify (`stage0_records`, as in batch)
+    -> the batch's (bucket, name) nodes (`node_table`, as in batch); blocking
+       keys only for nodes the state has not seen
+    -> CC over the affected slice of the node graph (star edges, as in
+       exact mode)
+    -> record labels on demand (`clusters()`: `label_records`, batch's
+       stage-3 labelling over the whole state)
 
-Re-clustering only the affected subgraph keeps each micro-batch O(batch +
-touched blocks), not O(corpus): union the new (id, key) rows with existing
-rows *sharing those keys*, run CC on that slice, and merge labels back
-(min-id labels are stable under this merge because components only grow).
+The slice is every new node plus every old node whose old cluster holds a
+node that shares a key with a new node. In exact mode sharing a key
+defines a component, and old clusters are CC fixpoints, so one cluster
+expansion hop closes the slice: it is a union of complete blocks and whole
+old components, its CC labels (min node_id) equal those of a batch run over
+the whole corpus, and every node outside it keeps its label. Each batch's
+work is O(batch + slice) plus the state reads, never a re-cluster of the
+corpus.
 
 The state lives in the same `CheckpointStore` as the batch pipeline's
 stage checkpoints, as append commits to keyed (latest-wins) tables: each
 batch writes only its delta, and the store compacts and expires old dirs.
+A batch commits keys before nodes, so that a replay after a crash between
+any two commits rebuilds the deltas that are missing.
+A url ingested again takes its newest attributes, but the node its earlier
+version introduced stays in the graph.
 """
 
 from __future__ import annotations
@@ -24,17 +37,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fia_own_map_spark.config import CLASS_UNKNOWN
 from fia_own_map_spark.operators import sketch
 from fia_own_map_spark.operators.blocking import blocking_keys, star_edges
 from fia_own_map_spark.operators.cc import connected_components
-from fia_own_map_spark.operators.refine import refine_clusters_by_address
-from fia_own_map_spark.plans.pipeline import stage0_records
+from fia_own_map_spark.plans.pipeline import label_records, node_table, stage0_records
+from fia_own_map_spark.session import release_checkpoints
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
 
 # state table -> (schema of its read before the first batch, latest-wins key)
 _TABLES = {
-    "keys": ("url string, block_key string", ["url", "block_key"]),
-    "labels": ("url string, cluster_id string, own_type int, comb_addr string", ["url"]),
+    # what stage-3 labelling reads of a record
+    "records": (
+        "url string, own_type int, initial_class int, simple_owners string,"
+        " comb_addr string",
+        ["url"],
+    ),
+    "keys": ("node_id string, block_key string", ["node_id", "block_key"]),
+    "nodes": ("node_id string, node_cluster string", ["node_id"]),
     # Merged HLL register state: distinct owner names per own_type,
     # maintained by bucket-wise max across batches (sketch.hll_merge is
     # idempotent/commutative/associative, so the merged state equals the
@@ -48,14 +68,15 @@ _TABLES = {
 
 
 class IncrementalER:
-    """Maintains (keys, labels, name-sketch) state across micro-batches.
+    """Maintains the ER graph (records, keys, node clusters) and a name
+    sketch across micro-batches.
 
-    The state is three keyed tables of one CheckpointStore under
+    The state is four keyed tables of one CheckpointStore under
     ``state_dir``: each batch appends only its delta, reads keep the newest
     row per key, and the store compacts every few appends. An append's
     fingerprint is its batch id, so a `foreachBatch` replay after a restart
-    skips the appends that already committed. Used from `foreachBatch` or
-    called directly for tests.
+    skips the appends that already committed and rebuilds the others
+    identically. Used from `foreachBatch` or called directly for tests.
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, hll_p: int = 10):
@@ -75,102 +96,88 @@ class IncrementalER:
             key=_TABLES[table][1],
         )
 
+    def clusters(self) -> DataFrame:
+        """Record-level clusters of everything ingested so far: the batch
+        pipeline's stage-3 labelling over the state. Lazy and uncached, so
+        evaluate it once. Columns as `run_pipeline`'s clusters."""
+        return label_records(self.state("records"), self.state("nodes"), pin=lambda df: df)
+
     def process_batch(self, pages: DataFrame, batch_id: int = 0) -> DataFrame:
-        """Ingest one micro-batch of pages; returns updated labels table."""
-        records = stage0_records(pages, use_html=True).withColumn(
-            "match_bucket",
-            F.when(
-                (F.col("own_type") == 45) & (F.col("initial_class") == 3),
-                F.concat(F.col("own_type").cast("string"), F.lit("J")),
-            ).otherwise(F.col("own_type").cast("string")),
-        )
-        new_keys = blocking_keys(
-            records.filter(F.col("own_type") != -99), id_col="url",
-            class_col="match_bucket",
-        )
-        old_keys = self.state("keys")
-        old_labels = self.state("labels")
+        """Ingest one micro-batch of pages; returns `clusters()`."""
+        # Every table read more than once, the CC labels (they read the last
+        # round's localCheckpoint) and the nodes delta's checkpoint, released
+        # in the finally.
+        pinned: list[DataFrame] = []
+        labels: DataFrame | None = None
+        node_labels: DataFrame | None = None
 
-        # Affected slice must be closed under the OLD partition: a batch key
-        # can merge two old clusters, and every member of a merged cluster
-        # must be relabeled together (old clusters are CC fixpoints, so one
-        # cluster-expansion hop reaches closure — any cross-cluster old key
-        # would already have merged them).
-        touched = new_keys.select("block_key").distinct()
-        directly_affected = (
-            old_keys.join(F.broadcast(touched), "block_key", "left_semi")
-            .select("url")
-            .distinct()
-        )
-        affected_clusters = (
-            old_labels.join(directly_affected, "url", "left_semi")
-            .select("cluster_id")
-            .distinct()
-        )
-        affected_urls = (
-            old_labels.join(affected_clusters, "cluster_id", "left_semi")
-            .select("url")
-            .distinct()
-        )
-        affected = old_keys.join(affected_urls, "url", "left_semi")
-        slice_keys = affected.unionByName(new_keys).distinct()
+        def pin(df: DataFrame) -> DataFrame:
+            pinned.append(df.persist())
+            return df
 
-        edges = star_edges(slice_keys, "url")
-        new_labels = connected_components(
-            edges,
-            vertices=slice_keys.select(F.col("url").alias("id")).distinct(),
-            id_col="id",
-            component_col="cluster_id",
-            assume_unique_vertices=True,  # the vertex arg is distinct'd above
-        ).withColumnRenamed("id", "url")
+        try:
+            # stage 0 feeds the node table, the records delta and the sketch
+            records = pin(stage0_records(pages, use_html=True))
+            old_keys = pin(self.state("keys"))
+            old_nodes = pin(self.state("nodes"))
+            new_nodes = pin(node_table(records).join(old_nodes, "node_id", "left_anti"))
+            new_keys = pin(blocking_keys(new_nodes, id_col="node_id", class_col="match_bucket"))
 
-        # merge: re-clustered urls take the new label; others keep theirs;
-        # new unknown/singleton pages default to their own url. Per-url
-        # attributes (own_type, comb_addr) ride along so the family
-        # address refinement can run over the merged table.
-        attrs = records.select("url", "own_type", "comb_addr")
-        relabeled = (
-            old_labels.join(new_labels.select("url"), "url", "left_semi")
-            .drop("cluster_id")
-            .unionByName(attrs.join(new_labels.select("url"), "url", "left_semi"))
-            .distinct()
-            .join(new_labels, "url")
-        )
-        singletons = (
-            attrs.join(new_labels.select("url"), "url", "left_anti")
-            .join(old_labels.select("url"), "url", "left_anti")
-            .withColumn("cluster_id", F.col("url"))
-        )
-        # state deltas only — per-batch write volume is O(batch + affected
-        # slice), never O(corpus); untouched labels persist in older
-        # versions (latest-wins read) until compaction folds them forward.
-        # Labels first: their delta reads the old keys, whose dirs a keys
-        # compaction would delete.
-        label_delta = relabeled.select(*old_labels.columns).unionByName(
-            singletons.select(*old_labels.columns)
-        )
-        self._append("labels", label_delta, batch_id)
-        self._append("keys", new_keys.distinct(), batch_id)
-        # sketch rollup: merge this batch's registers into the state and
-        # append ONLY the registers the batch actually changed (anti-join
-        # merged vs previous on the full row) — latest-wins read per
-        # (own_type, bucket) then yields exactly max(old, batch); unchanged
-        # registers survive in older versions until compaction, keeping the
-        # per-batch write volume O(batch), not O(groups x 2^p)
-        batch_regs = sketch.hll_registers(
-            records.filter(F.col("own_type") != -99),
-            ["own_type"], "simple_owners", p=self.hll_p,
-        )
-        old_regs = self.state("hll_names")
-        merged_regs = sketch.hll_merge(old_regs, batch_regs)
-        self._append(
-            "hll_names",
-            merged_regs.join(old_regs, ["own_type", "bucket", "maxrank"], "left_anti"),
-            batch_id,
-        )
-        # output view: family/juniors clusters split by address (the batch
-        # pipeline applies the same refinement after CC)
-        return refine_clusters_by_address(self.state("labels"))
+            # the slice: old clusters with a node that shares a key with a
+            # new node, in full (one hop closes it, see the module docstring)
+            touched = new_keys.select("block_key").distinct()
+            hit = old_keys.join(F.broadcast(touched), "block_key", "left_semi")
+            hit_clusters = old_nodes.join(hit, "node_id", "left_semi").select("node_cluster")
+            slice_nodes = pin(
+                old_nodes.join(hit_clusters, "node_cluster", "left_semi").select("node_id")
+            )
+            slice_keys = old_keys.join(slice_nodes, "node_id", "left_semi").unionByName(new_keys)
+            # one row per id: old nodes are keyed by node_id, new nodes are
+            # distinct and anti-joined against the old ones
+            vertices = slice_nodes.unionByName(new_nodes.select("node_id"))
+            labels = connected_components(
+                star_edges(slice_keys, "node_id"),
+                vertices=vertices.select(F.col("node_id").alias("id")),
+                id_col="id", component_col="node_cluster",
+            )
+
+            # Keys before nodes, so that a replay rebuilds every uncommitted
+            # delta: the new nodes (and so the keys delta) are those missing
+            # from `nodes`, which holds this batch's nodes only once the last
+            # of the two commits. The nodes delta is materialized first: the
+            # keys commit may compact the keys dirs it scans.
+            node_labels = labels.withColumnRenamed("id", "node_id").localCheckpoint(eager=True)
+            self._append("keys", new_keys, batch_id)
+            self._append("nodes", node_labels, batch_id)
+            self._append(
+                "records",
+                records.select("url", "own_type", "initial_class", "simple_owners", "comb_addr"),
+                batch_id,
+            )
+            # sketch rollup: merge this batch's registers into the state and
+            # append ONLY the registers the batch actually changed (anti-join
+            # merged vs previous on the full row) — latest-wins read per
+            # (own_type, bucket) then yields exactly max(old, batch); unchanged
+            # registers survive in older versions until compaction, keeping the
+            # per-batch write volume O(batch), not O(groups x 2^p)
+            batch_regs = sketch.hll_registers(
+                records.filter(F.col("own_type") != CLASS_UNKNOWN),
+                ["own_type"], "simple_owners", p=self.hll_p,
+            )
+            old_regs = self.state("hll_names")
+            merged_regs = sketch.hll_merge(old_regs, batch_regs)
+            self._append(
+                "hll_names",
+                merged_regs.join(old_regs, ["own_type", "bucket", "maxrank"], "left_anti"),
+                batch_id,
+            )
+        finally:
+            for df in pinned:
+                df.unpersist()
+            for checkpointed in (labels, node_labels):
+                if checkpointed is not None:
+                    release_checkpoints(checkpointed)
+        return self.clusters()
 
     def distinct_names_estimate(self) -> DataFrame:
         """Approximate COUNT(DISTINCT simple_owners) per own_type from the

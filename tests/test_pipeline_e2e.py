@@ -6,7 +6,8 @@
     `Name_Matching_opt.py:194`; the rebuild must NOT be)
   * salt invariance (mega-block salting must not change the partition)
   * resume idempotence from checkpoints, and no stale reuse: a config or
-    process change and a crash at any stage boundary all resume correctly
+    process change, a crash at any stage boundary and an input file
+    rewritten in place all resume correctly
   * stage 3's job count, and release of its caches when a stage raises
   * every stage's jobs carry the stage name as their description
 """
@@ -309,3 +310,32 @@ def test_cross_process_resume_follows_the_config(tmp_path):
     assert run("similarity", "out_sim2") == similarity
     assert _snapshot_ids(store) == sim_ids
     assert len(store.history("clusters")) == 2
+
+
+def test_rewritten_input_file_is_not_reused(spark, tmp_path):
+    """A parquet file rewritten in place under the same name is a new input:
+    the rerun recomputes `records` instead of returning the old pages'
+    clusters (the input identity carries each file's length and
+    modification time, not only its name)."""
+    from fia_own_map_spark.sources.readers import read_web_pages
+    from fia_own_map_spark.sources.webpages import generate_web_pages
+
+    src = tmp_path / "pages"
+    src.mkdir()
+    store = CheckpointStore(str(tmp_path / "ckpt"), "rewrite")
+
+    def run(seed):
+        pages, _ = generate_web_pages(n_pages=60, seed=seed)
+        pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
+        pages.to_parquet(src / "part-0.parquet", index=False)
+        clusters, _ = run_pipeline(
+            spark, read_web_pages(spark, str(src)), EngineConfig(), checkpoints=store
+        )
+        got = sorted(r["url"] for r in clusters.select("url").collect())
+        return got, sorted(pages["url"])
+
+    got, want = run(1)
+    assert got == want
+    got, want = run(2)
+    assert got == want
+    assert [h["snapshot_id"] for h in store.history("records")] == [0, 1]

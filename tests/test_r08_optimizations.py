@@ -4,10 +4,10 @@ Every change this round must be output-identical to the pre-round code;
 these tests pin the equivalences directly (the oracle contract pins them
 end-to-end, but only at the call sites the contract exercises):
 
-  * connected_components' assume_unique_vertices fast path == the
-    defensive default path, on both edge producers the engine uses
+  * connected_components' labels on both edge producers the engine uses
     (star_edges, candidate-pair match edges) — round 0 is a small-star
-    for every input, so no canonicalization flag exists anymore;
+    for every input, so no canonicalization flag exists anymore — and its
+    one-row-per-vertex contract;
   * minhash_lsh_pairs' slim-pair plan == the documented unique-output
     contract on unique-id input.
 """
@@ -40,43 +40,44 @@ def _collect_labels(df):
     return sorted((r["id"], r["component"]) for r in df.collect())
 
 
-def test_cc_fast_paths_match_default_on_star_edges(spark):
-    edges = star_edges(_keys(spark), "url")
+_WANT = [
+    ("d1", "d1"), ("d2", "d1"), ("d3", "d1"), ("d4", "d1"), ("d5", "d1"),
+    ("d6", "d6"), ("d7", "d6"),
+    ("d8", "d8"),  # keyless: a singleton labelled by itself
+]
+
+
+def _labels_match_deduplicated_vertices(spark, edges):
+    """CC over a one-row-per-id vertex table gives the expected labels, the
+    same as over that table explicitly deduplicated."""
     vertices = _docs(spark).select(F.col("url").alias("id"))
-    base = connected_components(edges, vertices=vertices)
-    fast = connected_components(
-        edges, vertices=vertices, assume_unique_vertices=True,
-    )
-    assert _collect_labels(fast) == _collect_labels(base)
-    # keyless d8 stays a singleton labelled by itself
-    assert ("d8", "d8") in _collect_labels(fast)
+    got = _collect_labels(connected_components(edges, vertices=vertices))
+    assert got == _WANT
+    assert _collect_labels(
+        connected_components(edges, vertices=vertices.distinct())
+    ) == got
+
+
+def test_cc_fast_paths_match_default_on_star_edges(spark):
+    _labels_match_deduplicated_vertices(spark, star_edges(_keys(spark), "url"))
 
 
 def test_cc_fast_paths_match_default_on_candidate_pair_edges(spark):
     pairs = candidate_pairs(_keys(spark), "url")
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    vertices = _docs(spark).select(F.col("url").alias("id"))
-    base = connected_components(edges, vertices=vertices)
-    fast = connected_components(
-        edges, vertices=vertices, assume_unique_vertices=True,
+    _labels_match_deduplicated_vertices(
+        spark, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
     )
-    assert _collect_labels(fast) == _collect_labels(base)
 
 
 def test_cc_assume_unique_vertices_contract_documents_misuse(spark):
-    """The flag is a caller PROMISE: duplicated vertices duplicate label
-    rows (this test pins the misuse mode so a future 5th call site checks
-    its producer instead of cargo-culting the flag)."""
-    edges = star_edges(_keys(spark), "url")
-    dup_vertices = _docs(spark).select(F.col("url").alias("id")).unionAll(
-        _docs(spark).select(F.col("url").alias("id")).limit(2)
+    """The vertex table must hold one row per id: CC does not deduplicate
+    it, so a duplicated vertex comes back as duplicated label rows."""
+    vertices = _docs(spark).select(F.col("url").alias("id"))
+    dup_vertices = vertices.unionAll(vertices.filter(F.col("id").isin("d1", "d8")))
+    got = _collect_labels(
+        connected_components(star_edges(_keys(spark), "url"), vertices=dup_vertices)
     )
-    base = connected_components(edges, vertices=dup_vertices)  # distincts
-    fast = connected_components(
-        edges, vertices=dup_vertices, assume_unique_vertices=True,
-    )
-    assert len(_collect_labels(base)) == 8
-    assert len(_collect_labels(fast)) == 10  # promise violated -> dup rows
+    assert got == sorted(_WANT + [("d1", "d1"), ("d8", "d8")])
 
 
 def test_minhash_unique_pairs_on_unique_ids(spark):
