@@ -29,14 +29,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fia_own_map_spark.config import EngineConfig
 from fia_own_map_spark.functions.combos import exploded_metaphone_keys, normalized_name_keys
-from fia_own_map_spark.functions.similarity import similarity_scores
 from fia_own_map_spark.operators import ann, dedup, sketch, text
 from fia_own_map_spark.operators.blocking import star_edges
 from fia_own_map_spark.operators.cc import connected_components
 from fia_own_map_spark.operators.classify import initial_class
 from fia_own_map_spark.operators.refine import cluster_size
+from fia_own_map_spark.operators.scoring import score_name_pairs
 from fia_own_map_spark.testing import xxh64_sql as _xxh64_sql
 
 # ---------------------------------------------------------------------------
@@ -183,13 +182,15 @@ def q_er_score_pairs(spark, sf):
     a = docs.select(F.col("doc_id").alias("id_a"), F.col("name").alias("name_a"))
     b = docs.select((F.col("doc_id") - 1).alias("id_a"), F.col("doc_id").alias("id_b"),
                     F.col("name").alias("name_b"))
-    pairs = a.join(b, "id_a").withColumn("_s", similarity_scores("name_a", "name_b"))
-    return pairs.select(
+    # the kernel directly, without score_pairs' name-pair dedup: here its
+    # shuffle and join-back cost more than the repeats save (sf0.01,
+    # local[4]: 0.83 s direct vs 1.50 s through score_pairs)
+    return score_name_pairs(a.join(b, "id_a")).select(
         "id_a",
         "id_b",
-        F.round(F.col("_s.jw"), 6).alias("jw"),
-        F.round(F.col("_s.lev_ratio"), 6).alias("lev_ratio"),
-        F.round(F.col("_s.jaccard"), 6).alias("jaccard"),
+        F.round("jw", 6).alias("jw"),
+        F.round("lev_ratio", 6).alias("lev_ratio"),
+        F.round("jaccard", 6).alias("jaccard"),
     )
 
 
@@ -214,12 +215,6 @@ def q_dedup_minhash_fast(spark, sf):
 
 def q_dedup_simhash_pairs(spark, sf):
     return dedup.simhash_dup_pairs(_t(spark, sf, "documents"), max_hamming=8)
-
-
-def q_dedup_ngram_jaccard(spark, sf):
-    return dedup.ngram_jaccard_pairs(
-        _t(spark, sf, "documents"), block_col="source", n=2, threshold=0.35
-    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def q_span_dedup_stats(spark, sf):
@@ -339,9 +334,8 @@ def q_ml_cascade_lang(spark, sf):
 
 
 def q_text_fingerprint(spark, sf):
-    """Winnowing fingerprint in the md5 hash family — a hashable scalar the
-    driver can sort/hash, and reproducible in DuckDB SQL (the FNV array<long>
-    variant, `text.doc_fingerprint`, stays the internal API)."""
+    """Winnowing fingerprint in the md5 hash family — a hashable scalar,
+    reproducible in DuckDB SQL."""
     return _t(spark, sf, "documents").select(
         "doc_id", text.doc_fingerprint_md5("text").alias("fingerprint")
     )
@@ -526,25 +520,6 @@ def q_ann_cosine_topk(spark, sf):
     return ann.cosine_topk(emb, queries, k=10)
 
 
-def q_ann_ivf_topk(spark, sf):
-    """IVF ANN with the untrained quantizer: `ivf_lloyd_cosine_topk` at
-    n_iters=0, whose centroids are the id-ordered seed vectors. Value-
-    checked against `_ivf_seeded_oracle_sql` (float-L2 assignment and
-    probing, exact cosine re-rank, global top-k), which the integer-L2
-    probe reproduces row for row on the sf0.001, sf0.01 and sf0.1
-    embeddings.
-
-    (32, 6) sits on the measured recall-per-fraction frontier at sf0.1
-    (bench.py reports recall@10 + corpus fraction each round)."""
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return ann.ivf_lloyd_cosine_topk(
-        emb, queries, k=10, n_cells=32, nprobe=6, n_iters=0
-    )
-
-
 def q_ann_ivf_lloyd_topk(spark, sf):
     """IVF with the integer-exact Lloyd-TRAINED quantizer (r5 verdict #4
     option A, taken further than asked): seeded init + 2 fixed Lloyd
@@ -552,8 +527,7 @@ def q_ann_ivf_lloyd_topk(spark, sf):
     not just assignment/probe/re-rank — is order-independent bigint
     arithmetic, bit-reproducible across partitionings and unrolled
     iteration-by-iteration in the DuckDB oracle (`_ivf_lloyd_oracle_sql`).
-    This is the engine's one IVF quantizer; `ann_ivf_topk` runs it
-    untrained (n_iters=0)."""
+    This is the engine's one IVF quantizer."""
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
@@ -658,19 +632,10 @@ def q_sketch_bloom_members(spark, sf):
     )
 
 
-def q_ann_lsh_topk(spark, sf):
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return ann.lsh_cosine_topk(emb, queries, k=10, n_planes=6)
-
-
 def q_ann_lsh_multi_topk(spark, sf):
     """OR-amplified LSH ANN: 7 independent 8-plane tables, flip-1 probes,
     union of candidates, exact cosine re-rank (see ann.lsh_candidates).
-    Rows-only (approximate by design); bench reports recall@10 + corpus
-    fraction scored next to the single-table configuration."""
+    bench.py reports its recall@10 and the corpus fraction it scores."""
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
@@ -822,19 +787,6 @@ def q_events_hourly(spark, sf):
     )
 
 
-def q_window_sum_value_per_user(spark, sf):
-    """A6/W1: per-key running totals as window aggregates (no join),
-    `Summary_Script_opt.py:105-117` shape."""
-    e = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id")
-    return e.select(
-        "event_id",
-        "user_id",
-        F.round(F.sum("value").over(w), 4).alias("user_total_value"),
-        F.count(F.lit(1)).over(w).alias("user_n_events"),
-    )
-
-
 def q_asof_last_click(spark, sf):
     """Backward as-of join: each purchase event gets the same user's most
     recent click at-or-before it (union-sort window implementation — one
@@ -975,10 +927,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact_keep": q_dedup_exact_keep,
         "dedup_minhash_fast": q_dedup_minhash_fast,      # XXH64-in-SQL oracle (r5)
         "dedup_simhash_pairs": q_dedup_simhash_pairs,    # FNV-in-SQL oracle (r5)
-        # dedup_ngram_jaccard left the contract in r7 (its 1-row pair
-        # output is the family's weakest evidence next to the value-
-        # checked minhash/simhash/embedding rows); pytest-checked in
-        # test_retired_contract.py
         "decontam_eval_overlap": q_decontam_eval_overlap,  # eval-set n-gram screen (r7)
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "span_dedup_stats": q_span_dedup_stats,          # gaps-and-islands SQL oracle (r7)
@@ -1000,14 +948,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_domain_rollup": q_url_domain_rollup,
         # ANN
         "ann_cosine_topk": q_ann_cosine_topk,
-        # ann_lsh_topk (single-table) left the contract in r7: strictly a
-        # special case of the multi-table row below; pytest-checked in
-        # test_retired_contract.py
         "ann_lsh_multi_topk": q_ann_lsh_multi_topk,      # seeded-plane SQL oracle (r5)
-        # ann_ivf_topk (seeded quantizer) left the contract in r7: the
-        # trained-Lloyd row below exercises the same probe/re-rank path
-        # with a strictly stronger (fit-included) oracle; pytest-checked
-        # in test_retired_contract.py
         "ann_ivf_lloyd_topk": q_ann_ivf_lloyd_topk,      # TRAINED integer-Lloyd SQL oracle (r6)
         # sketches
         "sketch_hll_custkeys": q_sketch_hll_custkeys,    # full-HLL SQL oracle (r5)
@@ -1026,9 +967,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "set_ops_customers": q_set_ops_customers,
         "case_recode_events": q_case_recode_events,
         "events_hourly": q_events_hourly,
-        # window_sum_value_per_user left the contract in r7: same W1/A5
-        # bounded-key window idiom as window_orders_per_customer (kept);
-        # pytest-checked in test_retired_contract.py
         "sessionize_events": q_sessionize_events,
         "asof_last_click": q_asof_last_click,
         "range_clicks_before_purchase": q_range_clicks_before_purchase,
@@ -1107,61 +1045,6 @@ def _lsh_oracle_sql(n_planes: int, n_tables: int, dim: int = 64, k: int = 10) ->
     """
 
 
-def _ivf_seeded_oracle_sql(
-    n_cells: int = 32, nprobe: int = 6, dim: int = 64, k: int = 10
-) -> str:
-    """DuckDB oracle for `ann_ivf_topk` (ann.ivf_lloyd_cosine_topk at
-    n_iters=0 — the untrained, id-ordered-seed quantizer).
-
-    Centroids are the n_cells id-smallest corpus vectors, recomputed from
-    the same parquet rather than inlined (both engines read identical
-    bytes). Parity traps mirrored from _lsh_oracle_sql: every fold is
-    Spark's SEQUENTIAL left fold (list_reduce with 0.0 prepended), and the
-    L2 ranking uses UNROUNDED doubles with (distance, cell) tie order; the
-    engine ranks by integer L2 on floor(x * 2^20), which gives the same
-    top-k on the sf0.001, sf0.01 and sf0.1 embeddings
-    (test_retired_contract.py checks sf0.001 every run)."""
-    l2 = lambda cv, v: (  # noqa: E731 — (a - b)^2 sequential fold
-        f"list_reduce(list_prepend(0.0, list_transform(range(1, {dim + 1}), "
-        f"i -> ({cv}[i] - {v}[i]::DOUBLE) * ({cv}[i] - {v}[i]::DOUBLE))), (a, b) -> a + b)"
-    )
-    fold = lambda v, p: (  # noqa: E731
-        f"list_reduce(list_prepend(0.0, list_transform(range(1, {dim + 1}), "
-        f"i -> {v}[i]::DOUBLE * {p}[i]::DOUBLE)), (a, b) -> a + b)"
-    )
-    foldsq = lambda v: fold(v, v)  # noqa: E731
-    return f"""
-        WITH cent AS (
-          SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-                 list_transform(embedding, x -> x::DOUBLE) AS cvec
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {n_cells})),
-        asn AS (
-          SELECT vec_id, embedding, cell FROM (
-            SELECT e.vec_id, e.embedding, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {l2('c.cvec', 'e.embedding')}, c.cell) AS rn
-            FROM embeddings e, cent c) WHERE rn = 1),
-        q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-        probe AS (
-          SELECT query_id, cell FROM (
-            SELECT q.query_id, c.cell,
-                   row_number() OVER (PARTITION BY q.query_id
-                                      ORDER BY {l2('c.cvec', 'q.qv')}, c.cell) AS rn
-            FROM q, cent c) WHERE rn <= {nprobe}),
-        scored AS (
-          SELECT p.query_id, a.vec_id,
-            round(CASE WHEN sqrt({foldsq('a.embedding')}) * sqrt({foldsq('q.qv')}) = 0 THEN 0.0
-                  ELSE {fold('a.embedding', 'q.qv')}
-                       / (sqrt({foldsq('a.embedding')}) * sqrt({foldsq('q.qv')})) END, 6) AS score
-          FROM probe p JOIN asn a USING (cell)
-                       JOIN q ON q.query_id = p.query_id)
-        SELECT query_id, vec_id, score, CAST(rank AS INT) AS rank FROM (
-          SELECT query_id, vec_id, score,
-                 row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
-          FROM scored) WHERE rank <= {k}
-    """
-
-
 def _ivf_lloyd_oracle_sql(
     n_cells: int = 32, nprobe: int = 6, n_iters: int = 2, dim: int = 64, k: int = 10
 ) -> str:
@@ -1174,8 +1057,8 @@ def _ivf_lloyd_oracle_sql(
     float-summation parity trap) and the centroid mean is the explicit
     sign(s) * (|s| // n) truncating division, so Spark `div` and DuckDB
     `//` agree by construction. Assignment/probe ties break by smallest
-    cell; the re-rank is the same sequential-fold float cosine as
-    `_ivf_seeded_oracle_sql`."""
+    cell; the re-rank is Spark's sequential-fold float cosine, mirrored
+    as in `_lsh_oracle_sql`."""
     int_l2 = lambda a, b: (  # noqa: E731 — bigint, order-independent
         f"list_reduce(list_transform(range(1, {dim + 1}), "
         f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
@@ -1740,8 +1623,6 @@ def oracle_sql() -> dict[str, str]:
               FROM capped a JOIN capped b USING (bucket) WHERE a.doc_id < b.doc_id)
             SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 8
         """,
-        # (dedup_ngram_jaccard oracle moved to retired_oracle_sql(),
-        # pytest-checked — r7 contract slot freed for decontam_eval_overlap)
         "decontam_eval_overlap": _decontam_oracle_sql(),
         # XXH64 itself reproduced in DuckDB HUGEINT SQL (r5): split-multiply
         # mod 2^64, list_reduce folds for the 32-byte 4-lane blocks and
@@ -1842,12 +1723,7 @@ def oracle_sql() -> dict[str, str]:
         # sign-LSH ANN: planes are seeded literals, folds mirror Spark's
         # sequential F.aggregate exactly (see _lsh_oracle_sql) — value-checked
         # as of r5 (was rows-only)
-        # (ann_lsh_topk oracle moved to retired_oracle_sql(), pytest-checked
-        # — r7 contract slot freed for corpus_clean_tags)
         "ann_lsh_multi_topk": _lsh_oracle_sql(n_planes=8, n_tables=7),
-        # IVF: the whole query is rebuilt in SQL, zero rows-only entries left
-        # (ann_ivf_topk oracle moved to retired_oracle_sql(), pytest-checked
-        # — r7 contract slot freed for lm_doc_logprob)
         "lm_doc_logprob": _lm_scores_sql(),
         # TRAINED quantizer, value-checked: 2 Lloyd iterations over
         # floor(x*2^20) integer vectors unrolled as CTEs — the fit itself
@@ -1953,8 +1829,6 @@ def oracle_sql() -> dict[str, str]:
                    event_type, count(*) AS n_events, round(avg(value), 6) AS avg_value
             FROM events GROUP BY 1, 2 ORDER BY 1, 2
         """,
-        # (window_sum_value_per_user oracle moved to retired_oracle_sql(),
-        # pytest-checked — r7 contract slot freed for bpe_token_counts)
         "range_clicks_before_purchase": """
             WITH p AS (SELECT event_id, user_id, epoch(ts) - 3600 AS lo, epoch(ts) AS hi
                        FROM events WHERE event_type = 'purchase'),
@@ -2424,44 +2298,3 @@ def _bpe_oracle_sql(n_merges: int = 50, min_pair_count: int = 2) -> str:
         FROM documents d LEFT JOIN agg a USING (doc_id)
         ORDER BY d.doc_id
     """
-
-
-def retired_oracle_sql() -> dict[str, str]:
-    """Oracles for queries that left the 50-slot driver contract (the driver
-    silently drops entries past 50). Still value-checked every pytest run
-    (tests/test_retired_contract.py) — retirement moves the check, it does
-    not drop it."""
-    return {
-        "ann_lsh_topk": _lsh_oracle_sql(n_planes=6, n_tables=1),
-        "ann_ivf_topk": _ivf_seeded_oracle_sql(n_cells=32, nprobe=6),
-        "dedup_ngram_jaccard": """
-            WITH t AS (
-              SELECT doc_id, source,
-                     list_distinct([array_to_string(toks[i:i+1], ' ')
-                                    FOR i IN range(1, greatest(len(toks) - 1, 1) + 1)]) AS grams
-              FROM (SELECT doc_id, source,
-                           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-                    FROM documents))
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   round(len(list_intersect(a.grams, b.grams))::double
-                         / len(list_distinct(list_concat(a.grams, b.grams))), 6) AS jaccard
-            FROM t a JOIN t b USING (source)
-            WHERE a.doc_id < b.doc_id
-              AND len(list_intersect(a.grams, b.grams))::double
-                  / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.35
-        """,
-        "window_sum_value_per_user": """
-            SELECT event_id, user_id,
-                   round(sum(value) OVER (PARTITION BY user_id), 4) AS user_total_value,
-                   count(*) OVER (PARTITION BY user_id) AS user_n_events
-            FROM events
-        """,
-    }
-
-
-RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "window_sum_value_per_user": q_window_sum_value_per_user,
-}

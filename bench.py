@@ -128,13 +128,12 @@ def _materialize(df) -> None:
 def _warm_up(spark, cores: int) -> None:
     """Start the Python UDF workers and JIT the scan path once, so the first
     timed operation does not absorb session start-up."""
-    from fia_own_map_spark.functions.similarity import similarity_scores
+    from fia_own_map_spark.operators.scoring import score_name_pairs
     from pyspark.sql import functions as F
 
-    warm = spark.range(cores * 4).withColumn("s", F.concat(F.lit("W"), F.col("id")))
-    warm.repartition(cores).withColumn("j", similarity_scores("s", "s")["jw"]).agg(
-        F.sum("j")
-    ).collect()
+    s = F.concat(F.lit("W"), F.col("id"))
+    warm = spark.range(cores * 4).select(s.alias("name_a"), s.alias("name_b"))
+    score_name_pairs(warm.repartition(cores)).agg(F.sum("jw")).collect()
 
 
 def phase_a(sf_dir: str, run_dir: str) -> dict:
@@ -149,9 +148,7 @@ def phase_a(sf_dir: str, run_dir: str) -> dict:
         host = host_fingerprint(spark, None)
         del host["seed"]
         cpus = spark.sparkContext.defaultParallelism
-        # retired contract queries stay benchable: the ANN sweep measures
-        # ann_ivf_topk / ann_lsh_topk, which are engine paths
-        qs = {**entrymod.RETIRED_QUERIES, **entrymod.queries()}
+        qs = entrymod.queries()
         with tracer.span("warmup"):
             _warm_up(spark, cpus)
             _materialize(qs["text_token_counts"](spark, sf_dir))
@@ -264,11 +261,7 @@ def ann_recall(qs, spark, sf_dir: str) -> dict:
         return round(sum(recalls) / len(recalls), 3)
 
     out: dict[str, float] = {}
-    # contract paths (ann_ivf_topk = the integer-Lloyd quantizer untrained,
-    # n_iters=0; ann_ivf_lloyd_topk = the same quantizer after 2 iterations)
-    for name in (
-        "ann_ivf_topk", "ann_ivf_lloyd_topk", "ann_lsh_topk", "ann_lsh_multi_topk"
-    ):
+    for name in ("ann_ivf_lloyd_topk", "ann_lsh_multi_topk"):
         out[name] = _recall(qs[name](spark, sf_dir).toPandas())
         log(f"  [A] recall@10 {name}: {out[name]}")
     out.update(lsh_candidate_fractions(spark, sf_dir))
@@ -278,7 +271,7 @@ def ann_recall(qs, spark, sf_dir: str) -> dict:
 def lsh_candidate_fractions(spark, sf_dir: str) -> dict:
     """Measured corpus fraction scored per (query, LSH config) — the probe
     budget the recall numbers are bought with. Same configs as the
-    ann_lsh_topk / ann_lsh_multi_topk contract queries."""
+    ann_lsh_multi_topk / ann_ivf_lloyd_topk contract queries."""
     from fia_own_map_spark.operators.ann import lsh_candidates
     from pyspark.sql import functions as F
 
@@ -289,44 +282,38 @@ def lsh_candidate_fractions(spark, sf_dir: str) -> dict:
     )
     n_queries = queries.count()
     out = {}
-    for name, kwargs in (
-        ("lsh_frac", {"n_planes": 6, "n_tables": 1}),
-        ("lsh_multi_frac", {"n_planes": 8, "n_tables": 7}),
-    ):
-        n_cand = lsh_candidates(emb, queries, multiprobe=1, **kwargs).count()
-        out[name] = round(n_cand / (n_corpus * n_queries), 4)
-        log(f"  [A] candidate fraction {name}: {out[name]}")
+    n_cand = lsh_candidates(emb, queries, multiprobe=1, n_planes=8, n_tables=7).count()
+    out["lsh_multi_frac"] = round(n_cand / (n_corpus * n_queries), 4)
+    log(f"  [A] candidate fraction lsh_multi_frac: {out['lsh_multi_frac']}")
     # IVF: same budget accounting — candidates = corpus rows in probed cells
     # (32 cells / nprobe 6, chosen on the r5 frontier sweep: equal recall to
     # LSH-multi at a smaller fraction). Integer-L2 assignment/probe as in
-    # ivf_lloyd_cosine_topk; n_iters=0 is the ann_ivf_topk quantizer, 2 the
-    # ann_ivf_lloyd_topk one.
+    # ivf_lloyd_cosine_topk, with the ann_ivf_lloyd_topk quantizer.
     from pyspark.sql import Window as _W
 
     from fia_own_map_spark.operators.ann import _int_l2, _int_qvec, lloyd_centroids
 
     wq = _W.partitionBy("query_id").orderBy("_d", "_cell")
-    for n_iters, tag in ((0, "ivf_seeded_frac"), (2, "ivf_lloyd_frac")):
-        cent = lloyd_centroids(emb, n_cells=32, n_iters=n_iters)
-        asn = (
-            emb.select("vec_id", _int_qvec("embedding").alias("_q"))
-            .crossJoin(F.broadcast(cent))
-            .withColumn("_d", _int_l2(F.col("_q"), F.col("_c")))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("_d", "_cell")).alias("_m"))
-            .select(F.col("_m._cell").alias("_cell"))
-        )
-        qp = (
-            queries.select("query_id", _int_qvec("embedding").alias("_qq"))
-            .crossJoin(F.broadcast(cent))
-            .withColumn("_d", _int_l2(F.col("_qq"), F.col("_c")))
-            .withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= 6)
-            .select("query_id", "_cell")
-        )
-        n_cand = asn.join(F.broadcast(qp), "_cell").count()
-        out[tag] = round(n_cand / (n_corpus * n_queries), 4)
-        log(f"  [A] candidate fraction {tag}: {out[tag]}")
+    cent = lloyd_centroids(emb, n_cells=32, n_iters=2)
+    asn = (
+        emb.select("vec_id", _int_qvec("embedding").alias("_q"))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("_d", _int_l2(F.col("_q"), F.col("_c")))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("_d", "_cell")).alias("_m"))
+        .select(F.col("_m._cell").alias("_cell"))
+    )
+    qp = (
+        queries.select("query_id", _int_qvec("embedding").alias("_qq"))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("_d", _int_l2(F.col("_qq"), F.col("_c")))
+        .withColumn("_rn", F.row_number().over(wq))
+        .filter(F.col("_rn") <= 6)
+        .select("query_id", "_cell")
+    )
+    n_cand = asn.join(F.broadcast(qp), "_cell").count()
+    out["ivf_lloyd_frac"] = round(n_cand / (n_corpus * n_queries), 4)
+    log(f"  [A] candidate fraction ivf_lloyd_frac: {out['ivf_lloyd_frac']}")
     return out
 
 
@@ -383,11 +370,12 @@ def build_pair_table(cores: int, run_dir: str) -> dict:
 
 def scoring_kernel_run(cores: int, pairs_path: str) -> dict:
     """Compute-bound stage-2 scoring kernel: JW + levenshtein ratio +
-    token-set jaccard + threshold (one fused Arrow UDF) over the pair table,
-    cached first, so one timed pass is pure compute: candidate pairs scored
-    per second, isolated from checkpoint IO and job-scheduling constants."""
+    token-set jaccard + threshold (``score_name_pairs``, no name dedup) over
+    the pair table, cached first, so one timed pass is pure compute:
+    candidate pairs scored per second, isolated from checkpoint IO and
+    job-scheduling constants."""
     from fia_own_map_spark.config import EngineConfig
-    from fia_own_map_spark.functions.similarity import similarity_scores
+    from fia_own_map_spark.operators.scoring import score_name_pairs
     from fia_own_map_spark.session import build_session
     from pyspark.sql import functions as F
 
@@ -406,11 +394,7 @@ def scoring_kernel_run(cores: int, pairs_path: str) -> dict:
     )
     n = pairs.count()
     t0 = time.perf_counter()
-    scored = pairs.withColumn("_s", similarity_scores("name_a", "name_b")).select(
-        F.col("_s.jw").alias("jw"),
-        F.col("_s.lev_ratio").alias("lev_ratio"),
-        F.col("_s.jaccard").alias("jaccard"),
-    )
+    scored = score_name_pairs(pairs.select("name_a", "name_b"))
     matches = scored.filter(
         (F.col("jw") >= cfg.jw_threshold)
         | (F.col("lev_ratio") >= cfg.lev_ratio_threshold)
@@ -593,8 +577,9 @@ def _scaling_md(scaling: dict) -> str:
     md = f"""
 ## Scoring-kernel scaling: local[{lo}] -> local[{hi}]
 
-The stage-2 scoring operator (one fused Arrow UDF: numpy-batched
-Jaro-Winkler + Levenshtein ratio + token-set Jaccard + thresholds) over
+The stage-2 scoring kernel (`score_name_pairs`, one mapInPandas stage:
+numpy-batched Jaro-Winkler + Levenshtein ratio + token-set Jaccard +
+thresholds) over
 {scaling['pairs']} cached candidate pairs: the naive within-block pair table
 of a {KERNEL_PAGES}-page seed-42 corpus, replicated {KERNEL_REPLICATE}x. Each
 leg is one timed pass in a fresh subprocess pinned with `taskset` to exactly
@@ -643,9 +628,7 @@ wall: {result['elapsed_s']}s.
 
 | path | recall@10 | corpus fraction scored |
 |---|---|---|
-| IVF integer-Lloyd quantizer, untrained (32 cells, nprobe=6; `ann_ivf_topk`) | {recall.get('ann_ivf_topk')} | {recall.get('ivf_seeded_frac')} |
 | IVF integer-Lloyd quantizer, 2 iterations (32 cells, nprobe=6; `ann_ivf_lloyd_topk`) | {recall.get('ann_ivf_lloyd_topk')} | {recall.get('ivf_lloyd_frac')} |
-| LSH single table (6 planes, flip-1; `ann_lsh_topk`) | {recall.get('ann_lsh_topk')} | {recall.get('lsh_frac')} |
 | LSH OR-amplified (7 tables x 8 planes, flip-1; `ann_lsh_multi_topk`) | {recall.get('ann_lsh_multi_topk')} | {recall.get('lsh_multi_frac')} |
 
 Brute force (`ann_cosine_topk`) is the exactness baseline; the approximate

@@ -14,16 +14,13 @@ Spark surface:
     fingerprints with ``double_metaphone`` inside one ``mapInPandas``
     (``combos.exploded_metaphone_keys``).
   * Soundex is Spark's built-in ``F.soundex`` (north_rule asks for both
-    key families); re-exported here as ``soundex_key``.
+    key families); ``soundex_py`` is its pure-Python mirror.
 
 Pure-Python entry points (``double_metaphone``) are shared by the pandas
 oracle used in tests, so Spark and oracle keys agree by construction.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _VOWELS = frozenset("AEIOUY")
 
@@ -493,14 +490,6 @@ def double_metaphone(value: str) -> tuple[str, str]:  # noqa: C901
             current += 1
 
     return ("".join(pri), "".join(sec))
-
-
-# ---------------------------------------------------------------------------
-# Spark surface
-# ---------------------------------------------------------------------------
-def soundex_key(col: Column | str) -> Column:
-    """Soundex blocking key — Spark built-in, stays JVM-side."""
-    return F.soundex(F.col(col) if isinstance(col, str) else col)
 
 
 # American Soundex letter codes (NARA variant): digit per letter A-Z;

@@ -2,9 +2,9 @@
 "vectorized pandas/Arrow UDFs computing batched Jaro-Winkler, Levenshtein,
 and token-set-Jaccard").
 
-Production path: ``similarity_scores`` — ONE fused Arrow-batched pandas UDF
-returning struct<jw, lev_ratio, jaccard>, all three measures computed in the
-vectorized Python kernel per batch:
+The scoring kernel: ``similarity_scores_batch`` computes all three measures
+for a batch of name pairs in vectorized Python. Spark reaches it only through
+``operators.scoring.score_name_pairs`` (one ``mapInPandas`` stage):
 
   * Jaro-Winkler — numpy batch kernel (``jaro_winkler_batch``): pairs packed
     into padded uint8/uint32 codepoint matrices; the greedy match /
@@ -21,19 +21,14 @@ the JVM array ops allocation-bound at high core counts (measured 8->32
 scaling efficiency 0.28); one Arrow round-trip scoring each batch
 independently is shuffle-free and embarrassingly parallel. Chunks are sized
 (1024) so each worker's DP/match buffers stay cache-resident instead of
-contending for DRAM bandwidth. Standalone ``jaro_winkler_sim`` /
-``levenshtein_ratio`` / ``token_set_jaccard`` Columns remain for composition
-and oracle parity tests.
+contending for DRAM bandwidth. The scalar ``jaro_winkler`` /
+``levenshtein_ratio_py`` / ``token_set_jaccard_py`` are the test oracles.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 # ---------------------------------------------------------------------------
@@ -223,14 +218,6 @@ def jaro_winkler_batch(
     return out
 
 
-@pandas_udf(DoubleType())
-def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        jaro_winkler_batch(a.to_numpy(dtype=object), b.to_numpy(dtype=object)),
-        dtype="float64",
-    )
-
-
 # ---------------------------------------------------------------------------
 # numpy-vectorized batch Levenshtein
 # ---------------------------------------------------------------------------
@@ -342,86 +329,9 @@ def similarity_scores_batch(a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame({"jw": jw, "lev_ratio": lev_ratio, "jaccard": jac})
 
 
-_SCORES_TYPE = StructType(
-    [
-        StructField("jw", DoubleType()),
-        StructField("lev_ratio", DoubleType()),
-        StructField("jaccard", DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_SCORES_TYPE)
-def _scores_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    return similarity_scores_batch(a.to_numpy(dtype=object), b.to_numpy(dtype=object))
-
-
-def similarity_scores(a: Column | str, b: Column | str, fast: bool = True) -> Column:
-    """struct<jw, lev_ratio, jaccard> — one fused Arrow round-trip computing
-    all three measures in the vectorized Python kernel. This is the scale
-    path: a single UDF pass is embarrassingly parallel and avoids the
-    allocation-heavy JVM array ops (array_intersect/union) that GC-bind at
-    high core counts.
-
-    fast=True (production default) adds a JVM-side equality fast path:
-    identical pairs — about half of all blocked candidates — get literal
-    scores (jw = 1.0 unless empty, per strcmp95 empty-before-equality;
-    lev_ratio = jaccard = 1.0, matching the python kernel's own equality
-    branches bit-for-bit) and their UDF inputs are MASKED TO NULL, so no
-    string bytes cross the Arrow pipe for them and the python kernel only
-    materializes the hard rows. Measured effect: the pipe is the one
-    non-scaling cost at high core counts (a trivial pass-through UDF scales
-    only 1.4x from 8 to 32 cores while the numpy compute scales 4x), so
-    halving pipe traffic is what keeps the whole operator near-linear.
-    Null inputs take the UDF path (null-unsafe ==) and yield null scores
-    either way. fast=False keeps the pure-UDF single expression for parity
-    tests."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    if not fast:
-        return _scores_udf(ca, cb)
-    eq = ca == cb  # null-unsafe: null rows fall to otherwise() = UDF path
-    null_s = F.lit(None).cast("string")
-    masked = _scores_udf(
-        F.when(eq, null_s).otherwise(ca), F.when(eq, null_s).otherwise(cb)
-    )
-    eq_scores = F.struct(
-        F.when(F.length(ca) > 0, F.lit(1.0)).otherwise(F.lit(0.0)).alias("jw"),
-        F.lit(1.0).alias("lev_ratio"),
-        F.lit(1.0).alias("jaccard"),
-    )
-    return F.when(eq, eq_scores).otherwise(masked)
-
-
-def jaro_winkler_sim(a: Column | str, b: Column | str) -> Column:
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return _jw_udf(ca, cb)
-
-
-def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:
-    """1 - lev(a,b)/max(len) — JVM-side (built-in levenshtein)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    max_len = F.greatest(F.length(ca), F.length(cb))
-    return F.when(max_len == 0, F.lit(1.0)).otherwise(
-        1.0 - F.levenshtein(ca, cb) / max_len.cast("double")
-    )
-
-
-def token_set_jaccard(a: Column | str, b: Column | str) -> Column:
-    """|A ∩ B| / |A ∪ B| over token arrays — fully native (no UDF)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    inter = F.size(F.array_intersect(ca, cb))
-    union = F.size(F.array_union(ca, cb))
-    return F.when(union == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
-
-
 def levenshtein_ratio_py(s1: str, s2: str) -> float:
-    """Oracle mirror of levenshtein_ratio."""
+    """Scalar reference for the kernel's lev_ratio: 1 - lev(a, b) / max(len),
+    1.0 for two empty strings."""
     if s1 == s2:
         return 1.0
     if not s1 or not s2:

@@ -373,8 +373,8 @@ def lsh_cosine_topk(
     probed at flip radius ``multiprobe``.
 
     Recall < 1 by construction (bucket misses); the bench reports it against
-    the brute-force baseline for both the single-table and the
-    OR-amplified configuration, next to the corpus fraction scored. The
+    the brute-force baseline for the OR-amplified configuration, next to
+    the corpus fraction scored. The
     corpus is hashed once per table and never shuffled by the query; only
     the small query side explodes. Pass ``dim`` explicitly on production
     paths — inference costs a Spark job and needs a non-empty query set.

@@ -1,6 +1,7 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, each a first-class engine op over a documents table:
+Three hash-based families, each a first-class engine op over a documents
+table:
 
   * exact            — hash-groupBy on normalized text, keep min(id)
   * MinHash + LSH    — shingle -> minhash signature -> banded bucket join.
@@ -8,8 +9,6 @@ Four families, each a first-class engine op over a documents table:
     reproduces XXH64 in SQL (``testing/xxh64_sql.py``).
   * SimHash          — 64-bit sign-sum of token hashes (Arrow-batched pandas
     UDF), candidate pairs via prefix buckets + Hamming threshold
-  * n-gram Jaccard   — exact token/char-shingle Jaccard verification within
-    candidate blocks (native array functions)
 
 Scale notes: every family avoids the |corpus|² comparison — exact dedup is
 one shuffle on the content hash; MinHash/SimHash pairs are generated only
@@ -424,40 +423,6 @@ def embedding_cosine_pairs(
         .withColumn("cosine", F.round(cosine(F.col("v_a"), F.col("v_b")), 6))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
-    )
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard (exact, within a blocking column)
-# ---------------------------------------------------------------------------
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = None,
-    n: int = 2,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram-set Jaccard over pairs within block_col (or global —
-    only for small/test corpora; the LSH path is the scale route)."""
-    grams = word_shingles(text_col, n).alias("grams")
-    base = df.select(
-        F.col(id_col),
-        *( [F.col(block_col)] if block_col else [F.lit(0).alias("_blk")] ),
-        grams,
-    )
-    blk = block_col if block_col else "_blk"
-    left = base.select(F.col(blk), F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"))
-    right = base.select(F.col(blk), F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"))
-    inter = F.size(F.array_intersect("g_a", "g_b"))
-    union = F.size(F.array_union("g_a", "g_b"))
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(inter / union.cast("double"))
-    return (
-        left.join(right, blk)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 

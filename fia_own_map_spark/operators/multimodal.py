@@ -32,8 +32,7 @@ Codecs in this container:
     plumbing tests.
   * ``avi``  — REAL container parser for MJPEG AVI video (RIFF tree walk,
     ``movi`` frame chunks, each frame decoded with the baseline-JPEG
-    decoder); ``video_frame_features`` samples every Nth frame — the real
-    version of ``frame_sample_plan``.
+    decoder); ``video_frame_features`` samples every Nth frame.
   * ``mp3`` — REAL header/metadata scanner (``mp3_meta`` /
     ``mp3_metadata``): ID3v2 skip, MPEG-1/2/2.5 Layer I-III frame walk
     with resync, Xing/VBR detection — version / rate / channels / frames /
@@ -63,7 +62,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -1042,8 +1040,8 @@ def video_frame_features(
     blob_col: str = "blob",
 ) -> DataFrame:
     """mapInPandas MJPEG-AVI frame sampling: container parse -> every Nth
-    frame -> JPEG decode -> per-frame pixel stats. The real version of
-    ``frame_sample_plan`` (one output row per sampled frame)."""
+    frame -> JPEG decode -> per-frame pixel stats (one output row per
+    sampled frame)."""
     from fia_own_map_spark.operators.jpeg import decode_jpeg
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1325,12 +1323,3 @@ def resize_images(
             yield pd.DataFrame(rows, columns=["media_id", "width", "height", "blob"])
 
     return df.mapInPandas(_batches, schema)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan* shape: explode frame indices from metadata
-    (n_frames column), real decode stubbed as above."""
-    return df.withColumn(
-        "frame_idx",
-        F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))),
-    )

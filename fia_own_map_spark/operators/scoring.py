@@ -9,6 +9,9 @@ Similarity mode (`score_mode="similarity"`, the north-star extension): join
 candidate pairs back to the normalized name strings and compute Jaro-Winkler,
 Levenshtein ratio and token-set Jaccard, all three in the fused vectorized
 Python kernel (``similarity.similarity_scores_batch``), one Arrow round-trip.
+``score_name_pairs`` is the engine's one scoring surface: the pipeline calls
+it through ``score_pairs`` (below), the ``er_score_pairs`` contract query and
+bench.py call it directly.
 
 Scale design:
   * **Dedup-before-UDF**: mentions repeat heavily (that is why they block
@@ -32,6 +35,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from fia_own_map_spark.config import EngineConfig
 from fia_own_map_spark.functions.similarity import similarity_scores_batch
@@ -44,6 +48,21 @@ def _score_batches(batches):
             pdf["name_a"].to_numpy(dtype=object), pdf["name_b"].to_numpy(dtype=object)
         )
         yield pd.concat([pdf, scores], axis=1)
+
+
+def score_name_pairs(pairs: DataFrame) -> DataFrame:
+    """Append jw / lev_ratio / jaccard to a frame with ``name_a`` / ``name_b``
+    columns, through the one ``mapInPandas`` scoring kernel. Every row is
+    kept; a row with a null name gets null scores. No dedup and no
+    repartition: callers that repeat name pairs dedup first (``score_pairs``).
+    """
+    # every field nullable, like a DDL schema string: what a Python stage
+    # returns carries no non-null guarantee for the optimizer to rely on
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in pairs.schema]
+        + [StructField(c, DoubleType()) for c in ("jw", "lev_ratio", "jaccard")]
+    )
+    return pairs.mapInPandas(_score_batches, schema)
 
 
 def score_pairs(
@@ -67,9 +86,8 @@ def score_pairs(
 
     # score each distinct name pair exactly once (dedup-before-UDF), all three
     # measures in ONE fused Arrow round-trip (vectorized python kernel)
-    name_pairs = per_core(with_names.select("name_a", "name_b").distinct()).mapInPandas(
-        _score_batches,
-        "name_a string, name_b string, jw double, lev_ratio double, jaccard double",
+    name_pairs = score_name_pairs(
+        per_core(with_names.select("name_a", "name_b").distinct())
     )
     # No broadcast hint: the distinct-name-pair table grows with candidate
     # diversity (unbounded at corpus scale) — let AQE pick broadcast vs

@@ -12,9 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType, StringType
-
-from fia_own_map_spark.operators.dedup import hash64
+from pyspark.sql.types import StringType
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 LANG_PROFILES: dict[str, list[str]] = {
@@ -97,44 +95,13 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Winnowing fingerprint (rolling hash) — pandas UDF
+# Winnowing fingerprint (md5 k-gram hash) — pandas UDF
 # ---------------------------------------------------------------------------
-def winnow_py(text: str, k: int = 5, window: int = 4) -> list[int]:
-    """Winnowing (Schleimer et al. 2003): min hash per sliding window over
-    k-gram rolling hashes; deduped, order-preserving."""
-    toks = text.lower().split()
-    if len(toks) < k:
-        return [hash64(" ".join(toks))] if toks else []
-    grams = [hash64(" ".join(toks[i : i + k])) for i in range(len(toks) - k + 1)]
-    if len(grams) <= window:
-        return [min(grams)]
-    out: list[int] = []
-    last = None
-    for i in range(len(grams) - window + 1):
-        m = min(grams[i : i + window])
-        if m != last:
-            out.append(m)
-            last = m
-    return out
-
-
-@pandas_udf(ArrayType(LongType()))
-def _winnow_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: None if t is None else [v - (1 << 63) for v in winnow_py(t)]
-    )
-
-
-def doc_fingerprint(text_col: Column | str) -> Column:
-    """array<long> winnowing fingerprint (signed-shifted to fit LongType)."""
-    return _winnow_udf(F.col(text_col) if isinstance(text_col, str) else text_col)
-
-
 def winnow_md5_py(text: str, k: int = 5, window: int = 4) -> list[str]:
-    """Winnowing with an md5-hex gram hash: identical structure to
-    ``winnow_py`` but the hash family is reproducible in SQL (DuckDB md5),
-    making the fingerprint value-checkable cross-engine. min over hex
-    strings is lexicographic in both engines."""
+    """Winnowing (Schleimer et al. 2003): min hash per sliding window over
+    k-gram hashes, deduped and order-preserving. The gram hash is md5-hex,
+    reproducible in SQL (DuckDB md5), so the fingerprint is value-checkable
+    cross-engine; min over hex strings is lexicographic in both engines."""
     import hashlib
 
     def h(s: str) -> str:
@@ -162,9 +129,8 @@ def _winnow_md5_udf(texts: pd.Series) -> pd.Series:
 
 
 def doc_fingerprint_md5(text_col: Column | str) -> Column:
-    """Comma-joined md5-family winnowing fingerprint (hashable scalar — the
-    cross-engine-checkable form; the array<long> FNV variant stays the
-    internal API)."""
+    """Comma-joined md5-family winnowing fingerprint (a hashable scalar,
+    checkable cross-engine)."""
     return _winnow_md5_udf(F.col(text_col) if isinstance(text_col, str) else text_col)
 
 

@@ -26,6 +26,7 @@ ingest (`streaming/ingest.py`) builds the same graph on each batch's slice.
 
 from __future__ import annotations
 
+import hashlib
 import time
 from typing import Callable
 
@@ -74,11 +75,17 @@ def _input_identity(pages: DataFrame):
     """What a rerun compares to decide the input is unchanged: for a file
     source, each file's name, length and modification time, read through
     Hadoop's ``FileSystem`` so that any file system Spark reads answers
-    (one ``listStatus`` per input directory, not one status call per file);
-    for an in-memory table, the plan's semantic hash, which covers the rows.
+    (one ``listStatus`` per input directory, not one status call per file),
+    plus the sha256 of the canonicalized analyzed plan, which tells two
+    filters or projections over the same files apart; for an in-memory
+    table, the plan's semantic hash, which covers the rows.
     A file scan's semantic hash differs between processes, so it cannot
-    identify a file source. Not covered: a frame filtered differently over
-    the same unchanged files has the same identity."""
+    identify a file source; the canonical plan string omits the file paths,
+    so it adds to the statuses. It is stable across processes for filters
+    and Python UDFs, but not for every plan: canonicalization orders a
+    commutative expression's operands by hash code, and stage 0's classify
+    CASE WHEN came out in another order in another process. Such an input
+    is recomputed by a new process, never reused stale."""
     files = sorted(pages.inputFiles())
     if not files:
         return pages.semanticHash()
@@ -96,7 +103,8 @@ def _input_identity(pages: DataFrame):
         for name, path in members:
             status = listed[path.getName()]
             identity.append([name, status.getLen(), status.getModificationTime()])
-    return identity
+    plan = pages._jdf.queryExecution().analyzed().canonicalized().toString()
+    return {"plan": hashlib.sha256(plan.encode("utf-8")).hexdigest(), "files": identity}
 
 
 def _matchable(records: DataFrame) -> DataFrame:

@@ -82,7 +82,8 @@ def build_session(
         # Broadcast threshold: dimension tables (keyword maps, block stats)
         # should broadcast; 64MB is a deliberate bump from the 10MB default.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # applies to the first session of a process only; extra_conf overrides
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

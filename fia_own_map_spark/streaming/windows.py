@@ -3,7 +3,7 @@ windowed aggregation and a custom stateful operator.
 
 The reference is strictly batch (SURVEY.md §2.10); these are the engine's
 streaming-native surface for the same aggregations the batch queries run
-(`events_hourly`, `window_sum_value_per_user`), required of a training-data
+(`events_hourly`, per-user event totals), required of a training-data
 pipeline ingesting append-only event/page feeds:
 
   * ``hourly_event_counts_stream`` — event-time tumbling window + watermark:

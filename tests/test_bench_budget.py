@@ -31,8 +31,8 @@ def _result(scaling):
         "sf": "0.1", "value": 19.07, "value_cold_total": 30.0, "elapsed_s": 1500.0,
         "ledger": {"queries": queries, "jobs": 300, "job_coverage": 1.0},
         "scaling": scaling,
-        "ann_recall_at_10": {"ann_ivf_topk": 0.8, "ann_lsh_topk": 0.3,
-                             "ann_lsh_multi_topk": 0.6, "lsh_frac": 0.1},
+        "ann_recall_at_10": {"ann_ivf_lloyd_topk": 0.8, "ann_lsh_multi_topk": 0.6,
+                             "ivf_lloyd_frac": 0.1, "lsh_multi_frac": 0.2},
         "codec": {"codec_images_per_sec": 400.0, "codec_px_per_sec": 3.7e6},
     }
 

@@ -255,16 +255,6 @@ def test_quality_and_counts(docs):
     assert 0 <= q["quality_score"].min() and q["quality_score"].max() <= 1
 
 
-def test_winnow_fingerprint_deterministic(docs):
-    a = docs.select("doc_id", text.doc_fingerprint("text").alias("fp")).toPandas()
-    b = docs.select("doc_id", text.doc_fingerprint("text").alias("fp")).toPandas()
-    assert a.sort_values("doc_id")["fp"].map(tuple).tolist() == \
-           b.sort_values("doc_id")["fp"].map(tuple).tolist()
-    # identical docs -> identical fingerprints
-    fp = a.set_index("doc_id")["fp"]
-    assert tuple(fp[0]) == tuple(fp[1])
-
-
 def test_ann_bruteforce_vs_numpy(spark):
     rng = np.random.default_rng(0)
     vecs = rng.standard_normal((60, 8)).astype("float32")

@@ -339,3 +339,31 @@ def test_rewritten_input_file_is_not_reused(spark, tmp_path):
     got, want = run(2)
     assert got == want
     assert [h["snapshot_id"] for h in store.history("records")] == [0, 1]
+
+
+def test_differently_filtered_input_is_not_reused(spark, tmp_path):
+    """Two filters over one unchanged parquet dir are two inputs: the second
+    run recomputes `records` and returns its own urls (the input identity
+    carries a digest of the canonicalized plan, not only the file
+    statuses)."""
+    from fia_own_map_spark.sources.readers import read_web_pages
+    from fia_own_map_spark.sources.webpages import generate_web_pages
+
+    src = tmp_path / "pages"
+    src.mkdir()
+    pages, _ = generate_web_pages(n_pages=60, seed=3)
+    pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
+    pages.to_parquet(src / "part-0.parquet", index=False)
+    pivot = sorted(pages["url"])[30]
+    store = CheckpointStore(str(tmp_path / "ckpt"), "filtered")
+
+    def run(keep):
+        clusters, _ = run_pipeline(
+            spark, read_web_pages(spark, str(src)).filter(keep), EngineConfig(),
+            checkpoints=store,
+        )
+        return sorted(r["url"] for r in clusters.select("url").collect())
+
+    assert run(F.col("url") < pivot) == sorted(u for u in pages["url"] if u < pivot)
+    assert run(F.col("url") >= pivot) == sorted(u for u in pages["url"] if u >= pivot)
+    assert [h["snapshot_id"] for h in store.history("records")] == [0, 1]

@@ -1,17 +1,11 @@
 """Stage-2 scoring: similarity measures + similarity-mode pipeline."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from fia_own_map_spark.config import EngineConfig
-from fia_own_map_spark.functions.similarity import (
-    jaro_winkler,
-    jaro_winkler_sim,
-    levenshtein_ratio,
-    levenshtein_ratio_py,
-    token_set_jaccard,
-)
+from fia_own_map_spark.functions.similarity import jaro_winkler, levenshtein_ratio_py
+from fia_own_map_spark.operators.scoring import score_name_pairs
 from fia_own_map_spark.plans.pipeline import run_pipeline
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
 from fia_own_map_spark.testing.oracle import oracle_clusters, pairwise_prf
@@ -26,28 +20,41 @@ def test_jaro_winkler_known_values():
 
 
 def test_spark_similarity_matches_py(spark):
+    """The one scoring surface (score_name_pairs, the mapInPandas kernel)
+    against the scalar references: every row kept, null names -> null
+    scores."""
     pairs = [
         ("JOHN SMITH", "JON SMITH"),
         ("CASCADE HOLDINGS", "CASCADE HOLDING"),
         ("ALPHA", "OMEGA"),
         ("", "X"),
+        ("", ""),
+        ("ACME TRUST", "ACME TRUST"),
+        (None, "X"),
     ]
-    pdf = pd.DataFrame(pairs, columns=["a", "b"])
-    sdf = spark.createDataFrame(pdf)
-    got = (
-        sdf.select(
-            jaro_winkler_sim("a", "b").alias("jw"),
-            levenshtein_ratio("a", "b").alias("lr"),
-            token_set_jaccard(F.split("a", " "), F.split("b", " ")).alias("jc"),
-        )
-        .toPandas()
+    sdf = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, name_a string, name_b string"
     )
+    scored = score_name_pairs(sdf)
+    null_rows = scored.filter(
+        F.col("jw").isNull() & F.col("lev_ratio").isNull() & F.col("jaccard").isNull()
+    )
+    assert [r.i for r in null_rows.collect()] == [6]
+    got = scored.orderBy("i").toPandas()
+    assert got["i"].tolist() == list(range(len(pairs)))
     for i, (a, b) in enumerate(pairs):
-        assert got["jw"][i] == pytest.approx(jaro_winkler(a, b), abs=1e-12)
-        assert got["lr"][i] == pytest.approx(levenshtein_ratio_py(a, b), abs=1e-12)
+        row = got.iloc[i]
+        assert (row["name_a"], row["name_b"]) == (a, b)
+        if a is None:
+            continue
+        assert row["jw"] == pytest.approx(jaro_winkler(a, b), abs=1e-12)
+        assert row["lev_ratio"] == pytest.approx(levenshtein_ratio_py(a, b), abs=1e-12)
         sa, sb = set(a.split(" ")), set(b.split(" "))
         want_jc = len(sa & sb) / len(sa | sb) if (sa | sb) else 1.0
-        assert got["jc"][i] == pytest.approx(want_jc, abs=1e-12)
+        assert row["jaccard"] == pytest.approx(want_jc, abs=1e-12)
+    # strcmp95 empty-before-equality: two empty names score jw 0.0
+    assert tuple(got.iloc[4][["jw", "lev_ratio", "jaccard"]]) == (0.0, 1.0, 1.0)
+    assert tuple(got.iloc[5][["jw", "lev_ratio", "jaccard"]]) == (1.0, 1.0, 1.0)
 
 
 def test_similarity_mode_pipeline(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Engine defaults of session.build_session: the master's width, and the
-widths of cached tables.
+"""Engine defaults of session.build_session: the master's width, the
+driver memory, and the widths of cached tables.
 
 A persisted or localCheckpointed table is coalesced by AQE to the size of
 its data, like any shuffle, and a join against such a table still returns
@@ -106,3 +106,12 @@ def test_default_master_follows_cpu_affinity(monkeypatch):
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
     assert build_session("affinity")._options["spark.master"] == "local[3]"
+
+
+def test_driver_memory_is_fixed_unless_extra_conf_sets_it(monkeypatch):
+    """8g by default, whatever the environment says; extra_conf wins."""
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
+    assert build_session("mem")._options["spark.driver.memory"] == "8g"
+    two = build_session("mem", extra_conf={"spark.driver.memory": "2g"})
+    assert two._options["spark.driver.memory"] == "2g"

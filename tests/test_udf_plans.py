@@ -1,7 +1,8 @@
 """Plan shape of the two keyed Python stages: each runs ONCE, above its
 dedup. A filter on a pandas UDF's output is pushed below `distinct` and
 inferred across equi-joins, which re-runs the UDF over undeduplicated rows
-in extra stages; these tests pin the mapInPandas boundary that prevents it."""
+in extra stages; these tests pin the mapInPandas boundary that prevents it.
+The er_score_pairs contract query calls the same scoring kernel directly."""
 
 import re
 
@@ -115,3 +116,14 @@ def test_match_edges_run_one_python_stage_above_the_dedup(spark):
     want = {(a, b) for a, b in pairs if matches(names[a], names[b])}
     assert ("a", "d") not in want and ("a", "c") in want
     assert got == want
+
+
+def test_er_score_pairs_runs_the_one_scoring_kernel(spark, tmp_path):
+    import __spark_entry__ as entrymod
+
+    docs = pd.DataFrame({"doc_id": [0, 1, 2], "text": ["John Smith", "Jon Smith", None]})
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    nodes = _plan_nodes(entrymod.queries()["er_score_pairs"](spark, str(tmp_path)))
+    plan = "\n".join(line for _, _, line in nodes)
+    assert len([n for n in nodes if _PYTHON_NODE.match(n[1])]) == 1, plan
+    assert not any(n[1] == "ArrowEvalPython" for n in nodes), plan

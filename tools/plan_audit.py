@@ -30,7 +30,8 @@ AUDITED = [
     ("anti_join_customers_no_orders", ["Anti", "PushedFilters"]),
     ("dedup_exact_keep", ["LeftSemi|Semi"]),
     ("ann_cosine_topk", ["BroadcastNestedLoopJoin|BroadcastHashJoin|Cross"]),
-    ("er_score_pairs", ["ArrowEvalPython|BatchEvalPython"]),
+    # the one scoring kernel (mapInPandas), no Column pandas UDF
+    ("er_score_pairs", ["MapInPandas", "!ArrowEvalPython"]),
     ("window_orders_per_customer", ["Window"]),
     # asof: union-sort window — must contain NO join operator of any kind
     ("asof_last_click", ["Union", "Window", "!Join", "!CartesianProduct"]),
@@ -54,8 +55,8 @@ AUDITED = [
     ("dedup_simhash_pairs",
      ["ArrowEvalPython|BatchEvalPython",
       "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", "!CartesianProduct"]),
-    # r4: second key family — JVM soundex expr + metaphone Arrow UDF
-    ("er_blocking_keys_soundex", ["soundex", "ArrowEvalPython|BatchEvalPython"]),
+    # second key family — JVM soundex expr + the metaphone mapInPandas stage
+    ("er_blocking_keys_soundex", ["soundex", "MapInPandas"]),
     # r5: HLL registers — all-native exprs (xxhash64 + bin), partial max on
     # (group, bucket) before the shuffle; no UDF anywhere in the sketch
     ("sketch_hll_custkeys",
@@ -142,8 +143,8 @@ def main() -> int:
         "What to look for at 100 TB: `PushedFilters`/`ReadSchema` prove scan-level\n"
         "pushdown + pruning; `BroadcastHashJoin` proves dimension joins never\n"
         "shuffle the fact side; `WholeStageCodegen` spans show JVM-side fused\n"
-        "execution; `ArrowEvalPython` marks the (deliberate, batched) Python\n"
-        "islands.\n\n"
+        "execution; `ArrowEvalPython` and `MapInPandas` mark the (deliberate,\n"
+        "batched) Python islands.\n\n"
     )
     with open("PLANS.md", "w") as f:
         f.write(header + "\n".join(sections))
