@@ -116,6 +116,17 @@ def q_er_blocking_keys_soundex(spark, sf):
     return keys.orderBy("url", "block_key")
 
 
+def _cluster_docs(docs, keys):
+    """Cluster the documents sharing a block key: star edges over ``keys``
+    (url, block_key), CC over ``docs`` (one row per url), then each url's
+    cluster_id and cluster_size, ordered by url."""
+    labels, _ = connected_components(
+        star_edges(keys, "url"), vertices=docs.select("url"), id_col="url",
+        component_col="cluster_id",
+    )
+    return cluster_size(labels, "cluster_id").orderBy("url")
+
+
 def q_er_cluster_documents(spark, sf):
     docs = _t(spark, sf, "documents").select(
         F.col("doc_id").cast("string").alias("url"),
@@ -132,13 +143,7 @@ def q_er_cluster_documents(spark, sf):
     keys = dedup.swap_cached(
         "er_cluster_documents:keys", exploded_metaphone_keys(docs, id_col="url")
     )
-    edges = star_edges(keys, "url")
-    labels = connected_components(
-        edges, vertices=docs.select(F.col("url").alias("id")), id_col="id",
-        component_col="cluster_id",  # docs has one row per url
-    )
-    out = labels.withColumnRenamed("id", "url")
-    return cluster_size(out, "cluster_id").orderBy("url")
+    return _cluster_docs(docs, keys)
 
 
 def q_er_cluster_fingerprint(spark, sf):
@@ -166,13 +171,7 @@ def q_er_cluster_fingerprint(spark, sf):
             ).alias("block_key"),
         ),
     )
-    edges = star_edges(keys, "url")
-    labels = connected_components(
-        edges, vertices=docs.select(F.col("url").alias("id")), id_col="id",
-        component_col="cluster_id",  # docs has one row per url
-    )
-    out = labels.withColumnRenamed("id", "url")
-    return cluster_size(out, "cluster_id").orderBy("url")
+    return _cluster_docs(docs, keys)
 
 
 def q_er_score_pairs(spark, sf):

@@ -15,9 +15,16 @@ SoCC'14): alternate
   small-star(u): over edges oriented high->low, emit (v, m) for
                  v ∈ N(u) ∪ {u}, m = min(N(u) ∪ {u})
 
-until the edge set is stable — O(log n) rounds. Each round is two
-skew-safe groupBy+join min computations plus one distinct (see
-_large_star for why NOT windows); lineage is truncated per round with
+until a round leaves the edge set unchanged — O(log n) rounds. That
+fixpoint is the only stop rule: there every component is a star rooted at
+its minimum. An edge set with no ``dst`` that is also a ``src`` (a star
+forest) is NOT necessarily the fixpoint, because one leaf can point at two
+roots of the same component: after one round the path 1–3–4–5–6–2 is
+{(3, 1), (3, 2), (4, 1), (5, 2), (6, 2)}, and stopping there splits it into
+{1, 3, 4} and {2, 5, 6}.
+
+Each round is two skew-safe groupBy+join min computations plus one distinct
+(see _large_star for why NOT windows); lineage is truncated per round with
 ``localCheckpoint`` (on a production cluster: reliable checkpoint / Iceberg
 iteration table, SURVEY.md §7.4.9).
 """
@@ -29,16 +36,9 @@ from pyspark.sql import functions as F
 
 from fia_own_map_spark.session import release_checkpoints
 
-
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Undirected edge set, canonical (min, max) orientation, no self-loops."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+# Rounds before connected_components gives up: O(log n) rounds suffice, and
+# a 300-node path, the worst case for label propagation, takes 11.
+MAX_ROUNDS = 50
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -100,54 +100,41 @@ def connected_components(
     vertices: DataFrame | None = None,
     id_col: str = "id",
     component_col: str = "component",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Return (id, component) with component = min(id) of the component.
+) -> tuple[DataFrame, int]:
+    """Return ((id, component), rounds) with component = min(id) of the
+    component, and rounds the number of passes over the edge set (round 0's
+    small-star included), each one Spark job.
 
     edges: (src, dst). vertices (optional): one column `id_col` holding ONE
     row per id (a key projection); vertices with no edges come back as
     singletons (component = own id). The vertex table is not deduplicated
     here: a duplicated id comes back as duplicated label rows.
     """
-    # Round 0 IS a small-star pass, replacing the old _canonical step:
-    # _small_star's own orient + self-loop filter + distinct subsume
-    # canonicalization for ANY input (component-preserving by the Kiveris
-    # operator property), and on star-shaped inputs — blocking's
-    # star_edges, the engine's main producer — it performs the first real
-    # contraction for free, where the alternating loop's opening
-    # large-star is a near-identity pass (a star's members have no
-    # neighbor above them to re-point). Measured at sf0.1:
-    # 4 rounds -> 3, label hashes identical.
+    # Round 0 is a small-star pass: its orient + self-loop filter + distinct
+    # canonicalize ANY input (component-preserving by the Kiveris operator
+    # property), and on star-shaped inputs — blocking's star_edges, the
+    # engine's main producer — it performs the first real contraction,
+    # where the alternating loop's opening large-star is a near-identity
+    # pass (a star's members have no neighbor above them to re-point).
     # lazy localCheckpoint: the signature aggregation triggers materialization,
     # so each round costs ONE job (checkpoint + convergence check combined)
     cur = _small_star(edges.select("src", "dst")).localCheckpoint(eager=False)
     sig = _signature(cur)
+    rounds = 1
 
-    for _ in range(max_iterations):
-        if sig[0] == 0:
-            break
+    # The one stop rule: the edge set is empty, or a round left it
+    # unchanged. Not "no dst is also a src": that star forest can still
+    # give one leaf two roots of the same component (module docstring).
+    while sig[0] > 0:
+        if rounds > MAX_ROUNDS:
+            raise RuntimeError(f"connected_components did not converge in {MAX_ROUNDS} rounds")
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         nsig = _signature(nxt)
         release_checkpoints(cur)
-        cur = nxt
+        cur, rounds = nxt, rounds + 1
         if nsig == sig:
             break
         sig = nsig
-        # star-forest early exit: if no dst is also a src the edge set is a
-        # forest of stars, and small-star edges always point DOWNWARD
-        # (dst = min(N(v) ∪ v) < v), so every star is rooted at its
-        # component minimum — the fixpoint, one confirmation round early.
-        # One cheap semi-join probe per round buys back the whole
-        # large-star+small-star confirmation pass.
-        nonstar = (
-            nxt.join(nxt.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .limit(1)
-            .count()
-        )
-        if nonstar == 0:
-            break
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} rounds")
 
     # At fixpoint every edge is (node, component-min); roots map to themselves.
     # No .distinct() on the root projection: the groupBy-min below dedups
@@ -164,4 +151,4 @@ def connected_components(
             vertices.select(F.col(id_col)).join(labels, id_col, "left")
             .withColumn(component_col, F.coalesce(F.col(component_col), F.col(id_col)))
         )
-    return labels
+    return labels, rounds

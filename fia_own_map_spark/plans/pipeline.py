@@ -332,11 +332,11 @@ def run_pipeline(
         # ---- stage 3: connected components + refinement ------------------------
         def build_clusters():
             nonlocal labels
-            labels = connected_components(
-                edges, vertices=nodes.select(F.col("node_id").alias("id")),
-                id_col="id", component_col="node_cluster",
+            labels, rounds = connected_components(
+                edges, vertices=nodes.select("node_id"), id_col="node_id",
+                component_col="node_cluster",
             )
-            return label_records(records, labels.withColumnRenamed("id", "node_id"), pin), None
+            return label_records(records, labels, pin), {"cc_rounds": rounds}
 
         clusters = stage("clusters", upstream("edges"), build_clusters)
         _section("s3_cluster")

@@ -135,10 +135,9 @@ class IncrementalER:
             # one row per id: old nodes are keyed by node_id, new nodes are
             # distinct and anti-joined against the old ones
             vertices = slice_nodes.unionByName(new_nodes.select("node_id"))
-            labels = connected_components(
-                star_edges(slice_keys, "node_id"),
-                vertices=vertices.select(F.col("node_id").alias("id")),
-                id_col="id", component_col="node_cluster",
+            labels, _ = connected_components(
+                star_edges(slice_keys, "node_id"), vertices=vertices,
+                id_col="node_id", component_col="node_cluster",
             )
 
             # Keys before nodes, so that a replay rebuilds every uncommitted
@@ -146,7 +145,7 @@ class IncrementalER:
             # from `nodes`, which holds this batch's nodes only once the last
             # of the two commits. The nodes delta is materialized first: the
             # keys commit may compact the keys dirs it scans.
-            node_labels = labels.withColumnRenamed("id", "node_id").localCheckpoint(eager=True)
+            node_labels = labels.localCheckpoint(eager=True)
             self._append("keys", new_keys, batch_id)
             self._append("nodes", node_labels, batch_id)
             self._append(

@@ -36,8 +36,9 @@ def _keys(spark):
     return _docs(spark).select("url", F.explode("ks").alias("block_key"))
 
 
-def _collect_labels(df):
-    return sorted((r["id"], r["component"]) for r in df.collect())
+def _collect_labels(cc_result):
+    labels, _ = cc_result
+    return sorted((r["id"], r["component"]) for r in labels.collect())
 
 
 _WANT = [
