@@ -181,9 +181,9 @@ def q_er_score_pairs(spark, sf):
     a = docs.select(F.col("doc_id").alias("id_a"), F.col("name").alias("name_a"))
     b = docs.select((F.col("doc_id") - 1).alias("id_a"), F.col("doc_id").alias("id_b"),
                     F.col("name").alias("name_b"))
-    # the kernel directly, without score_pairs' name-pair dedup: here its
-    # shuffle and join-back cost more than the repeats save (sf0.01,
-    # local[4]: 0.83 s direct vs 1.50 s through score_pairs)
+    # the kernel directly, with no name-pair dedup, as score_pairs runs it
+    # on node pairs: a dedup's shuffle and join-back cost more than the
+    # repeats save (sf0.01, local[4]: 0.83 s direct vs 1.50 s deduped)
     return score_name_pairs(a.join(b, "id_a")).select(
         "id_a",
         "id_b",

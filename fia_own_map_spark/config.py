@@ -156,7 +156,6 @@ class EngineConfig:
     # keeps them off — the F1 criterion is "under the same blocking keys" as
     # the reference, which uses metaphone only (Name_Matching_opt.py:67-69).
     use_soundex_keys: bool = False
-    checkpoint_root: str = ".checkpoints"
 
 
 DEFAULT_CONFIG = EngineConfig()

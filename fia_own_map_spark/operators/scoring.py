@@ -14,18 +14,17 @@ it through ``score_pairs`` (below), the ``er_score_pairs`` contract query and
 bench.py call it directly.
 
 Scale design:
-  * **Dedup-before-UDF**: mentions repeat heavily (that is why they block
-    together), so scores are computed once per DISTINCT (name_a, name_b)
-    pair and broadcast-joined back onto the id-pair table. Python work is
-    bounded by distinct name pairs, not candidate pairs.
-  * The distinct name-pair table is round-robined to one partition per core
+  * **No name-pair dedup**: the pipeline blocks distinct (bucket, name)
+    nodes, so its distinct node pairs already are distinct name pairs;
+    each is joined to its two names once and scored once.
+  * The named pair table is round-robined to one partition per core
     (``session.per_core``) before the kernel — AQE's partition coalescing
     targets shuffle *bytes* and would otherwise under-parallelize a CPU-bound
     Python stage (few MB of strings can cost minutes of CPU).
   * The kernel runs in ``mapInPandas``: Catalyst would push the
-    ``match_edges`` threshold (a filter on UDF outputs) below the name-pair
-    dedup and run a pandas UDF over undeduplicated candidate pairs; it
-    pushes nothing through mapInPandas.
+    ``match_edges`` threshold (a filter on UDF outputs) below the pair
+    dedup and re-run a pandas UDF in extra stages; it pushes nothing
+    through mapInPandas.
   * Single pass: no count() of the scored table; the candidate-pair count is
     taken from the cheap pre-UDF pair table.
 """
@@ -54,7 +53,7 @@ def score_name_pairs(pairs: DataFrame) -> DataFrame:
     """Append jw / lev_ratio / jaccard to a frame with ``name_a`` / ``name_b``
     columns, through the one ``mapInPandas`` scoring kernel. Every row is
     kept; a row with a null name gets null scores. No dedup and no
-    repartition: callers that repeat name pairs dedup first (``score_pairs``).
+    repartition: no caller dedups name pairs; ``score_pairs`` adds ``per_core``.
     """
     # every field nullable, like a DDL schema string: what a Python stage
     # returns carries no non-null guarantee for the optimizer to rely on
@@ -73,6 +72,7 @@ def score_pairs(
 ) -> DataFrame:
     """Attach jw / lev_ratio / jaccard scores to candidate pairs.
 
+    ``pairs``: distinct (id_a, id_b), as ``candidate_pairs`` returns them.
     Returns (id_a, id_b, jw, lev_ratio, jaccard).
     """
     names = records.select(F.col(id_col).alias("_id"), F.col(name_col).alias("_name"))
@@ -83,16 +83,7 @@ def score_pairs(
             names.select(F.col("_id").alias("id_b"), F.col("_name").alias("name_b")), "id_b"
         )
     )
-
-    # score each distinct name pair exactly once (dedup-before-UDF), all three
-    # measures in ONE fused Arrow round-trip (vectorized python kernel)
-    name_pairs = score_name_pairs(
-        per_core(with_names.select("name_a", "name_b").distinct())
-    )
-    # No broadcast hint: the distinct-name-pair table grows with candidate
-    # diversity (unbounded at corpus scale) — let AQE pick broadcast vs
-    # shuffle join from the measured size at runtime.
-    return with_names.join(name_pairs, ["name_a", "name_b"]).select(
+    return score_name_pairs(per_core(with_names)).select(
         "id_a", "id_b", "jw", "lev_ratio", "jaccard"
     )
 

@@ -15,7 +15,7 @@ Run modes (EngineConfig.score_mode):
 Each stage is checkpointed with per-partition lineage metrics. A rerun
 reuses a stage's snapshot only while its fingerprint matches: the config
 fields the stage reads plus the snapshot id of the stage it reads (for
-``records``: the input's identity and ``use_html``). Any other change
+``records``: the input's identity). Any other change
 recomputes that stage and everything downstream (resume semantics,
 north_rule).
 
@@ -27,6 +27,7 @@ ingest (`streaming/ingest.py`) builds the same graph on each batch's slice.
 from __future__ import annotations
 
 import hashlib
+import os
 import time
 from typing import Callable
 
@@ -51,17 +52,14 @@ from fia_own_map_spark.session import release_checkpoints
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
 
 
-def stage0_records(pages: DataFrame, use_html: bool = True) -> DataFrame:
+def stage0_records(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> typed records with mentions,
     normalized names, blocking fingerprints, classes, comb_addr."""
-    df = pages
-    if use_html:
-        df = with_extracted_text(df, "html", "text")
-        # drop the html binary the moment text exists: Catalyst prunes it
-        # from the final plan anyway, but the explicit projection guarantees
-        # no downstream operator (or future edit) ever carries blob bytes
-        # past the extract UDF — the per-task memory bound at 100 KB+ html
-        df = df.drop("html")
+    # drop the html binary the moment text exists: Catalyst prunes it
+    # from the final plan anyway, but the explicit projection guarantees
+    # no downstream operator (or future edit) ever carries blob bytes
+    # past the extract UDF — the per-task memory bound at 100 KB+ html
+    df = with_extracted_text(pages, "html", "text").drop("html")
     df = parse_mentions(df, "text")
     df = with_initial_class(df, "owner1", "owner2")
     df = classify_own_type(df, "owner1", "owner2")
@@ -196,15 +194,15 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     cfg: EngineConfig = EngineConfig(),
-    job_id: str = "er_job",
-    checkpoints: CheckpointStore | None = None,
-    use_html: bool = True,
+    *,
+    checkpoints: CheckpointStore,
 ) -> tuple[DataFrame, dict]:
     """Run the full ER job; returns (clusters DataFrame, metrics dict).
 
+    ``checkpoints`` holds the stage snapshots; its directory name is the job id.
     clusters: url, cluster_id, own_type, simple_owners, comb_addr, cluster_size
     """
-    store = checkpoints or CheckpointStore(cfg.checkpoint_root, job_id)
+    job_id = os.path.basename(checkpoints.root)
     metrics: dict = {"job_id": job_id, "score_mode": cfg.score_mode, "stages": {}}
     section_walls: dict = {}
     metrics["section_walls"] = section_walls
@@ -236,7 +234,7 @@ def run_pipeline(
         sc.setJobDescription(name)
         n_pinned = len(pinned)
         try:
-            df, metrics["stages"][name] = store.stage(spark, name, fingerprint, build)
+            df, metrics["stages"][name] = checkpoints.stage(spark, name, fingerprint, build)
         finally:
             sc.setLocalProperty("spark.job.description", previous)
         # the tables the build cached are spent once its snapshot is committed
@@ -258,9 +256,9 @@ def run_pipeline(
         t0 = time.time()
         records = stage(
             "records",
-            {"input": _input_identity(pages), "use_html": use_html},
+            {"input": _input_identity(pages)},
             lambda: (
-                stage0_records(pages, use_html=use_html).select(
+                stage0_records(pages).select(
                     "url", "warc_ts", "lang", "owner1", "owner2", "simple_owners",
                     "tokens", "name_keys", "comb_addr", "initial_class", "own_type",
                     "rule_matched",

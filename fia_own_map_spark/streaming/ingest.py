@@ -45,6 +45,10 @@ from fia_own_map_spark.plans.pipeline import label_records, node_table, stage0_r
 from fia_own_map_spark.session import release_checkpoints
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
 
+# HLL precision of the ``hll_names`` state. A constant: the state does not
+# record p, and registers of two precisions would merge into garbage.
+HLL_P = 10
+
 # state table -> (schema of its read before the first batch, latest-wins key)
 _TABLES = {
     # what stage-3 labelling reads of a record
@@ -79,9 +83,8 @@ class IncrementalER:
     identically. Used from `foreachBatch` or called directly for tests.
     """
 
-    def __init__(self, spark: SparkSession, state_dir: str, hll_p: int = 10):
+    def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
-        self.hll_p = hll_p
         self.store = CheckpointStore(state_dir, "ingest")
 
     def state(self, table: str) -> DataFrame:
@@ -117,7 +120,7 @@ class IncrementalER:
 
         try:
             # stage 0 feeds the node table, the records delta and the sketch
-            records = pin(stage0_records(pages, use_html=True))
+            records = pin(stage0_records(pages))
             old_keys = pin(self.state("keys"))
             old_nodes = pin(self.state("nodes"))
             new_nodes = pin(node_table(records).join(old_nodes, "node_id", "left_anti"))
@@ -161,7 +164,7 @@ class IncrementalER:
             # per-batch write volume O(batch), not O(groups x 2^p)
             batch_regs = sketch.hll_registers(
                 records.filter(F.col("own_type") != CLASS_UNKNOWN),
-                ["own_type"], "simple_owners", p=self.hll_p,
+                ["own_type"], "simple_owners", p=HLL_P,
             )
             old_regs = self.state("hll_names")
             merged_regs = sketch.hll_merge(old_regs, batch_regs)
@@ -183,7 +186,7 @@ class IncrementalER:
         merged register state — answered from the sketch alone (bounded
         rows), never by re-scanning ingested pages."""
         return sketch.hll_estimate(
-            self.state("hll_names"), ["own_type"], self.hll_p, "est_distinct_names"
+            self.state("hll_names"), ["own_type"], HLL_P, "est_distinct_names"
         )
 
     def attach_stream(self, pages_stream: DataFrame, checkpoint: str):

@@ -47,8 +47,7 @@ def main() -> None:
     pages = spark.read.parquet(args.input)
     cfg = EngineConfig(score_mode=args.mode)
     store = CheckpointStore(args.checkpoints, args.job_id)
-    clusters, metrics = run_pipeline(spark, pages, cfg, job_id=args.job_id,
-                                     checkpoints=store)
+    clusters, metrics = run_pipeline(spark, pages, cfg, checkpoints=store)
     clusters.write.mode("overwrite").parquet(args.output)
     print(json.dumps(metrics))
     spark.stop()

@@ -10,7 +10,7 @@ from fia_own_map_spark.plans.pipeline import run_pipeline
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
 from fia_own_map_spark.sources.readers import WEB_PAGES_SCHEMA
 from fia_own_map_spark.sources.webpages import generate_web_pages
-from fia_own_map_spark.streaming.ingest import IncrementalER
+from fia_own_map_spark.streaming.ingest import HLL_P, IncrementalER
 
 
 def _sig(df):
@@ -87,10 +87,10 @@ def test_ingest_merged_hll_equals_whole_corpus(spark, tmp_path, monkeypatch):
         (r["own_type"], r["bucket"]): r["maxrank"]
         for r in inc.state("hll_names").collect()
     }
-    records = stage0_records(spark.createDataFrame(pages), use_html=True)
+    records = stage0_records(spark.createDataFrame(pages))
     whole_regs = sketch.hll_registers(
         records.filter(F.col("own_type") != -99),
-        ["own_type"], "simple_owners", p=inc.hll_p,
+        ["own_type"], "simple_owners", p=HLL_P,
     )
     whole = {
         (r["own_type"], r["bucket"]): r["maxrank"] for r in whole_regs.collect()
@@ -104,7 +104,7 @@ def test_ingest_merged_hll_equals_whole_corpus(spark, tmp_path, monkeypatch):
     whole_est = {
         r["own_type"]: r["est_distinct_names"]
         for r in sketch.hll_estimate(
-            whole_regs, ["own_type"], inc.hll_p, "est_distinct_names"
+            whole_regs, ["own_type"], HLL_P, "est_distinct_names"
         ).collect()
     }
     assert est == whole_est
@@ -174,7 +174,7 @@ def test_ingest_replay_after_partial_commit_matches_batch(spark, tmp_path, monke
     inc.process_batch(batches[1], 1)
     assert len(committed) == 3
 
-    seen = stage0_records(batches[0].unionByName(batches[1]), use_html=True)
+    seen = stage0_records(batches[0].unionByName(batches[1]))
     want_keys = blocking_keys(node_table(seen), id_col="node_id", class_col="match_bucket")
     got_keys = inc.state("keys").select("node_id", "block_key")
     assert {tuple(r) for r in got_keys.collect()} == {tuple(r) for r in want_keys.collect()}

@@ -1,8 +1,10 @@
 """Plan shape of the two keyed Python stages: each runs ONCE, above its
-dedup. A filter on a pandas UDF's output is pushed below `distinct` and
-inferred across equi-joins, which re-runs the UDF over undeduplicated rows
-in extra stages; these tests pin the mapInPandas boundary that prevents it.
-The er_score_pairs contract query calls the same scoring kernel directly."""
+dedup (metaphone: the fingerprint aggregate; scoring: the distinct pairs
+`candidate_pairs` returns, joined to their names once). A filter on a
+pandas UDF's output is pushed below `distinct` and inferred across
+equi-joins, which re-runs the UDF over undeduplicated rows in extra stages;
+these tests pin the mapInPandas boundary that prevents it. The
+er_score_pairs contract query calls the same scoring kernel directly."""
 
 import re
 
@@ -46,13 +48,19 @@ def _subtree(nodes, i):
     return out
 
 
+def _one_python_node(nodes):
+    """The index of the plan's only Python evaluation node."""
+    python = [i for i, n in enumerate(nodes) if _PYTHON_NODE.match(n[1])]
+    assert len(python) == 1, "\n".join(line for _, _, line in nodes)
+    return python[0]
+
+
 def _assert_one_python_stage_above(df, dedup_keys):
     """Exactly one Python evaluation node, with the dedup aggregate on
     ``dedup_keys`` below it and no Python node below that aggregate."""
     nodes = _plan_nodes(df)
     plan = "\n".join(line for _, _, line in nodes)
-    python = [i for i, n in enumerate(nodes) if _PYTHON_NODE.match(n[1])]
-    assert len(python) == 1, plan
+    python = _one_python_node(nodes)
     dedup = re.compile(
         r"HashAggregate\(keys=\[" + ", ".join(rf"{k}#\d+" for k in dedup_keys) + r"\]"
     )
@@ -60,7 +68,7 @@ def _assert_one_python_stage_above(df, dedup_keys):
     assert aggs, plan
     for i in aggs:
         assert not any(_PYTHON_NODE.match(n[1]) for n in _subtree(nodes, i)), plan
-    assert any(dedup.search(n[2]) for n in _subtree(nodes, python[0])), plan
+    assert any(dedup.search(n[2]) for n in _subtree(nodes, python)), plan
 
 
 def test_metaphone_keys_run_one_python_stage_above_the_dedup(spark):
@@ -103,7 +111,20 @@ def test_match_edges_run_one_python_stage_above_the_dedup(spark):
         score_pairs(spark.createDataFrame(pd.DataFrame(pairs, columns=["id_a", "id_b"])), records),
         cfg,
     )
-    _assert_one_python_stage_above(edges, ["name_a", "name_b"])
+    nodes = _plan_nodes(edges)
+    plan = "\n".join(line for _, _, line in nodes)
+    _one_python_node(nodes)
+    # scored as the pairs come: no aggregate keyed on a name, and the
+    # pairs ⋈ names ⋈ names subtree planned once, not once per consumer
+    assert not any(
+        re.search(r"Aggregate\(keys=\[[^\]]*name_[ab]#", line) for _, _, line in nodes
+    ), plan
+    for key in ("id_a", "id_b"):
+        joins = [
+            n for n in nodes
+            if n[1].endswith("Join") and re.search(rf"\[{key}#\d+\], \[{key}#\d+\]", n[2])
+        ]
+        assert len(joins) == 1, plan
 
     def matches(x, y):
         return (
@@ -125,5 +146,5 @@ def test_er_score_pairs_runs_the_one_scoring_kernel(spark, tmp_path):
     docs.to_parquet(tmp_path / "documents.parquet", index=False)
     nodes = _plan_nodes(entrymod.queries()["er_score_pairs"](spark, str(tmp_path)))
     plan = "\n".join(line for _, _, line in nodes)
-    assert len([n for n in nodes if _PYTHON_NODE.match(n[1])]) == 1, plan
+    _one_python_node(nodes)
     assert not any(n[1] == "ArrowEvalPython" for n in nodes), plan

@@ -19,6 +19,10 @@ import __spark_entry__ as entrymod
 from fia_own_map_spark.session import build_session
 
 CODEGEN = r"\*\(\d+\)"  # whole-stage-codegen span marker in simple explain
+# expression and plan ids are session-wide counters: one plan change
+# renumbers every later query, so PLANS.md carries them masked (the checks
+# read the raw text)
+RUN_IDS = re.compile(r"(#|plan_id=)\d+")
 
 AUDITED = [
     # (query, expectations — regex over formatted + simple explain output)
@@ -134,7 +138,8 @@ def main() -> int:
                 failures += 1
         # column pruning sanity: ReadSchema should not include every column
         sections.append(
-            f"## {name}\n\nChecks:\n" + "\n".join(checks) + "\n\n```\n" + txt + "```\n"
+            f"## {name}\n\nChecks:\n" + "\n".join(checks) + "\n\n```\n"
+            + RUN_IDS.sub(r"\1N", txt) + "```\n"
         )
         print(f"{name}: " + ("OK" if all("✓" in c for c in checks) else "CHECK FAILED"))
 
