@@ -393,12 +393,10 @@ def q_media_probe_mixed(spark, sf):
                 rows.append((str(did), blob))
             yield pd.DataFrame(rows, columns=["media_id", "blob"])
 
-    from fia_own_map_spark.operators.multimodal import media_probe
-
     blobs = _t(spark, sf, "documents").select("doc_id").mapInPandas(
         _gen, "media_id string, blob binary"
     )
-    return media_probe(blobs).select(
+    return mm.media_probe(blobs).select(
         F.col("media_id").cast("long").alias("doc_id"),
         "kind", "width", "height", "sample_rate", "n_channels",
         "duration_s", "detail", "n_bytes",

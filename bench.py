@@ -8,13 +8,12 @@ order:
 
 1. The headline suite on ``local[<cpus>]``, ``<cpus>`` being the CPUs this
    process may run on: one cold pass, then WARM_REPS warm passes over the
-   same queries, then the codec row and the ANN recall/candidate-fraction
-   sweep. Every query, the session warm-up, the codec block and the ANN
-   block run in a perfbench tracer span, so every Spark job of the session
-   carries its span's label in the session's event log. The log is reduced
-   into the ``ledger`` key: per query, the warm wall median and range, and
-   the per-rep jobs, tasks, executor run and CPU time and Python-worker init
-   and run time.
+   same queries, then the ANN recall/candidate-fraction sweep. Every query,
+   the session warm-up and the ANN block run in a perfbench tracer span, so
+   every Spark job of the session carries its span's label in the session's
+   event log. The log is reduced into the ``ledger`` key: per query, the
+   warm wall median and range, and the per-rep jobs, tasks, executor run
+   and CPU time and Python-worker init and run time.
 2. The scoring-kernel N -> 4N pair, with 4N the largest multiple of 4 CPUs
    available. ROUNDS rounds each run the two legs back to back, alternating
    which leg goes first; each leg is a subprocess pinned with ``taskset`` to
@@ -137,9 +136,9 @@ def _warm_up(spark, cores: int) -> None:
 
 
 def phase_a(sf_dir: str, run_dir: str) -> dict:
-    """Headline suite (one cold pass, WARM_REPS warm passes), codec row and
-    ANN sweep in one traced session. Returns the host fingerprint, the
-    ledger, the cold pass's wall, the ANN recall dict and the codec dict."""
+    """Headline suite (one cold pass, WARM_REPS warm passes) and ANN sweep
+    in one traced session. Returns the host fingerprint, the ledger, the
+    cold pass's wall and the ANN recall dict."""
     import __spark_entry__ as entrymod
 
     spark = start_spark(run_dir, trace=True)
@@ -162,8 +161,6 @@ def phase_a(sf_dir: str, run_dir: str) -> dict:
                     for name in HEADLINE:
                         with tracer.span(name):
                             _materialize(qs[name](spark, sf_dir))
-        with tracer.span("codec"):
-            codec = codec_bench(spark, cpus, tracer)
         with tracer.span("ann_recall"):
             recall = ann_recall(qs, spark, sf_dir)
     finally:
@@ -175,7 +172,6 @@ def phase_a(sf_dir: str, run_dir: str) -> dict:
         "ledger": build_ledger(tracer, groups),
         "cold_total": round(tracer.by_name("cold")[0].wall_s, 3),
         "recall": recall,
-        "codec": codec,
     }
 
 
@@ -204,45 +200,6 @@ def build_ledger(tracer: tracing.Tracer, groups: dict) -> dict:
         "jobs": jobs,
         "job_coverage": round((jobs - unlabelled) / jobs, 4) if jobs else 0.0,
     }
-
-
-def codec_bench(spark, cpus: int, tracer: tracing.Tracer) -> dict:
-    """Image-decode throughput through the real Spark surface (mapInPandas
-    decode_and_featurize): deterministic 96x96 RGB PNG corpus, half
-    filter-0 (None) and half filter-4 (Paeth) scanlines, so the wavefront
-    unfilter path is on the clock. Reports the warm repeat — the corpus is
-    tiny, so rep 1 would be all scheduling."""
-    import numpy as np
-    import pandas as pd
-
-    from fia_own_map_spark.operators import multimodal
-
-    n_images, side = 192, 96
-    yy, xx = np.mgrid[0:side, 0:side]
-    blobs = []
-    for i in range(n_images):
-        img = np.stack(
-            [
-                (128 + 100 * np.sin(xx / (3 + (i + b) % 7) + b) * np.cos(yy / (4 + i % 5)))
-                .astype(np.uint8)
-                for b in range(3)
-            ],
-            axis=2,
-        )
-        blobs.append((f"img{i}", multimodal.encode_png(img, filter_type=4 if i % 2 else 0)))
-    df = spark.createDataFrame(pd.DataFrame(blobs, columns=["media_id", "blob"])).repartition(
-        cpus
-    )
-    for _ in range(2):
-        with tracer.span("decode") as rep:
-            _materialize(multimodal.decode_and_featurize(df, codec="auto"))
-    out = {
-        "codec_images_per_sec": round(n_images / rep.wall_s, 1),
-        "codec_px_per_sec": round(n_images * side * side / rep.wall_s, 0),
-    }
-    log(f"  [A] codec decode: {out['codec_images_per_sec']} images/s "
-        f"({n_images} x {side}x{side} PNG, half Paeth)")
-    return out
 
 
 def ann_recall(qs, spark, sf_dir: str) -> dict:
@@ -636,15 +593,6 @@ paths trade recall for never shuffling the corpus at query time. The
 synthetic embeddings' true top-10 neighbours sit at mean cosine ~0.35, so
 sign-LSH selectivity is intrinsically weak on this table.
 """
-    codec = result.get("codec")
-    if codec:
-        md += f"""
-## Codec decode throughput (Spark mapInPandas surface)
-
-{codec.get('codec_images_per_sec')} images/s ({codec.get('codec_px_per_sec')}
-px/s) on a 192 x 96x96 RGB PNG corpus, alternating filter-0 and filter-4
-(Paeth) scanlines, through `decode_and_featurize` (warm repeat).
-"""
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)
@@ -694,7 +642,6 @@ def main() -> None:
             "queries_warm": {n: q["wall_s"] for n, q in per_query.items()},
             "ledger": a["ledger"],
             "ann_recall_at_10": a["recall"],
-            "codec": a["codec"],
         })
         emit("phase_a")
         RESULT["scaling"] = run_scaling(run_dir, len(os.sched_getaffinity(0)))

@@ -1,56 +1,32 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal (image/audio/video) header probe over binary media columns.
 
-Media are opaque ``binary`` columns with typed metadata; all operators run
-as Arrow-batched ``mapInPandas`` over the blob column (the Spark-side shape
-— schema, batching, per-partition flow — is identical for any codec).
+Media are opaque ``binary`` columns. ``media_probe`` is the ffprobe analog:
+one Arrow-batched ``mapInPandas`` pass over a MIXED media column returning
+typed metadata (kind / dims / rate / channels / duration / detail) from
+headers alone; ``probe_media`` is its per-blob magic-byte dispatch. No
+payload byte is decoded.
 
-Codecs in this container:
-  * ``bmp``  — REAL decoder/encoder for 24-bit uncompressed BMP (pure byte
-    parsing, no external libs): decode -> numpy (h, w, 3), nearest-neighbor
-    resize, channel statistics.
-  * ``png``  — REAL decoder/encoder (stdlib ``zlib`` inflate + vectorized
-    scanline unfiltering, no external libs): color types 0/2/3/4/6, bit
-    depths 1/2/4/8/16 (16-bit folds to its high byte, the png_set_strip_16
-    convention), both non-interlaced and Adam7-interlaced.
-    Differential-tested against the JVM's independent ``javax.imageio``
-    decoder on real OS PNG files including libpng's own pngtest.png
-    (tests/test_ops.py).
-  * ``jpeg`` — REAL decoder for baseline AND progressive JPEG (pure numpy
-    Huffman + successive-approximation scans + dequant + vectorized IDCT +
-    fancy chroma upsample; see ``jpeg.py``), differential-tested against
-    javax.imageio / libjpeg within the T.81 conformance tolerance. Adobe
-    APP14 transform=0 (stored-RGB) is honored. Only arithmetic coding,
-    12-bit precision and 4-component CMYK/YCCK raise NotImplementedError.
-  * ``wav``  — REAL decoder/encoder for RIFF/WAVE audio: PCM (8/16/24/32-bit
-    int + 32/64-bit float, any channel count, incl. WAVE_FORMAT_EXTENSIBLE
-    wrappers) AND compressed sample decode for G.711 mu-law (fmt 7) /
-    A-law (fmt 6) and IMA ADPCM (fmt 0x11, block-vectorized); plus
-    ``audio_featurize`` (duration / RMS / zero-crossing rate / peak per
-    channel). Differential-tested against CPython's independent
-    ``audioop`` C implementations.
-  * ``fake`` — deterministic synthetic blob (``b"IMG|w|h|payload"``) for
-    plumbing tests.
-  * ``avi``  — REAL container parser for MJPEG AVI video (RIFF tree walk,
-    ``movi`` frame chunks, each frame decoded with the baseline-JPEG
-    decoder); ``video_frame_features`` samples every Nth frame.
-  * ``mp3`` — REAL header/metadata scanner (``mp3_meta`` /
-    ``mp3_metadata``): ID3v2 skip, MPEG-1/2/2.5 Layer I-III frame walk
-    with resync, Xing/VBR detection — version / rate / channels / frames /
-    bitrate / duration without decoding a sample (the realistic first pass
-    over a web audio corpus).
-  * ``aac``  — REAL ADTS header scanner (``aac_adts_meta``): profile /
-    rate / channels / raw-data-block-accurate duration.
-  * ``h264`` — REAL Annex-B SPS parser (``h264_sps_meta``): exp-Golomb
-    SPS decode per ISO 14496-10 §7.3.2.1 — profile / level / chroma format
-    / exact cropped dimensions, spec-vector tested.
-    Sample DECODE for MP3/AAC and inter-frame video codecs remains STUBBED
-    with NotImplementedError: real deployments drop ffmpeg into the decode
-    dispatch; nothing else changes.
+Header scanners:
+  * ``png`` / ``bmp`` — dimensions from the fixed IHDR / BITMAPINFOHEADER.
+  * ``jpeg`` — dimensions from the SOF marker (``_jpeg_dims``).
+  * ``wav`` — RIFF chunk walk: rate / channels / bit depth, and duration
+    from the data size, with IMA-ADPCM frames-per-block and the ``fact``
+    chunk's frame count for compressed formats.
+  * ``avi`` — dimensions / frame count / duration from the ``avih`` header.
+  * ``mp3`` — ``mp3_meta``: ID3v2 skip, MPEG-1/2/2.5 Layer I-III frame walk
+    with resync, Xing/VBR detection.
+  * ``aac`` — ``aac_adts_meta``: ADTS profile / rate / channels /
+    raw-data-block-accurate duration.
+  * ``h264`` — ``h264_sps_meta``: Annex-B SPS exp-Golomb parse per ISO
+    14496-10 §7.3.2.1 — profile / level / chroma format / cropped dims.
+  * ``fake`` — the synthetic ``b"IMG|w|h|payload"`` blob.
 
-Blob auto-detection by magic bytes (``codec="auto"``). ``media_probe`` is
-the unified ffprobe-analog: one mapInPandas pass over a MIXED media column
-returning typed metadata (kind/dims/rate/channels/duration) from headers
-alone — zero payload bytes decoded.
+Writers (``encode_bmp``, ``encode_png``, ``encode_wav``,
+``encode_avi_mjpeg``, ``make_fake_image``) build the probe's test inputs
+and the ``media_probe_mixed`` contract query's blobs.
+
+Payload decoding (pixels, audio samples, video frames) is retired: no
+query, pipeline stage or job ran it.
 """
 
 from __future__ import annotations
@@ -63,9 +39,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     StringType,
@@ -73,19 +46,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-IMAGE_META_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
-
 
 # ---------------------------------------------------------------------------
-# real codec: 24-bit uncompressed BMP (public format, pure byte parsing)
+# writer: 24-bit uncompressed BMP
 # ---------------------------------------------------------------------------
 def encode_bmp(img: np.ndarray) -> bytes:
     """(h, w, 3) uint8 RGB -> 24-bit BMP bytes (BITMAPINFOHEADER, bottom-up,
@@ -102,258 +65,15 @@ def encode_bmp(img: np.ndarray) -> bytes:
     return header + info + rows.tobytes()
 
 
-def decode_bmp(blob: bytes) -> np.ndarray:
-    """24-bit uncompressed BMP bytes -> (h, w, 3) uint8 RGB. Handles
-    bottom-up (positive height) and top-down (negative height) files."""
-    if blob[:2] != b"BM":
-        raise ValueError("not a BMP blob")
-    data_offset = struct.unpack_from("<I", blob, 10)[0]
-    header_size = struct.unpack_from("<I", blob, 14)[0]
-    if header_size < 40:
-        raise NotImplementedError("BITMAPCOREHEADER BMPs not supported")
-    w, h = struct.unpack_from("<ii", blob, 18)
-    planes, bpp = struct.unpack_from("<HH", blob, 26)
-    compression = struct.unpack_from("<I", blob, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(f"only 24-bit uncompressed BMP (got bpp={bpp}, comp={compression})")
-    top_down = h < 0
-    h = abs(h)
-    row_size = (w * 3 + 3) & ~3
-    px = np.frombuffer(blob, dtype=np.uint8, count=row_size * h, offset=data_offset)
-    rows = px.reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)
-    if not top_down:
-        rows = rows[::-1]
-    return rows[:, :, ::-1].copy()  # BGR -> RGB
-
-
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize, pure numpy (pixel-center sampling)."""
-    h, w = img.shape[:2]
-    ys = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
-    xs = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
-    return img[ys][:, xs]
-
-
 # ---------------------------------------------------------------------------
-# real codec: PNG (RFC 2083 / ISO 15948) — stdlib zlib + numpy unfiltering
+# writer: PNG (RFC 2083 / ISO 15948), stdlib zlib
 # ---------------------------------------------------------------------------
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# color type -> samples per pixel (palette expands after unfiltering)
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-# Adam7 interlace passes: (x_origin, y_origin, x_stride, y_stride)
-_ADAM7_PASSES = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _png_chunks(blob: bytes) -> Iterator[tuple[bytes, bytes]]:
-    pos = 8
-    while pos + 8 <= len(blob):
-        length, ctype = struct.unpack_from(">I4s", blob, pos)
-        data = blob[pos + 8 : pos + 8 + length]
-        yield ctype, data
-        pos += 12 + length  # len + type + data + crc
-        if ctype == b"IEND":
-            return
-
-
-def _samples_8bit(raw: np.ndarray, bit_depth: int, width: int, samples: int) -> np.ndarray:
-    """Unfiltered scanline bytes -> one uint8 sample per entry. 16-bit
-    samples (big-endian) fold to their high byte — the standard 8-bit
-    ingest convention (what PIL's I;16->L and libpng's png_set_strip_16
-    do); sub-byte depths unpack MSB-first."""
-    if bit_depth == 16:
-        return raw[:, : width * samples * 2][:, 0::2]
-    return _unpack_bits(raw, bit_depth, width, samples)
-
-
-def _unpack_bits(raw: np.ndarray, bit_depth: int, width: int, samples: int) -> np.ndarray:
-    """Sub-byte samples (bit depth 1/2/4) -> one uint8 sample per entry.
-    ``raw`` is (h, rowbytes); returns (h, width*samples)."""
-    if bit_depth == 8:
-        return raw[:, : width * samples]
-    per_byte = 8 // bit_depth
-    shifts = np.arange(per_byte - 1, -1, -1, dtype=np.uint8) * bit_depth
-    mask = (1 << bit_depth) - 1
-    # (h, rowbytes, per_byte) -> (h, rowbytes*per_byte), MSB-first packing
-    expanded = (raw[:, :, None] >> shifts[None, None, :]) & mask
-    return expanded.reshape(raw.shape[0], -1)[:, : width * samples]
-
-
-def _wavefront_unfilter(
-    filt: np.ndarray, kinds: np.ndarray, prevrow: np.ndarray, bpp: int
-) -> np.ndarray:
-    """Exact Average/Paeth unfilter for a RUN of consecutive filter-3/4
-    rows, scanned along anti-diagonals of the (row, pixel) grid: a cell
-    needs its left, up and up-left neighbors, all of which sit on earlier
-    diagonals, so the per-spec sequential recurrence vectorizes across each
-    diagonal (and across the bpp byte-channels, which are mutually
-    independent). Python-level steps: rows + pixels - 1, not rows * pixels
-    — the r3 verdict's Paeth-loop item. Bit-exact vs the per-byte
-    reference rows (_paeth_row/_avg_row, kept as the test oracle)."""
-    n_rows, rowbytes = filt.shape
-    n_px = rowbytes // bpp
-    f16 = filt.reshape(n_rows, n_px, bpp).astype(np.int16)
-    # padded grid: row 0 = previous reconstructed scanline, col 0 = the
-    # virtual zero pixel (a = c = 0 at the row start, per spec)
-    grid = np.zeros((n_rows + 1, n_px + 1, bpp), dtype=np.int16)
-    grid[0, 1:] = prevrow.reshape(n_px, bpp)
-    is_paeth = kinds == 4
-    for d in range(n_rows + n_px - 1):
-        r_lo, r_hi = max(0, d - n_px + 1), min(n_rows - 1, d)
-        rs = np.arange(r_lo, r_hi + 1)
-        ps = d - rs
-        a = grid[rs + 1, ps]  # left
-        b = grid[rs, ps + 1]  # up
-        c = grid[rs, ps]      # up-left
-        pa, pb, pc = np.abs(b - c), np.abs(a - c), np.abs(a + b - 2 * c)
-        pred_paeth = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-        pred = np.where(is_paeth[rs, None], pred_paeth, (a + b) >> 1)
-        grid[rs + 1, ps + 1] = (f16[rs, ps] + pred) & 0xFF
-    return grid[1:, 1:].astype(np.uint8).reshape(n_rows, rowbytes)
-
-
-def _paeth_row(filt: np.ndarray, prev: np.ndarray, bpp: int) -> np.ndarray:
-    """Paeth-unfilter one scanline (int16 in/out, sequential in x)."""
-    out = np.empty_like(filt)
-    for x in range(len(filt)):
-        a = out[x - bpp] if x >= bpp else 0
-        b = prev[x]
-        c = prev[x - bpp] if x >= bpp else 0
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-        out[x] = (filt[x] + pred) & 0xFF
-    return out
-
-
-def _avg_row(filt: np.ndarray, prev: np.ndarray, bpp: int) -> np.ndarray:
-    out = np.empty_like(filt)
-    for x in range(len(filt)):
-        a = out[x - bpp] if x >= bpp else 0
-        out[x] = (filt[x] + ((a + prev[x]) >> 1)) & 0xFF
-    return out
-
-
-def _png_unfilter(data: bytes, h: int, rowbytes: int, bpp: int) -> np.ndarray:
-    """Inflated IDAT stream -> (h, rowbytes) uint8 recon array.
-
-    Filter 0 (None) and 2 (Up) are fully vectorized; 1 (Sub) is a cumsum
-    per bpp-lane (mod-256 via int32 cumsum); 3/4 (Average/Paeth) are
-    sequential per spec, so maximal RUNS of consecutive 3/4 rows go
-    through the anti-diagonal wavefront (_wavefront_unfilter) — no
-    per-byte Python loop anywhere on the decode path."""
-    arr = np.frombuffer(data, dtype=np.uint8, count=h * (rowbytes + 1)).reshape(
-        h, rowbytes + 1
-    )
-    ftypes = arr[:, 0]
-    if (ftypes > 4).any():
-        bad = int(np.argmax(ftypes > 4))
-        raise ValueError(f"bad PNG filter type {ftypes[bad]} at row {bad}")
-    recon = np.empty((h, rowbytes), dtype=np.uint8)
-    prev = np.zeros(rowbytes, dtype=np.int16)
-    y = 0
-    while y < h:
-        f = ftypes[y]
-        row = arr[y, 1:]
-        if f in (3, 4) and rowbytes % bpp == 0:
-            run_end = y
-            while run_end + 1 < h and ftypes[run_end + 1] in (3, 4):
-                run_end += 1
-            recon[y : run_end + 1] = _wavefront_unfilter(
-                arr[y : run_end + 1, 1:], ftypes[y : run_end + 1], prev, bpp
-            )
-            y = run_end + 1
-            prev = recon[y - 1].astype(np.int16)
-            continue
-        if f == 0:
-            rec = row
-        elif f == 1:
-            # bpp divides rowbytes for every supported depth/type combo
-            lanes = row.reshape(-1, bpp).astype(np.int32)
-            rec = (np.cumsum(lanes, axis=0) % 256).astype(np.uint8).reshape(-1)
-        elif f == 2:
-            rec = ((row.astype(np.int16) + prev) & 0xFF).astype(np.uint8)
-        elif f == 3:
-            rec = _avg_row(row.astype(np.int16), prev, bpp).astype(np.uint8)
-        else:
-            rec = _paeth_row(row.astype(np.int16), prev, bpp).astype(np.uint8)
-        recon[y] = rec
-        prev = recon[y].astype(np.int16)
-        y += 1
-    return recon
-
-
-def decode_png(blob: bytes) -> np.ndarray:
-    """PNG bytes -> (h, w, channels) uint8, channels in {1,2,3,4} (gray,
-    gray+alpha, RGB, RGBA; palette expands to RGB/RGBA). Supports color
-    types 0/2/3/4/6 at bit depths 1/2/4/8/16 (16-bit strips to the high
-    byte), non-interlaced or Adam7-interlaced."""
-    if blob[:8] != _PNG_SIG:
-        raise ValueError("not a PNG blob")
-    ihdr = palette = trns = None
-    idat_parts: list[bytes] = []
-    for ctype, data in _png_chunks(blob):
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"PLTE":
-            palette = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"tRNS":
-            trns = np.frombuffer(data, dtype=np.uint8)
-        elif ctype == b"IDAT":
-            idat_parts.append(data)
-    if ihdr is None or not idat_parts:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w, h, bit_depth, color_type, comp, filt_method, interlace = ihdr
-    if comp != 0 or filt_method != 0:
-        raise ValueError("bad PNG compression/filter method")
-    if interlace not in (0, 1):
-        raise ValueError(f"bad PNG interlace method {interlace}")
-    if color_type not in _PNG_CHANNELS:
-        raise ValueError(f"bad PNG color type {color_type}")
-    samples = _PNG_CHANNELS[color_type]
-    bits_per_px = bit_depth * samples
-    bpp = max(1, bits_per_px // 8)
-    inflated = zlib.decompress(b"".join(idat_parts))
-    if interlace == 0:
-        rowbytes = (w * bits_per_px + 7) // 8
-        raw = _png_unfilter(inflated, h, rowbytes, bpp)
-        px = _samples_8bit(raw, bit_depth, w, samples)
-    else:  # Adam7: 7 independently-filtered sub-images, scattered by stride
-        full = np.zeros((h, w, samples), dtype=np.uint8)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7_PASSES:
-            wp = (w - x0 + dx - 1) // dx
-            hp = (h - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
-            rb = (wp * bits_per_px + 7) // 8
-            span = hp * (rb + 1)
-            sub = _png_unfilter(inflated[pos : pos + span], hp, rb, bpp)
-            pos += span
-            sub_px = _samples_8bit(sub, bit_depth, wp, samples)
-            full[y0::dy, x0::dx, :] = sub_px.reshape(hp, wp, samples)
-        px = full.reshape(h, w * samples)
-    if color_type == 3:  # palette -> RGB(A)
-        if palette is None:
-            raise ValueError("palette PNG missing PLTE")
-        idx = px.reshape(h, w)
-        rgb = palette[idx]
-        if trns is not None:
-            alpha = np.full(len(palette), 255, dtype=np.uint8)
-            alpha[: len(trns)] = trns
-            return np.dstack([rgb, alpha[idx]])
-        return rgb
-    if bit_depth < 8:  # scale sub-byte gray to full 0..255 range
-        px = (px.astype(np.uint16) * 255 // ((1 << bit_depth) - 1)).astype(np.uint8)
-    return px.reshape(h, w, samples)
 
 
 def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
     """(h, w, {1,3,4}) or (h, w) uint8 -> 8-bit non-interlaced PNG bytes.
-    ``filter_type`` applies one filter (0/1/2/3/4) to every scanline —
-    exercised by the round-trip tests to cover all unfilter branches."""
+    ``filter_type`` applies one filter (0/1/2/3/4) to every scanline."""
     if img.ndim == 2:
         img = img[:, :, None]
     h, w, c = img.shape
@@ -403,184 +123,8 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# real codec: RIFF/WAVE audio (PCM + G.711 + IMA ADPCM sample decode)
+# writer: RIFF/WAVE 16-bit PCM audio
 # ---------------------------------------------------------------------------
-def _g711_tables() -> tuple[np.ndarray, np.ndarray]:
-    """(mu-law, A-law) 256-entry code -> int16 expansion tables, computed
-    from the ITU-T G.711 segment formulas (not vendored): mu-law is the
-    biased 8-segment log curve (bias 0x84), A-law the 13-segment curve with
-    the 0x55 toggle. Differential-tested code-for-code against CPython
-    audioop's independent C tables (tests/test_ops.py)."""
-    codes = np.arange(256, dtype=np.int32)
-    u = ~codes & 0xFF
-    t = (((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 0x07)
-    ulaw = np.where(u & 0x80, 0x84 - t, t - 0x84).astype(np.int16)
-    a = codes ^ 0x55
-    seg = (a >> 4) & 0x07
-    mant = a & 0x0F
-    t = np.where(seg == 0, (mant << 4) + 8, ((mant << 4) + 0x108) << np.maximum(seg - 1, 0))
-    alaw = np.where(a & 0x80, t, -t).astype(np.int16)
-    return ulaw, alaw
-
-
-_ULAW2LIN, _ALAW2LIN = _g711_tables()
-
-# IMA/DVI ADPCM quantizer tables (IMA ADPCM reference algorithm; also
-# Microsoft WAVE_FORMAT_IMA_ADPCM = 0x11)
-_IMA_STEPS = np.array(
-    [7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37, 41,
-     45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173, 190,
-     209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658, 724,
-     796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066, 2272,
-     2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132,
-     7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818, 18500,
-     20350, 22385, 24623, 27086, 29794, 32767], dtype=np.int32)
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32)
-
-
-def _ima_decode_blocks(pred0: np.ndarray, idx0: np.ndarray, nibbles: np.ndarray) -> np.ndarray:
-    """Vectorized-across-blocks IMA ADPCM core: every block is an
-    independent predictor chain, so the sequential recurrence runs once
-    over nibble POSITIONS while numpy does all blocks per step (the same
-    shape as the PNG wavefront unfilter — O(samples_per_block) python
-    steps regardless of file length).
-
-    pred0/idx0: (n_blocks,) initial predictor / step index per block;
-    nibbles: (n_blocks, n) uint8 codes. Returns (n_blocks, n) int16."""
-    n_blocks, n = nibbles.shape
-    out = np.empty((n_blocks, n), dtype=np.int16)
-    pred = pred0.astype(np.int32).copy()
-    idx = np.clip(idx0.astype(np.int32), 0, 88)
-    for j in range(n):
-        nib = nibbles[:, j].astype(np.int32)
-        step = _IMA_STEPS[idx]
-        diff = (step >> 3) + np.where(nib & 1, step >> 2, 0)
-        diff += np.where(nib & 2, step >> 1, 0) + np.where(nib & 4, step, 0)
-        pred = np.clip(pred + np.where(nib & 8, -diff, diff), -32768, 32767)
-        out[:, j] = pred
-        idx = np.clip(idx + _IMA_INDEX[nib & 7], 0, 88)
-    return out
-
-
-def _decode_ima_adpcm(data: bytes, n_ch: int, block_align: int) -> np.ndarray:
-    """WAV IMA ADPCM (format 0x11) data chunk -> (n_frames, n_ch) int16.
-
-    Block layout per the Microsoft multimedia registration: per-channel
-    4-byte header (int16 predictor = first output sample, uint8 step
-    index, reserved), then 4-byte-per-channel interleaved words, low
-    nibble first."""
-    if block_align <= 4 * n_ch:
-        raise ValueError("IMA ADPCM block_align too small for headers")
-    if (block_align - 4 * n_ch) % (4 * n_ch):
-        raise NotImplementedError("non-word-aligned IMA ADPCM block layout")
-    n_blocks = len(data) // block_align
-    if n_blocks == 0:
-        return np.empty((0, n_ch), dtype=np.int16)
-    arr = np.frombuffer(data[: n_blocks * block_align], dtype=np.uint8).reshape(
-        n_blocks, block_align
-    )
-    hdr = arr[:, : 4 * n_ch].reshape(n_blocks, n_ch, 4)
-    pred0 = (hdr[:, :, 0].astype(np.uint16) | (hdr[:, :, 1].astype(np.uint16) << 8)).view(
-        np.int16
-    )
-    idx0 = hdr[:, :, 2]
-    # words: (n_blocks, n_groups, n_ch, 4 bytes); group g word c belongs to channel c
-    words = arr[:, 4 * n_ch :].reshape(n_blocks, -1, n_ch, 4)
-    spb = words.shape[1] * 8 + 1  # samples per block per channel (incl. header sample)
-    chans = []
-    for c in range(n_ch):
-        byts = words[:, :, c, :].reshape(n_blocks, -1)
-        nib = np.empty((n_blocks, byts.shape[1] * 2), dtype=np.uint8)
-        nib[:, 0::2] = byts & 0x0F
-        nib[:, 1::2] = byts >> 4
-        decoded = _ima_decode_blocks(pred0[:, c], idx0[:, c], nib)
-        chans.append(np.concatenate([pred0[:, c : c + 1], decoded], axis=1))
-    # (n_blocks, spb, n_ch) -> interleaved frames
-    return np.stack(chans, axis=2).reshape(n_blocks * spb, n_ch)
-
-
-def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
-    """WAV bytes -> ((n_frames, n_channels) float64 in [-1, 1], sample_rate).
-
-    Supports PCM (format 1: 8-bit unsigned, 16/24/32-bit signed), IEEE
-    float (format 3: float32/float64), G.711 mu-law/A-law (formats 7/6,
-    table expansion) and IMA ADPCM (format 0x11, real block decode,
-    vectorized across blocks), any channel count, plus
-    WAVE_FORMAT_EXTENSIBLE (0xFFFE) wrappers via the KSDATAFORMAT
-    subformat GUID. The ``fact`` chunk (when present) trims compressed
-    streams to their true frame count. Other compressed formats
-    (MP3-in-WAV etc.) raise NotImplementedError."""
-    if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a WAV blob")
-    pos = 12
-    fmt = None
-    fmt_body = None
-    data = None
-    fact_frames = None
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        size = struct.unpack_from("<I", blob, pos + 4)[0]
-        body = blob[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-            fmt_body = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact" and size >= 4:
-            fact_frames = struct.unpack_from("<I", body, 0)[0]
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_fmt, n_ch, rate, _byte_rate, block_align, bits = fmt
-    if audio_fmt == 0xFFFE:  # WAVE_FORMAT_EXTENSIBLE: subformat GUID leads
-        # fmt body: 16 standard bytes + cbSize(2) + validBits(2) +
-        # channelMask(4) + SubFormat GUID(16); the GUID's first two bytes
-        # are the real format tag, the rest is the fixed KSDATAFORMAT
-        # suffix. Samples are left-aligned in the container, so decoding at
-        # container width is exact (valid-bit low bits are zero).
-        if fmt_body is None or len(fmt_body) < 40:
-            raise ValueError("truncated WAVE_FORMAT_EXTENSIBLE fmt chunk")
-        guid = fmt_body[24:40]
-        if guid[2:16] != b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71":
-            raise NotImplementedError(f"non-KSDATAFORMAT subformat GUID {guid.hex()}")
-        audio_fmt = struct.unpack_from("<H", guid, 0)[0]
-    if audio_fmt == 1:  # integer PCM
-        if bits == 8:
-            samples = (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-        elif bits == 16:
-            samples = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-        elif bits == 24:
-            raw = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-            ints = (
-                raw[:, 0].astype(np.int32)
-                | (raw[:, 1].astype(np.int32) << 8)
-                | (raw[:, 2].astype(np.int32) << 16)
-            )
-            ints = np.where(ints >= 1 << 23, ints - (1 << 24), ints)
-            samples = ints.astype(np.float64) / float(1 << 23)
-        elif bits == 32:
-            samples = np.frombuffer(data, dtype="<i4").astype(np.float64) / 2147483648.0
-        else:
-            raise NotImplementedError(f"{bits}-bit integer PCM")
-    elif audio_fmt == 3:  # IEEE float
-        dtype = "<f4" if bits == 32 else "<f8"
-        samples = np.frombuffer(data, dtype=dtype).astype(np.float64)
-    elif audio_fmt in (6, 7):  # G.711 A-law / mu-law: one code byte per sample
-        table = _ALAW2LIN if audio_fmt == 6 else _ULAW2LIN
-        samples = table[np.frombuffer(data, dtype=np.uint8)].astype(np.float64) / 32768.0
-    elif audio_fmt == 0x11:  # IMA ADPCM: real block decode
-        frames = _decode_ima_adpcm(data, n_ch, block_align)
-        if fact_frames is not None:
-            frames = frames[:fact_frames]
-        return frames.astype(np.float64) / 32768.0, rate
-    else:
-        raise NotImplementedError(f"WAV format code {audio_fmt} (compressed?)")
-    out = samples.reshape(-1, n_ch)
-    if fact_frames is not None and audio_fmt not in (1, 3):
-        out = out[:fact_frames]
-    return out, rate
-
-
 def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
     """(n_frames, n_channels) float in [-1, 1] -> 16-bit PCM WAV bytes."""
     if samples.ndim == 1:
@@ -594,48 +138,6 @@ def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-AUDIO_META_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_channels", IntegerType()),
-        StructField("duration_s", DoubleType()),
-        StructField("rms", ArrayType(DoubleType())),
-        StructField("zero_crossing_rate", ArrayType(DoubleType())),
-        StructField("peak", ArrayType(DoubleType())),
-    ]
-)
-
-
-def audio_featurize(
-    df: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """mapInPandas WAV decode + per-channel features (duration, RMS,
-    zero-crossing rate, peak) — the audio analog of decode_and_featurize."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                samples, rate = decode_wav(bytes(blob))
-                n, ch = samples.shape
-                rms = np.sqrt((samples**2).mean(axis=0))
-                zcr = (np.diff(np.signbit(samples), axis=0) != 0).mean(axis=0)
-                peak = np.abs(samples).max(axis=0)
-                rows.append(
-                    (mid, rate, ch, n / rate, rms.tolist(), zcr.tolist(), peak.tolist())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "duration_s",
-                    "rms", "zero_crossing_rate", "peak",
-                ],
-            )
-
-    return df.mapInPandas(_batches, AUDIO_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -673,9 +175,7 @@ def mp3_meta(blob: bytes, max_frames: int | None = None) -> dict:
     tag and resyncing past garbage. Returns version / layer / sample_rate /
     channels / n_frames / avg_bitrate_kbps / duration_s / vbr (also set
     when a Xing/Info header is present). This is the realistic first pass
-    over a web-scale audio corpus — full MP3 DECODE is a documented stub
-    (no independent oracle ships in this container; a deployment drops
-    ffmpeg into the dispatch)."""
+    over a web-scale audio corpus."""
     pos = _id3v2_size(blob)
     n_frames = 0
     bitrates: list[int] = []
@@ -748,8 +248,7 @@ def aac_adts_meta(blob: bytes, max_frames: int | None = None) -> dict:
     walk the 0xFFF-sync headers, reading profile / sample rate / channel
     configuration / per-frame byte length. Each ADTS frame carries 1024
     samples per raw data block; duration = frames x blocks x 1024 / rate.
-    Same role as mp3_meta: the metadata pass a web audio corpus gets before
-    any (ffmpeg-delegated) sample decode."""
+    Same role as mp3_meta: the metadata pass over a web audio corpus."""
     pos = _id3v2_size(blob)
     n_frames = 0
     total_blocks = 0
@@ -787,42 +286,6 @@ def aac_adts_meta(blob: bytes, max_frames: int | None = None) -> dict:
         duration_s=round(total_blocks * 1024 / meta["sample_rate"], 6),
     )
     return meta
-
-
-MP3_META_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("mpeg_version", StringType()),
-        StructField("layer", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_channels", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("avg_bitrate_kbps", DoubleType()),
-        StructField("duration_s", DoubleType()),
-        StructField("vbr", BooleanType()),
-    ]
-)
-
-
-def mp3_metadata(
-    df: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """mapInPandas MP3 header scan (see mp3_meta) — typed metadata for a
-    binary audio column without decoding a single sample."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                m = mp3_meta(bytes(blob))
-                rows.append(
-                    (mid, m["mpeg_version"], m["layer"], m["sample_rate"],
-                     m["n_channels"], m["n_frames"], m["avg_bitrate_kbps"],
-                     m["duration_s"], m["vbr"])
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MP3_META_SCHEMA.fields])
-
-    return df.mapInPandas(_batches, MP3_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -867,8 +330,8 @@ def h264_sps_meta(blob: bytes) -> dict:
     """H.264 stream metadata WITHOUT decode: find the first SPS NAL in an
     Annex-B stream (00 00 01 start codes) and parse it per ISO 14496-10
     §7.3.2.1 — profile / level / chroma format / exact cropped dimensions /
-    frame_mbs_only. Sample decode stays a documented ffmpeg-delegation
-    stub; this header pass is what a 100 TB video corpus scan runs first."""
+    frame_mbs_only. This header pass is what a video corpus scan runs
+    first."""
     i = 0
     sps = None
     while i < len(blob) - 4:
@@ -950,41 +413,8 @@ def h264_sps_meta(blob: bytes) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# real codec: MJPEG AVI video (RIFF container + per-frame JPEG)
+# writer: MJPEG AVI video (RIFF container around JPEG frames)
 # ---------------------------------------------------------------------------
-def _riff_chunks(data: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int]]:
-    """Yield (fourcc, body_start, body_size) for the chunks in [pos, end)."""
-    while pos + 8 <= end:
-        cid = data[pos : pos + 4]
-        size = struct.unpack_from("<I", data, pos + 4)[0]
-        yield cid, pos + 8, size
-        pos += 8 + size + (size & 1)  # word alignment
-
-
-def avi_frames(blob: bytes) -> list[bytes]:
-    """MJPEG AVI bytes -> list of JPEG frame bitstreams (video stream only).
-
-    Walks the RIFF tree to the ``movi`` LIST and collects ``..dc``/``..db``
-    (compressed/uncompressed DIB) chunks; MJPEG frames are JPEG bitstreams.
-    Non-MJPEG AVIs still parse — frames that are not JPEG raise at decode.
-    """
-    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise ValueError("not an AVI blob")
-    frames: list[bytes] = []
-
-    def walk(pos: int, end: int) -> None:
-        for cid, start, size in _riff_chunks(blob, pos, end):
-            if cid == b"LIST":
-                list_type = blob[start : start + 4]
-                if list_type in (b"movi", b"hdrl", b"rec "):
-                    walk(start + 4, start + size)
-            elif cid[2:4] in (b"dc", b"db") and size > 0:
-                frames.append(blob[start : start + size])
-
-    walk(12, len(blob))
-    return frames
-
-
 def encode_avi_mjpeg(
     jpeg_frames: list[bytes], width: int, height: int, fps: int = 30
 ) -> bytes:
@@ -1022,61 +452,13 @@ def encode_avi_mjpeg(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-VIDEO_META_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
-
-
-def video_frame_features(
-    df: DataFrame,
-    every_n: int = 30,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """mapInPandas MJPEG-AVI frame sampling: container parse -> every Nth
-    frame -> JPEG decode -> per-frame pixel stats (one output row per
-    sampled frame)."""
-    from fia_own_map_spark.operators.jpeg import decode_jpeg
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                frames = avi_frames(bytes(blob))
-                for idx in range(0, len(frames), every_n):
-                    img = decode_jpeg(frames[idx])
-                    px = img.reshape(-1).astype(np.float64)
-                    rows.append(
-                        (mid, idx, img.shape[1], img.shape[0],
-                         [px.mean(), px.std(), float(px.min()), float(px.max())])
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "width", "height", "features"]
-            )
-
-    return df.mapInPandas(_batches, VIDEO_META_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
-# fake codec (plumbing tests)
+# writer: synthetic ``IMG|w|h|payload`` blob
 # ---------------------------------------------------------------------------
 def make_fake_image(media_id: str, width: int, height: int, seed: int) -> bytes:
     rng = np.random.default_rng(seed)
     payload = rng.integers(0, 256, size=width * height, dtype=np.uint8).tobytes()
     return b"IMG|%d|%d|" % (width, height) + payload
-
-
-def _decode_fake(blob: bytes) -> tuple[int, int, np.ndarray]:
-    head, w, h, payload = blob.split(b"|", 3)
-    if head != b"IMG":
-        raise ValueError("not a fake IMG blob")
-    return int(w), int(h), np.frombuffer(payload, dtype=np.uint8)
 
 
 # ---------------------------------------------------------------------------
@@ -1097,7 +479,7 @@ def _jpeg_dims(blob: bytes) -> tuple[int, int]:
             break
         seg_len = struct.unpack_from(">H", blob, pos)[0]
         # whole SOF family (0xC0-0xCF except DHT/JPG/DAC): dimensions are
-        # header-readable even for SOF types the decode path rejects
+        # header-readable for lossless and arithmetic-coded JPEGs too
         if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
             _, h, w = struct.unpack_from(">BHH", blob, pos + 2)
             return w, h
@@ -1138,8 +520,12 @@ def probe_media(blob: bytes) -> dict:
         if fmt is None:
             raise ValueError("WAV missing fmt chunk")
         afmt, n_ch, rate, _, block_align, bits = fmt
-        dur = (data_size / (rate * block_align)) if (data_size and block_align) else None
-        if afmt == 0x11 and data_size and block_align > 4 * n_ch:
+        # an empty data chunk is 0 s long; without a data chunk, rate or
+        # block align the length is unknown
+        dur = None
+        if data_size is not None and rate and block_align:
+            dur = data_size / (rate * block_align)
+        if afmt == 0x11 and dur is not None and block_align > 4 * n_ch:
             # ADPCM frames-per-block != bytes-per-frame: header sample + 2
             # samples per data byte per channel
             spb = (block_align - 4 * n_ch) * 2 // n_ch + 1
@@ -1147,7 +533,7 @@ def probe_media(blob: bytes) -> dict:
         if fact_frames is not None and afmt not in (1, 3) and rate:
             dur = fact_frames / rate  # fact chunk is authoritative for compressed
         out.update(kind="wav", sample_rate=rate, n_channels=n_ch,
-                   duration_s=round(dur, 6) if dur else None, detail=f"{bits}-bit")
+                   duration_s=None if dur is None else round(dur, 6), detail=f"{bits}-bit")
     elif blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
         # avih is the first chunk of the first hdrl LIST: fixed layout
         idx = blob.find(b"avih")
@@ -1226,100 +612,3 @@ def media_probe(
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_PROBE_SCHEMA.fields])
 
     return df.mapInPandas(_batches, MEDIA_PROBE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# decode dispatch
-# ---------------------------------------------------------------------------
-def _decode(blob: bytes, codec: str) -> tuple[int, int, np.ndarray]:
-    """-> (width, height, flat pixel array). codec='auto' sniffs magic bytes."""
-    if codec == "auto":
-        if blob[:2] == b"BM":
-            codec = "bmp"
-        elif blob[:4] == b"IMG|":
-            codec = "fake"
-        elif blob[:8] == _PNG_SIG:
-            codec = "png"
-        elif blob[:3] == b"\xff\xd8\xff":
-            codec = "jpeg"
-        else:
-            raise ValueError("unrecognized media blob")
-    if codec == "bmp":
-        img = decode_bmp(blob)
-        return img.shape[1], img.shape[0], img.reshape(-1)
-    if codec == "png":
-        img = decode_png(blob)
-        return img.shape[1], img.shape[0], img.reshape(-1)
-    if codec == "jpeg":
-        from fia_own_map_spark.operators.jpeg import decode_jpeg
-
-        img = decode_jpeg(blob)
-        return img.shape[1], img.shape[0], img.reshape(-1)
-    if codec == "fake":
-        return _decode_fake(blob)
-    raise NotImplementedError(f"codec {codec!r}")
-
-
-def decode_and_featurize(
-    df: DataFrame,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-    fake: bool = False,
-    codec: str = "auto",
-) -> DataFrame:
-    """mapInPandas decode + feature extraction (mean/std/min/max of pixels).
-
-    ``codec='auto'`` dispatches per blob by magic bytes: BMP, PNG and JPEG
-    decode for real (see module docstring); the synthetic IMG format uses
-    the fake decoder. ``fake=True`` forces the fake decoder (back-compat
-    for plumbing tests)."""
-    forced = "fake" if fake else codec
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob)
-                w, h, px = _decode(b, forced)
-                feats = [
-                    float(px.mean()),
-                    float(px.std()),
-                    float(px.min()),
-                    float(px.max()),
-                ]
-                rows.append((mid, w, h, len(b), feats))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_bytes", "features"]
-            )
-
-    return df.mapInPandas(_batches, IMAGE_META_SCHEMA)
-
-
-def resize_images(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """mapInPandas BMP resize: decode -> nearest-neighbor resize -> re-encode.
-    (id, blob) -> (media_id, width, height, blob) with the resized BMP."""
-    schema = StructType(
-        [
-            StructField("media_id", StringType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("blob", BinaryType()),
-        ]
-    )
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                img = decode_bmp(bytes(blob))
-                out = resize_nearest(img, out_w, out_h)
-                rows.append((mid, out_w, out_h, encode_bmp(out)))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "blob"])
-
-    return df.mapInPandas(_batches, schema)

@@ -29,6 +29,7 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -226,17 +227,24 @@ def run_pipeline(
 
     sc = spark.sparkContext
 
+    @contextmanager
+    def described(name: str):
+        """The block's Spark jobs carry ``name`` as their description; the
+        caller's description is put back afterwards."""
+        previous = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(name)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", previous)
+
     def stage(name: str, fingerprint: dict, build) -> DataFrame:
         """Reuse the stage's snapshot while its fingerprint matches, else
         build and commit it; its Spark jobs carry the stage name as their
         description."""
-        previous = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(name)
         n_pinned = len(pinned)
-        try:
+        with described(name):
             df, metrics["stages"][name] = checkpoints.stage(spark, name, fingerprint, build)
-        finally:
-            sc.setLocalProperty("spark.job.description", previous)
         # the tables the build cached are spent once its snapshot is committed
         for cached in pinned[n_pinned:]:
             cached.unpersist()
@@ -344,12 +352,13 @@ def run_pipeline(
         # logging analogue): clusters per ownership class, one small agg over
         # the final checkpoint. countDistinct is exact here; at 100 TB swap for
         # approx_count_distinct.
-        metrics["clusters_per_class"] = {
-            int(r["own_type"]): int(r["n_clusters"])
-            for r in clusters.groupBy("own_type")
-            .agg(F.countDistinct("cluster_id").alias("n_clusters"))
-            .collect()
-        }
+        with described("qa"):
+            metrics["clusters_per_class"] = {
+                int(r["own_type"]): int(r["n_clusters"])
+                for r in clusters.groupBy("own_type")
+                .agg(F.countDistinct("cluster_id").alias("n_clusters"))
+                .collect()
+            }
         # row-count preservation guard (`Classify_Unknowns_opt.py:674-690`
         # analogue). Counts come from the committed snapshots' own lineage
         # metrics (parquet footer stats) — no extra scan jobs.

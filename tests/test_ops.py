@@ -1,5 +1,5 @@
 """Unit tests for the training-data operators (dedup / ANN / text /
-multimodal plumbing) and the classifier ladder."""
+multimodal header probe) and the classifier ladder."""
 
 import numpy as np
 import pandas as pd
@@ -198,48 +198,6 @@ def test_simhash_batch_bit_identical():
     assert [int(h) for h in _fnv1a64_batch(vocab)] == [hash64(t) for t in vocab]
 
 
-def test_png_wavefront_unfilter_exact():
-    """The anti-diagonal wavefront Average/Paeth unfilter must be bit-exact
-    vs the per-byte reference rows (_paeth_row/_avg_row) for every bpp and
-    for mixed 3/4 runs — the r4 replacement for the per-byte Python loop."""
-    from fia_own_map_spark.operators.multimodal import (
-        _avg_row,
-        _paeth_row,
-        _wavefront_unfilter,
-    )
-
-    rng = np.random.default_rng(3)
-    for bpp in (1, 2, 3, 4, 6, 8):
-        rows, px = 17, 23
-        rowbytes = px * bpp
-        filt = rng.integers(0, 256, (rows, rowbytes), dtype=np.uint8)
-        kinds = rng.choice([3, 4], rows).astype(np.uint8)
-        prev = rng.integers(0, 256, rowbytes).astype(np.int16)
-        got = _wavefront_unfilter(filt, kinds, prev, bpp)
-        exp = np.empty_like(got)
-        p = prev.copy()
-        for y in range(rows):
-            fn = _paeth_row if kinds[y] == 4 else _avg_row
-            exp[y] = fn(filt[y].astype(np.int16), p, bpp).astype(np.uint8)
-            p = exp[y].astype(np.int16)
-        assert (got == exp).all(), bpp
-
-
-def test_jpeg_cmyk_raises():
-    """4-component (Adobe CMYK/YCCK) JPEGs raise NotImplementedError at SOF
-    parse instead of an opaque unpack error deep in reconstruction."""
-    import struct as _struct
-
-    from fia_own_map_spark.operators.jpeg import decode_jpeg
-
-    sof = _struct.pack(">BHHB", 8, 16, 16, 4) + bytes(
-        [1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0, 4, 0x11, 0]
-    )
-    blob = b"\xff\xd8" + b"\xff\xc0" + _struct.pack(">H", 2 + len(sof)) + sof
-    with pytest.raises(NotImplementedError, match="4-component"):
-        decode_jpeg(blob)
-
-
 def test_lang_id(docs):
     got = dict(
         docs.select("doc_id", text.lang_id("text").alias("l")).toPandas().values
@@ -374,114 +332,6 @@ def test_ann_lsh_multitable_recall(spark):
     assert s1 <= sm and len(sm) > len(s1)
 
 
-def test_multimodal_plumbing(spark):
-    blobs = [
-        ("m1", multimodal.make_fake_image("m1", 4, 4, seed=1)),
-        ("m2", multimodal.make_fake_image("m2", 8, 2, seed=2)),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(blobs, columns=["media_id", "blob"]))
-    out = multimodal.decode_and_featurize(df, fake=True).toPandas().set_index("media_id")
-    assert out.loc["m1", "width"] == 4 and out.loc["m2", "height"] == 2
-    assert len(out.loc["m1", "features"]) == 4
-    # auto codec dispatch: a real PNG through the same Spark plumbing
-    import numpy as np
-
-    img = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    png_df = spark.createDataFrame(
-        pd.DataFrame([("g1", multimodal.encode_png(img))], columns=["media_id", "blob"])
-    )
-    got = multimodal.decode_and_featurize(png_df).toPandas().iloc[0]
-    assert got["width"] == 4 and got["height"] == 4
-    assert abs(got["features"][0] - img.mean()) < 1e-9
-    # unrecognized bitstreams must raise, not silently fake-decode
-    bad = [("p1", b"\x00\x01\x02\x03" + b"\x00" * 16)]
-    pdf = spark.createDataFrame(pd.DataFrame(bad, columns=["media_id", "blob"]))
-    with pytest.raises(Exception, match="ValueError|unrecognized"):
-        multimodal.decode_and_featurize(pdf).collect()
-
-
-def test_multimodal_bmp_real_codec(spark):
-    """BMP is the real decode path: decode -> featurize and decode -> resize
-    -> re-encode roundtrip through Spark binary columns."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    img1 = rng.integers(0, 256, size=(6, 10, 3), dtype=np.uint8)
-    img2 = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    blobs = [("b1", multimodal.encode_bmp(img1)), ("b2", multimodal.encode_bmp(img2))]
-    df = spark.createDataFrame(pd.DataFrame(blobs, columns=["media_id", "blob"]))
-    out = multimodal.decode_and_featurize(df).toPandas().set_index("media_id")
-    assert out.loc["b1", "width"] == 10 and out.loc["b1", "height"] == 6
-    assert abs(out.loc["b2", "features"][0] - float(img2.mean())) < 1e-9
-    resized = multimodal.resize_images(df, 4, 4).toPandas().set_index("media_id")
-    back = multimodal.decode_bmp(bytes(resized.loc["b2", "blob"]))
-    assert back.shape == (4, 4, 3)
-    assert (back == multimodal.resize_nearest(img2, 4, 4)).all()
-
-
-def test_png_codec_roundtrip():
-    """decode_png inverts encode_png exactly for every channel count and
-    every scanline filter type (covers all five unfilter branches)."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    for c in (1, 2, 3, 4):
-        img = rng.integers(0, 256, size=(13, 17, c), dtype=np.uint8)
-        for ft in range(5):
-            out = multimodal.decode_png(multimodal.encode_png(img, filter_type=ft))
-            assert out.shape == img.shape and (out == img).all(), (c, ft)
-    # gradient exercises Sub/Average/Paeth predictions non-trivially
-    g = (np.arange(40)[:, None] + np.arange(60)[None, :]).astype(np.uint8)
-    g = g[:, :, None].repeat(3, axis=2)
-    for ft in range(5):
-        assert (multimodal.decode_png(multimodal.encode_png(g, filter_type=ft)) == g).all()
-
-
-def test_png_palette_and_subbyte():
-    """Handcrafted palette (color type 3) and 1-bit grayscale PNGs decode to
-    the expected pixels (PLTE indexing, tRNS alpha, bit unpacking)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return struct.pack(">I", len(data)) + body + struct.pack(
-            ">I", zlib.crc32(body) & 0xFFFFFFFF
-        )
-
-    # 2x2 palette image: indices [[0,1],[2,0]], 8-bit depth
-    plte = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])  # R, G, B entries
-    raw = b"\x00" + bytes([0, 1]) + b"\x00" + bytes([2, 0])
-    blob = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", plte)
-        + chunk(b"tRNS", bytes([10]))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    out = multimodal.decode_png(blob)
-    assert out.shape == (2, 2, 4)
-    assert (out[0, 0] == [255, 0, 0, 10]).all()  # tRNS alpha on entry 0
-    assert (out[0, 1] == [0, 255, 0, 255]).all()
-    assert (out[1, 0] == [0, 0, 255, 255]).all()
-    # 1-bit gray, 10px wide (ragged last byte): pattern 1010101010
-    w, h = 10, 2
-    rowbits = bytes([0b10101010, 0b10000000])
-    raw1 = (b"\x00" + rowbits) * h
-    blob1 = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 1, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw1))
-        + chunk(b"IEND", b"")
-    )
-    out1 = multimodal.decode_png(blob1)
-    assert out1.shape == (h, w, 1)
-    assert (out1[0, :, 0] == np.array([255, 0] * 5)).all()
-
-
 def test_png_differential_javax_imageio():
     """Differential vs the JVM's independent PNG decoder (javax.imageio,
     present because Spark requires Java): encode random RGB/RGBA/gray images
@@ -536,241 +386,6 @@ public class DumpPng {
                 assert (w, h, bands) == (14, 9, c)
                 ref = np.fromfile(f"{td}/px.bin", dtype=np.uint8).reshape(h, w, c)
                 assert (ref == img).all(), (c, ft)
-
-
-def test_png_16bit_strips_high_byte():
-    """16-bit PNG (javax-encoded TYPE_USHORT_GRAY) decodes to the high byte
-    of each big-endian sample — the png_set_strip_16 convention."""
-    import shutil
-    import struct
-    import subprocess
-    import tempfile
-
-    import numpy as np
-
-    if not shutil.which("javac"):
-        pytest.skip("no JDK in environment")
-    src = r"""
-import javax.imageio.ImageIO;
-import java.awt.image.BufferedImage;
-import java.io.File;
-public class Write16 {
-    public static void main(String[] args) throws Exception {
-        int w = 9, h = 7;
-        BufferedImage im = new BufferedImage(w, h, BufferedImage.TYPE_USHORT_GRAY);
-        for (int y = 0; y < h; y++)
-            for (int x = 0; x < w; x++)
-                im.getRaster().setSample(x, y, 0, (x * 7919 + y * 104729) % 65536);
-        ImageIO.write(im, "png", new File(args[0]));
-    }
-}
-"""
-    with tempfile.TemporaryDirectory() as td:
-        with open(f"{td}/Write16.java", "w") as f:
-            f.write(src)
-        subprocess.run(["javac", f"{td}/Write16.java"], check=True, cwd=td)
-        subprocess.run(["java", "-cp", td, "Write16", f"{td}/t16.png"], check=True)
-        blob = open(f"{td}/t16.png", "rb").read()
-    assert struct.unpack(">IIBBBBB", blob[16:29])[2] == 16  # really 16-bit
-    out = multimodal.decode_png(blob)
-    want = np.array(
-        [[((x * 7919 + y * 104729) % 65536) >> 8 for x in range(9)] for y in range(7)],
-        dtype=np.uint8,
-    )
-    assert out.shape == (7, 9, 1) and (out[:, :, 0] == want).all()
-
-
-def test_png_adam7_interlaced():
-    """Adam7-interlaced PNG decodes exactly — ground truth is libpng's own
-    pngtest.png (8-bit RGBA, interlace=1) compared against javax.imageio.
-    Also asserts a handcrafted tiny interlaced gray image scatters passes
-    to the right pixels."""
-    import os
-    import shutil
-    import struct
-    import subprocess
-    import tempfile
-    import zlib
-
-    import numpy as np
-
-    # handcrafted 3x3 1-channel 8-bit interlaced: passes 1,2,4,6 empty-or-not
-    def chunk(ctype, data):
-        body = ctype + data
-        return struct.pack(">I", len(data)) + body + struct.pack(
-            ">I", zlib.crc32(body) & 0xFFFFFFFF
-        )
-
-    # image: [[1,2,3],[4,5,6],[7,8,9]]
-    # Adam7 at 3x3: p1=(0,0)->[1]; p4=(2,0) dx4,dy4 ->[3]; p5=(0,2) dx2 dy4 ->[7,9]
-    # p6=(1,0) dx2 dy2 ->[2],[8]; p7=(0,1) dy2 ->[4,5,6]
-    raw = (
-        b"\x00" + bytes([1])          # pass1 1x1
-        + b"\x00" + bytes([3])        # pass4 1x1
-        + b"\x00" + bytes([7, 9])     # pass5 2x1
-        + b"\x00" + bytes([2]) + b"\x00" + bytes([8])  # pass6 1x2
-        + b"\x00" + bytes([4, 5, 6])  # pass7 3x1
-    )
-    blob = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 3, 8, 0, 0, 0, 1))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    out = multimodal.decode_png(blob)
-    assert (out[:, :, 0] == np.arange(1, 10).reshape(3, 3)).all()
-
-    pngtest = "/usr/share/doc/libpng-dev/examples/pngtest.png"
-    if not os.path.exists(pngtest) or not shutil.which("javac"):
-        pytest.skip("pngtest.png or JDK not in environment")
-    mine = multimodal.decode_png(open(pngtest, "rb").read())
-    src = r"""
-import javax.imageio.ImageIO;
-import java.awt.image.Raster;
-import java.io.File;
-import java.io.FileOutputStream;
-public class DumpRaster {
-    public static void main(String[] args) throws Exception {
-        Raster r = ImageIO.read(new File(args[0])).getRaster();
-        int w = r.getWidth(), h = r.getHeight(), bands = r.getNumBands();
-        FileOutputStream out = new FileOutputStream(args[1]);
-        for (int y = 0; y < h; y++)
-            for (int x = 0; x < w; x++)
-                for (int b = 0; b < bands; b++)
-                    out.write(r.getSample(x, y, b));
-        out.close();
-        System.out.println(w + " " + h + " " + bands);
-    }
-}
-"""
-    with tempfile.TemporaryDirectory() as td:
-        with open(f"{td}/DumpRaster.java", "w") as f:
-            f.write(src)
-        subprocess.run(["javac", f"{td}/DumpRaster.java"], check=True, cwd=td)
-        r = subprocess.run(
-            ["java", "-cp", td, "DumpRaster", pngtest, f"{td}/px.bin"],
-            check=True, capture_output=True, text=True,
-        )
-        w, h, b = map(int, r.stdout.split())
-        ref = np.fromfile(f"{td}/px.bin", dtype=np.uint8).reshape(h, w, b)
-    assert mine.shape == ref.shape
-    assert (mine == ref).all()
-
-
-def test_jpeg_differential_javax_imageio():
-    """Baseline-JPEG decoder vs the JVM's libjpeg-style decoder: javax
-    ENCODES random smooth images (an independent encoder), both sides decode
-    the same bitstream, pixels must agree within the T.81 conformance-style
-    tolerance. Gray (single component, no upsampling) is held to max +/-2;
-    4:2:0 color is held to max +/-5 (we mirror libjpeg's triangular "fancy"
-    chroma upsampler in float, so residuals are IDCT/rounding-only)."""
-    import shutil
-    import subprocess
-    import tempfile
-
-    import numpy as np
-
-    from fia_own_map_spark.operators.jpeg import decode_jpeg
-
-    if not shutil.which("javac") or not shutil.which("java"):
-        pytest.skip("no JDK in environment")
-    src = r"""
-import javax.imageio.ImageIO;
-import javax.imageio.ImageWriteParam;
-import javax.imageio.ImageWriter;
-import javax.imageio.stream.FileImageOutputStream;
-import java.awt.image.BufferedImage;
-import java.awt.image.Raster;
-import java.io.File;
-import java.io.FileOutputStream;
-import java.nio.file.Files;
-import java.nio.file.Paths;
-public class JpegTool {
-    public static void main(String[] args) throws Exception {
-        if (args[0].equals("enc")) {
-            int w = Integer.parseInt(args[2]), h = Integer.parseInt(args[3]);
-            int bands = Integer.parseInt(args[4]);
-            byte[] raw = Files.readAllBytes(Paths.get(args[1]));
-            BufferedImage im = new BufferedImage(w, h,
-                bands == 1 ? BufferedImage.TYPE_BYTE_GRAY : BufferedImage.TYPE_3BYTE_BGR);
-            int k = 0;
-            for (int y = 0; y < h; y++)
-                for (int x = 0; x < w; x++)
-                    for (int b = 0; b < bands; b++)
-                        im.getRaster().setSample(x, y, b, raw[k++] & 0xFF);
-            ImageWriter wr = ImageIO.getImageWritersByFormatName("jpg").next();
-            ImageWriteParam p = wr.getDefaultWriteParam();
-            p.setCompressionMode(ImageWriteParam.MODE_EXPLICIT);
-            p.setCompressionQuality(Float.parseFloat(args[6]));
-            if (args.length > 7 && args[7].equals("prog"))
-                p.setProgressiveMode(ImageWriteParam.MODE_DEFAULT);
-            wr.setOutput(new FileImageOutputStream(new File(args[5])));
-            wr.write(null, new javax.imageio.IIOImage(im, null, null), p);
-            wr.dispose();
-        } else {
-            BufferedImage im = ImageIO.read(new File(args[1]));
-            int w = im.getWidth(), h = im.getHeight();
-            Raster r = im.getRaster();
-            int bands = r.getNumBands();
-            FileOutputStream out = new FileOutputStream(args[2]);
-            for (int y = 0; y < h; y++)
-                for (int x = 0; x < w; x++)
-                    for (int b = 0; b < bands; b++)
-                        out.write(r.getSample(x, y, b));
-            out.close();
-            System.out.println(w + " " + h + " " + bands);
-        }
-    }
-}
-"""
-    with tempfile.TemporaryDirectory() as td:
-        with open(f"{td}/JpegTool.java", "w") as f:
-            f.write(src)
-        subprocess.run(["javac", f"{td}/JpegTool.java"], check=True, cwd=td)
-        rng = np.random.default_rng(5)
-        h, w = 24, 33
-        yy, xx = np.mgrid[0:h, 0:w]
-        for bands, quality, mode in (
-            (1, 0.9, "base"), (3, 0.9, "base"), (3, 0.7, "base"),
-            # progressive (SOF2): spectral-selection + successive-
-            # approximation scans through the same coefficient-store path
-            (1, 0.9, "prog"), (3, 0.8, "prog"),
-        ):
-            # smooth low-frequency image: quantization keeps signal, so the
-            # decoder comparison is meaningful rather than noise-vs-noise
-            img = np.stack(
-                [
-                    (128 + 100 * np.sin(xx / 5 + b) * np.cos(yy / 7 + b)).astype(np.uint8)
-                    for b in range(bands)
-                ],
-                axis=2,
-            )
-            img.tofile(f"{td}/raw.bin")
-            subprocess.run(
-                ["java", "-cp", td, "JpegTool", "enc", f"{td}/raw.bin", str(w),
-                 str(h), str(bands), f"{td}/t.jpg", str(quality), mode],
-                check=True,
-            )
-            blob = open(f"{td}/t.jpg", "rb").read()
-            if mode == "prog":
-                assert b"\xff\xc2" in blob  # javax really emitted SOF2
-            mine = decode_jpeg(blob)
-            r = subprocess.run(
-                ["java", "-cp", td, "JpegTool", "dec", f"{td}/t.jpg", f"{td}/px.bin"],
-                check=True, capture_output=True, text=True,
-            )
-            rw, rh, rb = map(int, r.stdout.split())
-            ref = np.fromfile(f"{td}/px.bin", dtype=np.uint8).reshape(rh, rw, rb)
-            assert mine.shape == ref.shape == (h, w, bands)
-            d = np.abs(mine.astype(int) - ref.astype(int))
-            if bands == 1:
-                assert d.max() <= 2, d.max()
-            else:
-                # fancy upsampler matches libjpeg's within rounding; measured
-                # max=3 mean<0.5 frac>2<0.3% on these fixtures
-                assert d.max() <= 5 and d.mean() < 0.8 and (d > 2).mean() < 0.01, (
-                    d.max(), d.mean(), (d > 2).mean()
-                )
 
 
 def _mp3_frame(kbps_idx: int, kbps: int, *, mpeg1=True, mono=False, sr_idx=0,
@@ -841,7 +456,8 @@ def test_media_probe_mixed_corpus(spark):
     bmp = multimodal.encode_bmp(img)
     wav = encode_wav(np.zeros((441, 2)), rate=4410)
     mp3 = b"".join(_mp3_frame(9, 128) for _ in range(4))
-    blobs = [("png", png), ("bmp", bmp), ("wav", wav), ("mp3", mp3),
+    avi = encode_avi_mjpeg([b"\xff\xd8\xff" + bytes(11)] * 3, 16, 9, fps=4)
+    blobs = [("png", png), ("bmp", bmp), ("wav", wav), ("mp3", mp3), ("avi", avi),
              ("fake", make_fake_image("x", 7, 5, seed=1))]
     df = spark.createDataFrame(pd.DataFrame(blobs, columns=["media_id", "blob"]))
     out = media_probe(df).toPandas().set_index("media_id")
@@ -850,6 +466,9 @@ def test_media_probe_mixed_corpus(spark):
     assert out.loc["wav", "sample_rate"] == 4410
     assert abs(out.loc["wav", "duration_s"] - 0.1) < 1e-6
     assert out.loc["mp3", "kind"] == "mp3" and "128kbps" in out.loc["mp3", "detail"]
+    avi_row = out.loc["avi"]
+    assert (avi_row["kind"], avi_row["width"], avi_row["height"]) == ("avi", 16, 9)
+    assert avi_row["duration_s"] == 0.75 and avi_row["detail"] == "3 frames"
     assert out.loc["fake", "width"] == 7
     assert pd.isna(out.loc["png", "duration_s"]) and pd.isna(out.loc["wav", "width"])
 
@@ -947,10 +566,13 @@ def test_aac_adts_header_scan():
 def test_probe_media_routing_and_header_edge_cases():
     """r5 ADVICE regressions: ID3-prefixed AAC routes to the ADTS scanner,
     a CRC-protected frame still finds its Xing tag, and SOF3/SOF9 JPEG
-    dimensions are header-readable even though decode rejects them."""
+    dimensions are header-readable. An empty WAV data chunk is 0 s long;
+    a WAV without one has no duration."""
     import struct
 
-    from fia_own_map_spark.operators.multimodal import mp3_meta, probe_media
+    import numpy as np
+
+    from fia_own_map_spark.operators.multimodal import encode_wav, mp3_meta, probe_media
 
     def adts_frame(payload_len=50, sr_idx=4, channels=2, profile=1, blocks=1):
         frame_len = 7 + payload_len
@@ -987,106 +609,26 @@ def test_probe_media_routing_and_header_edge_cases():
         out = probe_media(jpg)
         assert (out["kind"], out["width"], out["height"]) == ("jpeg", 44, 33)
 
-
-def test_mp3_metadata_spark(spark):
-    from fia_own_map_spark.operators.multimodal import mp3_metadata
-
-    blobs = [
-        ("a", b"".join(_mp3_frame(9, 128) for _ in range(8))),
-        ("b", b"".join(_mp3_frame(12, 224) for _ in range(3))),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(blobs, columns=["media_id", "blob"]))
-    out = mp3_metadata(df).toPandas().set_index("media_id")
-    assert out.loc["a", "n_frames"] == 8 and out.loc["a", "avg_bitrate_kbps"] == 128.0
-    assert out.loc["b", "avg_bitrate_kbps"] == 224.0 and not out.loc["b", "vbr"]
-
-
-def test_wav_extensible_wrapper():
-    """WAVE_FORMAT_EXTENSIBLE (0xFFFE + KSDATAFORMAT PCM GUID) must decode
-    identically to the plain PCM stream it wraps. The wrapper is built by
-    rewriting a plain 16-bit PCM file's fmt chunk into extensible form —
-    the data chunk is untouched, so any decode difference is a wrapper
-    parsing bug."""
-    import struct as _struct
-
-    import numpy as np
-
-    t = np.linspace(0, 1, 800, endpoint=False)
-    sig = np.stack([np.sin(2 * np.pi * 440 * t), np.cos(2 * np.pi * 220 * t)], axis=1)
-    blob = multimodal.encode_wav(sig * 0.5, rate=8000)
-    plain, rate = multimodal.decode_wav(blob)
-
-    # locate the fmt chunk and rebuild it as EXTENSIBLE (cbSize=22)
-    pos = 12
-    out = bytearray(blob[:12])
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        size = _struct.unpack_from("<I", blob, pos + 4)[0]
-        body = blob[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            std = bytearray(body[:16])
-            _struct.pack_into("<H", std, 0, 0xFFFE)  # format tag -> extensible
-            guid = b"\x01\x00" + b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-            ext = bytes(std) + _struct.pack("<HHI", 22, 16, 0x3) + guid
-            out += b"fmt " + _struct.pack("<I", len(ext)) + ext
-        else:
-            out += blob[pos : pos + 8 + size + (size & 1)]
-        pos += 8 + size + (size & 1)
-    # patch RIFF size
-    _struct.pack_into("<I", out, 4, len(out) - 8)
-    got, rate2 = multimodal.decode_wav(bytes(out))
-    assert rate2 == rate
-    assert np.array_equal(got, plain)
-    # a non-KSDATAFORMAT GUID still raises
-    bad = bytes(out).replace(b"\x38\x9b\x71", b"\x38\x9b\x72")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_wav(bad)
+    empty = encode_wav(np.zeros((0, 1)), 8000)
+    assert probe_media(empty)["duration_s"] == 0.0
+    no_data = empty[: empty.index(b"data")]
+    assert probe_media(no_data)["duration_s"] is None
 
 
 def test_wav_codec_differential_stdlib():
-    """WAV codec vs the stdlib `wave` module (independent implementation):
-    stdlib writes -> we decode exactly; we encode -> stdlib reads exactly.
-    Plus the 8-bit-unsigned and IEEE-float32 decode branches on handcrafted
-    chunks."""
+    """encode_wav vs the stdlib `wave` module (independent implementation):
+    we encode -> stdlib reads the same frames exactly."""
     import io
-    import struct as st
     import wave
 
     import numpy as np
 
     sig = (np.sin(np.arange(8000) / 20)[:, None] * np.array([0.5, 0.25]))
-    ints = np.round(sig * 32767).astype("<i2")
-    buf = io.BytesIO()
-    w = wave.open(buf, "wb")
-    w.setnchannels(2)
-    w.setsampwidth(2)
-    w.setframerate(16000)
-    w.writeframes(ints.tobytes())
-    w.close()
-    samples, rate = multimodal.decode_wav(buf.getvalue())
-    assert rate == 16000 and samples.shape == (8000, 2)
-    assert np.abs(samples - ints.astype(np.float64) / 32768.0).max() < 1e-12
-
     blob = multimodal.encode_wav(sig, 22050)
     r = wave.open(io.BytesIO(blob))
     assert (r.getnchannels(), r.getframerate(), r.getnframes()) == (2, 22050, 8000)
     back = np.frombuffer(r.readframes(8000), dtype="<i2").reshape(-1, 2)
     assert np.abs(back - np.clip(np.round(sig * 32767), -32768, 32767)).max() == 0
-
-    def wav_blob(fmt_code, bits, data, rate=8000, n_ch=1):
-        fmt = st.pack("<HHIIHH", fmt_code, n_ch, rate, rate * n_ch * bits // 8,
-                      n_ch * bits // 8, bits)
-        body = b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-        body += b"data" + st.pack("<I", len(data)) + data
-        return b"RIFF" + st.pack("<I", len(body)) + body
-
-    s8, _ = multimodal.decode_wav(wav_blob(1, 8, bytes([0, 128, 255, 64])))
-    assert np.allclose(s8[:, 0], [-1.0, 0.0, 127 / 128, -0.5])
-    f32 = np.array([0.5, -0.25, 1.0], dtype="<f4").tobytes()
-    sf_, rf = multimodal.decode_wav(wav_blob(3, 32, f32, rate=44100))
-    assert rf == 44100 and np.allclose(sf_[:, 0], [0.5, -0.25, 1.0])
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_wav(wav_blob(85, 16, b"\0\0"))  # MP3-in-WAV
 
 
 def _wav_chunks(fmt: bytes, data: bytes, extra: bytes = b"") -> bytes:
@@ -1097,37 +639,15 @@ def _wav_chunks(fmt: bytes, data: bytes, extra: bytes = b"") -> bytes:
     return b"RIFF" + st.pack("<I", len(body)) + body
 
 
-def test_wav_g711_differential_audioop():
-    """G.711 mu-law/A-law sample decode vs CPython audioop's independent C
-    tables: every one of the 256 codes, both laws, through a real WAV blob
-    (format 7 / 6). The tables are computed from the ITU segment formulas,
-    so a single mismatched code means a formula bug."""
-    import struct as st
-
-    import numpy as np
-
-    audioop = pytest.importorskip("audioop")  # removed in 3.13
-    codes = bytes(range(256))
-    for fmt_code, law in [(7, audioop.ulaw2lin), (6, audioop.alaw2lin)]:
-        fmt = st.pack("<HHIIHH", fmt_code, 1, 8000, 8000, 1, 8)
-        got, rate = multimodal.decode_wav(_wav_chunks(fmt, codes))
-        assert rate == 8000 and got.shape == (256, 1)
-        ref = np.frombuffer(law(codes, 2), dtype="<i2").astype(np.float64) / 32768.0
-        assert np.array_equal(got[:, 0], ref)
-
-
 def test_wav_ima_adpcm_differential_audioop():
-    """IMA ADPCM (WAV format 0x11) block decode vs audioop.adpcm2lin with
-    explicit state threading: random nibble streams, mono and stereo
-    block layouts, plus the fact-chunk frame trim. audioop packs the
-    FIRST sample in the HIGH nibble while IMA WAV packs it low, so the
-    reference stream is nibble-swapped — a decoder that got the order
-    wrong fails on the first byte."""
+    """Header-only probe of IMA ADPCM (WAV format 0x11) blobs, mono and
+    stereo block layouts: the duration counts frames per block (a header
+    sample plus two samples per data byte per channel), and a fact chunk's
+    frame count overrides it, 0 frames included."""
     import struct as st
 
     import numpy as np
 
-    audioop = pytest.importorskip("audioop")
     rng = np.random.default_rng(7)
 
     def build(n_ch, block_align, n_blocks, fact=None):
@@ -1143,191 +663,15 @@ def test_wav_ima_adpcm_differential_audioop():
         fmt = st.pack("<HHIIHH", 0x11, n_ch, 8000, 4000, block_align, 4)
         fmt += st.pack("<HH", 2, spb)
         extra = b"" if fact is None else b"fact" + st.pack("<II", 4, fact)
-        return _wav_chunks(fmt, b"".join(blocks), extra), blocks, spb
+        return _wav_chunks(fmt, b"".join(blocks), extra), spb
 
-    def ref_channel(blocks, c, n_ch):
-        out = []
-        for blk in blocks:
-            pred, idx, _ = st.unpack_from("<hBB", blk, 4 * c)
-            byts = np.frombuffer(blk[4 * n_ch :], dtype=np.uint8)
-            if n_ch > 1:
-                byts = byts.reshape(-1, n_ch, 4)[:, c, :].reshape(-1)
-            swapped = bytes(((byts & 0x0F) << 4) | (byts >> 4))
-            dec, _state = audioop.adpcm2lin(swapped, 2, (pred, idx))
-            out.append(np.array([pred], dtype=np.int64))
-            out.append(np.frombuffer(dec, dtype="<i2").astype(np.int64))
-        return np.concatenate(out)
-
-    blob, blocks, spb = build(1, 256, 5)
-    got, rate = multimodal.decode_wav(blob)
-    assert rate == 8000 and got.shape == (5 * spb, 1)
-    assert np.array_equal(
-        np.round(got[:, 0] * 32768).astype(np.int64), ref_channel(blocks, 0, 1)
-    )
-
-    blob2, blocks2, spb2 = build(2, 264, 3, fact=700)
-    got2, _ = multimodal.decode_wav(blob2)
-    assert got2.shape == (700, 2)  # fact trims 3*spb2=771 -> 700
-    for c in range(2):
-        assert np.array_equal(
-            np.round(got2[:, c] * 32768).astype(np.int64), ref_channel(blocks2, c, 2)[:700]
-        )
-    # header-only probe: ADPCM frames-per-block math + fact authority
+    blob, spb = build(1, 256, 5)
+    blob2, _ = build(2, 264, 3, fact=700)
     out = multimodal.probe_media(blob2)
     assert out["kind"] == "wav" and out["duration_s"] == round(700 / 8000, 6)
     out1 = multimodal.probe_media(blob)
     assert out1["duration_s"] == round(5 * spb / 8000, 6)
-
-
-def test_wav_ima_adpcm_spec_vector():
-    """Hand-computed IMA quantizer chain from the reference algorithm:
-    state (pred=0, index=0), nibbles [0x0, 0x5, 0xF] ->
-    samples [0, 8, -11] (step 7: diff 0; diff 1+7; step 11 signed
-    diff -(1+2+5+11))."""
-    import numpy as np
-
-    out = multimodal._ima_decode_blocks(
-        np.array([0]), np.array([0]), np.array([[0x0, 0x5, 0xF]], dtype=np.uint8)
-    )
-    assert out.tolist() == [[0, 8, -11]]
-
-
-def test_jpeg_adobe_app14_transform0():
-    """A 3-component JPEG whose Adobe APP14 marker says transform=0 stores
-    RGB planes directly — the decoder must skip the YCbCr->RGB transform.
-    Checked by splicing an APP14 t=0 segment into a javax-encoded YCbCr
-    stream: the spliced decode returns the stored planes, so applying the
-    YCbCr formula to them must reproduce the unspliced decode (+/-2 for the
-    intermediate uint8 rounding)."""
-    import shutil
-    import struct as _struct
-    import subprocess
-    import tempfile
-
-    from fia_own_map_spark.operators.jpeg import decode_jpeg
-
-    if not shutil.which("javac") or not shutil.which("java"):
-        pytest.skip("no JDK in environment")
-    src_dir = tempfile.mkdtemp()
-    try:
-        # reuse the JpegTool source embedded in the JPEG differential test
-        import re
-
-        import numpy as np
-
-        with open(__file__) as f:
-            tool_src = [s for s in re.findall(r'src = r"""(.*?)"""', f.read(), re.S)
-                        if "JpegTool" in s][0]
-        h, w = 16, 24
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.stack(
-            [(128 + 90 * np.sin(xx / 4 + b) * np.cos(yy / 6 + b)).astype(np.uint8) for b in range(3)],
-            axis=2,
-        )
-        with open(f"{src_dir}/JpegTool.java", "w") as f:
-            f.write(tool_src)
-        subprocess.run(["javac", f"{src_dir}/JpegTool.java"], check=True, cwd=src_dir)
-        img.tofile(f"{src_dir}/raw.bin")
-        subprocess.run(
-            ["java", "-cp", src_dir, "JpegTool", "enc", f"{src_dir}/raw.bin",
-             str(w), str(h), "3", f"{src_dir}/t.jpg", "0.95", "base"],
-            check=True,
-        )
-        blob = open(f"{src_dir}/t.jpg", "rb").read()
-        app14 = b"Adobe" + bytes(6) + bytes([0])  # version/flags zeroed, t=0
-        spliced = (
-            blob[:2] + b"\xff\xee" + _struct.pack(">H", 2 + len(app14)) + app14 + blob[2:]
-        )
-        rgb = decode_jpeg(blob).astype(np.float64)
-        planes = decode_jpeg(spliced).astype(np.float64)  # stored YCbCr, unconverted
-        y, cb, cr = planes[:, :, 0], planes[:, :, 1], planes[:, :, 2]
-        reconv = np.stack(
-            [
-                y + 1.402 * (cr - 128.0),
-                y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-                y + 1.772 * (cb - 128.0),
-            ],
-            axis=2,
-        )
-        reconv = np.clip(np.round(reconv), 0, 255)
-        assert np.abs(reconv - rgb).max() <= 2
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-
-
-def test_avi_mjpeg_container_roundtrip():
-    """AVI container: encode N distinct JPEG bitstreams -> parse back
-    byte-identical frames, RIFF word-alignment included (odd-length frames)."""
-    frames = [b"\xff\xd8\xff" + bytes([i]) * (10 + i) for i in range(5)]  # odd+even
-    blob = multimodal.encode_avi_mjpeg(frames, width=4, height=4, fps=10)
-    got = multimodal.avi_frames(blob)
-    assert got == frames
-    with pytest.raises(ValueError):
-        multimodal.avi_frames(b"RIFF\x00\x00\x00\x00WAVE")
-
-
-def test_video_frame_features(spark):
-    """Real MJPEG video path end-to-end through Spark: javax-encoded JPEG
-    frames in an AVI, sampled every 2nd frame, decoded and featurized."""
-    import shutil
-    import subprocess
-    import tempfile
-
-    import numpy as np
-
-    if not shutil.which("javac"):
-        pytest.skip("no JDK in environment")
-    # reuse the JpegTool source embedded in the JPEG differential test
-    import re
-
-    with open(__file__) as f:
-        src = [s for s in re.findall(r'src = r"""(.*?)"""', f.read(), re.S)
-               if "JpegTool" in s][0]
-    with tempfile.TemporaryDirectory() as td:
-        with open(f"{td}/JpegTool.java", "w") as f:
-            f.write(src)
-        subprocess.run(["javac", f"{td}/JpegTool.java"], check=True, cwd=td)
-        frames = []
-        means = []
-        for i in range(4):  # 4 frames of distinct constant brightness
-            img = np.full((16, 16, 3), 40 + 50 * i, dtype=np.uint8)
-            means.append(40 + 50 * i)
-            img.tofile(f"{td}/raw.bin")
-            subprocess.run(
-                ["java", "-cp", td, "JpegTool", "enc", f"{td}/raw.bin", "16",
-                 "16", "3", f"{td}/f.jpg", "0.9"],
-                check=True,
-            )
-            frames.append(open(f"{td}/f.jpg", "rb").read())
-        blob = multimodal.encode_avi_mjpeg(frames, 16, 16, fps=4)
-    df = spark.createDataFrame(
-        pd.DataFrame([("v1", blob)], columns=["media_id", "blob"])
-    )
-    got = multimodal.video_frame_features(df, every_n=2).toPandas()
-    assert got["frame_idx"].tolist() == [0, 2]
-    assert (got["width"] == 16).all() and (got["height"] == 16).all()
-    for row, want in zip(got.itertuples(), [means[0], means[2]]):
-        assert abs(row.features[0] - want) < 3  # JPEG-lossy constant frame
-
-
-def test_audio_featurize(spark):
-    """audio_featurize over Spark binary columns: a pure 100 Hz sine has a
-    known RMS (a/sqrt(2)), ZCR (~2f/rate) and peak (a)."""
-    import numpy as np
-
-    rate = 8000
-    t = np.arange(rate) / rate  # 1 second
-    sine = 0.8 * np.sin(2 * np.pi * 100 * t)
-    blob = multimodal.encode_wav(sine, rate)
-    df = spark.createDataFrame(
-        pd.DataFrame([("a1", blob)], columns=["media_id", "blob"])
-    )
-    got = multimodal.audio_featurize(df).toPandas().iloc[0]
-    assert got["sample_rate"] == rate and got["n_channels"] == 1
-    assert abs(got["duration_s"] - 1.0) < 1e-9
-    assert abs(got["rms"][0] - 0.8 / np.sqrt(2)) < 1e-3
-    assert abs(got["zero_crossing_rate"][0] - 200 / rate) < 0.002
-    assert abs(got["peak"][0] - 0.8) < 1e-3
+    assert multimodal.probe_media(build(1, 256, 1, fact=0)[0])["duration_s"] == 0.0
 
 
 def test_classifier_cascade(spark):
@@ -1470,59 +814,3 @@ def test_pii_scrub(spark):
     assert (r["n_email"], r["n_ssn"], r["n_phone"], r["n_ipv4"]) == (1, 1, 1, 1)
     assert r["clean_text"] == "mail [EMAIL] ip [IP] ph [PHONE] ssn [SSN] end"
 
-
-def test_wav_g711_differential_javasound():
-    """Second independent G.711 conformance reference (r5 verdict stretch):
-    every one of the 256 mu-law and A-law codes decoded through a real WAV
-    blob and compared int16-exactly against the JDK's javax.sound ULAW/ALAW
-    codecs (separate lineage from CPython audioop's C tables — two
-    unrelated implementations agreeing with the ITU formulas code-for-code
-    is as close to the ITU vector set as this container gets). Skips if no
-    JDK."""
-    import shutil
-    import struct as st
-    import subprocess
-    import tempfile
-
-    import numpy as np
-
-    if not shutil.which("javac") or not shutil.which("java"):
-        pytest.skip("no JDK in environment")
-    src = r"""
-import javax.sound.sampled.*;
-import java.io.*;
-public class G711Dump {
-    public static void main(String[] args) throws Exception {
-        AudioInputStream in = AudioSystem.getAudioInputStream(new File(args[0]));
-        AudioFormat f = in.getFormat();
-        AudioFormat pcm = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
-            f.getSampleRate(), 16, f.getChannels(), 2 * f.getChannels(),
-            f.getSampleRate(), false);
-        AudioInputStream out = AudioSystem.getAudioInputStream(pcm, in);
-        FileOutputStream fo = new FileOutputStream(args[1]);
-        byte[] buf = new byte[4096];
-        int n;
-        while ((n = out.read(buf)) > 0) fo.write(buf, 0, n);
-        fo.close();
-    }
-}
-"""
-    codes = bytes(range(256))
-    with tempfile.TemporaryDirectory() as td:
-        with open(f"{td}/G711Dump.java", "w") as f:
-            f.write(src)
-        subprocess.run(["javac", f"{td}/G711Dump.java"], check=True, cwd=td)
-        for fmt_code in (7, 6):  # mu-law, A-law
-            fmt = st.pack("<HHIIHH", fmt_code, 1, 8000, 8000, 1, 8)
-            blob = _wav_chunks(fmt, codes)
-            with open(f"{td}/t.wav", "wb") as f:
-                f.write(blob)
-            subprocess.run(
-                ["java", "-cp", td, "G711Dump", f"{td}/t.wav", f"{td}/pcm.bin"],
-                check=True, capture_output=True,
-            )
-            ref = np.fromfile(f"{td}/pcm.bin", dtype="<i2")
-            got, rate = multimodal.decode_wav(blob)
-            assert rate == 8000 and got.shape == (256, 1)
-            ours = np.round(got[:, 0] * 32768.0).astype(np.int16)
-            assert np.array_equal(ours, ref), (fmt_code, np.nonzero(ours != ref)[0][:5])

@@ -9,7 +9,7 @@
     process change, a crash at any stage boundary and an input file
     rewritten in place all resume correctly
   * stage 3's job count, and release of its caches when a stage raises
-  * every stage's jobs carry the stage name as their description
+  * every job of a run carries its stage name, or ``qa``, as its description
 """
 
 import os
@@ -247,9 +247,23 @@ def test_crash_at_each_stage_boundary_resumes_identically(spark, e2e, tmp_path):
     assert os.listdir(os.path.join(store.root, "edges")) == ["snap-0"]
 
 
+def _job_descriptions(sc) -> dict:
+    """Job id -> description (None if unset) of every job in the status
+    store, once the listener bus has delivered all events."""
+    jvm_sc = sc._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    jobs = jvm_sc.statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        description = jobs.apply(i).description()
+        out[jobs.apply(i).jobId()] = description.get() if description.isDefined() else None
+    return out
+
+
 def test_stage_jobs_carry_stage_description(spark, e2e, tmp_path):
-    """run_pipeline labels each stage's jobs with the stage name and puts
-    the caller's description back afterwards."""
+    """run_pipeline labels each stage's jobs with the stage name and its
+    closing QA collect with ``qa``, so no job of a run is unlabelled, and
+    puts the caller's description back afterwards."""
     _, sdf, store, *_ = e2e
     shutil.copytree(store.root, os.path.join(str(tmp_path), "e2e"))
     rerun = CheckpointStore(str(tmp_path), "e2e")
@@ -262,6 +276,7 @@ def test_stage_jobs_carry_stage_description(spark, e2e, tmp_path):
         return write(stage, df, **kwargs)
 
     rerun.write = recording_write
+    before = max(_job_descriptions(sc), default=-1)
     sc.setJobDescription("caller")
     try:
         run_pipeline(spark, sdf, EngineConfig(), checkpoints=rerun)
@@ -269,6 +284,8 @@ def test_stage_jobs_carry_stage_description(spark, e2e, tmp_path):
     finally:
         sc.setLocalProperty("spark.job.description", None)
     assert seen == STAGES
+    run_jobs = [d for j, d in _job_descriptions(sc).items() if j > before]
+    assert set(run_jobs) == {*STAGES, "qa"}, run_jobs
 
 
 def test_cross_process_resume_follows_the_config(tmp_path):
