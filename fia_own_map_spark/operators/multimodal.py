@@ -551,14 +551,9 @@ def probe_media(blob: bytes) -> dict:
         m = h264_sps_meta(blob)
         out.update(kind="h264", width=m["width"], height=m["height"],
                    detail=f"{m['profile']} L{m['level']}")
-    elif len(blob) > 1 and blob[0] == 0xFF and (blob[1] & 0xF6) == 0xF0:
-        m = aac_adts_meta(blob)
-        out.update(kind="aac", sample_rate=m["sample_rate"],
-                   n_channels=m["n_channels"], duration_s=m["duration_s"],
-                   detail=m["profile"])
     elif blob[:3] == b"ID3" or (len(blob) > 1 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0):
         # ID3v2 tags front both MP3 and .aac ADTS files: sniff the first
-        # sync word after the tag — layer bits 00 under the 0xFFF sync means
+        # sync word after any tag — layer bits 00 under the 0xFFF sync means
         # ADTS AAC, anything else is an MPEG audio (MP3) frame.
         a = _id3v2_size(blob)
         if a + 2 <= len(blob) and blob[a] == 0xFF and (blob[a + 1] & 0xF6) == 0xF0:

@@ -532,31 +532,33 @@ def test_h264_sps_scan():
         h264_sps_meta(b"\x00\x00\x01\x68\xce\x38\x80")  # PPS only, no SPS
 
 
+def _adts_frame(payload_len=50, sr_idx=4, channels=2, profile=1, blocks=1) -> bytes:
+    """Handcraft one ADTS AAC frame with the given header fields."""
+    frame_len = 7 + payload_len
+    h = bytearray(7)
+    h[0] = 0xFF
+    h[1] = 0xF1  # MPEG-4, layer 00, no CRC
+    h[2] = (profile << 6) | (sr_idx << 2) | ((channels >> 2) & 1)
+    h[3] = ((channels & 0x3) << 6) | ((frame_len >> 11) & 0x3)
+    h[4] = (frame_len >> 3) & 0xFF
+    h[5] = ((frame_len & 0x7) << 5) | 0x1F
+    h[6] = 0xFC | (blocks - 1)
+    return bytes(h) + bytes(payload_len)
+
+
 def test_aac_adts_header_scan():
     """ADTS metadata over handcrafted spec frames: AAC-LC 44100 stereo,
     syncword resync, raw-data-block accounting."""
     from fia_own_map_spark.operators.multimodal import aac_adts_meta
 
-    def adts_frame(payload_len=50, sr_idx=4, channels=2, profile=1, blocks=1):
-        frame_len = 7 + payload_len
-        h = bytearray(7)
-        h[0] = 0xFF
-        h[1] = 0xF1  # MPEG-4, layer 00, no CRC
-        h[2] = (profile << 6) | (sr_idx << 2) | ((channels >> 2) & 1)
-        h[3] = ((channels & 0x3) << 6) | ((frame_len >> 11) & 0x3)
-        h[4] = (frame_len >> 3) & 0xFF
-        h[5] = ((frame_len & 0x7) << 5) | 0x1F
-        h[6] = 0xFC | (blocks - 1)
-        return bytes(h) + bytes(payload_len)
-
-    blob = b"garbage" + b"".join(adts_frame() for _ in range(12))
+    blob = b"garbage" + b"".join(_adts_frame() for _ in range(12))
     m = aac_adts_meta(blob)
     assert (m["profile"], m["sample_rate"], m["n_channels"], m["mpeg4"]) == ("AAC LC", 44100, 2, True)
     assert m["n_frames"] == 12
     assert abs(m["duration_s"] - 12 * 1024 / 44100) < 1e-6
 
     # two raw data blocks per frame double the duration
-    m2 = aac_adts_meta(b"".join(adts_frame(blocks=2) for _ in range(6)))
+    m2 = aac_adts_meta(b"".join(_adts_frame(blocks=2) for _ in range(6)))
     assert abs(m2["duration_s"] - 12 * 1024 / 44100) < 1e-6
 
     with pytest.raises(ValueError):
@@ -574,20 +576,10 @@ def test_probe_media_routing_and_header_edge_cases():
 
     from fia_own_map_spark.operators.multimodal import encode_wav, mp3_meta, probe_media
 
-    def adts_frame(payload_len=50, sr_idx=4, channels=2, profile=1, blocks=1):
-        frame_len = 7 + payload_len
-        h = bytearray(7)
-        h[0], h[1] = 0xFF, 0xF1
-        h[2] = (profile << 6) | (sr_idx << 2) | ((channels >> 2) & 1)
-        h[3] = ((channels & 0x3) << 6) | ((frame_len >> 11) & 0x3)
-        h[4] = (frame_len >> 3) & 0xFF
-        h[5] = ((frame_len & 0x7) << 5) | 0x1F
-        h[6] = 0xFC | (blocks - 1)
-        return bytes(h) + bytes(payload_len)
-
     id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 40]) + bytes(40)
-    out = probe_media(id3 + b"".join(adts_frame() for _ in range(6)))
+    out = probe_media(id3 + b"".join(_adts_frame() for _ in range(6)))
     assert out["kind"] == "aac" and out["sample_rate"] == 44100
+    assert probe_media(b"".join(_adts_frame() for _ in range(3)))["kind"] == "aac"
     out = probe_media(id3 + b"".join(_mp3_frame(9, 128) for _ in range(4)))
     assert out["kind"] == "mp3"
 
