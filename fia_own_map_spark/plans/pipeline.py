@@ -3,7 +3,7 @@
     pages --(stage0 extract+parse+classify)--> records  [checkpoint]
     records --(stage1 block: keys+salt)-----> block_keys [checkpoint]
     block_keys --(stage2 score)-------------> match_edges [checkpoint]
-    edges --(stage3 CC + refine)------------> clusters  [checkpoint]
+    edges --(stage3 CC + label)-------------> clusters  [checkpoint]
 
 Run modes (EngineConfig.score_mode):
   * "exact"      — reference parity: records match iff they share a blocking
@@ -30,7 +30,6 @@ import hashlib
 import os
 import time
 from contextlib import contextmanager
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +46,6 @@ from fia_own_map_spark.operators.blocking import (
 from fia_own_map_spark.operators.cc import connected_components
 from fia_own_map_spark.operators.classify import classify_own_type, with_initial_class
 from fia_own_map_spark.operators.extract import parse_mentions, with_extracted_text
-from fia_own_map_spark.operators.refine import cluster_size, refine_clusters_by_address
 from fia_own_map_spark.operators.scoring import match_edges, score_pairs
 from fia_own_map_spark.session import release_checkpoints
 from fia_own_map_spark.sources.checkpoint import CheckpointStore
@@ -144,51 +142,70 @@ def node_table(records: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def label_records(
-    records: DataFrame,
-    node_clusters: DataFrame,
-    pin: Callable[[DataFrame], DataFrame],
-) -> DataFrame:
+# the address key of a NULL comb_addr: NULL addresses form one group
+_NULL_ADDR = "\x00null"
+
+
+def label_records(records: DataFrame, node_clusters: DataFrame) -> DataFrame:
     """Stage 3 after CC: record-level clusters from node-level ones.
 
     node_clusters: (node_id, node_cluster); a node it lacks is its own
-    cluster. ``pin`` persists a table and hands it back; the caller
-    releases what it pinned. Returns url, cluster_id, own_type,
-    simple_owners, comb_addr, cluster_size.
+    cluster. Returns url, cluster_id, own_type, simple_owners, comb_addr,
+    cluster_size.
+
+    A record's ``cluster_id`` is the min url of its node cluster, except in
+    a family cluster (family and juniors, both ``CLASS_FAMILY``) with more
+    than one non-NULL address: there the cluster splits by address
+    (`Name_Matching_opt.py:225-227`; uuid4 replaced by the min url of the
+    (cluster, address) group, NULL addresses one group). ``cluster_size``
+    is the number of records with that ``cluster_id``
+    (`Name_Matching_opt.py:242`). Unknowns and empty names are singletons.
+
+    Every label comes from one summary of the named records per (node
+    cluster, address): its min url, its row count and its class, which is
+    constant within a node cluster because the node id carries the class
+    bucket. The records join back to it once. groupBy + join back, no
+    window keyed by cluster: the giant head component (31k+ nodes at the
+    800k-page corpus) would be one spilling window task, while the
+    aggregates reduce map-side and the join is AQE-skew-splittable.
+    Sizing from the summary counts each record once only because ``url``
+    identifies a record, as the singletons' labels also assume.
     """
-    with_nodes = _named_records(records).join(node_clusters, "node_id", "left").withColumn(
-        "node_cluster", F.coalesce(F.col("node_cluster"), F.col("node_id"))
+    named = (
+        _named_records(records)
+        .join(node_clusters, "node_id", "left")
+        .withColumn("node_cluster", F.coalesce(F.col("node_cluster"), F.col("node_id")))
+        .withColumn("_addr_k", F.coalesce(F.col("comb_addr"), F.lit(_NULL_ADDR)))
     )
-    # stable record-level label: min(url) per node cluster. groupBy +
-    # join back, NOT a window over node_cluster: the giant head
-    # component (31k+ nodes / 100k+ records at the 800k-page corpus)
-    # would be one spilling window task; the agg reduces map-side and
-    # the join is AQE-skew-splittable (same rationale as refine.py).
-    cluster_mins = with_nodes.groupBy("node_cluster").agg(F.min("url").alias("cluster_id"))
-    clustered = with_nodes.join(cluster_mins, "node_cluster")
-    # records with empty names: singletons
-    empties = _matchable(records).filter(F.length("simple_owners") == 0).withColumn(
-        "cluster_id", F.col("url")
+    groups = named.groupBy("node_cluster", "_addr_k").agg(
+        F.min("url").alias("_group_min"),
+        F.count(F.lit(1)).alias("_n"),
+        F.max("own_type").alias("_own_type"),
     )
-    # persist the record table before each nested groupBy + join
-    # back, which reads its input 2-3 times: uncached, the min(url)
-    # join-back (2 reads) under the address refinement (3) under
-    # cluster_size (2) puts 12 copies of the labels x records
-    # subtree into the write plan.
-    clustered = pin(clustered.select(*empties.columns).unionByName(empties))
-    # address refinement for family/juniors (W4)
-    clustered = pin(refine_clusters_by_address(clustered))
-    # unknowns: singleton clusters (`Name_Matching_opt.py:230-232`,
-    # uuid4 replaced by the deterministic own-url label)
-    unknowns = records.filter(F.col("own_type") == CLASS_UNKNOWN).withColumn(
-        "cluster_id", F.col("url")
+    # the number of non-NULL addresses: a NULL address never splits
+    per_cluster = groups.groupBy("node_cluster").agg(
+        F.min("_group_min").alias("_cluster_min"),
+        F.count(F.when(F.col("_addr_k") != _NULL_ADDR, 1)).alias("_n_addr"),
     )
-    final = clustered.select(
-        "url", "cluster_id", "own_type", "simple_owners", "comb_addr"
-    ).unionByName(
-        unknowns.select("url", "cluster_id", "own_type", "simple_owners", "comb_addr")
+    split = (F.col("_own_type") == CLASS_FAMILY) & (F.col("_n_addr") > 1)
+    labelled = groups.join(per_cluster, "node_cluster").withColumn(
+        "cluster_id", F.when(split, F.col("_group_min")).otherwise(F.col("_cluster_min"))
     )
-    return cluster_size(final)
+    sizes = labelled.groupBy("cluster_id").agg(F.sum("_n").alias("cluster_size"))
+    labels = labelled.join(sizes, "cluster_id").select(
+        "node_cluster", "_addr_k", "cluster_id", "cluster_size"
+    )
+    out = ["url", "cluster_id", "own_type", "simple_owners", "comb_addr", "cluster_size"]
+    clustered = named.join(labels, ["node_cluster", "_addr_k"]).select(*out)
+    # unknowns (`Name_Matching_opt.py:230-232`, uuid4 replaced by the
+    # deterministic own-url label) and empty names have no node
+    singletons = records.filter(
+        (F.col("own_type") == CLASS_UNKNOWN) | (F.length("simple_owners") == 0)
+    ).select(
+        "url", F.col("url").alias("cluster_id"), "own_type", "simple_owners", "comb_addr",
+        F.lit(1).cast("long").alias("cluster_size"),
+    )
+    return clustered.unionByName(singletons)
 
 
 def run_pipeline(
@@ -335,14 +352,14 @@ def run_pipeline(
         )
         _section("s2_score")
 
-        # ---- stage 3: connected components + refinement ------------------------
+        # ---- stage 3: connected components + record labels ---------------------
         def build_clusters():
             nonlocal labels
             labels, rounds = connected_components(
                 edges, vertices=nodes.select("node_id"), id_col="node_id",
                 component_col="node_cluster",
             )
-            return label_records(records, labels, pin), {"cc_rounds": rounds}
+            return label_records(records, labels), {"cc_rounds": rounds}
 
         clusters = stage("clusters", upstream("edges"), build_clusters)
         _section("s3_cluster")

@@ -103,7 +103,7 @@ class IncrementalER:
         """Record-level clusters of everything ingested so far: the batch
         pipeline's stage-3 labelling over the state. Lazy and uncached, so
         evaluate it once. Columns as `run_pipeline`'s clusters."""
-        return label_records(self.state("records"), self.state("nodes"), pin=lambda df: df)
+        return label_records(self.state("records"), self.state("nodes"))
 
     def process_batch(self, pages: DataFrame, batch_id: int = 0) -> DataFrame:
         """Ingest one micro-batch of pages; returns `clusters()`."""

@@ -126,17 +126,13 @@ def test_flagship_plan_has_no_cluster_windows(spark):
 
 
 def test_skew_safe_aggs_match_window_reference(spark):
-    """The r4 skew rewrites (cluster_size, refine_clusters_by_address,
-    summarize totals: groupBy+join instead of cluster-keyed windows) must be
-    ROW-IDENTICAL to the straightforward window formulations they replaced —
-    including NULL addresses, which the window treats as one group."""
+    """The r4 skew rewrite of cluster_size (groupBy+join instead of a
+    cluster-keyed window) must be ROW-IDENTICAL to the count window it
+    replaced."""
     import random
 
     from pyspark.sql import Window
-    from fia_own_map_spark.operators.refine import (
-        cluster_size,
-        refine_clusters_by_address,
-    )
+    from fia_own_map_spark.operators.refine import cluster_size
 
     rng = random.Random(11)
     rows = []
@@ -156,22 +152,88 @@ def test_skew_safe_aggs_match_window_reference(spark):
     )
     pd.testing.assert_frame_equal(got_cs[ref_cs.columns], ref_cs)
 
-    got_rf = (
-        refine_clusters_by_address(df).toPandas().sort_values("url").reset_index(drop=True)
-    )
-    w_ca = Window.partitionBy("cluster_id", "comb_addr")
-    n_addr = F.size(F.collect_set("comb_addr").over(w))  # NULLs dropped, as r3
-    ref_rf = (
-        df.withColumn(
-            "cluster_id",
-            F.when(
-                F.col("own_type").isin([45]) & (n_addr > 1),
-                F.min("url").over(w_ca),
-            ).otherwise(F.col("cluster_id")),
+
+def test_label_records_matches_window_reference(spark):
+    """Stage 3's one-summary labelling must be ROW-IDENTICAL to the window
+    formulation it replaced: min(url) per node cluster; then, for family
+    records in a cluster with more than one address (NULL not counted),
+    min(url) per (cluster, address), NULL addresses one group; then the
+    row count per cluster_id. The records mix NULL, empty and repeated
+    addresses, family (both buckets) and other classes, empty names and
+    unknowns; some nodes are absent from the CC labels. Its plan has no
+    window and reads no cached table."""
+    import io
+    import random
+    from contextlib import redirect_stdout
+
+    from pyspark.sql import Window
+    from fia_own_map_spark.config import CLASS_FAMILY, CLASS_UNKNOWN
+    from fia_own_map_spark.plans.pipeline import _named_records, label_records
+
+    rng = random.Random(17)
+    names = [f"owner {k}" for k in range(60)] + [""] * 5
+    addrs = [None, "", "1 main st", "2 oak av", "3 elm rd"]
+    rows = [
+        (
+            f"u{i:03d}",
+            rng.choice([CLASS_FAMILY, CLASS_FAMILY, 41, 25, CLASS_UNKNOWN]),
+            rng.choice([1, 3]),
+            rng.choice(names),
+            rng.choice(addrs),
         )
-        .toPandas().sort_values("url").reset_index(drop=True)
+        for i in range(500)
+    ]
+    records = spark.createDataFrame(
+        rows,
+        "url string, own_type int, initial_class int, simple_owners string,"
+        " comb_addr string",
     )
-    pd.testing.assert_frame_equal(got_rf[ref_rf.columns], ref_rf)
+    # CC labels within a class bucket, as blocking keys carry the bucket;
+    # about one node in five has none and is its own cluster
+    nodes = _named_records(records).select("node_id", "match_bucket").distinct().collect()
+    labels = [
+        (r["node_id"], f"{r['match_bucket']}:{rng.randrange(20)}")
+        for r in nodes
+        if rng.random() > 0.2
+    ]
+    node_clusters = spark.createDataFrame(labels, "node_id string, node_cluster string")
+
+    cols = ["url", "cluster_id", "own_type", "simple_owners", "comb_addr"]
+    named = (
+        _named_records(records)
+        .join(node_clusters, "node_id", "left")
+        .withColumn("node_cluster", F.coalesce("node_cluster", "node_id"))
+        .withColumn("cluster_id", F.min("url").over(Window.partitionBy("node_cluster")))
+    )
+    singletons = records.filter(
+        (F.col("own_type") == CLASS_UNKNOWN) | (F.length("simple_owners") == 0)
+    ).withColumn("cluster_id", F.col("url"))
+    ref = named.select(*cols).unionByName(singletons.select(*cols))
+    by_cluster = Window.partitionBy("cluster_id")
+    n_addr = F.size(F.collect_set("comb_addr").over(by_cluster))
+    ref = ref.withColumn(
+        "cluster_id",
+        F.when(
+            (F.col("own_type") == CLASS_FAMILY) & (n_addr > 1),
+            F.min("url").over(Window.partitionBy("cluster_id", "comb_addr")),
+        ).otherwise(F.col("cluster_id")),
+    ).withColumn("cluster_size", F.count(F.lit(1)).over(by_cluster))
+    ref_pd = ref.toPandas().sort_values("url").reset_index(drop=True)
+
+    got = label_records(records, node_clusters)
+    got_pd = got.toPandas().sort_values("url").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got_pd[ref_pd.columns], ref_pd)
+    # the inputs exercise both merges and address splits
+    assert (ref_pd["cluster_size"] > 1).any()
+    named_family = ref_pd[(ref_pd["own_type"] == CLASS_FAMILY) & (ref_pd["simple_owners"] != "")]
+    unsplit = named.filter(F.col("own_type") == CLASS_FAMILY).select("cluster_id").distinct()
+    assert named_family["cluster_id"].nunique() > unsplit.count()
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        got.explain(extended=False)
+    plan = buf.getvalue()
+    assert "Window" not in plan and "InMemory" not in plan, plan
 
 
 def test_simhash_batch_bit_identical():
